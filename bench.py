@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import time
@@ -181,7 +182,8 @@ def main() -> None:
     repo = Path(__file__).resolve().parent
     try:
         n = 1 + max(
-            (int(p.stem.split("_r")[-1]) for p in repo.glob("BENCH_r*.json")),
+            (int(m.group(1)) for p in repo.glob("BENCH_r*.json")
+             if (m := re.fullmatch(r"BENCH_r(\d+)\.json", p.name))),
             default=0,
         )
         twin = repo / "BENCH" / f"bench_r{n:02d}.json"

@@ -930,7 +930,8 @@ def gorilla_decompress_many(frames: list) -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration (the only applyInPandas in the engine)
+# Spark integration: mapInPandas encoders, the Arrow decode UDF and the
+# mapInArrow raw-point decode pass
 # ---------------------------------------------------------------------------
 
 
@@ -1142,36 +1143,48 @@ def rollup_1m_with_payloads(flagged_points, tier: str = "1m", presorted: bool = 
     )
 
 
-def _decode_series(frames, decoder, single, on_error):
-    """One Arrow batch of frames -> pandas Series of int64 point arrays,
-    via the vectorized multi-frame decoder (NULL frames stay NULL). The
-    only per-frame Python is the bytes() view and the flat-array split.
+def _decode_frames(frames: list, decoder, single, on_error: str) -> tuple:
+    """Many frames -> (flat int64 points, per-frame counts, per-frame ok),
+    via the vectorized multi-frame ``decoder``.
 
     ``on_error='null'``: if the batch decode raises (corrupt/legacy frame
     anywhere in the batch), fall back to decoding each frame alone through
-    the sequential reference ``single`` and QUARANTINE the bad ones as
-    NULL instead of failing the batch — per-frame cost paid only on the
-    (rare) poisoned batches."""
+    the sequential reference ``single`` and QUARANTINE the bad ones (ok
+    False, zero points) instead of failing the batch — per-frame cost paid
+    only on the (rare) poisoned batches."""
+    try:
+        flat, counts = decoder(frames)
+        return flat, counts, np.ones(len(frames), dtype=bool)
+    except Exception:
+        if on_error != "null":
+            raise
+    parts = []
+    for b in frames:
+        try:
+            parts.append(single(b))
+        except Exception:
+            parts.append(None)
+    ok = np.array([p is not None for p in parts], dtype=bool)
+    counts = np.array([0 if p is None else p.size for p in parts], dtype=np.int64)
+    good = [p for p in parts if p is not None]
+    flat = np.concatenate(good) if good else np.empty(0, dtype=np.int64)
+    return flat, counts, ok
+
+
+def _decode_series(frames, decoder, single, on_error):
+    """One Arrow batch of frames -> pandas Series of int64 point arrays
+    (NULL frames stay NULL; quarantined frames come back NULL). The only
+    per-frame Python is the bytes() view and the flat-array split."""
     import pandas as pd
 
     mask = frames.notna().to_numpy()
     fl = [bytes(b) for b, m in zip(frames, mask) if m]
     vals = np.empty(len(frames), dtype=object)
     if fl:
-        try:
-            flat, counts = decoder(fl)
-            parts = np.split(flat, np.cumsum(counts)[:-1])
-        except Exception:
-            if on_error != "null":
-                raise
-            parts = []
-            for b in fl:
-                try:
-                    parts.append(single(b))
-                except Exception:
-                    parts.append(None)
-        po = np.empty(len(parts), dtype=object)
-        po[:] = parts
+        flat, counts, ok = _decode_frames(fl, decoder, single, on_error)
+        po = np.empty(len(fl), dtype=object)
+        po[:] = np.split(flat, np.cumsum(counts)[:-1])
+        po[~ok] = None
         vals[np.flatnonzero(mask)] = po
     return pd.Series(vals, index=frames.index)
 
@@ -1213,4 +1226,80 @@ def decompress_columns(compressed_df, on_error: str = "raise"):
 
     return compressed_df.withColumn("ts_points", _ts("ts_dod")).withColumn(
         "v_points", _vs("v_gorilla")
+    )
+
+
+def decode_raw_points(payload_df, t0=None, t1=None, on_error: str = "raise"):
+    """C3 as ONE mapInArrow pass: (doc_id, ts_dod, v_gorilla) rows -> flat
+    (doc_id, t, v) raw points, trimmed to [t0, t1) (either end optional).
+
+    Each payload is decoded exactly once, through the same vectorized
+    multi-frame decoders as decompress_columns; no array column, zip or
+    explode is ever materialized, so Catalyst has no generator filter to
+    duplicate below the projection (it did with arrays_zip + explode: two
+    ArrowEvalPython nodes, each running both decoders). Rows with a NULL
+    payload serve nothing.
+
+    ``on_error``: 'raise' fails the query on any corrupt or legacy frame
+    AND on a row whose two frames decode to different point counts (a
+    zip would pad the shorter with NULLs and serve invented points);
+    'null' quarantines such rows — they serve no points.
+    """
+    if on_error not in ("raise", "null"):
+        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
+    lo = None if t0 is None else int(t0)
+    hi = None if t1 is None else int(t1)
+
+    def decode_batches(batches):
+        import pyarrow as pa
+
+        out_schema = pa.schema(
+            [("doc_id", pa.string()), ("t", pa.int64()), ("v", pa.int64())]
+        )
+        for rb in batches:
+            doc, ts, vg = rb.column(0), rb.column(1), rb.column(2)
+            rows = np.flatnonzero(
+                ts.is_valid().to_numpy(zero_copy_only=False)
+                & vg.is_valid().to_numpy(zero_copy_only=False)
+            )
+            if rows.size == 0:
+                continue
+            take = pa.array(rows)
+            t, tc, tok = _decode_frames(
+                ts.take(take).to_pylist(), dod_decompress_many,
+                dod_decompress, on_error,
+            )
+            v, vc, vok = _decode_frames(
+                vg.take(take).to_pylist(), gorilla_decompress_many,
+                gorilla_decompress, on_error,
+            )
+            ok = tok & vok
+            uneven = ok & (tc != vc)
+            if uneven.any() and on_error != "null":
+                i = int(np.flatnonzero(uneven)[0])
+                raise ValueError(
+                    f"payload row of doc {doc[int(rows[i])].as_py()!r}: "
+                    f"ts_dod decodes to {int(tc[i])} points but v_gorilla "
+                    f"to {int(vc[i])} — corrupt (use on_error='null' to "
+                    "quarantine)"
+                )
+            ok &= ~uneven
+            t = t[np.repeat(ok, tc)]
+            v = v[np.repeat(ok, vc)]
+            src = np.repeat(rows[ok], tc[ok])
+            keep = np.ones(t.size, dtype=bool)
+            if lo is not None:
+                keep &= t >= lo
+            if hi is not None:
+                keep &= t < hi
+            if not keep.any():
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [doc.take(pa.array(src[keep])), pa.array(t[keep]),
+                 pa.array(v[keep])],
+                schema=out_schema,
+            )
+
+    return payload_df.select("doc_id", "ts_dod", "v_gorilla").mapInArrow(
+        decode_batches, "doc_id string, t long, v long"
     )

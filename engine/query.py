@@ -4,8 +4,9 @@ filter) as pure DataFrame/SQL operators with no per-row Python").
 
 Everything here returns an UNEXECUTED DataFrame — the caller picks the
 action. No Python kernels anywhere on this path, with one deliberate
-exception: serve_raw_points (Q5) decodes compression payloads through the
-vectorized Arrow decoders after Catalyst has pruned the scan.
+exception: serve_raw_points (Q5) decodes compression payloads in one
+mapInArrow pass (engine/compression.py::decode_raw_points) after Catalyst
+has pruned the scan.
 """
 
 from __future__ import annotations
@@ -133,42 +134,34 @@ def serve_raw_points(
     raw points instead"; this is that path, without re-reading the 100 TB
     token table).
 
-    Bucket pruning happens FIRST on the sargable bucket column (row-group /
-    partition pruning, as range_filter), then only the surviving payloads
-    are decoded — through the vectorized transposed decoders
-    (engine/compression.py::*_decompress_many, round 4), which run faster
-    than the encoders, so the decode stage can never be the bottleneck of
-    a read that the write path could sustain. Output: one row per non-null
-    raw point (doc_id, t, v), t in raw steps. The exact in-bucket [t0, t1)
-    trim is applied after decode on the exploded rows.
+    Bucket and doc_id pruning happen FIRST, on the sargable scan columns
+    (row-group / partition pruning, as range_filter); only the surviving
+    payloads reach Python. One mapInArrow pass (decode_raw_points) decodes
+    each row's ts_dod and v_gorilla once, through the vectorized transposed
+    decoders (engine/compression.py::*_decompress_many), and emits flat
+    (doc_id, t, v) rows already trimmed to the exact [t0, t1), t in raw
+    steps.
 
-    ``on_error='null'`` quarantines corrupt payloads instead of failing
-    the scan (their buckets simply yield no rows; audit them via
+    Every Python task pays a fixed worker set-up cost (~0.2 CPU-s with
+    PySpark 4.1 on Python 3.11), far above the decode itself for a
+    dashboard-sized read, so the Python stage is sized by data, not by scan
+    splits: a REBALANCE hint before the pass lets AQE coalesce a small read
+    into one task while a bulk export still fans out at the advisory
+    partition size (the shape of the rebalanced tier writes in
+    engine/io.py).
+
+    ``on_error='null'`` quarantines corrupt payloads, and rows whose two
+    frames disagree on the point count, instead of failing the scan (their
+    buckets simply yield no rows; audit them via
     decompress_columns(df, on_error='null') — see its docstring).
     """
-    from engine.compression import decompress_columns
+    from engine.compression import decode_raw_points
 
     df = range_filter(rollup_1m, "1m", t0, t1)
     if doc_ids:
         df = df.where(F.col("doc_id").isin(doc_ids))
-    decoded = decompress_columns(
-        df.where(F.col("cnt") > 0), on_error=on_error
-    ).select(
-        "doc_id", F.arrays_zip("ts_points", "v_points").alias("pts")
-    )
-    out = decoded.select(
-        "doc_id",
-        F.explode("pts").alias("p"),
-    ).select(
-        "doc_id",
-        F.col("p.ts_points").alias("t"),
-        F.col("p.v_points").alias("v"),
-    )
-    if t0 is not None:
-        out = out.where(F.col("t") >= t0)
-    if t1 is not None:
-        out = out.where(F.col("t") < t1)
-    return out
+    payloads = df.where(F.col("cnt") > 0).hint("rebalance")
+    return decode_raw_points(payloads, t0, t1, on_error)
 
 
 def downsample(

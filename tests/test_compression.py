@@ -260,23 +260,21 @@ def test_many_decoders_straggler_tail_and_mixed_lengths():
     assert (dv == v_flat).all()
 
 
-def test_decode_quarantine_mode(spark, tokens_df):
-    """on_error='null' must survive corrupt payloads: the poisoned frame
-    comes back as a NULL point array (auditable), every healthy frame in
-    the same Arrow batch still decodes exactly, and the default strict
-    mode still fails loudly."""
-    import pytest
+def _poisoned_1m(tokens_df):
+    """A cached 1m tier with payloads, a copy of it whose ts_dod frame of
+    one non-empty (doc_id, bucket) row has its magic byte flipped (legacy-
+    looking: must quarantine), that victim row, and the gap-filled points
+    the tier was built from."""
     from pyspark.sql import functions as F
 
-    from engine.compression import decompress_columns, rollup_1m_with_payloads
+    from engine.compression import rollup_1m_with_payloads
     from engine.series import explode_series, gap_fill
     from engine.stats import detect
 
     in_range = tokens_df.where("doc_id != 'doc_negmax'")
-    flagged = detect(gap_fill(explode_series(in_range), "ffill"))
-    r1m = rollup_1m_with_payloads(flagged, "1m", presorted=False).cache()
+    filled = gap_fill(explode_series(in_range), "ffill")
+    r1m = rollup_1m_with_payloads(detect(filled), "1m", presorted=False).cache()
     victim = r1m.where("cnt > 0").select("doc_id", "bucket").first()
-    # flip the magic byte of one frame -> legacy-looking, must quarantine
     poisoned = r1m.withColumn(
         "ts_dod",
         F.when(
@@ -285,6 +283,19 @@ def test_decode_quarantine_mode(spark, tokens_df):
             F.concat(F.lit(b"\x00"), F.expr("substring(ts_dod, 2)")),
         ).otherwise(F.col("ts_dod")),
     )
+    return r1m, poisoned, victim, filled
+
+
+def test_decode_quarantine_mode(spark, tokens_df):
+    """on_error='null' must survive corrupt payloads: the poisoned frame
+    comes back as a NULL point array (auditable), every healthy frame in
+    the same Arrow batch still decodes exactly, and the default strict
+    mode still fails loudly."""
+    import pytest
+
+    from engine.compression import decompress_columns
+
+    r1m, poisoned, victim, _ = _poisoned_1m(tokens_df)
 
     with pytest.raises(Exception, match="magic"):
         decompress_columns(poisoned).select("ts_points").collect()
@@ -301,6 +312,56 @@ def test_decode_quarantine_mode(spark, tokens_df):
     assert ok["mismatches"] == 0
     r1m.unpersist()
     dec.unpersist()
+
+
+def test_raw_points_quarantine_mode(spark, tokens_df):
+    """serve_raw_points' single decode pass keeps on_error='null': the
+    poisoned bucket serves no points, every other bucket serves exactly
+    its gap-filled source points, and strict mode still fails loudly."""
+    import pytest
+
+    from engine.query import serve_raw_points
+
+    r1m, poisoned, victim, filled = _poisoned_1m(tokens_df)
+
+    with pytest.raises(Exception, match="magic"):
+        serve_raw_points(poisoned).collect()
+
+    got = sorted(
+        tuple(r) for r in serve_raw_points(poisoned, on_error="null").collect()
+    )
+    want = sorted(
+        (r["doc_id"], r["t"], int(r["v"]))
+        for r in filled.where("v is not null").collect()
+        if (r["doc_id"], r["t"] // 60) != (victim["doc_id"], victim["bucket"])
+    )
+    assert got == want and len(got) > 0
+    r1m.unpersist()
+
+
+def test_raw_points_count_mismatch_rejected(spark):
+    """A payload row whose ts_dod and v_gorilla frames decode to different
+    point counts is corrupt: strict mode raises, and 'null' quarantines
+    the row (it serves no points, where a zip would pad (t, NULL) points)
+    while the healthy row still serves exactly."""
+    import pytest
+
+    from engine.query import serve_raw_points
+
+    ts = np.arange(60, 66, dtype=np.int64)
+    df = spark.createDataFrame(
+        [
+            ("ok", 1, 6, dod_compress(ts), gorilla_compress(ts * 10)),
+            ("short_v", 1, 6, dod_compress(ts), gorilla_compress(ts[:4] * 10)),
+        ],
+        "doc_id string, bucket long, cnt long, ts_dod binary, v_gorilla binary",
+    )
+
+    with pytest.raises(Exception, match="decodes to 6 points but v_gorilla to 4"):
+        serve_raw_points(df).collect()
+
+    got = sorted(tuple(r) for r in serve_raw_points(df, on_error="null").collect())
+    assert got == [("ok", int(t), int(t) * 10) for t in ts]
 
 
 def test_truncated_frames_detected_not_silently_misread():

@@ -75,6 +75,37 @@ def test_read_path_udf_free(spark, tokens_path, tmp_path):
     assert "EvalPython" not in plan  # no BatchEvalPython / ArrowEvalPython
 
 
+def test_serve_raw_points_single_arrow_pass(spark, tokens_path, tmp_path):
+    """Q5 decodes each payload once: one Python node (MapInArrow) behind a
+    REBALANCE exchange, no ArrowEvalPython (arrays_zip + explode made
+    Catalyst copy the decode UDFs below the generator), and the bucket
+    and doc_id filters pushed into the scan."""
+    from engine.io import ParquetManifestFormat, scan_tokens
+    from engine.query import serve_raw_points
+    from jobs.rollup import run_rollup
+
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, scan_tokens(spark, tokens_path), wh, epoch=1)
+    df = serve_raw_points(
+        ParquetManifestFormat(spark, wh).read("rollup_1m"), t0=60, t1=180,
+        doc_ids=["doc_00000001", "doc_00000002"],
+    )
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")  # PushedFilters is cut at 100 chars
+    try:
+        plan = _plan(df)
+    finally:
+        spark.conf.set(key, old)
+    assert plan.count("MapInArrow") == 1 and "EvalPython" not in plan, plan
+    assert "REBALANCE_PARTITIONS" in plan, plan
+    pushed = plan.split("PushedFilters: [")[1].split("], ")[0]
+    assert "GreaterThanOrEqual(bucket,1)" in pushed, pushed
+    assert "LessThanOrEqual(bucket,2)" in pushed, pushed
+    assert "In(doc_id," in pushed, pushed
+    assert df.count() > 0
+
+
 def test_asof_join_is_union_and_sort(spark):
     """X4 as-of (round-2 rewrite): no broadcast of the orders fact table, no
     nested-loop theta join, no join at all — one user-partitioned window
