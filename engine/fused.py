@@ -44,8 +44,9 @@ the caller to the exploded pipeline with the decimal carrier.
 
 Arrow batch sizing: one row here is a whole series (n_tok values), so the
 caller must size spark.sql.execution.arrow.maxRecordsPerBatch in ROWS OF
-DOCS (jobs/rollup.py uses 2048 => ~64 MB per batch at 8192-token docs),
-not the point-stream default.
+DOCS, not the point-stream default. jobs/rollup.py derives the row count
+from a byte budget (2 MB of float64 series per batch by default: 32 rows
+at 8192-token docs).
 """
 
 from __future__ import annotations

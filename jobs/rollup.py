@@ -71,27 +71,28 @@ def run_rollup(
 
     ``pipeline`` picks the 1m-tier physical strategy (identical results,
     pinned by tests/test_fused.py):
-      - 'fused' (default, the scale path): one narrow mapInPandas pass over
+      - 'fused' (default, the scale path): one narrow mapInArrow pass over
         the raw doc rows — gap-fill, stats, detect, bucket aggregates and
         compression in a single Arrow kernel; NO shuffle or sort of raw
         points (engine/fused.py). The only exchange is the part_hash
-        repartition of the ~60x smaller rollup output for the write.
-        ``arrow_batch_rows`` bounds the Arrow batch in DOC rows (a row is a
-        whole series; 2048 x 8192 tokens ~ 64 MB per batch).
+        rebalance of the ~60x smaller rollup output for the write. The
+        pass runs in at most one Python task per _FUSED_TASK_BYTES of
+        parquet input (see _build_1m).
       - 'exploded': posexplode -> doc_id-windowed Catalyst stats -> groupBy
         (engine/series.py + stats.py + rollup.py) — the semantic reference,
         and the path for int32-extreme domains via stats_mode='decimal'
         (the fused kernel fails loudly outside its exact-int64 domain).
 
-    ``arrow_batch_rows=None`` (default) sizes the fused path's Arrow batch
-    by BYTES (``arrow_batch_bytes``, default 2 MB) instead of rows — cache
-    blocking: the flat kernel makes ~15 vectorized passes over each batch,
-    so a batch that fits L2/L3 keeps those passes out of DRAM and the
-    job's memory traffic collapses to ~2 passes (scan + emit). On hosts
-    where memory bandwidth, not CPU, is the ceiling (any host, at enough
-    cores), this is what lets the narrow plan keep scaling with cores
-    (see BENCH/BASELINE.md). The row count derives from max(n_tok) via
-    parquet aggregate pushdown — footer statistics, no data scan.
+    The fused path's Arrow batches are counted in DOC rows (a row is a
+    whole series). ``arrow_batch_rows=None`` (default) derives the row
+    count from BYTES (``arrow_batch_bytes``, default 2 MB): cache
+    blocking — the flat kernel makes ~15 vectorized passes over each
+    batch, so a batch that fits L2/L3 keeps those passes out of DRAM and
+    the job's memory traffic collapses to ~2 passes (scan + emit). On
+    hosts where memory bandwidth, not CPU, is the ceiling (any host, at
+    enough cores), this is what lets the narrow plan keep scaling with
+    cores (see BENCH/BASELINE.md). The row count derives from max(n_tok)
+    in the parquet footers — no data scan.
 
     ``merge_docs=True`` gives ACCUMULATE semantics for incremental ingest
     (streaming micro-batches): rows already in a touched partition are
@@ -101,7 +102,9 @@ def run_rollup(
     Assumes doc-level ingest granularity (a doc arrives whole in one batch).
     Default False = REPLACE semantics (recompute of a static input).
 
-    Returns per-tier metrics {tier: {partitions, out_rows, seconds}} (L3).
+    Returns per-tier metrics {tier: {partitions, out_rows, seconds, ...}}
+    (L3); the 1m tier's ``py_tasks`` is the planned Python task count of
+    the fused stage (None when it is not known without running a job).
     """
     fmt = ParquetManifestFormat(spark, warehouse)
     tiers = tiers or TIER_ORDER
@@ -124,16 +127,19 @@ def run_rollup(
     # max — bounded regardless of parallelism.
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
 
-    if arrow_batch_rows is None and pipeline == "fused":
-        arrow_batch_rows = _cache_blocked_rows(
-            spark, tokens_df, arrow_batch_bytes
-        )
+    input_bytes = None
+    if pipeline == "fused":
+        max_n_tok, input_bytes = _footer_pass(tokens_df)
+        if arrow_batch_rows is None:
+            arrow_batch_rows = _cache_blocked_rows(
+                spark, tokens_df, arrow_batch_bytes, max_n_tok
+            )
 
     try:
         _run_tiers(
             spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
             tiers, stop_after_tier, input_snapshot_id, compress, stats_mode,
-            merge_docs, pipeline, arrow_batch_rows, metrics,
+            merge_docs, pipeline, arrow_batch_rows, input_bytes, metrics,
         )
     finally:
         for c, v in _saved.items():
@@ -144,30 +150,25 @@ def run_rollup(
     return metrics
 
 
-def _cache_blocked_rows(spark, tokens_df, batch_bytes: int) -> int:
+def _cache_blocked_rows(spark, tokens_df, batch_bytes: int,
+                        footer_max: int | None) -> int:
     """Doc rows per Arrow batch so one batch's float64 series stay cache-
     resident for the flat kernel's passes: batch_bytes / (8 * max n_tok).
 
-    max(n_tok) comes from parquet FOOTER statistics — read driver-side with
-    pyarrow when the input is a parquet fileset (df.inputFiles; a pure
-    metadata pass, ~ms for 64 files), else via a Spark aggregate with
-    parquet aggregate pushdown (still footer-only, but the job costs
+    max(n_tok) is *footer_max* when the footer pass found it (a pure
+    metadata pass, ~ms for 64 files), else it comes from a Spark aggregate
+    with parquet aggregate pushdown (still footer-only, but the job costs
     ~0.2 s of scheduling). Falls back to the 4096 synth bulk length if the
-    column is missing or both paths error. Batch sizing only — the fused
-    kernel's output is batch-size-invariant (tests/test_fused.py)."""
+    column is missing or the aggregate errors. Batch sizing only — the
+    fused kernel's output is batch-size-invariant (tests/test_fused.py)."""
     max_tok = 4096
-    if "n_tok" in tokens_df.columns:
-        footer_max = _footer_max_n_tok(tokens_df)
-        if footer_max is not None:
-            return int(
-                min(8192, max(16, batch_bytes // (8 * max(footer_max, 1))))
-            )
+    if footer_max is not None:
+        max_tok = footer_max
+    elif "n_tok" in tokens_df.columns:
         saved = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
         try:
             spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-            from pyspark.sql import functions as _F
-
-            row = tokens_df.agg(_F.max("n_tok")).collect()[0]
+            row = tokens_df.agg(F.max("n_tok")).collect()[0]
             if row[0] is not None:
                 max_tok = int(row[0])
         except Exception:
@@ -177,44 +178,80 @@ def _cache_blocked_rows(spark, tokens_df, batch_bytes: int) -> int:
     return int(min(8192, max(16, batch_bytes // (8 * max(max_tok, 1)))))
 
 
-def _footer_max_n_tok(tokens_df) -> int | None:
-    """max(n_tok) straight from parquet row-group statistics on the driver
-    — no Spark job. None when the input is not a plain parquet fileset or
-    any row group lacks n_tok min/max stats (caller falls back to the
-    pushdown aggregate). The stats max is exact for int64 columns, and the
+def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
+    """``(max n_tok, input bytes)`` of a parquet fileset, read on the driver
+    from file sizes and row-group statistics — no Spark job.
+
+    Both are None unless every input file is a local ``.parquet`` file (a
+    plain path or a ``file:`` URI): other filesystems are never opened from
+    the driver. max n_tok alone is None when the column is missing or a row
+    group lacks its min/max statistics (the caller then runs the pushdown
+    aggregate). The stats max is exact for int64 columns, and the
     unfiltered file-level max is the same bound the caller's unfiltered
     aggregate would compute."""
     try:
         files = tokens_df.inputFiles()
     except Exception:
-        return None
-    if not files or not all(f.split("?", 1)[0].endswith(".parquet") for f in files):
-        return None
+        return None, None
+    paths = []
+    for f in files:
+        if f.startswith("file:"):
+            f = "/" + f[5:].lstrip("/")  # file:///p, file:/p -> /p
+        elif not f.startswith("/"):
+            return None, None  # hdfs://, s3a://, ...
+        if not f.split("?", 1)[0].endswith(".parquet"):
+            return None, None
+        paths.append(f)
+    if not paths:
+        return None, None
     import pyarrow.parquet as pq
 
+    try:
+        input_bytes = sum(os.path.getsize(p) for p in paths)
+    except OSError:
+        return None, None
+    if "n_tok" not in tokens_df.columns:
+        return None, input_bytes
     mx = 0
     try:
-        for f in files:
-            # file:///p, file:/p -> /p; non-file URIs were filtered above
-            path = "/" + f[5:].lstrip("/") if f.startswith("file:") else f
-            md = pq.ParquetFile(path).metadata
-            idx = md.schema.to_arrow_schema().get_field_index("n_tok")
-            if idx < 0:
-                return None
+        for p in paths:
+            md = pq.ParquetFile(p).metadata
+            # statistics are per LEAF column: a nested column before n_tok
+            # has several leaves, so the Arrow field index would be wrong
+            leaf = next(
+                (j for j in range(md.num_columns)
+                 if md.schema.column(j).path == "n_tok"),
+                None,
+            )
+            if leaf is None:
+                return None, input_bytes
             for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
+                st = md.row_group(rg).column(leaf).statistics
                 if st is None or not st.has_min_max:
-                    return None
+                    return None, input_bytes
                 mx = max(mx, int(st.max))
     except Exception:
-        return None
-    return mx if mx > 0 else None
+        return None, input_bytes
+    return (mx if mx > 0 else None), input_bytes
+
+
+# Parquet input bytes per Python task of the fused 1m stage. Every Python
+# task pays ~0.2 worker CPU-s of set-up on PySpark 4.1 whatever its body
+# (worker_util.setup_spark_files calls importlib.invalidate_caches(), which
+# re-reads the pyspark.zip directory once per zipimporter) — about what the
+# kernel itself spends on ~2 MB of token parquet, so a 4 MB task spends
+# about two thirds of its CPU in the kernel. Spark's split math alone aims
+# at one split per core and charges each file a 4 MB open cost, so without
+# this cap a 1 MB, 8-file input runs one Python task per core.
+_FUSED_TASK_BYTES = 4 << 20
 
 
 def _build_1m(spark, toks, w, k, policy, compress, stats_mode, pipeline,
-              arrow_batch_rows):
-    """The 1m-tier physical strategy (docstring of run_rollup). Factored out
-    so the fused-guard auto-fallback can rebuild the plan with
+              arrow_batch_rows, input_bytes):
+    """The 1m-tier physical strategy (docstring of run_rollup) and the
+    planned Python task count of the fused stage (None on the exploded
+    path, or when it is not known without running a job). Factored out so
+    the fused-guard auto-fallback can rebuild the plan with
     pipeline='exploded', stats_mode='decimal'."""
     if pipeline == "fused":
         # scale path: narrow Arrow pass, zero raw-point shuffle
@@ -225,14 +262,27 @@ def _build_1m(spark, toks, w, k, policy, compress, stats_mode, pipeline,
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(int(arrow_batch_rows)),
         )
-        # With no exchange, parallelism == scan splits. The default
-        # 128 MB maxPartitionBytes packs a small-table scan into a
-        # handful of splits and idles the other cores; 16 MB keeps
-        # every core fed. (On a 100 TB cluster input the default
-        # already yields far more splits than cores — this only
-        # matters when input/cores < ~128 MB.)
+        # With no exchange, the fused stage runs one Python task per scan
+        # split. Spark's split size is min(maxPartitionBytes, max(4 MB,
+        # bytes per core)), where every file also counts a 4 MB open cost,
+        # so the per-core term alone gives a small input about one split
+        # per core. 16 MB (not the default 128 MB) bounds the splits of a
+        # large input, so its Python tasks stay small and balance across
+        # cores.
         spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        return fused_rollup_1m(toks, w, k, policy, compress)
+        # Below _FUSED_TASK_BYTES per split, per-task set-up outweighs the
+        # kernel: a narrow coalesce merges the splits into one task per
+        # _FUSED_TASK_BYTES of input (still no exchange — raw points are
+        # never shuffled). An input with more bytes per split plans
+        # exactly as before.
+        splits = _planned_partitions(toks) if input_bytes is not None else None
+        if splits is None:
+            return fused_rollup_1m(toks, w, k, policy, compress), None
+        max_tasks = max(1, -(-input_bytes // _FUSED_TASK_BYTES))
+        if max_tasks < splits:
+            toks = toks.coalesce(max_tasks)
+        return (fused_rollup_1m(toks, w, k, policy, compress),
+                min(max_tasks, splits))
     if pipeline == "exploded":
         # One doc_id-keyed shuffle serves explode -> gap-fill ->
         # stats -> rollup (window key == groupBy prefix, §3.1).
@@ -244,11 +294,21 @@ def _build_1m(spark, toks, w, k, policy, compress, stats_mode, pipeline,
             # (engine/compression.py::rollup_1m_with_payloads)
             from engine.compression import rollup_1m_with_payloads
 
-            return rollup_1m_with_payloads(flagged, "1m")
+            return rollup_1m_with_payloads(flagged, "1m"), None
         return rollup_from_points(flagged, "1m").withColumn(
             "ts_dod", F.lit(None).cast("binary")
-        ).withColumn("v_gorilla", F.lit(None).cast("binary"))
+        ).withColumn("v_gorilla", F.lit(None).cast("binary")), None
     raise ValueError(f"pipeline must be 'fused' or 'exploded', got {pipeline!r}")
+
+
+def _planned_partitions(df) -> int | None:
+    """Partition count of *df*'s physical plan, without running a job (the
+    file scan's splits, for a scan). None when the plan is adaptive: its
+    count is known only after its shuffle stages have run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return None
+    return int(plan.execute().getNumPartitions())
 
 
 # Commits at or below this many rows have their L3 stats computed driver-
@@ -284,46 +344,21 @@ def _written_stats(spark, fmt, table: str, out_snapshot: int) -> list[dict]:
     distributed job would scan, so the two paths are interchangeable
     (pinned by
     tests/test_resume.py::test_written_stats_driver_matches_spark_job).
+    The driver pass is only a shortcut: if it raises (an unexpected
+    ``part_hash=`` dir name, an unreadable footer) the Spark job runs.
 
     Every partition written by this commit lives under the new snap dir
     (overwrite_partitions replaces whole partitions), so the re-read is
     exactly the committed data for the pending set."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
     data_dir = os.path.join(fmt.warehouse, table, f"snap-{out_snapshot}")
-    files_by_part: dict[int, list[str]] = {}
-    for name in os.listdir(data_dir):
-        if not name.startswith("part_hash="):
-            continue
-        pdir = os.path.join(data_dir, name)
-        files_by_part[int(name.split("=", 1)[1])] = [
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        ]
-    all_paths = [p for fs in files_by_part.values() for p in fs]
-    # footer opens and (below the cutover) the one-column reads both release
-    # the GIL in pyarrow — a small thread pool turns 64 sequential ~1-2 ms
-    # opens into a few ms total
-    with ThreadPoolExecutor(min(16, max(1, len(all_paths)))) as ex:
-        handles = dict(zip(all_paths, ex.map(pq.ParquetFile, all_paths)))
-        total_rows = sum(h.metadata.num_rows for h in handles.values())
-        if total_rows <= _STATS_DRIVER_MAX_ROWS:
-            import pyarrow.compute as pc
-
-            def _one(item: tuple[int, list[str]]) -> dict:
-                p, fs = item
-                out_rows = 0
-                in_rows = 0
-                for path in fs:
-                    t = handles[path].read(columns=["cnt"])
-                    out_rows += handles[path].metadata.num_rows
-                    in_rows += int(pc.sum(t["cnt"]).as_py() or 0)
-                return {"part_hash": p, "out_rows": out_rows, "in_rows": in_rows}
-
-            return list(ex.map(_one, files_by_part.items()))
+    try:
+        stats = _written_stats_driver(data_dir)
+    except (OSError, ValueError, pa.ArrowException):
+        stats = None
+    if stats is not None:
+        return stats
     df = (
         spark.read.schema("cnt long, part_hash long")
         .option("basePath", data_dir)
@@ -332,6 +367,45 @@ def _written_stats(spark, fmt, table: str, out_snapshot: int) -> list[dict]:
     from engine.lineage import partition_stats_from_rollup
 
     return partition_stats_from_rollup(df)
+
+
+def _written_stats_driver(data_dir: str) -> list[dict] | None:
+    """_written_stats' driver-side pass; None above the row cutover."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    files_by_part: dict[int, list[str]] = {}
+    for name in os.listdir(data_dir):
+        if not name.startswith("part_hash="):
+            continue
+        pdir = os.path.join(data_dir, name)
+        fs = [os.path.join(pdir, f) for f in os.listdir(pdir)
+              if f.endswith(".parquet")]
+        if fs:  # the Spark job sees no rows, so no stats row, for an empty dir
+            files_by_part[int(name.split("=", 1)[1])] = fs
+    all_paths = [p for fs in files_by_part.values() for p in fs]
+    # footer opens and (below the cutover) the one-column reads both release
+    # the GIL in pyarrow — a small thread pool turns 64 sequential ~1-2 ms
+    # opens into a few ms total
+    with ThreadPoolExecutor(min(16, max(1, len(all_paths)))) as ex:
+        handles = dict(zip(all_paths, ex.map(pq.ParquetFile, all_paths)))
+        total_rows = sum(h.metadata.num_rows for h in handles.values())
+        if total_rows > _STATS_DRIVER_MAX_ROWS:
+            return None
+        import pyarrow.compute as pc
+
+        def _one(item: tuple[int, list[str]]) -> dict:
+            p, fs = item
+            out_rows = 0
+            in_rows = 0
+            for path in fs:
+                t = handles[path].read(columns=["cnt"])
+                out_rows += handles[path].metadata.num_rows
+                in_rows += int(pc.sum(t["cnt"]).as_py() or 0)
+            return {"part_hash": p, "out_rows": out_rows, "in_rows": in_rows}
+
+        return list(ex.map(_one, files_by_part.items()))
 
 
 def _pending_only(stats: list[dict], pending_set: list[int]) -> list[dict]:
@@ -345,7 +419,7 @@ def _pending_only(stats: list[dict], pending_set: list[int]) -> list[dict]:
 def _run_tiers(
     spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
     tiers, stop_after_tier, input_snapshot_id, compress, stats_mode,
-    merge_docs, pipeline, arrow_batch_rows, metrics,
+    merge_docs, pipeline, arrow_batch_rows, input_bytes, metrics,
 ) -> None:
     for tier in tiers:
         t_start = time.monotonic()
@@ -365,11 +439,10 @@ def _run_tiers(
             toks_pruned = toks.drop("part_hash")
 
             def _mk_1m(p, sm):
-                df = with_part_hash(
-                    _build_1m(spark, toks_pruned, w, k, policy, compress,
-                              sm, p, arrow_batch_rows),
-                    n_buckets,
-                )
+                df, py_tasks = _build_1m(spark, toks_pruned, w, k, policy,
+                                         compress, sm, p, arrow_batch_rows,
+                                         input_bytes)
+                df = with_part_hash(df, n_buckets)
                 if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
                     # touched set from the (cheap, column-pruned) token batch
                     # — never by executing the heavy stats pipeline twice
@@ -385,19 +458,21 @@ def _run_tiers(
                         .join(batch_docs, "doc_id", "left_anti")
                     )
                     df = df.unionByName(carried)
-                return df
+                return df, py_tasks
 
-            tier_df = _mk_1m(pipeline, stats_mode)
+            tier_df, py_tasks = _mk_1m(pipeline, stats_mode)
             used_pipeline = pipeline
             snapshot_for_lineage = input_snapshot_id
         else:
             finer = TIER_ORDER[TIER_ORDER.index(tier) - 1]
             fine_snapshot = fmt.current_snapshot(f"rollup_{finer}")
-            # part_hash partition pruning on the fine-tier scan; pinned
+            # part_hash partition pruning on the fine-tier scan (only when
+            # some partitions are already committed: the IN list of every
+            # bucket prunes nothing and costs a literal per bucket); pinned
             # read schema skips footer inference (round 7, engine/io.py)
-            fine_df = fmt.read(f"rollup_{finer}", schema=_ROLLUP_READ).where(
-                F.col("part_hash").isin(pending_set)
-            )
+            fine_df = fmt.read(f"rollup_{finer}", schema=_ROLLUP_READ)
+            if len(pending_set) < n_buckets:
+                fine_df = fine_df.where(F.col("part_hash").isin(pending_set))
             coarse = cascade(
                 fine_df.drop("part_hash", "ts_dod", "v_gorilla"), finer, tier
             ).withColumn("ts_dod", F.lit(None).cast("binary")).withColumn(
@@ -437,7 +512,7 @@ def _run_tiers(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", "100000"
             )
             used_pipeline = "exploded-decimal-fallback"
-            tier_df = _mk_1m("exploded", "decimal")
+            tier_df, py_tasks = _mk_1m("exploded", "decimal")
             out_snapshot = fmt.overwrite_partitions(
                 tier_df, f"rollup_{tier}", rebalance=True
             )
@@ -485,6 +560,8 @@ def _run_tiers(
             "stats_s": round(stats_s, 3),
             "commit_s": round(commit_s, 3),
         }
+        if tier == "1m":
+            metrics[tier]["py_tasks"] = py_tasks
         if stop_after_tier == tier:
             break
 

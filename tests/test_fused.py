@@ -121,6 +121,33 @@ def test_run_rollup_pipelines_agree_end_to_end(spark, tmp_path):
         assert norm(ff) == norm(fe), tier
 
 
+def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):
+    """A ~1 MB parquet input runs the fused stage as one Python task; the
+    1m tier it writes equals the one-task-per-split run's, payloads too."""
+    import jobs.rollup as rollup_mod
+    from engine.io import ParquetManifestFormat, scan_tokens, synth_tokens
+
+    src = str(tmp_path / "tokens")
+    synth_tokens(spark, 32, n_tok=8192, seed=5).repartition(8).write.parquet(src)
+
+    def run(name):
+        wh = str(tmp_path / name)
+        m = rollup_mod.run_rollup(spark, scan_tokens(spark, src), wh, epoch=1,
+                                  tiers=["1m"])
+        rows = sorted(
+            tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
+            for r in ParquetManifestFormat(spark, wh).read("rollup_1m")
+            .select(AGG_COLS + ["ts_dod", "v_gorilla"]).collect()
+        )
+        return m["1m"]["py_tasks"], rows
+
+    capped_tasks, capped = run("capped")
+    monkeypatch.setattr(rollup_mod, "_FUSED_TASK_BYTES", 1)
+    split_tasks, per_split = run("per_split")
+    assert capped_tasks == 1 and split_tasks > 1, (capped_tasks, split_tasks)
+    assert capped and capped == per_split
+
+
 def test_fused_guard_exempts_docs_shorter_than_window(spark):
     """ADVICE r03 (low): a doc with fewer than w valid points never computes
     a window, so int32-extreme values in it must NOT trip the guard (the

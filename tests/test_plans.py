@@ -106,6 +106,77 @@ def test_serve_raw_points_single_arrow_pass(spark, tokens_path, tmp_path):
     assert df.count() > 0
 
 
+def _fused_1m(spark, path):
+    """The fused 1m frame run_rollup builds over the parquet input at
+    *path*: (plan, planned Python tasks, the frame's partitions, the scan's
+    splits). The session confs _build_1m sets are restored."""
+    from engine.io import scan_tokens
+    from jobs.rollup import _build_1m, _footer_pass, _planned_partitions
+
+    keys = [
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+    ]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    toks = scan_tokens(spark, path)
+    try:
+        df, py_tasks = _build_1m(spark, toks, 30, 3.0, "ffill", True, "long",
+                                 "fused", 32, _footer_pass(toks)[1])
+        return _plan(df), py_tasks, _planned_partitions(df), _planned_partitions(toks)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_fused_stage_one_task_per_4mb(spark, tmp_path):
+    """A ~1 MB, 8-file input scans as one split per core, but its fused
+    stage plans as ONE Python task: a narrow Coalesce, no exchange before
+    the MapInArrow."""
+    from engine.io import synth_tokens
+
+    p = str(tmp_path / "tokens")
+    synth_tokens(spark, 32, n_tok=8192).repartition(8).write.parquet(p)
+    plan, py_tasks, parts, splits = _fused_1m(spark, p)
+    assert splits > 1, splits
+    assert py_tasks == parts == 1, (py_tasks, parts)
+    assert "Coalesce 1" in plan and plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_fused_stage_keeps_splits_above_4mb_each(spark, tmp_path):
+    """An input with more than 4 MB per scan split plans exactly as
+    before: no Coalesce, one Python task per split."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.rollup import _FUSED_TASK_BYTES
+
+    rng = np.random.default_rng(0)
+    p = tmp_path / "tokens"
+    p.mkdir()
+    n_docs, n_tok = 3, 500_000  # ~6 MB of incompressible int32 per file
+    for i in range(4):
+        t = pa.table({
+            "doc_id": [f"doc_{i}_{j}" for j in range(n_docs)],
+            "tokens": pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n_docs * n_tok + 1, n_tok, dtype=np.int32)),
+                pa.array(rng.integers(0, 1 << 30, n_docs * n_tok, dtype=np.int32)),
+            ),
+            "n_tok": pa.array([n_tok] * n_docs, pa.int32()),
+            "source": ["cc"] * n_docs,
+        })
+        pq.write_table(t, str(p / f"part-{i}.parquet"), compression="none")
+    input_bytes = sum(f.stat().st_size for f in p.iterdir())
+    plan, py_tasks, parts, splits = _fused_1m(spark, str(p))
+    assert input_bytes > splits * _FUSED_TASK_BYTES, (input_bytes, splits)
+    assert "Coalesce" not in plan, plan
+    assert py_tasks == parts == splits, (py_tasks, parts, splits)
+
+
 def test_asof_join_is_union_and_sort(spark):
     """X4 as-of (round-2 rewrite): no broadcast of the orders fact table, no
     nested-loop theta join, no join at all — one user-partitioned window

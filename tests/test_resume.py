@@ -289,19 +289,41 @@ def test_written_stats_driver_matches_spark_job(
     pyarrow pass for small commits and the distributed 2-column Spark job
     above the size cutover. Force each in turn on the same committed snap
     dirs and pin identical per-partition (out_rows, in_rows)."""
+    import os
+
+    import pyarrow.parquet as pq
+
     import jobs.rollup as rollup_mod
 
     wh = str(tmp_path / "wh_paths")
     run_rollup(spark, small_tokens, wh, epoch=1)
     fmt = ParquetManifestFormat(spark, wh)
+    key = lambda s: s["part_hash"]  # noqa: E731
     for tier in ["1m", "1h", "1d"]:
         snap = fmt.current_snapshot(f"rollup_{tier}")
+        # a partition dir holding no parquet file: neither path reports it
+        os.makedirs(os.path.join(wh, f"rollup_{tier}", f"snap-{snap}",
+                                 f"part_hash={DEFAULT_N_BUCKETS + 7}"))
         monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
         via_driver = rollup_mod._written_stats(spark, fmt, f"rollup_{tier}", snap)
         monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", -1)
         via_spark = rollup_mod._written_stats(spark, fmt, f"rollup_{tier}", snap)
-        key = lambda s: s["part_hash"]  # noqa: E731
         assert sorted(via_driver, key=key) == sorted(via_spark, key=key), tier
+        assert DEFAULT_N_BUCKETS + 7 not in {s["part_hash"] for s in via_driver}
+
+    # a driver-side error falls through to the Spark job, not out of the
+    # commit
+    def _broken(*a, **kw):
+        raise OSError("unreadable footer")
+
+    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
+    monkeypatch.setattr(pq, "ParquetFile", _broken)
+    snap = fmt.current_snapshot("rollup_1m")
+    via_fallback = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
+    monkeypatch.undo()
+    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", -1)
+    via_spark = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
+    assert via_fallback and sorted(via_fallback, key=key) == sorted(via_spark, key=key)
 
 
 def test_written_stats_paths_agree_on_multifile_partitions(
@@ -343,7 +365,7 @@ def test_footer_max_n_tok_falls_back_without_stats(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from jobs.rollup import _footer_max_n_tok
+    from jobs.rollup import _footer_pass
 
     t = pa.table({"doc_id": ["a", "b"], "n_tok": pa.array([7, 12], pa.int64())})
     p_stats = str(tmp_path / "with_stats")
@@ -356,8 +378,52 @@ def test_footer_max_n_tok_falls_back_without_stats(spark, tmp_path):
     pq.write_table(
         t, os.path.join(p_none, "f.parquet"), write_statistics=False
     )
-    assert _footer_max_n_tok(spark.read.parquet(p_stats)) == 12
-    assert _footer_max_n_tok(spark.read.parquet(p_none)) is None
+    assert _footer_pass(spark.read.parquet(p_stats))[0] == 12
+    assert _footer_pass(spark.read.parquet(p_none))[0] is None
+
+
+def test_footer_pass_finds_n_tok_leaf_after_nested_column(spark, tmp_path):
+    """Row-group statistics are per parquet LEAF: a struct column before
+    n_tok has two leaves, so n_tok's Arrow field index names another
+    column. The pass finds n_tok by its path and also sums file bytes."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.rollup import _footer_pass
+
+    t = pa.table({
+        "doc_id": ["a", "b"],
+        "meta": pa.array([{"x": 900, "y": 1000}, {"x": 901, "y": 1001}]),
+        "n_tok": pa.array([7, 12], pa.int64()),
+    })
+    p = str(tmp_path / "nested")
+    os.makedirs(p)
+    f = os.path.join(p, "f.parquet")
+    pq.write_table(t, f)
+    assert _footer_pass(spark.read.parquet(p)) == (12, os.path.getsize(f))
+
+
+def test_footer_pass_skips_non_local_files(monkeypatch):
+    """An hdfs:// input is never opened from the driver: no cap, no
+    footer max."""
+    import pyarrow.parquet as pq
+
+    from jobs.rollup import _footer_pass
+
+    class _Remote:
+        columns = ["doc_id", "tokens", "n_tok", "source"]
+
+        def inputFiles(self):
+            return ["hdfs://nn:8020/t/part-0.parquet", "file:/t/part-1.parquet"]
+
+    def _no_open(*a, **kw):
+        raise AssertionError("opened a file")
+
+    monkeypatch.setattr(pq, "ParquetFile", _no_open)
+    monkeypatch.setattr("os.path.getsize", _no_open)
+    assert _footer_pass(_Remote()) == (None, None)
 
 
 def test_observed_lineage_stats_match_written_tier(spark, small_tokens, tmp_path):
