@@ -930,217 +930,9 @@ def gorilla_decompress_many(frames: list) -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration: mapInPandas encoders, the Arrow decode UDF and the
-# mapInArrow raw-point decode pass
+# Spark integration: the Arrow decode UDF and the mapInArrow raw-point
+# decode pass (the encoders run inside engine/fused.py)
 # ---------------------------------------------------------------------------
-
-
-def _compress_batch_groups(pdf, out_rows: list) -> None:
-    """Split one sorted pandas batch into (doc_id, bucket) runs with NumPy
-    boundary detection and compress every run through the vectorized
-    multi-frame codecs — the only per-group Python is assembling the
-    output row tuples."""
-    doc = pdf["doc_id"].to_numpy()
-    buck = pdf["bucket"].to_numpy()
-    t = pdf["t"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.float64)  # NaN = null
-    change = np.flatnonzero((doc[1:] != doc[:-1]) | (buck[1:] != buck[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    mask = ~np.isnan(v)
-    counts = np.add.reduceat(mask.astype(np.int64), starts) if len(pdf) else []
-    frames_t = dod_compress_many(t[mask], counts)
-    frames_v = gorilla_compress_many(v[mask].astype(np.int64), counts)
-    out_rows.extend(
-        zip(doc[starts], buck[starts].tolist(), frames_t, frames_v)
-    )
-
-
-def attach_compression(rollup_df, flagged_points, tier: str):
-    """Join ts_dod / v_gorilla payloads (computed per (doc_id, bucket) from
-    the raw points) onto a rollup tier.
-
-    Arrow path: mapInPandas over doc_id-co-partitioned, (doc_id, bucket, t)-
-    sorted batches — one Python call per Arrow batch (~100k rows), not per
-    group, with a carry buffer for groups spanning batch boundaries. Each
-    group is <= bucket-width points (86400 worst case for 1d — bounded,
-    SURVEY.md §4 spill row).
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from engine.schema import TIER_SECONDS
-
-    b = TIER_SECONDS[tier]
-
-    def compress_partition(batches):
-        carry = None
-        rows: list = []
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # hold back the trailing group — it may continue in the next batch
-            doc = pdf["doc_id"].to_numpy()
-            buck = pdf["bucket"].to_numpy()
-            last_change = np.flatnonzero(
-                (doc[1:] != doc[:-1]) | (buck[1:] != buck[:-1])
-            )
-            if len(last_change) == 0:
-                carry = pdf
-                continue
-            cut = int(last_change[-1]) + 1
-            _compress_batch_groups(pdf.iloc[:cut], rows)
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "bucket", "ts_dod", "v_gorilla"]
-                )
-                rows = []
-        if carry is not None and len(carry):
-            _compress_batch_groups(carry, rows)
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "bucket", "ts_dod", "v_gorilla"]
-            )
-
-    pts = (
-        flagged_points.withColumn("bucket", F.expr(f"t DIV {b}"))
-        .select("doc_id", "bucket", "t", "v")
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "bucket", "t")
-    )
-    payloads = pts.mapInPandas(
-        compress_partition,
-        schema="doc_id string, bucket long, ts_dod binary, v_gorilla binary",
-    )
-    return rollup_df.join(payloads, ["doc_id", "bucket"], "left")
-
-
-def rollup_1m_with_payloads(flagged_points, tier: str = "1m", presorted: bool = True):
-    """Fused A1+C1+C2: one mapInPandas pass emits the FULL rollup row —
-    aggregates and compression payloads together.
-
-    Why fused: the compression kernels need one Python pass over every
-    point anyway; computing the (doc_id, bucket) aggregates inside the same
-    pass costs a few NumPy reductions per group, while the alternative
-    (Catalyst rollup JOIN mapInPandas payloads) executes the upstream
-    explode+window pipeline TWICE (once per join branch) plus a join
-    shuffle. At 100 TB that is the difference between one scan and two.
-
-    Aggregate float policy matches engine/rollup.py exactly: vsum is an
-    exact int64 sum, vmean = double(vsum)/cnt — bit-identical to the
-    Catalyst path and the oracle (pinned by test_fused_rollup_matches_catalyst).
-
-    Ordering contract: the input must be hash(doc_id)-partitioned and
-    sorted by (doc_id, t) within partitions. detect()'s window guarantees
-    exactly that, so no extra exchange is needed; the explicit
-    repartition+sort is applied only when ``presorted=False``.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from engine.schema import EPOCH0_EPOCH_SECONDS, TIER_SECONDS
-
-    b = TIER_SECONDS[tier]
-
-    def rollup_partition(batches):
-        carry = None
-
-        def emit(pdf):
-            """(doc_id, bucket) runs -> one COLUMNAR rollup frame: every
-            aggregate is a reduceat over run boundaries (exactly the
-            engine/fused.py:_flat_rollup_cols treatment — round 4 removed
-            the per-group Python loop here too); the codecs are the
-            vectorized multi-frame kernels. Only payload list assembly and
-            the pandas construction remain Python-level, both per-GROUP."""
-            doc = pdf["doc_id"].to_numpy()
-            buck = pdf["bucket"].to_numpy()
-            t = pdf["t"].to_numpy(dtype=np.int64)
-            v = pdf["v"].to_numpy(dtype=np.float64)
-            anom = pdf["is_anom"].to_numpy(dtype=np.bool_)
-            n = len(pdf)
-            change = np.flatnonzero((doc[1:] != doc[:-1]) | (buck[1:] != buck[:-1])) + 1
-            starts = np.concatenate(([0], change))
-            mask = ~np.isnan(v)
-            counts = np.add.reduceat(mask.astype(np.int64), starts)
-            frames_t = dod_compress_many(t[mask], counts)
-            frames_v = gorilla_compress_many(v[mask].astype(np.int64), counts)
-            iv = np.where(mask, v, 0.0).astype(np.int64)
-            vsum = np.add.reduceat(iv, starts)
-            vmin = np.minimum.reduceat(np.where(mask, v, np.inf), starts)
-            vmax = np.maximum.reduceat(np.where(mask, v, -np.inf), starts)
-            firsts = np.minimum.reduceat(np.where(mask, np.arange(n), n), starts)
-            lasts = np.maximum.reduceat(np.where(mask, np.arange(n), -1), starts)
-            anoms = np.add.reduceat(anom.astype(np.int64), starts)
-            empty = counts == 0
-            # vsum is exactly int; float64 division == double(vsum)/cnt
-            with np.errstate(divide="ignore", invalid="ignore"):
-                vmean = vsum.astype(np.float64) / counts.astype(np.float64)
-            sf = np.where(empty, 0, np.minimum(firsts, n - 1)).astype(np.int64)
-            sl = np.where(empty, 0, np.maximum(lasts, 0)).astype(np.int64)
-
-            def nullable(vals, dtype):
-                return pd.arrays.IntegerArray(vals.astype(dtype), empty.copy())
-
-            def frames_col(frames):
-                s = pd.Series(frames, dtype=object)
-                return s
-
-            return pd.DataFrame(
-                {
-                    "doc_id": doc[starts],
-                    "bucket": buck[starts],
-                    "cnt": counts,
-                    "vmin": nullable(np.where(empty, 0, vmin), np.int32),
-                    "vmax": nullable(np.where(empty, 0, vmax), np.int32),
-                    "vsum": nullable(vsum, np.int64),
-                    "vmean": np.where(empty, np.nan, vmean),
-                    "anom_cnt": anoms,
-                    "first_v": nullable(np.where(empty, 0.0, v[sf]), np.int32),
-                    "last_v": nullable(np.where(empty, 0.0, v[sl]), np.int32),
-                    "ts_dod": frames_col(frames_t),
-                    "v_gorilla": frames_col(frames_v),
-                }
-            )
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            doc = pdf["doc_id"].to_numpy()
-            buck = pdf["bucket"].to_numpy()
-            last_change = np.flatnonzero((doc[1:] != doc[:-1]) | (buck[1:] != buck[:-1]))
-            if len(last_change) == 0:
-                carry = pdf
-                continue
-            cut = int(last_change[-1]) + 1
-            yield emit(pdf.iloc[:cut])
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    pts = flagged_points.withColumn("bucket", F.expr(f"t DIV {b}")).select(
-        "doc_id", "bucket", "t", "v", "is_anom"
-    )
-    if not presorted:
-        pts = pts.repartition("doc_id").sortWithinPartitions("doc_id", "bucket", "t")
-    out = pts.mapInPandas(
-        rollup_partition,
-        schema=(
-            "doc_id string, bucket long, cnt long, vmin int, vmax int, "
-            "vsum long, vmean double, anom_cnt long, first_v int, "
-            "last_v int, ts_dod binary, v_gorilla binary"
-        ),
-    )
-    return out.withColumn(
-        "bucket_ts",
-        F.timestamp_seconds(F.lit(EPOCH0_EPOCH_SECONDS) + F.col("bucket") * F.lit(b)),
-    ).select(
-        "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-        "vmean", "anom_cnt", "first_v", "last_v", "ts_dod", "v_gorilla",
-    )
 
 
 def _decode_frames(frames: list, decoder, single, on_error: str) -> tuple:

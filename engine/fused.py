@@ -2,18 +2,18 @@
 rollup -> compression in ONE Arrow pass over the raw token table, with NO
 shuffle of raw points.
 
-Why this exists (round-2 scaling work): the exploded pipeline must shuffle
-and sort every point (t-per-row) to feed the doc_id-partitioned windows —
-at 196.6M points that exchange+sort saturates one machine's memory/disk
-bandwidth and caps N->4N core scaling at ~0.5-0.7. But the B:15 input is
-row-per-doc with the WHOLE series in one array: every per-series operator
-(G1 gap-fill, R1-R4 stats/detect, A1 bucket rollup, C1/C2 compression) is a
-pure function of one row. So the scale path maps each Arrow batch of doc
-rows through vectorized NumPy kernels and emits finished rollup rows; the
-only exchange left in the job is bucketing the ~60x smaller aggregate
-output for the partitioned write. This is exactly the sanctioned shape —
-"pyspark.sql DataFrame + vectorized pandas/Arrow UDFs (no per-row Python)
-throughout" (BASELINE.json:15).
+Why this exists (round-2 scaling work): a point-per-row pipeline
+(engine/series.py + stats.py) must shuffle and sort every point to feed the
+doc_id-partitioned windows — at 196.6M points that exchange+sort saturates
+one machine's memory/disk bandwidth and caps N->4N core scaling at
+~0.5-0.7. But the B:15 input is row-per-doc with the WHOLE series in one
+array: every per-series operator (G1 gap-fill, R1-R4 stats/detect, A1
+bucket rollup, C1/C2 compression) is a pure function of one row. So the
+scale path maps each Arrow batch of doc rows through vectorized NumPy
+kernels and emits finished rollup rows; the only exchange left in the job
+is bucketing the ~60x smaller aggregate output for the partitioned write.
+This is exactly the sanctioned shape — "pyspark.sql DataFrame + vectorized
+pandas/Arrow UDFs (no per-row Python) throughout" (BASELINE.json:15).
 
 ROUND-3 SHAPE — flat SEGMENTED kernels, no per-doc Python loop: the batch's
 series are concatenated into ONE flat float64 array with per-doc segment
@@ -22,31 +22,30 @@ NumPy passes over the flat array (prefix scans clamped at segment starts;
 ``np.*.reduceat`` at per-doc bucket boundaries). Round 2 looped Python per
 doc (~10-20 NumPy calls of fixed ~us overhead each per doc), which
 dominated at short docs — the regime most LLM training data lives in
-(<=256-token fragments). The only remaining per-element Python is the
-per-BUCKET compression loop when compress=True (the C1/C2 byte codecs are
-inherently sequential per payload).
+(<=256-token fragments). The only per-element Python left is the exact
+window arithmetic of int32-extreme docs (_exact_num), which no in-range
+doc enters.
 
-BIT-EXACTNESS: identical to the exploded path (pinned by
-tests/test_fused.py, which asserts row-set equality against
-rollup_from_points / rollup_1m_with_payloads on the parity fixture):
-  - same exact integer window sums (int64 cumsum differences; the GLOBAL
-    cumsum over the flat batch may wrap int64, but two's-complement
-    wraparound cancels in the subtraction, so any window sum that itself
-    fits int64 — guaranteed by the per-doc guard — is exact);
+BIT-EXACTNESS: identical to engine/oracle.py on every int32 input (pinned
+by tests/test_fused.py, which asserts row equality against
+oracle.pipeline_oracle on the full parity fixture, int32 extremes included):
+  - same exact integer window sums. In-range docs use int64 cumsum
+    differences: the GLOBAL cumsum over the flat batch may wrap int64, but
+    two's-complement wraparound cancels in the subtraction, so any window
+    sum that itself fits int64 is exact. A doc whose windows can overflow
+    num = w*s2 - s1^2 (see _exact_docs) takes Python-int prefix sums
+    instead, as the oracle does;
   - same final float sequence ma = double(s1)/w,
     sd = sqrt(double(num)/(w*(w-1))), score = |v - ma|/sd
     (engine/stats.py docstring);
   - same compression kernels (engine/compression.py — single
     implementation).
-Overflow policy mirrors the 'long' stats carrier, checked PER DOC and
-FAILING LOUDLY outside the exact-int64 domain (see _check_guard), directing
-the caller to the exploded pipeline with the decimal carrier.
 
 Arrow batch sizing: one row here is a whole series (n_tok values), so the
 caller must size spark.sql.execution.arrow.maxRecordsPerBatch in ROWS OF
 DOCS, not the point-stream default. jobs/rollup.py derives the row count
-from a byte budget (2 MB of float64 series per batch by default: 32 rows
-at 8192-token docs).
+from a byte budget (2 MB of float64 series per batch: 32 rows at
+8192-token docs). The output does not depend on the batch size.
 """
 
 from __future__ import annotations
@@ -55,6 +54,9 @@ import numpy as np
 
 from engine.schema import DEFAULT_K, DEFAULT_WINDOW, EPOCH0_EPOCH_SECONDS, TIER_SECONDS
 from engine.series import GAP_POLICIES
+
+# (w*max|v|)^2 at or above this can overflow num = w*s2 - s1^2 in int64
+_INT64_LIMIT = 2**63
 
 _ROLLUP_COLS = [
     "doc_id", "bucket", "cnt", "vmin", "vmax", "vsum", "vmean",
@@ -103,35 +105,32 @@ def _flat_gap_fill(vf: np.ndarray, pos_start: np.ndarray, pos_end: np.ndarray,
     return out
 
 
-def _check_guard(m: np.ndarray, maxabs: np.ndarray, w: int) -> None:
-    """Per-doc exact-int64 domain bounds (both must hold, both FAIL LOUDLY):
-      m*max^2   >= per-doc sum-of-squares contribution          -> < 2^62
-      (w*max)^2 >= both s1*s1 and w*s2 in num = w*s2 - s1^2     -> < 2^63
-    The second was missing in round 2 (ADVICE r02 medium): w=30 with
-    |v|~2e8 passed the first bound yet s1^2 wrapped int64 silently.
+def _exact_docs(m: np.ndarray, maxabs: np.ndarray, w: int) -> np.ndarray:
+    """Per-doc mask of the docs whose window sums need the exact route.
 
-    Docs with fewer than w valid points are EXEMPT (ADVICE r03): no window
-    is ever computed for them, so their extreme values can't reach a sum —
-    and the global cumsum they pollute cancels exactly in any other doc's
-    window subtraction (two's-complement wraparound, module docstring).
-    This matches the round-2 kernel's early-return semantics."""
-    # exact Python-int arithmetic (object dtype): the guard products
-    # themselves exceed int64 for the very inputs they must reject, and a
-    # wrapped product would silently pass. O(docs-per-batch), not O(points).
-    m_o = m.astype(object)
+    Below (w*max)^2 < 2^63 both s1*s1 and w*s2 fit int64, so num does too
+    (ADVICE r02: w=30 with |v|~2e8 is outside; max|v| ~1.0e8 is the edge).
+    Docs with fewer than w valid points compute no window, so they never
+    need it (ADVICE r03). The products are Python ints (object dtype), as
+    the bound is evaluated exactly for the very inputs it selects.
+    O(docs-per-batch), not O(points)."""
     x_o = maxabs.astype(object)
-    bad = (
-        (m >= w)
-        & ((m_o * x_o * x_o >= 2**62) | ((w * x_o) ** 2 >= 2**63)).astype(bool)
-    )
-    if bad.any():
-        j = int(np.argmax(bad))
-        raise ValueError(
-            "fused kernel: exact int64 domain exceeded "
-            f"(n={int(m[j])}, w={w}, max|v|={int(maxabs[j])}: need "
-            "n*max^2 < 2^62 and (w*max)^2 < 2^63); rerun with "
-            "pipeline='exploded' and stats_mode='decimal' (engine/stats.py)"
-        )
+    return (m >= w) & ((w * x_o) ** 2 >= _INT64_LIMIT).astype(bool)
+
+
+def _exact_num(x: np.ndarray, w: int) -> np.ndarray:
+    """double(w*s2 - s1^2) over trailing w-windows of *x* (the int values of
+    whole docs, concatenated), from Python-int prefix sums — exact for any
+    int32 input, then correctly rounded like the oracle's float(num).
+    Windows that cross a doc start are garbage; the caller masks them."""
+    xo = x.astype(object)
+    zero = np.zeros(1, dtype=object)
+    c1 = np.concatenate((zero, np.cumsum(xo)))
+    c2 = np.concatenate((zero, np.cumsum(xo * xo)))
+    j = np.arange(1, x.size + 1)
+    lo = np.maximum(j - w, 0)
+    s1 = c1[j] - c1[lo]
+    return (w * (c2[j] - c2[lo]) - s1 * s1).astype(np.float64)
 
 
 def _flat_anom_flags(vf: np.ndarray, seg_starts: np.ndarray,
@@ -146,27 +145,29 @@ def _flat_anom_flags(vf: np.ndarray, seg_starts: np.ndarray,
     n = vf.size
     valid = ~np.isnan(vf)
     iv0 = np.where(valid, vf, 0.0).astype(np.int64)
-    maxabs_seg = (
-        np.maximum.reduceat(np.abs(iv0), seg_starts)
-        if n
-        else np.zeros(0, dtype=np.int64)
-    )
-    m_seg = np.maximum(seg_starts + lengths - fv_seg, 0)
-    _check_guard(m_seg, maxabs_seg, w)
     c1 = np.concatenate(([0], np.cumsum(iv0)))
     c2 = np.concatenate(([0], np.cumsum(iv0 * iv0)))
     pos = np.arange(n)
     winstart = pos + 1 - w
     full = winstart >= pos_fv
     lo = np.where(full, winstart, 0)
+    # |s1| <= w*2^31 always fits int64, so s1 (and ma) is exact for every
+    # doc; only num can wrap, and only in the docs _exact_docs selects
     s1 = c1[pos + 1] - c1[lo]
     s2 = c2[pos + 1] - c2[lo]
-    num = w * s2 - s1 * s1
+    num = (w * s2 - s1 * s1).astype(np.float64)
+    if n:
+        maxabs_seg = np.maximum.reduceat(np.abs(iv0), seg_starts)
+        m_seg = np.maximum(seg_starts + lengths - fv_seg, 0)
+        exact = _exact_docs(m_seg, maxabs_seg, w)
+        if exact.any():
+            at = np.repeat(exact, lengths)
+            num[at] = _exact_num(iv0[at], w)
     ma = s1.astype(np.float64) / float(w)
     # non-full positions carry garbage sums (lo clamped to 0) — every use
     # below is masked by `full`; errstate covers the NaN comparisons too
     with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        sd = np.sqrt(num.astype(np.float64) / float(w * (w - 1)))
+        sd = np.sqrt(num / float(w * (w - 1)))
         score = np.abs(np.where(valid, vf, 0.0) - ma) / sd
         return full & (sd > 0) & (score > float(k))
 
@@ -190,7 +191,8 @@ def _flat_rollup_cols(vf: np.ndarray, anom: np.ndarray,
                       b: int, compress: bool) -> tuple:
     """A1 (+C1/C2) over the flat batch -> per-bucket column arrays (every
     bucket in [0, ceil(len/b)) per doc is emitted, cnt=0 buckets included —
-    identical to the exploded groupBy, which sees the null points too).
+    identical to the oracle's per-bucket groupBy, which sees the null
+    points too).
 
     Returns (nb_per_doc, bucket, cnt, vmin, vmax, vsum, vmean, anom_cnt,
     first_v, last_v, empty_mask, payloads_t, payloads_v) as typed NumPy

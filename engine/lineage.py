@@ -86,10 +86,10 @@ def lineage_record(
     -1 = unknown (legacy writer); readers then fall back to the current
     snapshot.
 
-    ``pipeline`` records the physical strategy that produced the rows
-    ("fused", "exploded", "exploded-decimal-fallback", "cascade", ...) so
-    an auto-degraded epoch (the fused guard tripping on an int32-extreme
-    source, jobs/rollup.py) is visible to operators. "" = unrecorded."""
+    ``pipeline`` records the job step that produced the rows: "fused" (the
+    1m tier, jobs/rollup.py), "cascade" (1h/1d) or "compact"
+    (jobs/compact.py), so operators can see which path wrote an epoch.
+    "" = unrecorded."""
     d = _lineage_path(warehouse)
     os.makedirs(d, exist_ok=True)
     now = int(time.time() * 1_000_000)

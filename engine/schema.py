@@ -86,9 +86,9 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("out_rows", T.LongType(), False),
         T.StructField("checkpoint_epoch", T.LongType(), False),
         T.StructField("committed_at", T.TimestampType(), False),
-        # physical strategy that produced the partition ("fused", "exploded",
-        # "exploded-decimal-fallback", "cascade", ...; "" = unrecorded) — lets
-        # an operator see when the fused guard auto-degraded an epoch
+        # job step that produced the partition ("fused" 1m, "cascade" 1h/1d,
+        # "compact"; "" = unrecorded, e.g. retention) — lets an operator see
+        # which path wrote an epoch
         T.StructField("pipeline", T.StringType(), True),
     ]
 )

@@ -43,11 +43,8 @@ def main() -> None:
     ap.add_argument("--warmup", type=int, default=1,
                     help="untimed JIT warmup runs before the timed ones")
     ap.add_argument("--no-compress", action="store_true")
-    ap.add_argument("--pipeline", default="fused", choices=["fused", "exploded"])
     ap.add_argument("--workdir", default="/tmp/bench_pipeline")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--arrow-batch-rows", type=int, default=None,
-                    help="override the cache-blocked default (docs per Arrow batch)")
     args = ap.parse_args()
 
     from engine.io import scan_tokens, synth_tokens
@@ -94,8 +91,7 @@ def main() -> None:
     for i in range(args.warmup):
         wh = os.path.join(args.workdir, f"wh-warm{i}")
         shutil.rmtree(wh, ignore_errors=True)
-        run_rollup(spark, tokens, wh, epoch=1, compress=not args.no_compress,
-                   pipeline=args.pipeline, arrow_batch_rows=args.arrow_batch_rows)
+        run_rollup(spark, tokens, wh, epoch=1, compress=not args.no_compress)
         shutil.rmtree(wh, ignore_errors=True)
 
     results = []
@@ -105,10 +101,8 @@ def main() -> None:
         shutil.rmtree(wh, ignore_errors=True)
         m0, s0, b0 = _jvm_metrics(spark), _host_steal(), _host_busy_cpu()
         t0 = time.monotonic()
-        tiers = run_rollup(
-            spark, tokens, wh, epoch=1, compress=not args.no_compress,
-            pipeline=args.pipeline, arrow_batch_rows=args.arrow_batch_rows,
-        )
+        tiers = run_rollup(spark, tokens, wh, epoch=1,
+                           compress=not args.no_compress)
         wall = time.monotonic() - t0
         m1, s1, b1 = _jvm_metrics(spark), _host_steal(), _host_busy_cpu()
         # Amdahl split (run_rollup phase timers): parallel compute+write
@@ -127,7 +121,6 @@ def main() -> None:
             "docs": args.docs,
             "len": args.length,
             "compress": not args.no_compress,
-            "pipeline": args.pipeline,
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             # variance diagnosis: where did the wall time go?
             "gc_s": round((m1["gc_ms"] - m0["gc_ms"]) / 1000, 3),

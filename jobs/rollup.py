@@ -24,9 +24,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
+from engine.fused import fused_rollup_1m
 from engine.io import ParquetManifestFormat, scan_tokens, synth_tokens
 from engine.lineage import lineage_record, pending_partitions
-from engine.rollup import cascade, rollup_from_points
+from engine.rollup import cascade
 from engine.schema import (
     DEFAULT_K,
     DEFAULT_N_BUCKETS,
@@ -42,10 +43,8 @@ from pyspark.sql import types as T
 _ROLLUP_READ = T.StructType(
     ROLLUP_SCHEMA.fields + [T.StructField("part_hash", T.IntegerType(), True)]
 )
-from engine.series import explode_series, gap_fill
 from engine.session import get_spark
 from engine.skew import with_part_hash
-from engine.stats import detect
 
 
 def run_rollup(
@@ -61,38 +60,19 @@ def run_rollup(
     stop_after_tier: str | None = None,
     input_snapshot_id: int = 0,
     compress: bool = True,
-    stats_mode: str = "long",
     merge_docs: bool = False,
-    pipeline: str = "fused",
-    arrow_batch_rows: int | None = None,
-    arrow_batch_bytes: int = 2 << 20,
 ) -> dict:
     """Run (or resume) the full cascade for one checkpoint epoch.
 
-    ``pipeline`` picks the 1m-tier physical strategy (identical results,
-    pinned by tests/test_fused.py):
-      - 'fused' (default, the scale path): one narrow mapInArrow pass over
-        the raw doc rows — gap-fill, stats, detect, bucket aggregates and
-        compression in a single Arrow kernel; NO shuffle or sort of raw
-        points (engine/fused.py). The only exchange is the part_hash
-        rebalance of the ~60x smaller rollup output for the write. The
-        pass runs in at most one Python task per _FUSED_TASK_BYTES of
-        parquet input (see _build_1m).
-      - 'exploded': posexplode -> doc_id-windowed Catalyst stats -> groupBy
-        (engine/series.py + stats.py + rollup.py) — the semantic reference,
-        and the path for int32-extreme domains via stats_mode='decimal'
-        (the fused kernel fails loudly outside its exact-int64 domain).
-
-    The fused path's Arrow batches are counted in DOC rows (a row is a
-    whole series). ``arrow_batch_rows=None`` (default) derives the row
-    count from BYTES (``arrow_batch_bytes``, default 2 MB): cache
-    blocking — the flat kernel makes ~15 vectorized passes over each
-    batch, so a batch that fits L2/L3 keeps those passes out of DRAM and
-    the job's memory traffic collapses to ~2 passes (scan + emit). On
-    hosts where memory bandwidth, not CPU, is the ceiling (any host, at
-    enough cores), this is what lets the narrow plan keep scaling with
-    cores (see BENCH/BASELINE.md). The row count derives from max(n_tok)
-    in the parquet footers — no data scan.
+    The 1m tier is one narrow mapInArrow pass over the raw doc rows —
+    gap-fill, stats, detect, bucket aggregates and compression in a single
+    Arrow kernel, exact for every int32 input; NO shuffle or sort of raw
+    points (engine/fused.py). The only exchange is the part_hash rebalance
+    of the ~60x smaller rollup output for the write. The pass runs in at
+    most one Python task per _FUSED_TASK_BYTES of parquet input (see
+    _build_1m). Its Arrow batches are counted in DOC rows (a row is a whole
+    series), sized from _ARROW_BATCH_BYTES and max(n_tok) in the parquet
+    footers — no data scan.
 
     ``merge_docs=True`` gives ACCUMULATE semantics for incremental ingest
     (streaming micro-batches): rows already in a touched partition are
@@ -111,8 +91,8 @@ def run_rollup(
     metrics: dict = {}
 
     # This job retunes session confs for wide-array rows; snapshot them so a
-    # shared session (bench queries, streaming operators, later exploded
-    # runs) gets its own settings back afterwards (ADVICE r02).
+    # shared session (bench queries, streaming operators, point-stream
+    # UDFs) gets its own settings back afterwards (ADVICE r02).
     _tuned = [
         "spark.sql.parquet.columnarReaderBatchSize",
         "spark.sql.files.maxPartitionBytes",
@@ -127,19 +107,14 @@ def run_rollup(
     # max — bounded regardless of parallelism.
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
 
-    input_bytes = None
-    if pipeline == "fused":
-        max_n_tok, input_bytes = _footer_pass(tokens_df)
-        if arrow_batch_rows is None:
-            arrow_batch_rows = _cache_blocked_rows(
-                spark, tokens_df, arrow_batch_bytes, max_n_tok
-            )
+    max_n_tok, input_bytes = _footer_pass(tokens_df)
+    batch_rows = _cache_blocked_rows(spark, tokens_df, max_n_tok)
 
     try:
         _run_tiers(
             spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
-            tiers, stop_after_tier, input_snapshot_id, compress, stats_mode,
-            merge_docs, pipeline, arrow_batch_rows, input_bytes, metrics,
+            tiers, stop_after_tier, input_snapshot_id, compress, merge_docs,
+            batch_rows, input_bytes, metrics,
         )
     finally:
         for c, v in _saved.items():
@@ -150,10 +125,19 @@ def run_rollup(
     return metrics
 
 
-def _cache_blocked_rows(spark, tokens_df, batch_bytes: int,
-                        footer_max: int | None) -> int:
+# Series bytes (float64) per Arrow batch of the fused kernel: cache
+# blocking. The flat kernel makes ~15 vectorized passes over each batch, so
+# a batch that fits L2/L3 keeps those passes out of DRAM and the job's
+# memory traffic collapses to ~2 passes (scan + emit). On hosts where memory
+# bandwidth, not CPU, is the ceiling (any host, at enough cores), this is
+# what lets the narrow plan keep scaling with cores (BENCH/BASELINE.md).
+_ARROW_BATCH_BYTES = 2 << 20
+
+
+def _cache_blocked_rows(spark, tokens_df, footer_max: int | None) -> int:
     """Doc rows per Arrow batch so one batch's float64 series stay cache-
-    resident for the flat kernel's passes: batch_bytes / (8 * max n_tok).
+    resident for the flat kernel's passes: _ARROW_BATCH_BYTES / (8 * max
+    n_tok).
 
     max(n_tok) is *footer_max* when the footer pass found it (a pure
     metadata pass, ~ms for 64 files), else it comes from a Spark aggregate
@@ -175,7 +159,7 @@ def _cache_blocked_rows(spark, tokens_df, batch_bytes: int,
             pass
         finally:
             spark.conf.set("spark.sql.parquet.aggregatePushdown", saved)
-    return int(min(8192, max(16, batch_bytes // (8 * max(max_tok, 1)))))
+    return int(min(8192, max(16, _ARROW_BATCH_BYTES // (8 * max(max_tok, 1)))))
 
 
 def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
@@ -246,59 +230,34 @@ def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
 _FUSED_TASK_BYTES = 4 << 20
 
 
-def _build_1m(spark, toks, w, k, policy, compress, stats_mode, pipeline,
-              arrow_batch_rows, input_bytes):
-    """The 1m-tier physical strategy (docstring of run_rollup) and the
-    planned Python task count of the fused stage (None on the exploded
-    path, or when it is not known without running a job). Factored out so
-    the fused-guard auto-fallback can rebuild the plan with
-    pipeline='exploded', stats_mode='decimal'."""
-    if pipeline == "fused":
-        # scale path: narrow Arrow pass, zero raw-point shuffle
-        # (engine/fused.py). Batch sizing is in DOC rows here.
-        from engine.fused import fused_rollup_1m
-
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(int(arrow_batch_rows)),
-        )
-        # With no exchange, the fused stage runs one Python task per scan
-        # split. Spark's split size is min(maxPartitionBytes, max(4 MB,
-        # bytes per core)), where every file also counts a 4 MB open cost,
-        # so the per-core term alone gives a small input about one split
-        # per core. 16 MB (not the default 128 MB) bounds the splits of a
-        # large input, so its Python tasks stay small and balance across
-        # cores.
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        # Below _FUSED_TASK_BYTES per split, per-task set-up outweighs the
-        # kernel: a narrow coalesce merges the splits into one task per
-        # _FUSED_TASK_BYTES of input (still no exchange — raw points are
-        # never shuffled). An input with more bytes per split plans
-        # exactly as before.
-        splits = _planned_partitions(toks) if input_bytes is not None else None
-        if splits is None:
-            return fused_rollup_1m(toks, w, k, policy, compress), None
-        max_tasks = max(1, -(-input_bytes // _FUSED_TASK_BYTES))
-        if max_tasks < splits:
-            toks = toks.coalesce(max_tasks)
-        return (fused_rollup_1m(toks, w, k, policy, compress),
-                min(max_tasks, splits))
-    if pipeline == "exploded":
-        # One doc_id-keyed shuffle serves explode -> gap-fill ->
-        # stats -> rollup (window key == groupBy prefix, §3.1).
-        points = gap_fill(explode_series(toks), policy)
-        flagged = detect(points, w, k, stats_mode)
-        if compress:
-            # fused A1+C1+C2: one Python pass computes aggregates AND
-            # payloads — avoids executing the window pipeline twice
-            # (engine/compression.py::rollup_1m_with_payloads)
-            from engine.compression import rollup_1m_with_payloads
-
-            return rollup_1m_with_payloads(flagged, "1m"), None
-        return rollup_from_points(flagged, "1m").withColumn(
-            "ts_dod", F.lit(None).cast("binary")
-        ).withColumn("v_gorilla", F.lit(None).cast("binary")), None
-    raise ValueError(f"pipeline must be 'fused' or 'exploded', got {pipeline!r}")
+def _build_1m(spark, toks, w, k, policy, compress, batch_rows, input_bytes):
+    """The 1m tier's fused frame (docstring of run_rollup) and the planned
+    Python task count of its stage (None when it is not known without
+    running a job). Batch sizing is in DOC rows here."""
+    spark.conf.set(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", str(int(batch_rows))
+    )
+    # With no exchange, the fused stage runs one Python task per scan
+    # split. Spark's split size is min(maxPartitionBytes, max(4 MB,
+    # bytes per core)), where every file also counts a 4 MB open cost,
+    # so the per-core term alone gives a small input about one split
+    # per core. 16 MB (not the default 128 MB) bounds the splits of a
+    # large input, so its Python tasks stay small and balance across
+    # cores.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+    # Below _FUSED_TASK_BYTES per split, per-task set-up outweighs the
+    # kernel: a narrow coalesce merges the splits into one task per
+    # _FUSED_TASK_BYTES of input (still no exchange — raw points are
+    # never shuffled). An input with more bytes per split plans
+    # exactly as before.
+    splits = _planned_partitions(toks) if input_bytes is not None else None
+    if splits is None:
+        return fused_rollup_1m(toks, w, k, policy, compress), None
+    max_tasks = max(1, -(-input_bytes // _FUSED_TASK_BYTES))
+    if max_tasks < splits:
+        toks = toks.coalesce(max_tasks)
+    return (fused_rollup_1m(toks, w, k, policy, compress),
+            min(max_tasks, splits))
 
 
 def _planned_partitions(df) -> int | None:
@@ -322,9 +281,7 @@ def _planned_partitions(df) -> int | None:
 # regardless of how wide the tier schema is). The cutover is data-sized,
 # not core-count-sized (the broadcast-threshold shape): a 100 TB tier
 # commit exceeds any sane threshold and takes the distributed job.
-_STATS_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_STATS_DRIVER_MAX_ROWS", str(4_000_000))
-)
+_STATS_DRIVER_MAX_ROWS = 4_000_000
 
 
 def _written_stats(spark, fmt, table: str, out_snapshot: int) -> list[dict]:
@@ -418,8 +375,8 @@ def _pending_only(stats: list[dict], pending_set: list[int]) -> list[dict]:
 
 def _run_tiers(
     spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
-    tiers, stop_after_tier, input_snapshot_id, compress, stats_mode,
-    merge_docs, pipeline, arrow_batch_rows, input_bytes, metrics,
+    tiers, stop_after_tier, input_snapshot_id, compress, merge_docs,
+    batch_rows, input_bytes, metrics,
 ) -> None:
     for tier in tiers:
         t_start = time.monotonic()
@@ -431,37 +388,32 @@ def _run_tiers(
         if tier == "1m":
             # Resume filter applied BEFORE the heavy work: part_hash is a
             # pure function of doc_id, so pruning the token table up front
-            # skips explode/gap-fill/stats for committed partitions entirely
+            # skips gap-fill/stats/compression for committed partitions entirely
             # (on Iceberg with bucket(N, doc_id) this is partition pruning).
             toks = with_part_hash(tokens_df, n_buckets)
             if len(pending_set) < n_buckets:
                 toks = toks.where(F.col("part_hash").isin(pending_set))
-            toks_pruned = toks.drop("part_hash")
-
-            def _mk_1m(p, sm):
-                df, py_tasks = _build_1m(spark, toks_pruned, w, k, policy,
-                                         compress, sm, p, arrow_batch_rows,
-                                         input_bytes)
-                df = with_part_hash(df, n_buckets)
-                if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
-                    # touched set from the (cheap, column-pruned) token batch
-                    # — never by executing the heavy stats pipeline twice
-                    touched = [
-                        int(r["part_hash"])
-                        for r in with_part_hash(tokens_df, n_buckets)
-                        .select("part_hash").distinct().collect()
-                    ]
-                    batch_docs = tokens_df.select("doc_id").distinct()
-                    carried = (
-                        fmt.read("rollup_1m")
-                        .where(F.col("part_hash").isin(touched))
-                        .join(batch_docs, "doc_id", "left_anti")
-                    )
-                    df = df.unionByName(carried)
-                return df, py_tasks
-
-            tier_df, py_tasks = _mk_1m(pipeline, stats_mode)
-            used_pipeline = pipeline
+            tier_df, py_tasks = _build_1m(
+                spark, toks.drop("part_hash"), w, k, policy, compress,
+                batch_rows, input_bytes,
+            )
+            tier_df = with_part_hash(tier_df, n_buckets)
+            if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
+                # touched set from the (cheap, column-pruned) token batch
+                # — never by executing the heavy stats pipeline twice
+                touched = [
+                    int(r["part_hash"])
+                    for r in with_part_hash(tokens_df, n_buckets)
+                    .select("part_hash").distinct().collect()
+                ]
+                batch_docs = tokens_df.select("doc_id").distinct()
+                carried = (
+                    fmt.read("rollup_1m")
+                    .where(F.col("part_hash").isin(touched))
+                    .join(batch_docs, "doc_id", "left_anti")
+                )
+                tier_df = tier_df.unionByName(carried)
+            used_pipeline = "fused"
             snapshot_for_lineage = input_snapshot_id
         else:
             finer = TIER_ORDER[TIER_ORDER.index(tier) - 1]
@@ -486,36 +438,9 @@ def _run_tiers(
         # snapshot id goes into lineage so epoch-E readers can time-travel
         # to exactly this commit after later epochs overwrite the partitions
         t_write = time.monotonic()
-        try:
-            out_snapshot = fmt.overwrite_partitions(
-                tier_df, f"rollup_{tier}", rebalance=True
-            )
-        except Exception as e:
-            # The fused kernel FAILS LOUDLY outside its exact-int64 domain
-            # (engine/fused.py::_check_guard) — surfacing here, at the first
-            # action. An unattended 100 TB job should DEGRADE, not die, on
-            # one int32-extreme source: rebuild this tier on the exploded
-            # pipeline with the decimal stats carrier (bit-exact semantics,
-            # engine/stats.py) and retry once. The lineage row records the
-            # degraded strategy so operators can see it.
-            if not (tier == "1m" and pipeline == "fused"
-                    and "exact int64 domain exceeded" in str(e)):
-                raise
-            print(
-                "rollup: fused guard tripped "
-                "-> falling back to exploded/decimal for tier 1m "
-                f"(epoch {epoch}): {str(e).splitlines()[0][:200]}",
-                file=sys.stderr,
-            )
-            # point-stream batches again, not doc-row batches
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", "100000"
-            )
-            used_pipeline = "exploded-decimal-fallback"
-            tier_df, py_tasks = _mk_1m("exploded", "decimal")
-            out_snapshot = fmt.overwrite_partitions(
-                tier_df, f"rollup_{tier}", rebalance=True
-            )
+        out_snapshot = fmt.overwrite_partitions(
+            tier_df, f"rollup_{tier}", rebalance=True
+        )
         write_s = time.monotonic() - t_write
         # (L3) per-partition counts from a pruned direct read of the snap
         # dir this commit wrote (see _written_stats — round 7).
@@ -581,17 +506,6 @@ def main() -> None:
     ap.add_argument("--stop-after-tier", default=None)
     ap.add_argument("--no-compress", action="store_true",
                     help="skip C1/C2 payloads on the 1m tier")
-    ap.add_argument("--stats-mode", default="long", choices=["long", "decimal"],
-                    help="integer carrier for exact rolling stats; 'decimal' "
-                         "for int32-extreme domains (see engine/stats.py)")
-    ap.add_argument("--pipeline", default="fused", choices=["fused", "exploded"],
-                    help="1m-tier strategy: fused narrow Arrow pass (scale "
-                         "path) or exploded Catalyst windows (reference path)")
-    ap.add_argument("--arrow-batch-rows", type=int, default=None,
-                    help="Arrow batch size in DOC rows for the fused path "
-                         "(default: cache-blocked from --arrow-batch-bytes)")
-    ap.add_argument("--arrow-batch-bytes", type=int, default=2 << 20,
-                    help="target bytes of series data per Arrow batch")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -614,10 +528,6 @@ def main() -> None:
         tiers=args.tiers.split(","),
         stop_after_tier=args.stop_after_tier,
         compress=not args.no_compress,
-        stats_mode=args.stats_mode,
-        pipeline=args.pipeline,
-        arrow_batch_rows=args.arrow_batch_rows,
-        arrow_batch_bytes=args.arrow_batch_bytes,
     )
     for tier, m in metrics.items():
         print(f"tier={tier} {m}")

@@ -42,6 +42,18 @@ def _random_doc(rng: random.Random, i: int, length: int) -> dict:
     }
 
 
+def _big_doc() -> list:
+    """400 points alternating near +-2e8, one gap and three 2e9 spikes
+    (the only anomalies). At w=30 the window's num = w*s2 - s1^2 is
+    ~1e20: it does not fit int64, so int64 arithmetic gets sd wrong."""
+    tokens = [(200_000_000 + (t * 7919) % 50000) * (1 if t % 2 else -1)
+              for t in range(400)]
+    for t in (100, 250, 371):
+        tokens[t] = 2_000_000_000
+    tokens[50] = None
+    return tokens
+
+
 def make_token_rows(n_random: int = 50, seed: int = 42) -> list[dict]:
     """Deterministic fixture table: named edge-case docs (FIXTURES.md F1)
     plus n_random mixed-length random docs. Pure-Python generation so the
@@ -70,6 +82,7 @@ def make_token_rows(n_random: int = 50, seed: int = 42) -> list[dict]:
             "n_tok": 63,
             "source": "cc",
         },
+        {"doc_id": "doc_big", "tokens": _big_doc(), "n_tok": 400, "source": "news"},
     ]
     lengths = [1, W - 1, W, W + 1, 97, 200, 512]
     for i in range(n_random):

@@ -75,20 +75,14 @@ def test_empty_and_singleton():
 
 
 def test_spark_attach_and_decompress_roundtrip(spark, tokens_df, token_rows):
-    """End-to-end: compress per (doc_id, 1m bucket) via applyInPandas, read
-    payloads back with the scalar Arrow UDF, compare against the raw
-    non-null points — token-array equality (B:15)."""
-    from pyspark.sql import functions as F
+    """End-to-end: the fused 1m kernel compresses per (doc_id, 1m bucket)
+    on the full fixture (int32 extremes included), the scalar Arrow UDF
+    reads the payloads back, and they equal the raw non-null points —
+    token-array equality (B:15)."""
+    from engine.compression import decompress_columns
+    from engine.fused import fused_rollup_1m
 
-    from engine.compression import attach_compression, decompress_columns
-    from engine.rollup import rollup_from_points
-    from engine.series import explode_series, gap_fill
-    from engine.stats import detect
-
-    flagged = detect(gap_fill(explode_series(tokens_df), "ffill"))
-    r1m = rollup_from_points(flagged, "1m")
-    with_payloads = attach_compression(r1m, flagged, "1m")
-    decoded = decompress_columns(with_payloads).select(
+    decoded = decompress_columns(fused_rollup_1m(tokens_df)).select(
         "doc_id", "bucket", "cnt", "ts_points", "v_points"
     )
     rows = decoded.collect()
@@ -113,23 +107,6 @@ def test_spark_attach_and_decompress_roundtrip(spark, tokens_df, token_rows):
         got = list(zip(r["ts_points"], r["v_points"]))
         assert got == want, f"{key}: decompressed points differ"
     assert set(expected) == {(r["doc_id"], r["bucket"]) for r in rows}
-
-
-def test_fused_rollup_matches_catalyst(spark, tokens_df):
-    """The fused mapInPandas A1+C1+C2 path must produce the exact same
-    aggregate rows as the pure-Catalyst rollup (incl. bit-equal vmean)."""
-    from engine.compression import rollup_1m_with_payloads
-    from engine.rollup import rollup_from_points
-    from engine.series import explode_series, gap_fill
-    from engine.stats import detect
-
-    flagged = detect(gap_fill(explode_series(tokens_df), "ffill"), exact_mode="decimal")
-    cols = ["doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-            "vmean", "anom_cnt", "first_v", "last_v"]
-    fused = rollup_1m_with_payloads(flagged, "1m").select(cols)
-    catalyst = rollup_from_points(flagged, "1m").select(cols)
-    assert fused.exceptAll(catalyst).count() == 0
-    assert catalyst.exceptAll(fused).count() == 0
 
 
 def test_vectorized_many_byte_identical_to_sequential():
@@ -267,13 +244,11 @@ def _poisoned_1m(tokens_df):
     the tier was built from."""
     from pyspark.sql import functions as F
 
-    from engine.compression import rollup_1m_with_payloads
+    from engine.fused import fused_rollup_1m
     from engine.series import explode_series, gap_fill
-    from engine.stats import detect
 
-    in_range = tokens_df.where("doc_id != 'doc_negmax'")
-    filled = gap_fill(explode_series(in_range), "ffill")
-    r1m = rollup_1m_with_payloads(detect(filled), "1m", presorted=False).cache()
+    filled = gap_fill(explode_series(tokens_df), "ffill")
+    r1m = fused_rollup_1m(tokens_df).cache()
     victim = r1m.where("cnt > 0").select("doc_id", "bucket").first()
     poisoned = r1m.withColumn(
         "ts_dod",

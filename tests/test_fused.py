@@ -1,18 +1,17 @@
 """engine/fused.py: the shuffle-free doc-level pipeline must be
-bit-identical to the exploded Catalyst reference path — rollup aggregates,
-anomaly counts, AND compression payload bytes."""
+bit-identical to the oracle (engine/oracle.py) on every int32 input —
+rollup aggregates, anomaly counts, AND compression payload bytes."""
 
 from __future__ import annotations
 
-import pytest
+import math
+
+import numpy as np
 from pyspark.sql import functions as F
 
-from engine.compression import rollup_1m_with_payloads
+from engine import oracle
 from engine.fused import fused_rollup_1m
-from engine.rollup import rollup_from_points
-from engine.schema import DEFAULT_K, DEFAULT_WINDOW
-from engine.series import explode_series, gap_fill
-from engine.stats import detect
+from engine.schema import DEFAULT_K, DEFAULT_WINDOW, TIER_SECONDS
 
 W, K = DEFAULT_WINDOW, DEFAULT_K
 
@@ -20,105 +19,100 @@ AGG_COLS = [
     "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
     "vmean", "anom_cnt", "first_v", "last_v",
 ]
+_INT_COLS = {"bucket", "cnt", "vmin", "vmax", "vsum", "anom_cnt", "first_v", "last_v"}
 
 
-def _rows(df, cols):
-    return sorted(tuple(r) for r in df.select(cols).collect())
+def _rows(df, cols=AGG_COLS):
+    """Sorted row tuples of a Spark rollup frame; bucket_ts as epoch
+    seconds, payloads as bytes."""
+    sel = [F.unix_seconds("bucket_ts").alias(c) if c == "bucket_ts" else c
+           for c in cols]
+    return sorted(
+        tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
+        for r in df.select(sel).collect()
+    )
 
 
-@pytest.fixture(scope="module")
-def in_range(tokens_df):
-    # doc_negmax (int32 extremes) is outside the fused/long exact domain by
-    # design — it has its own loud-failure test below
-    return tokens_df.where("doc_id != 'doc_negmax'")
+def _oracle_rows(frame):
+    """The oracle's rollup frame in _rows' form (NaN -> None, ints as int,
+    vmean compared bit-exact)."""
+    out = []
+    for r in frame.to_dict("records"):
+        row = []
+        for c in AGG_COLS:
+            x = r[c]
+            if c == "bucket_ts":
+                x = x.value // 10**9
+            elif x is None or (isinstance(x, float) and math.isnan(x)):
+                x = None
+            elif c in _INT_COLS:
+                x = int(x)
+            row.append(x)
+        out.append(tuple(row))
+    return sorted(out)
 
 
-def test_fused_equals_exploded_all_policies(spark, in_range):
+def test_fused_equals_exploded_all_policies(spark, tokens_df, token_rows):
+    """Fused 1m rows == oracle.pipeline_oracle on the full fixture, int32
+    extremes (doc_negmax) and the ~2e8-level doc_big included."""
     for policy in ("ffill", "zero", "linear"):
-        fused = fused_rollup_1m(in_range, W, K, policy, compress=False)
-        exploded = rollup_from_points(
-            detect(gap_fill(explode_series(in_range), policy), W, K, "decimal"),
-            "1m",
+        fused = fused_rollup_1m(tokens_df, W, K, policy, compress=False)
+        want = _oracle_rows(
+            oracle.pipeline_oracle(token_rows, W, K, policy)["rollup_1m"]
         )
-        got = _rows(fused, AGG_COLS)
-        want = _rows(exploded, AGG_COLS)
-        assert got == want, f"policy={policy}: fused != exploded"
+        assert _rows(fused) == want, f"policy={policy}: fused != oracle"
 
 
-def test_fused_payloads_equal_pointstream_kernel(spark, in_range):
-    fused = fused_rollup_1m(in_range, W, K, "ffill", compress=True)
-    flagged = detect(gap_fill(explode_series(in_range), "ffill"), W, K, "decimal")
-    ref = rollup_1m_with_payloads(flagged, "1m", presorted=False)
-    cols = AGG_COLS + ["ts_dod", "v_gorilla"]
+def _reference_payloads(token_rows, policy="ffill"):
+    """(doc_id, bucket) -> (ts_dod, v_gorilla) from the sequential encoders
+    applied per 1m bucket to the oracle's gap-filled points (timestamps
+    are doc-relative positions)."""
+    from engine.compression import dod_compress, gorilla_compress
 
-    def norm(df):
-        return sorted(
-            tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
-            for r in df.select(cols).collect()
-        )
+    b = TIER_SECONDS["1m"]
+    out = {}
+    for row in token_rows:
+        filled = oracle.gap_fill_series(list(row["tokens"]), policy)
+        for bucket in range(-(-len(filled) // b)):
+            pts = [(t, v) for t, v in enumerate(filled[bucket * b:(bucket + 1) * b],
+                                                bucket * b) if v is not None]
+            ts = np.array([t for t, _ in pts], dtype=np.int64)
+            vs = np.array([v for _, v in pts], dtype=np.int64)
+            out[(row["doc_id"], bucket)] = (dod_compress(ts), gorilla_compress(vs))
+    return out
 
-    assert norm(fused) == norm(ref)
 
-
-def test_fused_payloads_roundtrip(spark, in_range):
-    """decompress(fused payloads) must reproduce the gap-filled points."""
-    from engine.compression import decompress_columns
-
-    fused = fused_rollup_1m(in_range, W, K, "ffill", compress=True)
-    dec = decompress_columns(fused).select("doc_id", "bucket", "cnt", "ts_points", "v_points")
-    filled = gap_fill(explode_series(in_range), "ffill").where(F.col("v").isNotNull())
-    pts = {
-        (r["doc_id"], r["bucket"]): (list(r["ts"]), list(r["vs"]))
-        for r in filled.withColumn("bucket", F.expr("t DIV 60"))
-        .groupBy("doc_id", "bucket")
-        .agg(
-            F.sort_array(F.collect_list("t")).alias("ts"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("t", "v"))), lambda s: s["v"]
-            ).alias("vs"),
-        )
-        .collect()
+def test_fused_payloads_equal_pointstream_kernel(spark, tokens_df, token_rows):
+    """Fused payload bytes == the sequential dod/Gorilla encoders run per
+    bucket over the oracle's gap-filled points, on the full fixture."""
+    fused = fused_rollup_1m(tokens_df, W, K, "ffill", compress=True)
+    got = {
+        (r[0], r[1]): (r[2], r[3])
+        for r in _rows(fused, ["doc_id", "bucket", "ts_dod", "v_gorilla"])
     }
-    for r in dec.collect():
-        key = (r["doc_id"], r["bucket"])
-        if r["cnt"] == 0:
-            assert list(r["ts_points"]) == [] and list(r["v_points"]) == []
-            continue
-        want_t, want_v = pts[key]
-        assert list(r["ts_points"]) == want_t, key
-        assert list(r["v_points"]) == [int(v) for v in want_v], key
+    assert got == _reference_payloads(token_rows)
 
 
-def test_fused_fails_loudly_outside_int64_domain(spark, tokens_df):
-    """int32-extreme docs must raise (mirroring the long carrier's ANSI
-    overflow), not silently corrupt."""
-    extremes = tokens_df.where("doc_id = 'doc_negmax'")
-    with pytest.raises(Exception) as ei:
-        fused_rollup_1m(extremes, W, K, "ffill", compress=False).collect()
-    assert "exact int64 domain" in str(ei.value)
-
-
-def test_run_rollup_pipelines_agree_end_to_end(spark, tmp_path):
-    """Full job parity: both pipelines produce identical tier tables
-    through write/cascade/lineage."""
-    from engine.io import ParquetManifestFormat, synth_tokens
-    from jobs.rollup import run_rollup
-
-    tokens = synth_tokens(spark, 30, seed=11)
-    whf, whe = str(tmp_path / "f"), str(tmp_path / "e")
-    run_rollup(spark, tokens, whf, epoch=1, pipeline="fused")
-    run_rollup(spark, tokens, whe, epoch=1, pipeline="exploded")
-    ff, fe = ParquetManifestFormat(spark, whf), ParquetManifestFormat(spark, whe)
-    for tier in ("1m", "1h", "1d"):
-        cols = AGG_COLS + (["ts_dod", "v_gorilla"] if tier == "1m" else [])
-
-        def norm(fmt):
-            return sorted(
-                tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
-                for r in fmt.read(f"rollup_{tier}").select(cols).collect()
-            )
-
-        assert norm(ff) == norm(fe), tier
+def test_fused_batch_size_invariant(spark, tokens_df):
+    """One doc per Arrow batch and every doc in one batch give the same
+    rows and payloads. The one-batch run puts the int32-extreme docs
+    (exact route) and the in-range docs into a single flat array, whose
+    global int64 cumsum wraps."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key, None)
+    cols = AGG_COLS + ["ts_dod", "v_gorilla"]
+    try:
+        spark.conf.set(key, "1")
+        one = _rows(fused_rollup_1m(tokens_df), cols)
+        spark.conf.set(key, "4096")
+        batched = _rows(fused_rollup_1m(tokens_df.coalesce(1)), cols)
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    assert one and one == batched
+    assert sum(r[8] for r in one if r[0] == "doc_big") > 0
 
 
 def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):
@@ -134,11 +128,8 @@ def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):
         wh = str(tmp_path / name)
         m = rollup_mod.run_rollup(spark, scan_tokens(spark, src), wh, epoch=1,
                                   tiers=["1m"])
-        rows = sorted(
-            tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
-            for r in ParquetManifestFormat(spark, wh).read("rollup_1m")
-            .select(AGG_COLS + ["ts_dod", "v_gorilla"]).collect()
-        )
+        rows = _rows(ParquetManifestFormat(spark, wh).read("rollup_1m"),
+                     AGG_COLS + ["ts_dod", "v_gorilla"])
         return m["1m"]["py_tasks"], rows
 
     capped_tasks, capped = run("capped")
@@ -148,71 +139,82 @@ def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):
     assert capped and capped == per_split
 
 
-def test_fused_guard_exempts_docs_shorter_than_window(spark):
-    """ADVICE r03 (low): a doc with fewer than w valid points never computes
-    a window, so int32-extreme values in it must NOT trip the guard (the
-    round-2 kernel's early-return semantics) — and the fused aggregates must
-    still match the exploded/decimal reference."""
-    import numpy as np
-
+def test_fused_guard_exempts_docs_shorter_than_window(spark, tokens_df, token_rows):
+    """ADVICE r03 (low): a doc with fewer than w valid points computes no
+    window, so int32-extreme values in it take no exact route and raise
+    nothing — and the fused aggregates still match the oracle, here next to
+    the full fixture."""
     from engine.fused import _anom_flags
+    from engine.schema import TOKENS_SCHEMA
 
-    # pure-kernel check: 5 extreme points, w=30 -> no window, no raise
+    # pure-kernel check: 5 extreme points, w=30 -> no window
     v = np.array([-2**31, 2**31 - 1, -2**31, 2**31 - 1, -1], dtype=np.float64)
     assert _anom_flags(v, 30, K).tolist() == [False] * 5
 
-    # end-to-end: short-extreme doc through the fused pipeline == exploded
-    short = spark.createDataFrame(
-        [("doc_short_extreme", [-(2**31), 2**31 - 1, None, -(2**31)], 4, "s")],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    fused = fused_rollup_1m(short, W, K, "ffill", compress=False)
-    exploded = rollup_from_points(
-        detect(gap_fill(explode_series(short), "ffill"), W, K, "decimal"), "1m"
-    )
-    assert _rows(fused, AGG_COLS) == _rows(exploded, AGG_COLS)
+    short = {"doc_id": "doc_short_extreme",
+             "tokens": [-(2**31), 2**31 - 1, None, -(2**31)],
+             "n_tok": 4, "source": "cc"}
+    df = tokens_df.unionByName(spark.createDataFrame([short], TOKENS_SCHEMA))
+    fused = fused_rollup_1m(df, W, K, "ffill", compress=False)
+    want = oracle.pipeline_oracle(token_rows + [short], W, K, "ffill")
+    assert _rows(fused) == _oracle_rows(want["rollup_1m"])
 
 
-def test_run_rollup_auto_fallback_on_guard_trip(spark, tokens_df, tmp_path):
-    """An unattended job must DEGRADE, not die, when the fused guard trips:
-    run_rollup(pipeline='fused') on an int32-extreme source transparently
-    reruns the 1m tier as exploded/decimal, the lineage row records the
-    degraded strategy, and the tiers match a clean exploded/decimal run."""
+def test_run_rollup_auto_fallback_on_guard_trip(spark, tokens_df, token_rows, ora,
+                                                tmp_path):
+    """run_rollup on the full fixture (int32 extremes and a ~2e8-level doc
+    with anomalies) writes 1m/1h/1d tiers equal to the oracle row for row,
+    1m payloads that decode to the oracle's gap-filled points, and lineage
+    that names only the fused 1m path and the cascade."""
+    from engine.compression import decompress_columns
     from engine.io import ParquetManifestFormat
     from engine.lineage import read_lineage
     from jobs.rollup import run_rollup
 
-    whf, whe = str(tmp_path / "fb"), str(tmp_path / "ref")
-    m1 = run_rollup(spark, tokens_df, whf, epoch=1, pipeline="fused")
-    assert m1["1m"]["pipeline"] == "exploded-decimal-fallback"
-    run_rollup(spark, tokens_df, whe, epoch=1, pipeline="exploded",
-               stats_mode="decimal")
-    lin = read_lineage(spark, whf).where("tier = '1m'")
-    assert {r["pipeline"] for r in lin.select("pipeline").distinct().collect()} \
-        == {"exploded-decimal-fallback"}
-    ff, fe = ParquetManifestFormat(spark, whf), ParquetManifestFormat(spark, whe)
-    for tier in ("1m", "1h", "1d"):
-        cols = AGG_COLS + (["ts_dod", "v_gorilla"] if tier == "1m" else [])
+    wh = str(tmp_path / "wh")
+    m = run_rollup(spark, tokens_df, wh, epoch=1)
+    assert m["1m"]["pipeline"] == "fused"
+    lin = read_lineage(spark, wh)
+    assert {(r["tier"], r["pipeline"]) for r in lin.collect()} == {
+        ("1m", "fused"), ("1h", "cascade"), ("1d", "cascade")
+    }
+    fmt = ParquetManifestFormat(spark, wh)
+    got = {t: _rows(fmt.read(f"rollup_{t}")) for t in ("1m", "1h", "1d")}
+    for tier, rows in got.items():
+        assert rows == _oracle_rows(ora[f"rollup_{tier}"]), tier
+    assert any(r[0] == "doc_big" and r[8] > 0 for r in got["1m"])
 
-        def norm(fmt):
-            return sorted(
-                tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
-                for r in fmt.read(f"rollup_{tier}").select(cols).collect()
-            )
+    filled = {r["doc_id"]: r["tokens"] for r in ora["filled"].to_dict("records")}
+    dec = decompress_columns(fmt.read("rollup_1m")).select(
+        "doc_id", "bucket", "ts_points", "v_points"
+    )
+    b = TIER_SECONDS["1m"]
+    n = 0
+    for r in dec.collect():
+        lo = r["bucket"] * b
+        want = [(t, v) for t, v in enumerate(filled[r["doc_id"]][lo:lo + b], lo)
+                if v is not None]
+        assert list(zip(r["ts_points"], r["v_points"])) == want, (r[0], r[1])
+        n += len(want)
+    assert n == sum(v is not None for f in filled.values() for v in f)
 
-        assert norm(ff) == norm(fe), tier
 
-
-def test_fused_guard_catches_s1_squared_overflow():
+def test_fused_guard_catches_s1_squared_overflow(token_rows):
     """ADVICE r02 (medium): w=30 docs with |v|~2e8 pass the old
-    n*max^2 < 2^62 bound yet s1^2 wraps int64. The widened guard
-    ((w*max)^2 < 2^63) must raise, not silently corrupt sd/anom counts."""
-    import numpy as np
-
+    n*max^2 < 2^62 bound yet s1^2 wraps int64. The kernel must return the
+    oracle's flags there — on a constant doc, and on doc_big, whose
+    num = w*s2 - s1^2 exceeds int64 — not silently corrupt sd/anom counts."""
     from engine.fused import _anom_flags
 
     v = np.full(64, 2.0e8, dtype=np.float64)
     m, maxabs = 64, int(2.0e8)
     assert m * maxabs * maxabs < 2**62  # old guard would have passed this
-    with pytest.raises(ValueError, match="exact int64 domain"):
-        _anom_flags(v, 30, K)
+    assert (30 * maxabs) ** 2 >= 2**63
+    want = oracle.rolling_stats_series([int(x) for x in v], 30, K)["is_anom"]
+    assert _anom_flags(v, 30, K).tolist() == want.tolist()
+
+    big = next(r["tokens"] for r in token_rows if r["doc_id"] == "doc_big")
+    filled = oracle.gap_fill_series(big, "ffill")
+    want = oracle.rolling_stats_series(filled, 30, K)["is_anom"].to_numpy()
+    got = _anom_flags(np.array(filled, dtype=np.float64), 30, K)
+    assert want.sum() == 3 and (got == want).all()

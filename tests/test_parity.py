@@ -250,8 +250,8 @@ def test_empty_and_allgap_docs(spark, tokens_df):
 
 def test_long_mode_matches_decimal(spark, tokens_df):
     """Fast long-carrier stats are bit-identical to the decimal carrier on
-    in-range data (everything but doc_negmax)."""
-    in_range = tokens_df.where("doc_id != 'doc_negmax'")
+    in-range data (everything but doc_negmax and the ~2e8-level doc_big)."""
+    in_range = tokens_df.where("doc_id NOT IN ('doc_negmax', 'doc_big')")
     a = spark_pipeline(in_range, exact_mode="long").toPandas().sort_values(["doc_id","t"]).reset_index(drop=True)
     b = spark_pipeline(in_range, exact_mode="decimal").toPandas().sort_values(["doc_id","t"]).reset_index(drop=True)
     for col in ("ma", "sd", "score"):

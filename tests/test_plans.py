@@ -120,8 +120,8 @@ def _fused_1m(spark, path):
     saved = {k: spark.conf.get(k, None) for k in keys}
     toks = scan_tokens(spark, path)
     try:
-        df, py_tasks = _build_1m(spark, toks, 30, 3.0, "ffill", True, "long",
-                                 "fused", 32, _footer_pass(toks)[1])
+        df, py_tasks = _build_1m(spark, toks, 30, 3.0, "ffill", True, 32,
+                                 _footer_pass(toks)[1])
         return _plan(df), py_tasks, _planned_partitions(df), _planned_partitions(toks)
     finally:
         for k, v in saved.items():
