@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.trend import MK_Z_CRIT
+from engine.util import planned_partitions
 
 W_EVENTS = 30  # rolling window on the events series (engine default)
 K_EVENTS = 3.0  # detect threshold
@@ -46,9 +47,13 @@ def _spread(spark: SparkSession, df: DataFrame, key: str = "doc_id") -> DataFram
     round-robin) keeps the placement deterministic under task retry
     (guide §2.5 / SPARK-38388) and skips the sort-before-repartition pass.
     Row placement/order does not affect results: callers are pure per-row
-    maps whose outputs are compared as sorted row multisets."""
+    maps whose outputs are compared as sorted row multisets. The split
+    count comes from the physical plan, with no RDD conversion and no job;
+    an adaptive plan (unknown count — callers pass plain scans, which are
+    not adaptive) is left as it is."""
     cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
+    splits = planned_partitions(df)
+    if splits is not None and splits < cores:
         return df.repartition(cores, key)
     return df
 

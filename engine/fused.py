@@ -52,8 +52,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from engine.schema import DEFAULT_K, DEFAULT_WINDOW, EPOCH0_EPOCH_SECONDS, TIER_SECONDS
-from engine.series import GAP_POLICIES
+from engine.schema import (
+    DEFAULT_K,
+    DEFAULT_WINDOW,
+    EPOCH0_EPOCH_SECONDS,
+    GAP_POLICIES,
+    TIER_SECONDS,
+)
 
 # (w*max|v|)^2 at or above this can overflow num = w*s2 - s1^2 in int64
 _INT64_LIMIT = 2**63

@@ -11,7 +11,11 @@ contract over parquet + a JSON manifest that carries snapshot semantics:
     last overwrote it, so overwrite-by-partition and read-at-snapshot behave
     like Iceberg partition overwrites + time travel;
   - manifest replace is atomic (os.replace), and data directories are
-    immutable once written — a reader never sees a half-written snapshot.
+    immutable once written — a reader never sees a half-written snapshot;
+  - the manifest owns the table schema (Iceberg's table metadata): the
+    first commit records it, every later commit must match it (checked
+    before any data is written), and every read imposes it, so no read
+    runs a parquet footer-inference job.
 
 Swapping in Iceberg on a cluster touches only this module.
 """
@@ -25,6 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine.schema import TOKENS_SCHEMA, assert_tokens_schema
 from engine.skew import with_part_hash
@@ -177,10 +182,22 @@ class ParquetManifestFormat:
         sort: nothing is materialized into the written schema, and the
         snapshot/manifest protocol is unchanged — row ORDER inside
         immutable files is the only difference.
+
+        The table's first commit records *df*'s schema (``part_hash``
+        included, every field nullable, as parquet stores them) in the
+        manifest. Every later commit must write the same column names and
+        types, in any order: otherwise it raises ValueError before any
+        data directory is created. A manifest written before schemas were
+        recorded stays unchecked.
         """
         if "part_hash" not in df.columns:
             raise ValueError("overwrite_partitions requires a part_hash column (K1)")
         manifest = self._load(table)
+        schema = _stored_schema(df.schema)
+        if int(manifest["current"]) == 0:
+            manifest["schema"] = json.loads(schema.json())
+        elif "schema" in manifest:
+            _check_drift(table, T.StructType.fromJson(manifest["schema"]), schema)
         snap_id = int(manifest["current"]) + 1
         data_dir = os.path.join(self.warehouse, table, f"snap-{snap_id}")
         # Co-locate each part_hash into one task before the dynamic-partition
@@ -242,14 +259,16 @@ class ParquetManifestFormat:
         self._store(table, manifest)
         return snap_id
 
-    def read_at(self, table: str, snapshot_id: int, schema=None) -> DataFrame:
+    def read_at(self, table: str, snapshot_id: int) -> DataFrame:
         """S3: time-travel read of one snapshot.
 
-        ``schema`` (round 7, optional): a pinned read schema INCLUDING the
-        ``part_hash`` partition column. Skips parquet footer schema
-        inference (~0.1-0.15 s of driver latency per read on a 64-partition
-        table); callers that know the tier layout (jobs/rollup's cascade
-        reads) pass it, everyone else keeps fail-fast inference.
+        Every branch is read with the schema the manifest recorded at the
+        table's first commit (``part_hash`` included, typed bigint as
+        written), so planning a read runs no parquet footer-inference job
+        (one 1-task Spark job per branch otherwise). Drift is caught at
+        commit time instead (overwrite_partitions). A manifest without a
+        recorded schema (written before schemas were recorded) keeps
+        footer inference.
 
         A snapshot's live partitions generally span several immutable
         ``snap-N`` data directories (each incremental commit rewrote only a
@@ -269,12 +288,13 @@ class ParquetManifestFormat:
             by_dir.setdefault(d, []).append(int(h))
         if not by_dir:
             raise ValueError(f"{table}@{snapshot_id} is empty")
+        schema = manifest.get("schema")
         dfs = []
         for d in sorted(by_dir):
             paths = [os.path.join(d, f"part_hash={h}") for h in sorted(by_dir[d])]
             reader = self.spark.read
             if schema is not None:
-                reader = reader.schema(schema)
+                reader = reader.schema(T.StructType.fromJson(schema))
             dfs.append(reader.option("basePath", d).parquet(*paths))
         out = dfs[0]
         for df in dfs[1:]:
@@ -355,8 +375,27 @@ class ParquetManifestFormat:
             "removed_dirs": sorted(removed),
         }
 
-    def read(self, table: str, schema=None) -> DataFrame:
-        return self.read_at(table, self.current_snapshot(table), schema=schema)
+    def read(self, table: str) -> DataFrame:
+        return self.read_at(table, self.current_snapshot(table))
+
+
+def _stored_schema(schema: T.StructType) -> T.StructType:
+    """*schema* as parquet stores it: every top-level field nullable."""
+    return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema])
+
+
+def _check_drift(table: str, recorded: T.StructType, written: T.StructType) -> None:
+    """Raise unless *written* has *recorded*'s column names and types
+    (order and nullability ignored)."""
+    want = {f.name: f.dataType.simpleString() for f in recorded}
+    got = {f.name: f.dataType.simpleString() for f in written}
+    if got != want:
+        diff = sorted(
+            f"{c}: {want.get(c, 'absent')} -> {got.get(c, 'absent')}"
+            for c in want.keys() | got.keys()
+            if want.get(c) != got.get(c)
+        )
+        raise ValueError(f"{table}: commit schema drifts from the table's ({'; '.join(diff)})")
 
 
 def write_tier(

@@ -38,6 +38,8 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +60,12 @@ _ARROW_SCHEMA = pa.schema(
         ("committed_at", pa.timestamp("us", tz="UTC")),
         ("pipeline", pa.string()),
     ]
+)
+
+# The lineage columns committed_partition_snapshots reads.
+_SNAPSHOT_COLS = pa.schema(
+    [_ARROW_SCHEMA.field(c) for c in
+     ("tier", "part_hash", "checkpoint_epoch", "output_snapshot_id")]
 )
 
 
@@ -128,18 +136,24 @@ def committed_partition_snapshots(
 
     A partition committed more than once inside one epoch (dirty-crash
     recompute) keeps the LATEST output snapshot. -1 means the writer
-    predates output-snapshot recording (readers use the current snapshot)."""
-    d = _lineage_path(warehouse)
-    files = glob.glob(os.path.join(d, "commit-*.parquet"))
-    done: dict[int, int] = {}
-    for f in files:
-        t = pq.read_table(f)
-        for row in t.to_pylist():
-            if row["tier"] == tier and row["checkpoint_epoch"] == checkpoint_epoch:
-                p = int(row["part_hash"])
-                snap = int(row.get("output_snapshot_id", -1))
-                done[p] = max(done.get(p, -1), snap)
-    return done
+    predates output-snapshot recording (readers use the current snapshot).
+
+    One columnar pass: only the four columns this needs are read, the
+    (tier, epoch) filter runs in pyarrow, and the max per part_hash is an
+    Arrow group-by. A file without ``output_snapshot_id`` reads it as null,
+    i.e. -1."""
+    files = glob.glob(os.path.join(_lineage_path(warehouse), "commit-*.parquet"))
+    if not files:
+        return {}
+    t = ds.dataset(files, schema=_SNAPSHOT_COLS, format="parquet").to_table(
+        filter=(ds.field("tier") == tier)
+        & (ds.field("checkpoint_epoch") == checkpoint_epoch)
+    )
+    latest = pa.table({
+        "part_hash": t["part_hash"],
+        "snap": pc.fill_null(t["output_snapshot_id"], -1),
+    }).group_by("part_hash").aggregate([("snap", "max")])
+    return dict(zip(latest["part_hash"].to_pylist(), latest["snap_max"].to_pylist()))
 
 
 def pending_partitions(

@@ -18,6 +18,7 @@ from engine.io import ParquetManifestFormat, scan_tier
 from engine.lineage import committed_partition_snapshots
 from engine.rollup import cascade
 from engine.schema import DEFAULT_N_BUCKETS, TIER_ORDER, TIER_SECONDS
+from engine.skew import doc_buckets_filter, with_part_hash
 
 
 def resolution_pick(resolution_seconds: int) -> str:
@@ -58,6 +59,7 @@ def tier_fallback(
     tier: str,
     checkpoint_epoch: int,
     n_buckets: int = DEFAULT_N_BUCKETS,
+    doc_ids: list[str] | None = None,
 ) -> DataFrame:
     """Q2: serve a tier from committed partitions, filling holes on the fly
     by cascading the next finer committed tier.
@@ -71,24 +73,53 @@ def tier_fallback(
     is current". The lineage table is tiny: the partition sets are computed
     driver-side and pushed into IN-list filters, which prune part_hash
     partitions on the scan.
+
+    ``doc_ids`` prunes every scan further, the finer-tier hole fill
+    included, to the hash buckets of those docs (engine/skew.py::
+    doc_buckets_filter): part_hash is a pure function of doc_id, so the
+    other buckets cannot hold their rows. Rows of other docs that share a
+    bucket are still returned; the caller filters on doc_id.
+
+    *n_buckets* must be the bucket count the tiers were written with.
+    run_rollup records lineage for every bucket 0..N-1, empty ones
+    included, so a part_hash >= *n_buckets* in the lineage of the tier (or
+    of the finer tier that fills its holes) means the count is too small,
+    and this raises rather than prune to the wrong buckets. Too large a
+    count leaves buckets committed in neither tier, which raises too.
     """
+    doc_filter = doc_buckets_filter(doc_ids, n_buckets) if doc_ids else None
+
+    def _committed(t: str) -> dict[int, int]:
+        done = committed_partition_snapshots(fmt.warehouse, t, checkpoint_epoch)
+        over = sorted(p for p in done if p >= n_buckets)
+        if over:
+            raise ValueError(
+                f"tier {t}: lineage holds part_hash {over[:5]} >= n_buckets="
+                f"{n_buckets}; pass the bucket count the tier was written with"
+            )
+        return done
 
     def _scan_committed(t: str, snap_by_part: dict[int, int]) -> DataFrame:
         """Union of per-snapshot scans, each pruned to the partitions that
-        lineage pinned to that snapshot (snapshot -1 = legacy row, current)."""
+        lineage pinned to that snapshot (snapshot -1 = legacy row, current)
+        and to the requested docs' buckets."""
         by_snap: dict[int, list[int]] = {}
         for p, s in snap_by_part.items():
             by_snap.setdefault(s, []).append(int(p))
         pieces = []
         for s in sorted(by_snap):
             df = scan_tier(fmt, t, None if s < 0 else s)
-            pieces.append(df.where(F.col("part_hash").isin(by_snap[s])))
+            if len(by_snap[s]) < n_buckets:  # else the IN list prunes nothing
+                df = df.where(F.col("part_hash").isin(by_snap[s]))
+            if doc_filter is not None:
+                df = df.where(doc_filter)
+            pieces.append(df)
         out = pieces[0]
         for df in pieces[1:]:
             out = out.unionByName(df)
         return out
 
-    done = committed_partition_snapshots(fmt.warehouse, tier, checkpoint_epoch)
+    done = _committed(tier)
     holes = [p for p in range(n_buckets) if p not in done]
     parts: list[DataFrame] = []
     if done:
@@ -100,7 +131,7 @@ def tier_fallback(
                 f"tier {tier} has uncommitted partitions {holes[:5]}... and no finer tier to fall back to"
             )
         finer = TIER_ORDER[idx - 1]
-        finer_done = committed_partition_snapshots(fmt.warehouse, finer, checkpoint_epoch)
+        finer_done = _committed(finer)
         missing = [p for p in holes if p not in finer_done]
         if missing:
             raise ValueError(
@@ -108,8 +139,6 @@ def tier_fallback(
             )
         fine_df = _scan_committed(finer, {p: finer_done[p] for p in holes})
         on_the_fly = cascade(fine_df.drop("part_hash"), finer, tier)
-        from engine.skew import with_part_hash
-
         parts.append(with_part_hash(on_the_fly, n_buckets))
     if not parts:
         raise ValueError(f"tier {tier}: nothing committed for epoch {checkpoint_epoch}")
@@ -175,9 +204,13 @@ def downsample(
     anomalies_only: bool = False,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Q1+Q2+Q3+Q4 composed: the engine's flagship read query."""
+    """Q1+Q2+Q3+Q4 composed: the engine's flagship read query.
+
+    ``doc_ids`` both prunes the tier scans to those docs' hash buckets
+    (tier_fallback, which also raises if *n_buckets* is smaller than the
+    tiers' bucket count) and filters rows on doc_id."""
     tier = resolution_pick(resolution_seconds)
-    df = tier_fallback(spark, fmt, tier, checkpoint_epoch, n_buckets)
+    df = tier_fallback(spark, fmt, tier, checkpoint_epoch, n_buckets, doc_ids)
     df = range_filter(df, tier, t0, t1)
     if doc_ids:
         df = df.where(F.col("doc_id").isin(doc_ids))

@@ -29,6 +29,9 @@ TIER_ORDER = ["1m", "1h", "1d"]  # finest -> coarsest
 DEFAULT_WINDOW = 30  # trailing rolling window length w (inclusive of current)
 DEFAULT_K = 3.0  # threshold: is_anom = score > k (strict)
 
+# Gap-fill policies (G1; semantics pinned in engine/series.py's docstring).
+GAP_POLICIES = ("ffill", "zero", "linear")
+
 # Default bucket count for bucket-by-doc_id partitioning (K1). On a real
 # cluster this would be the Iceberg bucket(N, doc_id) transform width; in the
 # sandbox it is the part_hash modulus. Power of two, sized so a 10^12-sequence

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-GAP_POLICIES = ("ffill", "zero", "linear")
+from engine.schema import GAP_POLICIES
 
 
 def _floor_div(num: Column, den: Column) -> Column:

@@ -18,14 +18,26 @@ covers the groupBy/window cases AQE does not.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from engine.schema import DEFAULT_N_BUCKETS
 
 
-def part_hash_col(n_buckets: int = DEFAULT_N_BUCKETS):
-    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("long")
+def part_hash_col(n_buckets: int = DEFAULT_N_BUCKETS, doc_id: Column | None = None) -> Column:
+    """K1: the bucket of *doc_id* (default: the ``doc_id`` column) — the one
+    definition of the hash that writers and pruning readers share."""
+    if doc_id is None:
+        doc_id = F.col("doc_id")
+    return F.pmod(F.xxhash64(doc_id), F.lit(n_buckets)).cast("long")
+
+
+def doc_buckets_filter(doc_ids: list[str], n_buckets: int = DEFAULT_N_BUCKETS) -> Column:
+    """``part_hash IN (<bucket of each doc>)`` over doc_id literals. Each
+    bucket is part_hash_col of a literal, which Catalyst constant-folds, so
+    the scan gets a literal partition filter and reads only those docs'
+    ``part_hash`` dirs (Iceberg's bucket-transform pruning)."""
+    return F.col("part_hash").isin([part_hash_col(n_buckets, F.lit(d)) for d in doc_ids])
 
 
 def with_part_hash(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Small shared helpers for the bench harnesses."""
+"""Small shared helpers: plan introspection and the bench harnesses' median."""
 
 from __future__ import annotations
 
@@ -11,3 +11,13 @@ def median(xs) -> float:
     s = sorted(xs)
     m = len(s) // 2
     return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
+
+
+def planned_partitions(df) -> int | None:
+    """Partition count of *df*'s physical plan, without running a job (the
+    file scan's splits, for a scan). None when the plan is adaptive: its
+    count is known only after its shuffle stages have run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return None
+    return int(plan.execute().getNumPartitions())

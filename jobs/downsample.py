@@ -53,7 +53,7 @@ def main() -> None:
     fmt = ParquetManifestFormat(spark, args.warehouse)
     doc_ids = args.doc_ids.split(",") if args.doc_ids else None
     if args.raw:
-        r1m = tier_fallback(spark, fmt, "1m", args.epoch, args.n_buckets)
+        r1m = tier_fallback(spark, fmt, "1m", args.epoch, args.n_buckets, doc_ids)
         df = serve_raw_points(r1m, t0=args.t0, t1=args.t1, doc_ids=doc_ids)
     else:
         df = downsample(

@@ -32,19 +32,11 @@ from engine.schema import (
     DEFAULT_K,
     DEFAULT_N_BUCKETS,
     DEFAULT_WINDOW,
-    ROLLUP_SCHEMA,
     TIER_ORDER,
-)
-from pyspark.sql import types as T
-
-# Read schema for tier tables incl. the part_hash partition column (int, as
-# partition-value inference types it) — passed to fmt.read so the cascade
-# scans skip parquet footer schema inference.
-_ROLLUP_READ = T.StructType(
-    ROLLUP_SCHEMA.fields + [T.StructField("part_hash", T.IntegerType(), True)]
 )
 from engine.session import get_spark
 from engine.skew import with_part_hash
+from engine.util import planned_partitions as _planned_partitions
 
 
 def run_rollup(
@@ -260,16 +252,6 @@ def _build_1m(spark, toks, w, k, policy, compress, batch_rows, input_bytes):
             min(max_tasks, splits))
 
 
-def _planned_partitions(df) -> int | None:
-    """Partition count of *df*'s physical plan, without running a job (the
-    file scan's splits, for a scan). None when the plan is adaptive: its
-    count is known only after its shuffle stages have run."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        return None
-    return int(plan.execute().getNumPartitions())
-
-
 # Commits at or below this many rows have their L3 stats computed driver-
 # side with pyarrow (out_rows straight from footer num_rows, in_rows = sum
 # of the one ``cnt`` column) instead of a Spark job — the job itself costs
@@ -420,9 +402,8 @@ def _run_tiers(
             fine_snapshot = fmt.current_snapshot(f"rollup_{finer}")
             # part_hash partition pruning on the fine-tier scan (only when
             # some partitions are already committed: the IN list of every
-            # bucket prunes nothing and costs a literal per bucket); pinned
-            # read schema skips footer inference (round 7, engine/io.py)
-            fine_df = fmt.read(f"rollup_{finer}", schema=_ROLLUP_READ)
+            # bucket prunes nothing and costs a literal per bucket)
+            fine_df = fmt.read(f"rollup_{finer}")
             if len(pending_set) < n_buckets:
                 fine_df = fine_df.where(F.col("part_hash").isin(pending_set))
             coarse = cascade(

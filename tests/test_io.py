@@ -1,5 +1,6 @@
 """S1 ingest for footer-less formats (JSONL/CSV): roundtrip fidelity and
-fail-fast validation (engine/io.py)."""
+fail-fast validation; the tier table's manifest-recorded schema and its
+commit-time drift check (engine/io.py)."""
 
 from __future__ import annotations
 
@@ -90,3 +91,96 @@ def test_orc_ingest_roundtrip_and_drift(spark, tmp_path):
     drifted.write.orc(p2)
     with pytest.raises(ValueError, match="schema"):
         scan_tokens_orc(spark, p2)
+
+
+def _manifest(wh: str, table: str) -> dict:
+    import json
+
+    with open(os.path.join(wh, table, "manifest.json")) as f:
+        return json.load(f)
+
+
+def test_manifest_records_schema_at_first_commit(spark, tmp_path):
+    """The first commit records the frame's schema (part_hash included,
+    every field nullable) and reads impose it; a later commit with the
+    same names and types in another order and nullability is accepted."""
+    from pyspark.sql import types as T
+
+    from engine.io import ParquetManifestFormat, write_tier
+
+    wh = str(tmp_path / "wh")
+    fmt = ParquetManifestFormat(spark, wh)
+    df = spark.createDataFrame(
+        [("a", 1, 2.0), ("b", 2, None)],
+        T.StructType([
+            T.StructField("doc_id", T.StringType(), False),
+            T.StructField("bucket", T.LongType(), False),
+            T.StructField("vmean", T.DoubleType(), True),
+        ]),
+    )
+    write_tier(fmt, df, "1m")
+    want = T.StructType([
+        T.StructField("doc_id", T.StringType(), True),
+        T.StructField("bucket", T.LongType(), True),
+        T.StructField("vmean", T.DoubleType(), True),
+        T.StructField("part_hash", T.LongType(), True),
+    ])
+    assert T.StructType.fromJson(_manifest(wh, "rollup_1m")["schema"]) == want
+    got = fmt.read("rollup_1m")
+    assert got.schema == want
+    assert sorted(tuple(r) for r in got.drop("part_hash").collect()) == [
+        ("a", 1, 2.0), ("b", 2, None)
+    ]
+
+    reordered = spark.createDataFrame([(1.5, "c", 3)], "vmean double, doc_id string, bucket long")
+    assert write_tier(fmt, reordered, "1m") == 2
+    assert fmt.read("rollup_1m").count() == 3
+
+
+@pytest.mark.parametrize("drift", ["changed_type", "missing_column"])
+def test_drifted_commit_raises_and_leaves_table_unchanged(spark, tmp_path, drift):
+    """A commit whose columns or types differ from the recorded schema
+    raises before any data dir is created; the manifest is untouched."""
+    from engine.io import ParquetManifestFormat, write_tier
+
+    wh = str(tmp_path / "wh")
+    fmt = ParquetManifestFormat(spark, wh)
+    write_tier(fmt, spark.createDataFrame([("a", 1, 2.0)], "doc_id string, bucket long, vmean double"), "1m")
+    tdir = os.path.join(wh, "rollup_1m")
+    dirs = sorted(os.listdir(tdir))
+    with open(os.path.join(tdir, "manifest.json"), "rb") as f:
+        manifest = f.read()
+    if drift == "changed_type":
+        bad = spark.createDataFrame([("b", 2, 3)], "doc_id string, bucket long, vmean int")
+        match = "vmean: double -> int"
+    else:
+        bad = spark.createDataFrame([("b", 2)], "doc_id string, bucket long")
+        match = "vmean: double -> absent"
+    with pytest.raises(ValueError, match=match):
+        write_tier(fmt, bad, "1m")
+    assert sorted(os.listdir(tdir)) == dirs
+    with open(os.path.join(tdir, "manifest.json"), "rb") as f:
+        assert f.read() == manifest
+    assert fmt.current_snapshot("rollup_1m") == 1
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    """A manifest written before schemas were recorded keeps footer
+    inference (part_hash then reads as int, as partition inference types
+    it)."""
+    import json
+
+    from engine.io import ParquetManifestFormat, write_tier
+
+    wh = str(tmp_path / "wh")
+    fmt = ParquetManifestFormat(spark, wh)
+    write_tier(fmt, spark.createDataFrame([("a", 1, 2.0), ("b", 2, 4.0)], "doc_id string, bucket long, vmean double"), "1m")
+    m = _manifest(wh, "rollup_1m")
+    del m["schema"]
+    with open(os.path.join(wh, "rollup_1m", "manifest.json"), "w") as f:
+        json.dump(m, f)
+    got = fmt.read("rollup_1m")
+    assert dict(got.dtypes)["part_hash"] == "int"
+    assert sorted(tuple(r) for r in got.drop("part_hash").collect()) == [
+        ("a", 1, 2.0), ("b", 2, 4.0)
+    ]

@@ -106,6 +106,47 @@ def test_serve_raw_points_single_arrow_pass(spark, tokens_path, tmp_path):
     assert df.count() > 0
 
 
+def test_tier_reads_run_no_inference_job(spark, tokens_path, tmp_path):
+    """Planning tier reads launches no Spark job: the manifest's recorded
+    schema replaces parquet footer inference. A 2-doc downsample scans
+    exactly those docs' hash buckets (part_hash_col of each doc id),
+    folded into a literal partition filter."""
+    import re
+
+    from engine.io import ParquetManifestFormat, scan_tokens
+    from engine.query import downsample
+    from engine.skew import part_hash_col
+    from jobs.rollup import run_rollup
+
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, scan_tokens(spark, tokens_path), wh, epoch=1, compress=False)
+    fmt = ParquetManifestFormat(spark, wh)
+    docs = ["doc_00000001", "doc_00000002"]
+    sc = spark.sparkContext
+    group = "plan-tier-reads"
+    sc.setJobGroup(group, "plan tier reads")
+    try:
+        fmt.read("rollup_1h")
+        df = downsample(spark, fmt, 1, docs, resolution_seconds=3600)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
+
+    want = {
+        r[0] for r in spark.createDataFrame([(d,) for d in docs], "doc_id string")
+        .select(part_hash_col()).collect()
+    }
+    plan = _plan(df)
+    filters = re.findall(r"PartitionFilters: \[(.*?)\], PushedFilters", plan)
+    assert filters, plan
+    for f in filters:
+        lists = re.findall(r"part_hash#\d+L IN \(([\d,]+)\)", f)
+        assert [{int(x) for x in lst.split(",")} for lst in lists] == [want], f
+    assert {r["doc_id"] for r in df.collect()} == set(docs)
+
+
 def _fused_1m(spark, path):
     """The fused 1m frame run_rollup builds over the parquet input at
     *path*: (plan, planned Python tasks, the frame's partitions, the scan's

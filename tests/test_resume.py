@@ -58,14 +58,20 @@ def test_crash_between_data_and_lineage_is_recomputed(spark, small_tokens, tmp_p
     wh = str(tmp_path / "dirty")
     fmt = ParquetManifestFormat(spark, wh)
     # simulate: a previous attempt wrote garbage 1m data but died before the
-    # lineage append
+    # lineage append (with the tier's columns: the table records its schema
+    # at this first commit and refuses a resume commit that drifts from it)
     from engine.rollup import rollup_from_points
     from engine.series import explode_series, gap_fill
     from engine.stats import detect
 
-    garbage = rollup_from_points(
-        detect(gap_fill(explode_series(small_tokens.limit(3)))), "1m"
-    ).withColumn("cnt", F.lit(-999).cast("long"))
+    garbage = (
+        rollup_from_points(
+            detect(gap_fill(explode_series(small_tokens.limit(3)))), "1m"
+        )
+        .withColumn("cnt", F.lit(-999).cast("long"))
+        .withColumn("ts_dod", F.lit(None).cast("binary"))
+        .withColumn("v_gorilla", F.lit(None).cast("binary"))
+    )
     write_tier(fmt, garbage, "1m")
     assert committed_partitions(wh, "1m", 1) == set()  # invisible to readers
 
@@ -454,3 +460,85 @@ def test_observed_lineage_stats_match_written_tier(spark, small_tokens, tmp_path
         for p, oi in recorded.items():
             if p not in reread:
                 assert oi == (0, 0), (tier, p)
+
+
+def test_lineage_latest_snapshot_wins_after_recompute(tmp_path):
+    """A partition committed twice in one epoch (dirty-crash recompute)
+    maps to its later output snapshot; other tiers and epochs are
+    ignored."""
+    from engine.lineage import committed_partition_snapshots, lineage_record
+
+    wh = str(tmp_path / "wh")
+    row = {"in_rows": 1, "out_rows": 1}
+    lineage_record(wh, "1m", [{"part_hash": 1, **row}, {"part_hash": 2, **row}], 0, 1,
+                   output_snapshot_id=5)
+    lineage_record(wh, "1m", [{"part_hash": 1, **row}], 0, 1, output_snapshot_id=3)
+    lineage_record(wh, "1m", [{"part_hash": 1, **row}], 0, 1, output_snapshot_id=7)
+    lineage_record(wh, "1h", [{"part_hash": 1, **row}], 0, 1, output_snapshot_id=9)
+    lineage_record(wh, "1m", [{"part_hash": 4, **row}], 0, 2, output_snapshot_id=8)
+    assert committed_partition_snapshots(wh, "1m", 1) == {1: 7, 2: 5}
+    assert committed_partition_snapshots(wh, "1m", 3) == {}
+    assert committed_partition_snapshots(str(tmp_path / "none"), "1m", 1) == {}
+
+
+def test_lineage_file_without_output_snapshot_reads_minus_one(tmp_path):
+    """A lineage file written before output_snapshot_id was recorded
+    gives -1 (readers then use the current snapshot); a recorded id for
+    the same partition still wins."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.lineage import committed_partition_snapshots, lineage_record
+
+    wh = str(tmp_path / "wh")
+    lineage_record(wh, "1m", [{"part_hash": 2, "in_rows": 1, "out_rows": 1}], 0, 1,
+                   output_snapshot_id=4)
+    legacy = pa.table({
+        "tier": ["1m", "1m"],
+        "part_hash": pa.array([2, 3], pa.int64()),
+        "input_snapshot_id": pa.array([0, 0], pa.int64()),
+        "in_rows": pa.array([1, 1], pa.int64()),
+        "out_rows": pa.array([1, 1], pa.int64()),
+        "checkpoint_epoch": pa.array([1, 1], pa.int64()),
+    })
+    pq.write_table(legacy, os.path.join(wh, "lineage", "commit-1m-1-legacy.parquet"))
+    assert committed_partition_snapshots(wh, "1m", 1) == {2: 4, 3: -1}
+
+
+def test_tier_fallback_rejects_too_few_buckets(spark, tmp_path):
+    """Lineage holds a row for every bucket, so a part_hash >= n_buckets
+    in the tier's lineage, or in the finer tier that fills its holes,
+    means the reader's bucket count is too small: raise, do not prune to
+    the wrong buckets."""
+    from engine.lineage import lineage_record
+
+    wh = str(tmp_path / "wh")
+    stats = [{"part_hash": p, "in_rows": 0, "out_rows": 0} for p in range(DEFAULT_N_BUCKETS)]
+    lineage_record(wh, "1m", stats, 0, 1, output_snapshot_id=1)
+    fmt = ParquetManifestFormat(spark, wh)
+    half = DEFAULT_N_BUCKETS // 2
+    with pytest.raises(ValueError, match=f"tier 1m: lineage holds part_hash .*n_buckets={half}"):
+        tier_fallback(spark, fmt, "1m", 1, n_buckets=half)
+    with pytest.raises(ValueError, match=f"tier 1m: lineage holds part_hash .*n_buckets={half}"):
+        tier_fallback(spark, fmt, "1h", 1, n_buckets=half, doc_ids=["doc_00000001"])
+
+
+def test_doc_scoped_downsample_equals_filtered_rows(spark, tokens_df, tmp_path):
+    """Bucket pruning changes no row: a doc-scoped downsample equals the
+    unpruned read filtered on doc_id, at every tier, including the 1d
+    tier served from 1h because 1d is uncommitted."""
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, tokens_df, wh, epoch=1, tiers=["1m", "1h"])
+    fmt = ParquetManifestFormat(spark, wh)
+    docs = ["doc_big", "doc_negmax", "doc_00000003", "doc_00000010"]
+    for res, anoms in [(60, False), (3600, False), (86400, False), (60, True)]:
+        pruned = downsample(spark, fmt, 1, docs, resolution_seconds=res,
+                            anomalies_only=anoms).collect()
+        full = (
+            downsample(spark, fmt, 1, resolution_seconds=res, anomalies_only=anoms)
+            .where(F.col("doc_id").isin(docs)).collect()
+        )
+        assert pruned and sorted(map(tuple, pruned)) == sorted(map(tuple, full)), res
+        assert {r["doc_id"] for r in pruned} <= set(docs)
