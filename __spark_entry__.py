@@ -8033,7 +8033,8 @@ def q_weekend_shift(spark, sf_dir):
     0=Sunday, so the integer spelling is the only one that cannot
     diverge (and it is timezone-free by construction). Exact int64
     sufficient statistics per side (n, Σc, Σc²); unbiased variances
-    and z = (m1−m2)/sqrt(v1/n1 + v2/n2) with every factor double-cast,
+    and z = (m1−m2)/sqrt(v1/n1 + v2/n2) with means and variances both
+    in cents (the reported means are dollars), every factor double-cast,
     4-dp floor(·10⁴+0.5); the per-side n ≥ 2 guards use the
     NULL-DIVISOR idiom (v/when(n≥2, n)) — ar1_halflife's lesson: a
     CASE around the division does not stop ANSI from evaluating it —
@@ -8069,10 +8070,12 @@ def q_weekend_shift(spark, sf_dir):
     v1, v2 = var("_n1", "_s1", "_q1"), var("_n2", "_s2", "_q2")
     n1d = F.when(F.col("_n1") >= 2, F.col("_n1").cast("double"))
     n2d = F.when(F.col("_n2") >= 2, F.col("_n2").cast("double"))
-    den = v1 / n1d + v2 / n2d
-    m1 = F.col("_s1").cast("double") / n1d / 100.0
-    m2 = F.col("_s2").cast("double") / n2d / 100.0
-    zstat = F.when(den > 0, (m1 - m2) / F.sqrt(den))
+    den = v1 / n1d + v2 / n2d  # cents^2
+    c1 = F.col("_s1").cast("double") / n1d
+    c2 = F.col("_s2").cast("double") / n2d
+    m1, m2 = c1 / 100.0, c2 / 100.0
+    # z is unit-free: cent means over the cent-scale standard error
+    zstat = F.when(den > 0, (c1 - c2) / F.sqrt(den))
     return s.select(
         "user_id",
         F.col("_n1").alias("n_weekday"),
@@ -12287,11 +12290,9 @@ def oracle_sql() -> dict[str, str]:
                     * ((CASE WHEN n2 >= 2 THEN CAST(n2 AS DOUBLE) END)
                        - 1)) AS v2,
                  CAST(s1 AS DOUBLE)
-                   / (CASE WHEN n1 >= 2 THEN CAST(n1 AS DOUBLE) END)
-                   / 100.0 AS m1,
+                   / (CASE WHEN n1 >= 2 THEN CAST(n1 AS DOUBLE) END) AS c1,
                  CAST(s2 AS DOUBLE)
-                   / (CASE WHEN n2 >= 2 THEN CAST(n2 AS DOUBLE) END)
-                   / 100.0 AS m2
+                   / (CASE WHEN n2 >= 2 THEN CAST(n2 AS DOUBLE) END) AS c2
           FROM s
         ), q AS (
           SELECT *,
@@ -12301,10 +12302,10 @@ def oracle_sql() -> dict[str, str]:
           FROM p
         )
         SELECT user_id, n1 AS n_weekday, n2 AS n_weekend,
-               floor(m1 * 10000 + 0.5) / 10000 AS mean_weekday,
-               floor(m2 * 10000 + 0.5) / 10000 AS mean_weekend,
+               floor(c1 / 100.0 * 10000 + 0.5) / 10000 AS mean_weekday,
+               floor(c2 / 100.0 * 10000 + 0.5) / 10000 AS mean_weekend,
                CASE WHEN den > 0 THEN
-                 floor((m1 - m2) / sqrt(den) * 10000 + 0.5) / 10000
+                 floor((c1 - c2) / sqrt(den) * 10000 + 0.5) / 10000
                END AS welch_z
         FROM q ORDER BY user_id""",
         "heaps_fit": """

@@ -8,14 +8,15 @@ Layout (SURVEY.md §7):
     engine.schema       pinned constants + fixed StructTypes
     engine.session      SparkSession builder with K3 AQE/shuffle confs
     engine.io           S1 scan, S2/S3 tier write/read (TableFormat shim), S4 synth
-    engine.series       P2 explode, G1 gap_fill, P3 reassemble
-    engine.stats        R1-R4 rolling stats + detect
-    engine.rollup       A1-A4 tier aggregation / cascade
+    engine.fused        the 1m tier: G1 gap-fill, R1-R4 stats/detect, A1 rollup
+                        and C1/C2 payloads in one mapInArrow pass
+    engine.rollup       A2 cascade (1m -> 1h -> 1d), A4 sketches
     engine.compression  C1-C3 delta-of-delta + Gorilla XOR (Arrow UDFs)
     engine.lineage      L1-L3 commit protocol / resume
     engine.query        Q1-Q4 downsample read path
     engine.skew         K1-K2 bucketing + salting
-    engine.oracle       single-machine pandas/NumPy twin (the pytest gate)
+    engine.oracle       single-machine pandas/NumPy twin (the pytest gate) and
+                        the pinned G1 / R1-R4 spec
 """
 
 __version__ = "0.1.0"

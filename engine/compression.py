@@ -48,12 +48,13 @@ kernels both call compress/decompress below, so the roundtrip property
 Two encoder shapes exist per codec and are byte-identical (pinned by
 tests/test_compression.py):
   - ``*_compress(frame)``: readable sequential reference for ONE frame;
-  - ``*_compress_many(flat, counts)``: the hot path — one flat array
+  - ``*_compress_parts(flat, counts)``: the hot path — one flat array
     holding MANY frames, all arithmetic and the bit-packing fully
-    vectorized (entry streams + reduceat scatter-OR into u64 words); the
-    only Python-level iteration is one slice per produced frame. This is
-    what "compression inside vectorized Arrow UDFs" (BASELINE.json:6)
-    demands at 10^12-sequence scale: per-POINT Python is gone.
+    vectorized (entry streams + reduceat scatter-OR into u64 words),
+    returned as one contiguous ``(data, offsets)`` pair: the Arrow binary
+    column layout, with no Python-level iteration per frame. This is what
+    "compression inside vectorized Arrow UDFs" (BASELINE.json:6) demands
+    at 10^12-sequence scale: per-POINT Python is gone.
 
 The READ path has the same two shapes (round 4): ``*_decompress(frame)``
 sequential reference, and ``*_decompress_many(frames)`` — a TRANSPOSED
@@ -349,7 +350,7 @@ def _scatter_or(words: np.ndarray, idx: np.ndarray, contrib: np.ndarray) -> None
     words[idx[starts]] |= np.bitwise_or.reduceat(contrib, starts)
 
 
-def _pack_frames_parts(
+def _pack_frames(
     ev: np.ndarray, eb: np.ndarray, ec: np.ndarray
 ) -> tuple:
     """Bit-pack entry streams into ONE contiguous buffer + frame offsets.
@@ -402,23 +403,10 @@ def _pack_frames_parts(
     return words.astype(">u8").tobytes(), fboff
 
 
-def _pack_frames(ev: np.ndarray, eb: np.ndarray, ec: np.ndarray) -> list:
-    """Per-frame byte-string view of _pack_frames_parts (the sequential-
-    compatible API; one Python bytes per frame)."""
-    data, fboff = _pack_frames_parts(ev, eb, ec)
-    buf = memoryview(data)
-    return [bytes(buf[fboff[f]: fboff[f + 1]]) for f in range(len(ec))]
-
-
-def dod_compress_many(ts_flat: np.ndarray, counts: np.ndarray) -> list:
-    """Vectorized C1 over many frames: per-frame bytes (see _dod_entries)."""
-    return _pack_frames(*_dod_entries(ts_flat, counts))
-
-
 def dod_compress_parts(ts_flat: np.ndarray, counts: np.ndarray) -> tuple:
     """C1 as one contiguous (data, offsets) pair — the Arrow binary-column
-    layout; byte-identical payload bytes to dod_compress_many."""
-    return _pack_frames_parts(*_dod_entries(ts_flat, counts))
+    layout; frame f is byte-identical to dod_compress of that frame."""
+    return _pack_frames(*_dod_entries(ts_flat, counts))
 
 
 def _dod_entries(ts_flat: np.ndarray, counts: np.ndarray) -> tuple:
@@ -520,15 +508,10 @@ def _dod_entries(ts_flat: np.ndarray, counts: np.ndarray) -> tuple:
     return ev, eb, ec
 
 
-def gorilla_compress_many(vals_flat: np.ndarray, counts: np.ndarray) -> list:
-    """Vectorized C2 over many frames: per-frame bytes (see _gorilla_entries)."""
-    return _pack_frames(*_gorilla_entries(vals_flat, counts))
-
-
 def gorilla_compress_parts(vals_flat: np.ndarray, counts: np.ndarray) -> tuple:
     """C2 as one contiguous (data, offsets) pair — the Arrow binary-column
-    layout; byte-identical payload bytes to gorilla_compress_many."""
-    return _pack_frames_parts(*_gorilla_entries(vals_flat, counts))
+    layout; frame f is byte-identical to gorilla_compress of that frame."""
+    return _pack_frames(*_gorilla_entries(vals_flat, counts))
 
 
 def _gorilla_entries(vals_flat: np.ndarray, counts: np.ndarray) -> tuple:

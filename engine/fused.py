@@ -1,34 +1,36 @@
 """Fused doc-level pipeline: gap-fill -> rolling stats -> detect -> 1m
 rollup -> compression in ONE Arrow pass over the raw token table, with NO
-shuffle of raw points.
+shuffle of raw points. This is the engine's only 1m implementation; the
+pinned semantics it computes (G1 gap-fill, R1-R4 stats/detect) are
+specified in engine/oracle.py, its independent reference.
 
-Why this exists (round-2 scaling work): a point-per-row pipeline
-(engine/series.py + stats.py) must shuffle and sort every point to feed the
-doc_id-partitioned windows — at 196.6M points that exchange+sort saturates
-one machine's memory/disk bandwidth and caps N->4N core scaling at
-~0.5-0.7. But the B:15 input is row-per-doc with the WHOLE series in one
-array: every per-series operator (G1 gap-fill, R1-R4 stats/detect, A1
-bucket rollup, C1/C2 compression) is a pure function of one row. So the
-scale path maps each Arrow batch of doc rows through vectorized NumPy
-kernels and emits finished rollup rows; the only exchange left in the job
-is bucketing the ~60x smaller aggregate output for the partitioned write.
-This is exactly the sanctioned shape — "pyspark.sql DataFrame + vectorized
+Why this shape: the B:15 input is row-per-doc with the WHOLE series in one
+array, so every per-series operator (G1 gap-fill, R1-R4 stats/detect, A1
+bucket rollup, C1/C2 compression) is a pure function of one row. A
+point-per-row plan must shuffle and sort every point to feed doc_id
+windows — at 196.6M points that exchange+sort saturated one machine's
+memory/disk bandwidth and capped N->4N core scaling at ~0.5-0.7. So this
+pass maps each Arrow batch of doc rows through vectorized NumPy kernels and
+emits finished rollup rows; the only exchange left in the job is bucketing
+the ~60x smaller aggregate output for the partitioned write. This is
+exactly the sanctioned shape — "pyspark.sql DataFrame + vectorized
 pandas/Arrow UDFs (no per-row Python) throughout" (BASELINE.json:15).
 
-ROUND-3 SHAPE — flat SEGMENTED kernels, no per-doc Python loop: the batch's
-series are concatenated into ONE flat float64 array with per-doc segment
-offsets, and gap-fill / windowed stats / bucket rollup all run as single
-NumPy passes over the flat array (prefix scans clamped at segment starts;
-``np.*.reduceat`` at per-doc bucket boundaries). Round 2 looped Python per
-doc (~10-20 NumPy calls of fixed ~us overhead each per doc), which
-dominated at short docs — the regime most LLM training data lives in
-(<=256-token fragments). The only per-element Python left is the exact
-window arithmetic of int32-extreme docs (_exact_num), which no in-range
-doc enters.
+Flat SEGMENTED kernels, no per-doc Python loop: the batch's series are
+concatenated into ONE flat float64 array with per-doc segment offsets, and
+gap-fill / windowed stats / bucket rollup all run as single NumPy passes
+over the flat array (prefix scans clamped at segment starts;
+``np.*.reduceat`` at per-doc bucket boundaries). A per-doc loop costs
+~10-20 NumPy calls of fixed ~us overhead each per doc, which dominates at
+short docs — the regime most LLM training data lives in (<=256-token
+fragments). The only per-element Python left is the exact window
+arithmetic of int32-extreme docs (_exact_num), which no in-range doc
+enters.
 
 BIT-EXACTNESS: identical to engine/oracle.py on every int32 input (pinned
-by tests/test_fused.py, which asserts row equality against
-oracle.pipeline_oracle on the full parity fixture, int32 extremes included):
+by tests/test_parity.py and tests/test_fused.py, which assert row equality
+against oracle.pipeline_oracle on the full parity fixture, int32 extremes
+included):
   - same exact integer window sums. In-range docs use int64 cumsum
     differences: the GLOBAL cumsum over the flat batch may wrap int64, but
     two's-complement wraparound cancels in the subtraction, so any window
@@ -37,7 +39,7 @@ oracle.pipeline_oracle on the full parity fixture, int32 extremes included):
     instead, as the oracle does;
   - same final float sequence ma = double(s1)/w,
     sd = sqrt(double(num)/(w*(w-1))), score = |v - ma|/sd
-    (engine/stats.py docstring);
+    (the R1-R4 spec in engine/oracle.py);
   - same compression kernels (engine/compression.py — single
     implementation).
 
@@ -79,7 +81,7 @@ def _flat_gap_fill(vf: np.ndarray, pos_start: np.ndarray, pos_end: np.ndarray,
     """Vectorized G1 over a FLAT batch of concatenated series (float64,
     NaN = gap). ``pos_start``/``pos_end`` give each position's segment
     bounds, which clamp the prefix scans so fills never cross docs. Pinned
-    semantics of engine/series.py; all three policies leave NaN only as a
+    semantics in engine/oracle.py; all three policies leave NaN only as a
     per-doc PREFIX."""
     valid = ~np.isnan(vf)
     if policy == "zero":
@@ -139,8 +141,7 @@ def _exact_num(x: np.ndarray, w: int) -> np.ndarray:
 
 
 def _flat_anom_flags(vf: np.ndarray, seg_starts: np.ndarray,
-                     lengths: np.ndarray, pos_fv: np.ndarray,
-                     fv_seg: np.ndarray, w: int, k: float) -> np.ndarray:
+                     lengths: np.ndarray, w: int, k: float) -> np.ndarray:
     """Vectorized R1-R4 over the flat gap-filled batch -> boolean flags.
 
     Valid values are a contiguous per-doc suffix (gap-fill invariant), so
@@ -149,25 +150,25 @@ def _flat_anom_flags(vf: np.ndarray, seg_starts: np.ndarray,
     the single global cumsum segment-safe."""
     n = vf.size
     valid = ~np.isnan(vf)
+    pos = np.arange(n)
+    fv_seg = np.minimum.reduceat(np.where(valid, pos, n), seg_starts)
     iv0 = np.where(valid, vf, 0.0).astype(np.int64)
     c1 = np.concatenate(([0], np.cumsum(iv0)))
     c2 = np.concatenate(([0], np.cumsum(iv0 * iv0)))
-    pos = np.arange(n)
     winstart = pos + 1 - w
-    full = winstart >= pos_fv
+    full = winstart >= np.repeat(fv_seg, lengths)
     lo = np.where(full, winstart, 0)
     # |s1| <= w*2^31 always fits int64, so s1 (and ma) is exact for every
     # doc; only num can wrap, and only in the docs _exact_docs selects
     s1 = c1[pos + 1] - c1[lo]
     s2 = c2[pos + 1] - c2[lo]
     num = (w * s2 - s1 * s1).astype(np.float64)
-    if n:
-        maxabs_seg = np.maximum.reduceat(np.abs(iv0), seg_starts)
-        m_seg = np.maximum(seg_starts + lengths - fv_seg, 0)
-        exact = _exact_docs(m_seg, maxabs_seg, w)
-        if exact.any():
-            at = np.repeat(exact, lengths)
-            num[at] = _exact_num(iv0[at], w)
+    maxabs_seg = np.maximum.reduceat(np.abs(iv0), seg_starts)
+    m_seg = np.maximum(seg_starts + lengths - fv_seg, 0)
+    exact = _exact_docs(m_seg, maxabs_seg, w)
+    if exact.any():
+        at = np.repeat(exact, lengths)
+        num[at] = _exact_num(iv0[at], w)
     ma = s1.astype(np.float64) / float(w)
     # non-full positions carry garbage sums (lo clamped to 0) — every use
     # below is masked by `full`; errstate covers the NaN comparisons too
@@ -177,18 +178,23 @@ def _flat_anom_flags(vf: np.ndarray, seg_starts: np.ndarray,
         return full & (sd > 0) & (score > float(k))
 
 
+def _flat_detect(vf: np.ndarray, lengths: np.ndarray, policy: str, w: int,
+                 k: float) -> tuple:
+    """G1 + R1-R4 over one flat batch of raw series (float64, NaN = gap;
+    every length > 0) -> (gap-filled values, segment starts, per-point
+    anomaly flags)."""
+    seg_starts = np.concatenate(([0], np.cumsum(lengths)))[:-1]
+    vf = _flat_gap_fill(vf, np.repeat(seg_starts, lengths),
+                        np.repeat(seg_starts + lengths, lengths), policy)
+    return vf, seg_starts, _flat_anom_flags(vf, seg_starts, lengths, w, k)
+
+
 def _anom_flags(vf: np.ndarray, w: int, k: float) -> np.ndarray:
-    """One-series convenience wrapper over the flat kernel (tests)."""
-    n = vf.size
-    if n == 0:
+    """R1-R4 flags of one gap-filled series (tests)."""
+    if vf.size == 0:
         return np.zeros(0, dtype=bool)
-    seg_starts = np.array([0], dtype=np.int64)
-    lengths = np.array([n], dtype=np.int64)
-    valid = ~np.isnan(vf)
-    fv = int(np.argmax(valid)) if valid.any() else n
-    fv_seg = np.array([fv], dtype=np.int64)
-    pos_fv = np.full(n, fv, dtype=np.int64)
-    return _flat_anom_flags(vf, seg_starts, lengths, pos_fv, fv_seg, w, k)
+    return _flat_anom_flags(vf, np.zeros(1, dtype=np.int64),
+                            np.array([vf.size]), w, k)
 
 
 def _flat_rollup_cols(vf: np.ndarray, anom: np.ndarray,
@@ -291,6 +297,8 @@ def fused_rollup_1m(
 
     if policy not in GAP_POLICIES:
         raise ValueError(f"unknown gap-fill policy {policy!r}; one of {GAP_POLICIES}")
+    if w < 2:
+        raise ValueError(f"window must be >= 2 for a sample std, got {w}")
     b = TIER_SECONDS[tier]
     w_, k_, policy_, compress_ = int(w), float(k), policy, bool(compress)
 
@@ -344,20 +352,7 @@ def fused_rollup_1m(
             vf = np.concatenate(
                 [vals_np[offs[j]: offs[j + 1]] for j in kept]
             ).astype(np.float64, copy=False)
-            n = vf.size
-            seg_starts = np.concatenate(([0], np.cumsum(lengths)))[:-1]
-            pos_start = np.repeat(seg_starts, lengths)
-            pos_end = np.repeat(seg_starts + lengths, lengths)
-
-            vf = _flat_gap_fill(vf, pos_start, pos_end, policy_)
-            valid = ~np.isnan(vf)
-            fv_seg = np.minimum.reduceat(
-                np.where(valid, np.arange(n), n), seg_starts
-            )
-            pos_fv = np.repeat(fv_seg, lengths)
-            anom = _flat_anom_flags(
-                vf, seg_starts, lengths, pos_fv, fv_seg, w_, k_
-            )
+            vf, seg_starts, anom = _flat_detect(vf, lengths, policy_, w_, k_)
             (
                 nb, bucket, cnt, vmin, vmax, vsum, vmean, anom_cnt,
                 first_v, last_v, empty, pay_t, pay_v,

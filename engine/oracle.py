@@ -1,10 +1,57 @@
-"""Single-machine pandas/NumPy twin of the engine (SURVEY.md §5.1).
+"""Single-machine pandas/NumPy twin of the engine (SURVEY.md §5.1), and
+the home of the pinned per-series spec.
 
 This module is the independent implementation of the pinned semantics
-(SURVEY.md §2.1 + §2.1a amendment): tests run the Spark pipeline and THIS
-code on the same input and assert per-row equality (the BASELINE.json:15
-"token-array equality" gate). Dependency-light on purpose: pandas + numpy
-only, no pyspark import.
+(SURVEY.md §2.1 + §2.1a amendment): tests run the production path (the
+fused 1m kernel, engine/fused.py, and the cascade, engine/rollup.py) and
+THIS code on the same input and assert per-row equality (the
+BASELINE.json:15 "token-array equality" gate, tests/test_parity.py).
+Dependency-light on purpose: pandas + numpy only, no pyspark import.
+
+G1 GAP-FILL (engine convention per SURVEY.md §1.2; the empty reference
+mount has no opinion — SURVEY.md §0.1):
+
+  - a "gap" is a NULL slot inside ``tokens``; ``n_tok`` is the full logical
+    length and ``len(tokens) == n_tok`` (validated at scan, S1).
+  - policy ``ffill`` (default): v[t] := last non-null v at position <= t;
+    leading nulls stay null.
+  - policy ``zero``: v[t] := 0 where null.
+  - policy ``linear``: interior nulls linearly interpolated IN EXACT INTEGER
+    ARITHMETIC with floor rounding:
+        fill(t) = floor((prev_v*(next_t - t) + next_v*(t - prev_t))
+                        / (next_t - prev_t))
+    leading nulls stay null, trailing nulls forward-fill. Integer floor
+    keeps the token domain int32 and makes the engine and this oracle
+    bit-identical (no float interpolation drift).
+
+  Every policy leaves nulls only as a per-doc PREFIX.
+
+R1-R4 ROLLING STATS + DETECT (SURVEY.md §2.1):
+
+    ma[i] = NULL                    if fewer than w non-null values in the
+                                    trailing w-slot window (pandas
+                                    rolling(w, min_periods=w).mean())
+          = mean(v[i-w+1 .. i])     otherwise (trailing, not centered)
+    sd[i] = same mask, std(..., ddof=1)  (sample std)
+    score[i] = NULL                 if sd[i] NULL or sd[i] == 0 or v[i] NULL
+             = |v[i] - ma[i]| / sd[i]
+    is_anom[i] = score[i] > k       (strict >; NULL score -> false)
+    detect(series) = sorted [t where is_anom[t]]
+
+  w must be >= 2 (a sample std needs two points).
+
+  BIT-EXACTNESS: sd is not a library std. Spark's stddev_samp is a
+  Welford/central-moment recurrence and pandas' rolling .std() a
+  sliding-sum kernel; the two drift by tens of ulps. Both the engine and
+  this oracle compute the closed form over EXACT integer window sums:
+
+      num = w * sum(v^2) - sum(v)^2        # exact integer, >= 0
+      sd  = sqrt(double(num) / (w*(w-1)))  # identical 3-op float sequence
+      ma  = double(sum(v)) / w
+
+  Every float op is correctly rounded and executed in the same order on
+  both sides, so results are bit-identical — and more accurate than either
+  library kernel (<= 2 roundings + sqrt vs accumulated streaming error).
 """
 
 from __future__ import annotations
@@ -25,8 +72,8 @@ from engine.schema import (
 
 
 def gap_fill_series(tokens: list, policy: str = "ffill") -> list:
-    """Pinned gap-fill over one token array (None = gap). Returns a list of
-    int-or-None of the same length (engine/series.py docstring is the spec)."""
+    """Pinned G1 gap-fill over one token array (None = gap). Returns a list
+    of int-or-None of the same length (module docstring is the spec)."""
     n = len(tokens)
     if policy == "zero":
         return [0 if v is None else int(v) for v in tokens]
@@ -55,7 +102,7 @@ def gap_fill_series(tokens: list, policy: str = "ffill") -> list:
             else:
                 p, q = prevs[-1], nexts[0]
                 pv, qv = int(tokens[p]), int(tokens[q])
-                # exact integer floor interpolation (matches Spark pmod form)
+                # exact integer floor interpolation
                 num = pv * (q - i) + qv * (i - p)
                 out[i] = num // (q - p)
         return out
@@ -76,8 +123,8 @@ def rolling_stats_series(
     Semantics are pandas rolling(w, min_periods=w).mean()/.std(ddof=1) on a
     trailing window including the current point — but computed over EXACT
     integer window sums (Python bigints) with the identical 3-op float
-    sequence the Spark side uses (engine/stats.py docstring), so the parity
-    gate can assert bit-equality. test_oracle_matches_pandas_rolling pins
+    sequence the engine uses (module docstring), so the parity gate can
+    assert bit-equality. test_oracle_matches_pandas_rolling pins
     this implementation to the pandas kernels within float tolerance.
     """
     n = len(filled)
@@ -108,17 +155,6 @@ def rolling_stats_series(
             "is_anom": is_anom,
         }
     )
-
-
-def detect_series(
-    tokens: list,
-    w: int = DEFAULT_WINDOW,
-    k: float = DEFAULT_K,
-    policy: str = "ffill",
-) -> list[int]:
-    """R4 list form: sorted anomalous positions of one raw token array."""
-    stats = rolling_stats_series(gap_fill_series(tokens, policy), w, k)
-    return stats.loc[stats["is_anom"], "t"].astype(int).tolist()
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,9 @@ token-array equality").
 
 A production user validating a migrated table wants the violations, not a
 test assertion: ``token_eq_check`` returns a DataFrame of disagreeing rows
-(empty == tables agree). The parity pytest suite builds on it, so the test
-gate and the production check are the same code path.
+(empty == tables agree). The parity pytest suite builds on it (tokens
+served back from the 1m payloads vs the oracle's gap-filled arrays), so
+the test gate and the production check are the same code path.
 """
 
 from __future__ import annotations
@@ -51,24 +52,3 @@ def token_eq_check(
         )
         .select(key, "expected", "got", reason.alias("reason"))
     )
-
-
-def assert_token_eq(
-    df: DataFrame,
-    oracle_df: DataFrame,
-    key: str = "doc_id",
-    col: str = "tokens",
-    sample: int = 5,
-) -> None:
-    """Raise AssertionError with a violation sample if the tables disagree."""
-    viol = token_eq_check(df, oracle_df, key, col)
-    rows = viol.limit(sample).collect()
-    if rows:
-        n = viol.count()
-        raise AssertionError(
-            f"token_eq_check: {n} violating rows, first {len(rows)}: "
-            + "; ".join(
-                f"{r[key]}[{r['reason']}] expected={r['expected']} got={r['got']}"
-                for r in rows
-            )
-        )

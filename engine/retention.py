@@ -13,8 +13,10 @@ Scale shape: expiry never scans-and-rewrites the whole table.
      (``drop_partitions`` — a metadata-only commit, like Iceberg's
      dropPartition); zero data rewritten.
   3. Only partitions STRADDLING the cutoff are rewritten (filtered
-     overwrite). With time-ordered ingest, straddlers are O(1) per tier
-     regardless of table size.
+     overwrite). Tiers are partitioned by part_hash(doc_id), not by
+     time, so every partition spans the whole time range: a cutoff inside
+     the docs' ranges makes nearly every partition a straddler, and this
+     step rewrites most of the tier (O(partitions), not O(1)).
 Old snapshots still contain the expired rows (time travel unaffected);
 physical deletion happens when old snapshots are vacuumed, exactly the
 Iceberg expire-snapshots model.

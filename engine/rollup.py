@@ -1,16 +1,15 @@
-"""A1-A4: tier aggregation and cascade (SURVEY.md §2.4; BASELINE.json:6
-"continuous aggregates (min/max/mean/count ...) at cascading retention
-tiers raw -> 1m -> 1h -> 1d").
+"""A2/A4: tier cascade and mergeable sketches (SURVEY.md §2.4;
+BASELINE.json:6 "continuous aggregates (min/max/mean/count ...) at
+cascading retention tiers raw -> 1m -> 1h -> 1d").
 
-Cascade invariant: coarser tiers are re-aggregated from min/max/sum/cnt of
-the finer tier, never from means, so vmean cascades exactly
-(cascade(rollup_1m -> 1h) == rollup_1h(points), property-tested in §5.3).
-
-Scale: A1 is a hash aggregate with map-side partial aggregation for free;
-because the groupBy key (doc_id, bucket) has doc_id as a prefix, AQE reuses
-the doc_id co-partitioning from the stats window instead of a second full
-shuffle. Each cascade level (A2) aggregates an already-reduced input
-(60x/24x smaller), so cascade cost is negligible vs the raw scan.
+The 1m tier itself is built by engine/fused.py. Coarser tiers are
+re-aggregated from min/max/sum/cnt of the finer tier, never from means, so
+vmean cascades exactly: cascade(1m -> 1h) equals the 1h rollup taken
+directly over the points (tests/test_parity.py, against engine/oracle.py).
+Each cascade level aggregates an already-reduced input (60x/24x smaller),
+so its cost is negligible next to the raw scan. The sketches (A4 and the
+distinct-user cascade) carry the aggregates that do not re-aggregate
+exactly: HLL registers merge, distinct counts do not.
 """
 
 from __future__ import annotations
@@ -24,37 +23,6 @@ from engine.schema import EPOCH0_EPOCH_SECONDS, TIER_SECONDS
 def _bucket_ts(bucket_col, bucket_seconds: int):
     return F.timestamp_seconds(
         F.lit(EPOCH0_EPOCH_SECONDS) + bucket_col * F.lit(bucket_seconds)
-    )
-
-
-def rollup_from_points(flagged_points: DataFrame, tier: str = "1m") -> DataFrame:
-    """A1: bucket-aggregate detect()-annotated points into one tier.
-
-    Input columns: doc_id, t, v, is_anom (from engine.stats.detect).
-    Output: the ROLLUP_SCHEMA columns minus the compression payloads
-    (ts_dod / v_gorilla are attached by engine.compression.with_compression).
-    """
-    b = TIER_SECONDS[tier]
-    t_if_v = F.when(F.col("v").isNotNull(), F.col("t"))
-    out = (
-        flagged_points.groupBy(
-            "doc_id", F.expr(f"t DIV {b}").alias("bucket")
-        )
-        .agg(
-            F.count("v").alias("cnt"),
-            F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"),
-            F.sum(F.col("v").cast("long")).alias("vsum"),
-            F.sum(F.col("is_anom").cast("long")).alias("anom_cnt"),
-            F.min_by("v", t_if_v).alias("first_v"),
-            F.max_by("v", t_if_v).alias("last_v"),
-        )
-        .withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt"), F.lit(0)))
-        .withColumn("bucket_ts", _bucket_ts(F.col("bucket"), b))
-    )
-    return out.select(
-        "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-        "vmean", "anom_cnt", "first_v", "last_v",
     )
 
 
@@ -89,25 +57,6 @@ def cascade(rollup_fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFra
     return out.select(
         "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
         "vmean", "anom_cnt", "first_v", "last_v",
-    )
-
-
-def tier_summary(rollup: DataFrame, docs: DataFrame) -> DataFrame:
-    """A3: GROUPING SETS-style ops summary over (source x anomaly presence).
-
-    Joins the tier to the doc dimension (broadcast — the doc->source map is
-    tiny relative to the rollup) and cubes over source.
-    """
-    joined = rollup.join(F.broadcast(docs.select("doc_id", "source")), "doc_id")
-    return (
-        joined.cube("source")
-        .agg(
-            F.count("*").alias("buckets"),
-            F.sum("cnt").alias("points"),
-            F.sum("anom_cnt").alias("anomalies"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
     )
 
 

@@ -29,7 +29,7 @@ TIER_ORDER = ["1m", "1h", "1d"]  # finest -> coarsest
 DEFAULT_WINDOW = 30  # trailing rolling window length w (inclusive of current)
 DEFAULT_K = 3.0  # threshold: is_anom = score > k (strict)
 
-# Gap-fill policies (G1; semantics pinned in engine/series.py's docstring).
+# Gap-fill policies (G1; semantics pinned in engine/oracle.py's docstring).
 GAP_POLICIES = ("ffill", "zero", "linear")
 
 # Default bucket count for bucket-by-doc_id partitioning (K1). On a real

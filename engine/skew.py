@@ -1,11 +1,11 @@
 """K1-K2: partitioning and skew control (SURVEY.md §2.6; graft axes A).
 
-K1 bucket-by-doc_id: every per-series operator (gap-fill window, rolling
-stats window, bucket groupBy) keys on doc_id, so co-locating each series by
-``part_hash = pmod(xxhash64(doc_id), N)`` lets one shuffle serve the whole
-pipeline and makes tier writes partition-aligned for per-partition lineage
-commits. On a real cluster this is the Iceberg ``bucket(N, doc_id)``
-transform; in the sandbox it is an explicit column + ``partitionBy``.
+K1 bucket-by-doc_id: every tier row belongs to one series, so tiers are
+written partitioned by ``part_hash = pmod(xxhash64(doc_id), N)``: writes
+are partition-aligned for per-partition lineage commits, and doc-scoped
+reads prune to their docs' buckets. On a real cluster this is the Iceberg
+``bucket(N, doc_id)`` transform; on the parquet manifest format it is an
+explicit column + ``partitionBy``.
 
 K2 salted repartition: skew lives on ``source`` (~70% one corpus,
 FIXTURES.md F1), NOT on doc_id (high cardinality). Any source-keyed stage
@@ -43,11 +43,6 @@ def doc_buckets_filter(doc_ids: list[str], n_buckets: int = DEFAULT_N_BUCKETS) -
 def with_part_hash(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     """K1: attach the stable bucket id for doc_id co-location."""
     return df.withColumn("part_hash", part_hash_col(n_buckets))
-
-
-def bucket_by_doc_id(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
-    """K1: co-partition rows so each series lives in exactly one partition."""
-    return with_part_hash(df, n_buckets).repartition(n_buckets, "part_hash")
 
 
 def salt_repartition(df: DataFrame, salt_n: int = 16) -> DataFrame:

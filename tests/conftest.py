@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import random
 import sys
 from pathlib import Path
@@ -14,6 +15,44 @@ from engine.schema import DEFAULT_WINDOW, TOKENS_SCHEMA  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 
 W = DEFAULT_WINDOW  # 30
+
+AGG_COLS = [
+    "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
+    "vmean", "anom_cnt", "first_v", "last_v",
+]
+_INT_COLS = {"bucket", "cnt", "vmin", "vmax", "vsum", "anom_cnt", "first_v", "last_v"}
+
+
+def rollup_rows(df, cols=AGG_COLS) -> list[tuple]:
+    """Sorted row tuples of a Spark rollup frame; bucket_ts as epoch
+    seconds, payloads as bytes."""
+    from pyspark.sql import functions as F
+
+    sel = [F.unix_seconds("bucket_ts").alias(c) if c == "bucket_ts" else c
+           for c in cols]
+    return sorted(
+        tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
+        for r in df.select(sel).collect()
+    )
+
+
+def oracle_rollup_rows(frame) -> list[tuple]:
+    """The oracle's rollup frame in rollup_rows' form (NaN -> None, ints as
+    int). Tuple equality compares vmean bit-exact: 0 ulp, no tolerance."""
+    out = []
+    for r in frame.to_dict("records"):
+        row = []
+        for c in AGG_COLS:
+            x = r[c]
+            if c == "bucket_ts":
+                x = x.value // 10**9
+            elif x is None or (isinstance(x, float) and math.isnan(x)):
+                x = None
+            elif c in _INT_COLS:
+                x = int(x)
+            row.append(x)
+        out.append(tuple(row))
+    return sorted(out)
 
 
 @pytest.fixture(scope="session")

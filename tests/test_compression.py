@@ -8,12 +8,30 @@ from hypothesis import strategies as st
 
 from engine.compression import (
     dod_compress,
+    dod_compress_parts,
     dod_decompress,
+    dod_decompress_many,
     gorilla_compress,
+    gorilla_compress_parts,
     gorilla_decompress,
+    gorilla_decompress_many,
 )
 
 I32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
+
+
+def _frames(parts) -> list:
+    """Per-frame bytes of a multi-frame encoder's (data, offsets) pair."""
+    data, off = parts
+    return [data[off[f]: off[f + 1]] for f in range(len(off) - 1)]
+
+
+def dod_compress_frames(ts_flat, counts) -> list:
+    return _frames(dod_compress_parts(ts_flat, counts))
+
+
+def gorilla_compress_frames(vals_flat, counts) -> list:
+    return _frames(gorilla_compress_parts(vals_flat, counts))
 
 
 @given(st.lists(I32, max_size=300))
@@ -113,15 +131,6 @@ def test_vectorized_many_byte_identical_to_sequential():
     """The hot-path multi-frame encoders must produce BYTE-IDENTICAL frames
     to the sequential references, across step patterns, value ranges
     (incl. int64 extremes), and empty/singleton frames."""
-    import numpy as np
-
-    from engine.compression import (
-        dod_compress_many,
-        dod_decompress_many,
-        gorilla_compress_many,
-        gorilla_decompress_many,
-    )
-
     rng = np.random.default_rng(7)
     for trial in range(60):
         nf = int(rng.integers(1, 12))
@@ -149,8 +158,8 @@ def test_vectorized_many_byte_identical_to_sequential():
             v_frames.append(v.astype(np.int64))
         ts_flat = np.concatenate(ts_frames)
         v_flat = np.concatenate(v_frames)
-        many_t = dod_compress_many(ts_flat, counts)
-        many_v = gorilla_compress_many(v_flat, counts)
+        many_t = dod_compress_frames(ts_flat, counts)
+        many_v = gorilla_compress_frames(v_flat, counts)
         for f in range(nf):
             assert many_t[f] == dod_compress(ts_frames[f])
             assert many_v[f] == gorilla_compress(v_frames[f])
@@ -176,13 +185,6 @@ def test_many_roundtrip_property(frame_vals):
     (any lengths incl. empty, any int32 values), encode_many |> decode_many
     is the identity on (flat, counts) — both codecs (timestamps must
     ascend, so the dod side sorts and offsets each frame)."""
-    from engine.compression import (
-        dod_compress_many,
-        dod_decompress_many,
-        gorilla_compress_many,
-        gorilla_decompress_many,
-    )
-
     counts = np.array([len(f) for f in frame_vals], dtype=np.int64)
     vflat = (
         np.concatenate([np.asarray(f, np.int64) for f in frame_vals])
@@ -196,8 +198,8 @@ def test_many_roundtrip_property(frame_vals):
         if frame_vals and counts.sum()
         else np.empty(0, np.int64)
     )
-    dv, cv = gorilla_decompress_many(gorilla_compress_many(vflat, counts))
-    dt, ct = dod_decompress_many(dod_compress_many(tflat, counts))
+    dv, cv = gorilla_decompress_many(gorilla_compress_frames(vflat, counts))
+    dt, ct = dod_decompress_many(dod_compress_frames(tflat, counts))
     assert cv.tolist() == counts.tolist() == ct.tolist()
     assert dv.tolist() == vflat.tolist()
     assert dt.tolist() == tflat.tolist()
@@ -206,15 +208,6 @@ def test_many_roundtrip_property(frame_vals):
 def test_many_decoders_straggler_tail_and_mixed_lengths():
     """Mix of many short frames + a few very long ones exercises both the
     vectorized rounds and the sequential straggler tail (_TAIL_MIN)."""
-    import numpy as np
-
-    from engine.compression import (
-        dod_compress_many,
-        dod_decompress_many,
-        gorilla_compress_many,
-        gorilla_decompress_many,
-    )
-
     rng = np.random.default_rng(42)
     counts = np.concatenate(
         [rng.integers(0, 8, 200), [5000, 3000], rng.integers(0, 60, 50)]
@@ -228,8 +221,8 @@ def test_many_decoders_straggler_tail_and_mixed_lengths():
         v_frames.append(rng.integers(-(2**40), 2**40, c).astype(np.int64))
     ts_flat = np.concatenate(ts_frames) if len(ts_frames) else np.empty(0, np.int64)
     v_flat = np.concatenate(v_frames)
-    ft = dod_compress_many(ts_flat, counts)
-    fv = gorilla_compress_many(v_flat, counts)
+    ft = dod_compress_frames(ts_flat, counts)
+    fv = gorilla_compress_frames(v_flat, counts)
     dt, ct = dod_decompress_many(ft)
     dv, cv = gorilla_decompress_many(fv)
     assert ct.tolist() == counts.tolist() == cv.tolist()
@@ -241,13 +234,18 @@ def _poisoned_1m(tokens_df):
     """A cached 1m tier with payloads, a copy of it whose ts_dod frame of
     one non-empty (doc_id, bucket) row has its magic byte flipped (legacy-
     looking: must quarantine), that victim row, and the gap-filled points
-    the tier was built from."""
+    the tier was built from, as (doc_id, t, v) tuples."""
     from pyspark.sql import functions as F
 
+    from engine import oracle
     from engine.fused import fused_rollup_1m
-    from engine.series import explode_series, gap_fill
 
-    filled = gap_fill(explode_series(tokens_df), "ffill")
+    filled = [
+        (r["doc_id"], t, v)
+        for r in tokens_df.select("doc_id", "tokens").collect()
+        for t, v in enumerate(oracle.gap_fill_series(list(r["tokens"])))
+        if v is not None
+    ]
     r1m = fused_rollup_1m(tokens_df).cache()
     victim = r1m.where("cnt > 0").select("doc_id", "bucket").first()
     poisoned = r1m.withColumn(
@@ -306,9 +304,8 @@ def test_raw_points_quarantine_mode(spark, tokens_df):
         tuple(r) for r in serve_raw_points(poisoned, on_error="null").collect()
     )
     want = sorted(
-        (r["doc_id"], r["t"], int(r["v"]))
-        for r in filled.where("v is not null").collect()
-        if (r["doc_id"], r["t"] // 60) != (victim["doc_id"], victim["bucket"])
+        p for p in filled
+        if (p[0], p[1] // 60) != (victim["doc_id"], victim["bucket"])
     )
     assert got == want and len(got) > 0
     r1m.unpersist()

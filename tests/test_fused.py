@@ -4,63 +4,24 @@ rollup aggregates, anomaly counts, AND compression payload bytes."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-from pyspark.sql import functions as F
 
 from engine import oracle
 from engine.fused import fused_rollup_1m
 from engine.schema import DEFAULT_K, DEFAULT_WINDOW, TIER_SECONDS
+from tests.conftest import AGG_COLS, oracle_rollup_rows, rollup_rows
 
 W, K = DEFAULT_WINDOW, DEFAULT_K
-
-AGG_COLS = [
-    "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-    "vmean", "anom_cnt", "first_v", "last_v",
-]
-_INT_COLS = {"bucket", "cnt", "vmin", "vmax", "vsum", "anom_cnt", "first_v", "last_v"}
-
-
-def _rows(df, cols=AGG_COLS):
-    """Sorted row tuples of a Spark rollup frame; bucket_ts as epoch
-    seconds, payloads as bytes."""
-    sel = [F.unix_seconds("bucket_ts").alias(c) if c == "bucket_ts" else c
-           for c in cols]
-    return sorted(
-        tuple(bytes(x) if isinstance(x, (bytearray, bytes)) else x for x in r)
-        for r in df.select(sel).collect()
-    )
-
-
-def _oracle_rows(frame):
-    """The oracle's rollup frame in _rows' form (NaN -> None, ints as int,
-    vmean compared bit-exact)."""
-    out = []
-    for r in frame.to_dict("records"):
-        row = []
-        for c in AGG_COLS:
-            x = r[c]
-            if c == "bucket_ts":
-                x = x.value // 10**9
-            elif x is None or (isinstance(x, float) and math.isnan(x)):
-                x = None
-            elif c in _INT_COLS:
-                x = int(x)
-            row.append(x)
-        out.append(tuple(row))
-    return sorted(out)
-
 
 def test_fused_equals_exploded_all_policies(spark, tokens_df, token_rows):
     """Fused 1m rows == oracle.pipeline_oracle on the full fixture, int32
     extremes (doc_negmax) and the ~2e8-level doc_big included."""
     for policy in ("ffill", "zero", "linear"):
         fused = fused_rollup_1m(tokens_df, W, K, policy, compress=False)
-        want = _oracle_rows(
+        want = oracle_rollup_rows(
             oracle.pipeline_oracle(token_rows, W, K, policy)["rollup_1m"]
         )
-        assert _rows(fused) == want, f"policy={policy}: fused != oracle"
+        assert rollup_rows(fused) == want, f"policy={policy}: fused != oracle"
 
 
 def _reference_payloads(token_rows, policy="ffill"):
@@ -88,7 +49,7 @@ def test_fused_payloads_equal_pointstream_kernel(spark, tokens_df, token_rows):
     fused = fused_rollup_1m(tokens_df, W, K, "ffill", compress=True)
     got = {
         (r[0], r[1]): (r[2], r[3])
-        for r in _rows(fused, ["doc_id", "bucket", "ts_dod", "v_gorilla"])
+        for r in rollup_rows(fused, ["doc_id", "bucket", "ts_dod", "v_gorilla"])
     }
     assert got == _reference_payloads(token_rows)
 
@@ -103,9 +64,9 @@ def test_fused_batch_size_invariant(spark, tokens_df):
     cols = AGG_COLS + ["ts_dod", "v_gorilla"]
     try:
         spark.conf.set(key, "1")
-        one = _rows(fused_rollup_1m(tokens_df), cols)
+        one = rollup_rows(fused_rollup_1m(tokens_df), cols)
         spark.conf.set(key, "4096")
-        batched = _rows(fused_rollup_1m(tokens_df.coalesce(1)), cols)
+        batched = rollup_rows(fused_rollup_1m(tokens_df.coalesce(1)), cols)
     finally:
         if saved is None:
             spark.conf.unset(key)
@@ -128,8 +89,8 @@ def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):
         wh = str(tmp_path / name)
         m = rollup_mod.run_rollup(spark, scan_tokens(spark, src), wh, epoch=1,
                                   tiers=["1m"])
-        rows = _rows(ParquetManifestFormat(spark, wh).read("rollup_1m"),
-                     AGG_COLS + ["ts_dod", "v_gorilla"])
+        rows = rollup_rows(ParquetManifestFormat(spark, wh).read("rollup_1m"),
+                           AGG_COLS + ["ts_dod", "v_gorilla"])
         return m["1m"]["py_tasks"], rows
 
     capped_tasks, capped = run("capped")
@@ -157,7 +118,7 @@ def test_fused_guard_exempts_docs_shorter_than_window(spark, tokens_df, token_ro
     df = tokens_df.unionByName(spark.createDataFrame([short], TOKENS_SCHEMA))
     fused = fused_rollup_1m(df, W, K, "ffill", compress=False)
     want = oracle.pipeline_oracle(token_rows + [short], W, K, "ffill")
-    assert _rows(fused) == _oracle_rows(want["rollup_1m"])
+    assert rollup_rows(fused) == oracle_rollup_rows(want["rollup_1m"])
 
 
 def test_run_rollup_auto_fallback_on_guard_trip(spark, tokens_df, token_rows, ora,
@@ -179,9 +140,9 @@ def test_run_rollup_auto_fallback_on_guard_trip(spark, tokens_df, token_rows, or
         ("1m", "fused"), ("1h", "cascade"), ("1d", "cascade")
     }
     fmt = ParquetManifestFormat(spark, wh)
-    got = {t: _rows(fmt.read(f"rollup_{t}")) for t in ("1m", "1h", "1d")}
+    got = {t: rollup_rows(fmt.read(f"rollup_{t}")) for t in ("1m", "1h", "1d")}
     for tier, rows in got.items():
-        assert rows == _oracle_rows(ora[f"rollup_{tier}"]), tier
+        assert rows == oracle_rollup_rows(ora[f"rollup_{tier}"]), tier
     assert any(r[0] == "doc_big" and r[8] > 0 for r in got["1m"])
 
     filled = {r["doc_id"]: r["tokens"] for r in ora["filled"].to_dict("records")}

@@ -1,6 +1,7 @@
 """Golden-file guard (FIXTURES.md F4): any drift in the pinned semantics is
-loud. Pure oracle check (no Spark) — the Spark side is pinned to the oracle
-by test_parity.py, so oracle==golden and spark==oracle closes the loop."""
+loud. Pure oracle check (no Spark) — the production path (the fused 1m
+kernel and the cascade) is pinned to the oracle by test_parity.py, so
+oracle==golden and engine==oracle closes the loop."""
 
 from __future__ import annotations
 

@@ -1,49 +1,41 @@
-"""The BASELINE.json:15 gate: Spark pipeline vs pandas oracle, per-row
-equality (token-array equality for arrays, exact ints/bools, bit-exact
-doubles — see FLOAT_POLICY below).
+"""The BASELINE.json:15 gate: the production 1m kernel (engine/fused.py)
+and the tier cascade (engine/rollup.py::cascade) vs the pandas oracle
+(engine/oracle.py), per row, for every gap policy: token-array equality for
+arrays, exact ints/bools, bit-exact doubles.
 
-FLOAT_POLICY: every double column (ma, sd, score, vmean) is asserted
-BIT-EXACT (0 ulp): both sides compute from exact integer sums with an
-identical correctly-rounded float op sequence (engine/stats.py docstring;
-SURVEY.md §2.1 floating-point note). assert_float_col reports ulp distance
-on failure so any future relaxation is a conscious, documented choice — it
-is never silently loosened here.
+FLOAT_POLICY: vmean is compared BIT-EXACT (0 ulp, plain float equality
+inside the row tuples): both sides compute it from exact integer sums with
+an identical correctly-rounded float op sequence (the R1-R4 spec in
+engine/oracle.py; SURVEY.md §2.1 floating-point note). Any relaxation
+would have to be a conscious, documented choice.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from engine import oracle
-from engine.rollup import cascade, rollup_from_points
-from engine.schema import DEFAULT_K, DEFAULT_WINDOW
-from engine.series import explode_series, gap_fill, reassemble_tokens
-from engine.stats import detect, detect_indices
+from engine.fused import _anom_flags, _flat_detect, fused_rollup_1m
+from engine.parity import token_eq_check
+from engine.query import serve_raw_points
+from engine.rollup import cascade
+from engine.schema import DEFAULT_K, DEFAULT_WINDOW, GAP_POLICIES
+from tests.conftest import AGG_COLS, oracle_rollup_rows, rollup_rows
 
 W, K = DEFAULT_WINDOW, DEFAULT_K
+PAYLOAD_COLS = AGG_COLS + ["ts_dod", "v_gorilla"]
 
 
-def assert_float_col(name: str, got: pd.Series, want: pd.Series, max_ulp: int = 0):
-    g = got.to_numpy(dtype=np.float64)
-    w = want.to_numpy(dtype=np.float64)
-    nan_match = np.isnan(g) == np.isnan(w)
-    assert nan_match.all(), f"{name}: NULL mask differs at rows {np.where(~nan_match)[0][:10]}"
-    mask = ~np.isnan(g)
-    if not mask.any():
-        return
-    exact = g[mask] == w[mask]
-    if exact.all():
-        return
-    # report ulp distance before failing so a conscious relaxation is possible
-    gi = g[mask].view(np.int64)
-    wi = w[mask].view(np.int64)
-    ulp = np.abs(gi - wi)
-    bad = ~exact
-    assert ulp[bad].max() <= max_ulp, (
-        f"{name}: {bad.sum()} mismatches, max ulp distance {ulp[bad].max()}, "
-        f"examples got={g[mask][bad][:5]} want={w[mask][bad][:5]}"
-    )
+@pytest.fixture(scope="module")
+def oras(token_rows, ora):
+    """pipeline_oracle over the full fixture, per gap policy."""
+    out = {p: oracle.pipeline_oracle(token_rows, W, K, p)
+           for p in GAP_POLICIES if p != "ffill"}
+    out["ffill"] = ora
+    return out
 
 
 def test_oracle_matches_pandas_rolling():
@@ -64,44 +56,76 @@ def test_oracle_matches_pandas_rolling():
     assert np.allclose(got["sd"].to_numpy()[m], psd[m], rtol=1e-9)
 
 
-def spark_pipeline(tokens_df, policy="ffill", exact_mode="decimal"):
-    # the fixture includes doc_negmax (int32 extremes), which the fast long
-    # carrier rejects by design (ANSI overflow) -> decimal mode here; the
-    # long path is pinned bit-identical in test_long_mode_matches_decimal
-    pts = gap_fill(explode_series(tokens_df), policy)
-    return detect(pts, W, K, exact_mode)
+def _floats(values) -> np.ndarray:
+    return np.array([np.nan if v is None else float(v) for v in values])
 
 
 # ---------------------------------------------------------------------------
+# R5: token arrays served back from the 1m payloads
 
 
-def _oracle_tokens_df(spark, pdf):
-    """Oracle pandas frame (doc_id, tokens list) -> Spark df for R5."""
-    return spark.createDataFrame(
-        [(d, t) for d, t in zip(pdf["doc_id"], pdf["tokens"])],
-        "doc_id string, tokens array<int>",
+def _served_tokens(points, tokens_df):
+    """Served (doc_id, t, v) points as one t-ordered array per doc of
+    *tokens_df* (empty when it has none)."""
+    pts = points.groupBy("doc_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("t", "v"))),
+            lambda s: s["v"].cast("int"),
+        ).alias("tokens")
+    )
+    return (
+        tokens_df.select("doc_id")
+        .join(pts, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("tokens", F.array().cast("array<int>")).alias("tokens"),
+        )
     )
 
 
-def test_gap_fill_ffill_token_array_equality(spark, tokens_df, token_rows, ora):
-    """R5 through the first-class operator (engine/parity.py): the gate IS
-    token_eq_check returning zero violations, not an ad-hoc dict compare."""
-    from engine.parity import token_eq_check
+def _oracle_suffixes(spark, filled: pd.DataFrame):
+    """The oracle's gap-filled arrays with their null prefix dropped. Gap
+    fill leaves nulls only as a per-doc prefix, so with n_tok the suffix
+    pins every position."""
+    rows = []
+    for doc_id, tokens in zip(filled["doc_id"], filled["tokens"]):
+        lead = next((i for i, v in enumerate(tokens) if v is not None), len(tokens))
+        rows.append((doc_id, tokens[lead:]))
+    return spark.createDataFrame(rows, "doc_id string, tokens array<int>")
 
-    filled = gap_fill(explode_series(tokens_df), "ffill")
-    got = reassemble_tokens(filled, tokens_df)
-    viol = token_eq_check(got, _oracle_tokens_df(spark, ora["filled"]))
+
+def test_gap_fill_ffill_token_array_equality(spark, tokens_df, ora, tmp_path):
+    """R5 through the first-class operator (engine/parity.py): the tokens
+    served back from a run_rollup warehouse equal the oracle's gap-filled
+    arrays — the gate IS token_eq_check returning zero violations. Each
+    doc's served points are the last ones of its n_tok positions."""
+    from engine.io import ParquetManifestFormat
+    from jobs.rollup import run_rollup
+
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, tokens_df, wh, epoch=1, tiers=["1m"])
+    points = serve_raw_points(ParquetManifestFormat(spark, wh).read("rollup_1m"))
+    points = points.cache()
+    viol = token_eq_check(
+        _served_tokens(points, tokens_df), _oracle_suffixes(spark, ora["filled"])
+    )
     assert viol.count() == 0, viol.limit(5).collect()
+
+    misplaced = (
+        points.groupBy("doc_id")
+        .agg(F.min("t").alias("lo"), F.max("t").alias("hi"),
+             F.count("*").alias("n"))
+        .join(tokens_df.select("doc_id", "n_tok"), "doc_id")
+        .where("hi != n_tok - 1 OR hi - lo + 1 != n")
+    )
+    assert misplaced.count() == 0, misplaced.limit(5).collect()
+    points.unpersist()
 
 
 def test_token_eq_check_reports_violations(spark, tokens_df, ora):
     """Negative control for R5: a perturbed row, a dropped row and an extra
     row each surface with the right reason."""
-    from engine.parity import token_eq_check
-
-    want = _oracle_tokens_df(spark, ora["filled"])
-    from pyspark.sql import functions as F
-
+    want = _oracle_suffixes(spark, ora["filled"])
     tampered = (
         want.where("doc_id != 'doc_empty'")  # dropped row
         .withColumn(
@@ -125,147 +149,140 @@ def test_token_eq_check_reports_violations(spark, tokens_df, ora):
     }
 
 
-def test_gap_fill_zero_and_linear(spark, tokens_df, token_rows):
+def test_gap_fill_zero_and_linear(spark, tokens_df, oras):
+    """The kernel's zero and linear fills, read back from its payloads,
+    equal the oracle's."""
     for policy in ("zero", "linear"):
-        filled = gap_fill(explode_series(tokens_df), policy)
+        points = serve_raw_points(fused_rollup_1m(tokens_df, W, K, policy))
+        got = _served_tokens(points, tokens_df)
+        viol = token_eq_check(got, _oracle_suffixes(spark, oras[policy]["filled"]))
+        assert viol.count() == 0, (policy, viol.limit(5).collect())
+
+
+def test_gap_fill_idempotent(spark, tokens_df, oras):
+    """Gap-filling filled tokens changes nothing: the kernel run over the
+    oracle-filled tokens writes the same 1m rows and payloads as over the
+    raw tokens, for every policy."""
+    for policy in GAP_POLICIES:
+        pre = spark.createDataFrame(
+            list(zip(oras[policy]["filled"]["doc_id"], oras[policy]["filled"]["tokens"])),
+            "doc_id string, tokens array<int>",
+        )
+        a = rollup_rows(fused_rollup_1m(pre, W, K, policy), PAYLOAD_COLS)
+        b = rollup_rows(fused_rollup_1m(tokens_df, W, K, policy), PAYLOAD_COLS)
+        assert a == b, policy
+
+
+# ---------------------------------------------------------------------------
+# R1-R4: per-point anomaly flags
+
+
+def test_rolling_stats_and_score_parity(oras):
+    """R1-R4 per point: the kernel's flags on each oracle-filled series
+    equal the oracle's is_anom (score > k over the exact-sum ma/sd) on
+    every fixture doc, for every gap policy."""
+    for policy in GAP_POLICIES:
+        stats = oras[policy]["stats"]
+        want = {d: g["is_anom"].to_numpy() for d, g in stats.groupby("doc_id")}
+        filled = oras[policy]["filled"]
+        for doc_id, tokens in zip(filled["doc_id"], filled["tokens"]):
+            got = _anom_flags(_floats(tokens), W, K)
+            expect = want.get(doc_id, np.zeros(0, dtype=bool))
+            assert got.size == expect.size and (got == expect).all(), (policy, doc_id)
+
+
+def test_detect_indices_parity(token_rows, oras):
+    """The production batch shape: every non-empty fixture doc's RAW tokens
+    in ONE flat batch (int32-extreme docs next to in-range ones), gap-
+    filled and flagged by the kernel, give each doc the oracle's sorted
+    anomaly positions, for every gap policy."""
+    docs = [r for r in token_rows if r["tokens"]]
+    lengths = np.array([len(r["tokens"]) for r in docs])
+    flat = np.concatenate([_floats(r["tokens"]) for r in docs])
+    bounds = np.concatenate(([0], np.cumsum(lengths)))
+    for policy in GAP_POLICIES:
+        _, _, anom = _flat_detect(flat, lengths, policy, W, K)
         got = {
-            r["doc_id"]: r["tokens"]
-            for r in reassemble_tokens(filled, tokens_df).collect()
+            r["doc_id"]: np.flatnonzero(anom[bounds[i]: bounds[i + 1]]).tolist()
+            for i, r in enumerate(docs)
         }
-        for row in token_rows:
-            want = oracle.gap_fill_series(row["tokens"], policy)
-            assert got[row["doc_id"]] == want, f"{row['doc_id']} policy={policy}"
+        det = oras[policy]["detect"]
+        want = dict(zip(det["doc_id"], det["anomalies"]))
+        for doc_id, positions in got.items():
+            assert positions == want[doc_id], (policy, doc_id)
 
 
-def test_gap_fill_idempotent(spark, tokens_df):
-    once = gap_fill(explode_series(tokens_df), "ffill")
-    twice = gap_fill(once, "ffill")
-    assert once.exceptAll(twice).count() == 0
-    assert twice.exceptAll(once).count() == 0
-
-
-def test_rolling_stats_and_score_parity(spark, tokens_df, token_rows, ora):
-    got = (
-        spark_pipeline(tokens_df)
-        .toPandas()
-        .sort_values(["doc_id", "t"])
-        .reset_index(drop=True)
-    )
-    want = ora["stats"].sort_values(["doc_id", "t"]).reset_index(drop=True)
-    assert len(got) == len(want)
-    assert (got["doc_id"] == want["doc_id"]).all()
-    assert (got["t"].to_numpy() == want["t"].to_numpy()).all()
-    gv = got["v"].astype("Float64").to_numpy(dtype=np.float64, na_value=np.nan)
-    assert_float_col("v", pd.Series(gv), want["v"])
-    assert_float_col("ma", got["ma"], want["ma"])
-    assert_float_col("sd", got["sd"], want["sd"])
-    assert_float_col("score", got["score"], want["score"])
-    assert (got["is_anom"].to_numpy() == want["is_anom"].to_numpy()).all()
-
-
-def test_detect_has_true_positives(spark, tokens_df, token_rows, ora):
+def test_detect_has_true_positives(spark, tokens_df, ora):
     """The fixture injects +10 sigma spikes; detection must actually fire
     (guards against the w=5 vacuity bug fixed in SURVEY.md §2.1a)."""
-    n = spark_pipeline(tokens_df).where("is_anom").count()
+    n = fused_rollup_1m(tokens_df, compress=False).agg(F.sum("anom_cnt")).first()[0]
     assert n > 0, "no anomalies detected on spiked fixture — detector vacuous"
     assert int(ora["stats"]["is_anom"].sum()) == n
 
 
-def test_detect_indices_parity(spark, tokens_df, token_rows, ora):
-    got = {r["doc_id"]: list(r["anomalies"]) for r in detect_indices(
-        gap_fill(explode_series(tokens_df), "ffill"), W, K, exact_mode="decimal"
-    ).collect()}
-    want = dict(zip(ora["detect"]["doc_id"], ora["detect"]["anomalies"]))
-    for doc_id in want:
-        assert got.get(doc_id, []) == want[doc_id], f"{doc_id} anomaly lists differ"
+def test_fused_rejects_window_below_two(spark, tokens_df, tmp_path):
+    """A sample std needs w >= 2 (the oracle divides by w*(w-1)): the
+    kernel and run_rollup raise instead of returning zero anomalies."""
+    from jobs.rollup import run_rollup
+
+    for w in (1, 0):
+        with pytest.raises(ValueError, match="window must be >= 2"):
+            fused_rollup_1m(tokens_df, w=w)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(ValueError, match="window must be >= 2"):
+        run_rollup(spark, tokens_df, wh, epoch=1, w=1)
 
 
-def _rollup_frames(spark, tokens_df):
-    flagged = spark_pipeline(tokens_df)
-    r1m = rollup_from_points(flagged, "1m")
-    r1h = cascade(r1m, "1m", "1h")
-    r1d = cascade(r1h, "1h", "1d")
-    return r1m, r1h, r1d
+# ---------------------------------------------------------------------------
+# A1/A2: 1m rollup and cascade
 
 
-def _normalize_rollup(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pdf.drop(columns=["bucket_ts"]).sort_values(["doc_id", "bucket"]).reset_index(drop=True)
-    for c in ("cnt", "anom_cnt"):
-        out[c] = out[c].astype("int64")
-    for c in ("vmin", "vmax", "vsum", "first_v", "last_v"):
-        out[c] = out[c].astype("Float64").astype(object).where(lambda s: s.notna(), None)
-    return out
+def test_rollup_and_cascade_parity(spark, tokens_df, oras):
+    """Fused 1m rows and their cascaded 1h/1d rows equal the oracle's row
+    for row, vmean 0 ulp, on the full fixture (doc_negmax and doc_big
+    included), for every gap policy."""
+    for policy in GAP_POLICIES:
+        r1m = fused_rollup_1m(tokens_df, W, K, policy, compress=False)
+        r1h = cascade(r1m, "1m", "1h")
+        tiers = {"1m": r1m, "1h": r1h, "1d": cascade(r1h, "1h", "1d")}
+        for tier, sdf in tiers.items():
+            want = oracle_rollup_rows(oras[policy][f"rollup_{tier}"])
+            assert rollup_rows(sdf) == want, f"{policy}:{tier}"
 
 
-def test_rollup_and_cascade_parity(spark, tokens_df, token_rows, ora):
-    r1m, r1h, r1d = _rollup_frames(spark, tokens_df)
-    for tier, sdf in (("rollup_1m", r1m), ("rollup_1h", r1h), ("rollup_1d", r1d)):
-        pdf = sdf.toPandas()
-        got = _normalize_rollup(pdf)
-        want = _normalize_rollup(ora[tier])
-        assert len(got) == len(want), f"{tier}: row count {len(got)} != {len(want)}"
-        for col in ("doc_id", "bucket", "cnt", "anom_cnt"):
-            assert (got[col].to_numpy() == want[col].to_numpy()).all(), f"{tier}.{col}"
-        for col in ("vmin", "vmax", "vsum", "first_v", "last_v"):
-            assert got[col].tolist() == want[col].tolist(), f"{tier}.{col}"
-        assert_float_col(
-            f"{tier}.vmean",
-            pd.Series(
-                np.array(
-                    [np.nan if x is None else float(x) for x in pdf.sort_values(["doc_id", "bucket"])["vmean"]]
-                )
-            ),
-            pd.Series(
-                np.array(
-                    [np.nan if x is None else float(x) for x in ora[tier].sort_values(["doc_id", "bucket"])["vmean"]]
-                )
-            ),
+def test_cascade_equals_direct_rollup(spark, tokens_df, oras):
+    """Property (SURVEY.md §5.3): cascade(fused 1m -> 1h) equals the
+    oracle's 1h rollup taken directly over each doc's per-point stats,
+    never through 1m."""
+    for policy in GAP_POLICIES:
+        stats = oras[policy]["stats"]
+        direct = pd.concat(
+            [oracle.rollup_series(d, g, "1h") for d, g in stats.groupby("doc_id")],
+            ignore_index=True,
         )
-
-
-def test_cascade_equals_direct_rollup(spark, tokens_df):
-    """Property (SURVEY.md §5.3): cascade(1m->1h) == rollup_1h(points)."""
-    flagged = spark_pipeline(tokens_df)
-    r1m = rollup_from_points(flagged, "1m")
-    via_cascade = cascade(r1m, "1m", "1h")
-    direct = rollup_from_points(flagged, "1h")
-    cols = ["doc_id", "bucket", "cnt", "vmin", "vmax", "vsum", "anom_cnt", "first_v", "last_v"]
-    a, b = via_cascade.select(cols), direct.select(cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        r1m = fused_rollup_1m(tokens_df, W, K, policy, compress=False)
+        via_cascade = rollup_rows(cascade(r1m, "1m", "1h"))
+        assert via_cascade == oracle_rollup_rows(direct), policy
 
 
 def test_bucket_ts_utc(spark, tokens_df):
-    r1m, _, _ = _rollup_frames(spark, tokens_df)
+    r1m = fused_rollup_1m(tokens_df, compress=False)
     row = r1m.where("doc_id = 'doc_const' and bucket = 1").select("bucket_ts").first()
     # EPOCH0 2024-01-01T00:00:00Z + 60s
     assert str(row["bucket_ts"]) == "2024-01-01 00:01:00"
 
 
 def test_empty_and_allgap_docs(spark, tokens_df):
-    filled = gap_fill(explode_series(tokens_df), "ffill")
-    tok = {r["doc_id"]: r["tokens"] for r in reassemble_tokens(filled, tokens_df).collect()}
-    assert tok["doc_empty"] == []
-    assert tok["doc_allgaps"] == [None] * 40
-
-
-def test_long_mode_matches_decimal(spark, tokens_df):
-    """Fast long-carrier stats are bit-identical to the decimal carrier on
-    in-range data (everything but doc_negmax and the ~2e8-level doc_big)."""
-    in_range = tokens_df.where("doc_id NOT IN ('doc_negmax', 'doc_big')")
-    a = spark_pipeline(in_range, exact_mode="long").toPandas().sort_values(["doc_id","t"]).reset_index(drop=True)
-    b = spark_pipeline(in_range, exact_mode="decimal").toPandas().sort_values(["doc_id","t"]).reset_index(drop=True)
-    for col in ("ma", "sd", "score"):
-        assert_float_col(f"long-vs-decimal {col}", a[col], b[col])
-    assert (a["is_anom"] == b["is_anom"]).all()
-
-
-def test_long_mode_fails_loudly_on_extremes(spark, tokens_df):
-    """ANSI overflow, not silent corruption, on int32-extreme input."""
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import ArithmeticException
-
-    extremes = tokens_df.where("doc_id = 'doc_negmax'")
-    with _pytest.raises((ArithmeticException, Py4JJavaError, Exception)) as ei:
-        spark_pipeline(extremes, exact_mode="long").select("sd").agg({"sd": "sum"}).collect()
-    assert "ARITHMETIC_OVERFLOW" in str(ei.value) or "overflow" in str(ei.value).lower()
+    """An empty doc writes no 1m row; an all-gap doc writes its one bucket
+    with cnt 0, NULL aggregates, and serves no points."""
+    docs = ["doc_empty", "doc_allgaps"]
+    r1m = fused_rollup_1m(tokens_df).where(F.col("doc_id").isin(docs))
+    assert rollup_rows(r1m) == [
+        ("doc_allgaps", 0, 1704067200, 0, None, None, None, None, 0, None, None)
+    ]
+    served = _served_tokens(
+        serve_raw_points(r1m), tokens_df.where(F.col("doc_id").isin(docs))
+    )
+    assert {r["doc_id"]: r["tokens"] for r in served.collect()} == {
+        "doc_empty": [], "doc_allgaps": [],
+    }

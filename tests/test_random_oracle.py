@@ -169,6 +169,63 @@ def test_twins_agree_on_adversarial_random_corpus(spark, tmp_path, seed):
     assert not failures, failures
 
 
+def _welch_z_4dp(wkd: list[int], wke: list[int]) -> float:
+    """Exact floor(z * 10^4 + 0.5) / 10^4 of Welch's z for cent values,
+    z = (m1 - m2) / sqrt(v1/n1 + v2/n2) in Fractions (m1 >= m2): with
+    X = z * 10^4, floor(X + 1/2) = (isqrt(floor(4 X^2)) + 1) // 2."""
+    from fractions import Fraction
+    from math import isqrt
+
+    def mean_var(c):
+        n, s, q = len(c), sum(c), sum(x * x for x in c)
+        return Fraction(s, n), Fraction(n * q - s * s, n * (n - 1))
+
+    (m1, v1), (m2, v2) = mean_var(wkd), mean_var(wke)
+    assert m1 >= m2
+    x2 = (m1 - m2) ** 2 * 10**8 / (v1 / len(wkd) + v2 / len(wke))
+    four_x2 = 4 * x2
+    return ((isqrt(four_x2.numerator // four_x2.denominator) + 1) // 2) / 10**4
+
+
+def test_weekend_shift_welch_z_exact(spark, tmp_path):
+    """weekend_shift's welch_z on Spark and in its DuckDB oracle equals the
+    exact Welch z of one user's cent values (means and variances in the
+    same unit), and its means are reported in dollars."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+
+    wkd = [1025, 1310, 990, 1505, 1200, 1130]  # Fri 1 / Mon 4 March 2024
+    wke = [700, 845, 610, 905, 760]  # Sat 2 / Sun 3 March 2024
+    days = [1, 4, 1, 4, 1, 4] + [2, 3, 2, 3, 2]
+    rows = [
+        (i, pd.Timestamp(f"2024-03-0{d} 12:00:{i:02d}"), 7, "view", c / 100, "{}")
+        for i, (d, c) in enumerate(zip(days, wkd + wke))
+    ]
+    pdf = pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+    )
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    sf = str(tmp_path / "wknd")
+    os.makedirs(sf)
+    path = os.path.join(sf, "events.parquet")
+    pdf.to_parquet(path, index=False)
+
+    want = _welch_z_4dp(wkd, wke)
+    got = entrymod.queries()["weekend_shift"](spark, sf).collect()
+    assert [(r["n_weekday"], r["n_weekend"]) for r in got] == [(6, 5)]
+    assert got[0]["welch_z"] == want
+    assert got[0]["mean_weekday"] == 11.9333
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    cur = con.execute(entrymod.oracle_sql()["weekend_shift"])
+    cols = [d[0] for d in cur.description]
+    (orow,) = [dict(zip(cols, r)) for r in cur.fetchall()]
+    assert orow["welch_z"] == want and orow["mean_weekday"] == 11.9333
+
+
 DOC_QUERIES = [
     "chunk_documents", "winnow_fingerprints", "winnow_pairs",
     "scalar_funcs", "udaf_weighted_chars", "doc_fingerprint",

@@ -60,17 +60,10 @@ def test_crash_between_data_and_lineage_is_recomputed(spark, small_tokens, tmp_p
     # simulate: a previous attempt wrote garbage 1m data but died before the
     # lineage append (with the tier's columns: the table records its schema
     # at this first commit and refuses a resume commit that drifts from it)
-    from engine.rollup import rollup_from_points
-    from engine.series import explode_series, gap_fill
-    from engine.stats import detect
+    from engine.fused import fused_rollup_1m
 
-    garbage = (
-        rollup_from_points(
-            detect(gap_fill(explode_series(small_tokens.limit(3)))), "1m"
-        )
-        .withColumn("cnt", F.lit(-999).cast("long"))
-        .withColumn("ts_dod", F.lit(None).cast("binary"))
-        .withColumn("v_gorilla", F.lit(None).cast("binary"))
+    garbage = fused_rollup_1m(small_tokens.limit(3)).withColumn(
+        "cnt", F.lit(-999).cast("long")
     )
     write_tier(fmt, garbage, "1m")
     assert committed_partitions(wh, "1m", 1) == set()  # invisible to readers
@@ -209,8 +202,8 @@ def test_serve_raw_points_from_payloads(spark, small_tokens, tmp_path):
     equal the gap-filled non-null points of the source — sliced to the
     requested [t0, t1) — without touching the token table; the plan prunes
     buckets BEFORE the decode UDF."""
+    from engine import oracle
     from engine.query import serve_raw_points
-    from engine.series import explode_series, gap_fill
 
     wh = str(tmp_path / "raw")
     run_rollup(spark, small_tokens, wh, epoch=1)
@@ -223,11 +216,10 @@ def test_serve_raw_points_from_payloads(spark, small_tokens, tmp_path):
         ).collect()
     )
     want = sorted(
-        (r["doc_id"], r["t"], int(r["v"]))
-        for r in gap_fill(explode_series(small_tokens), "ffill")
-        .where(F.col("v").isNotNull())
-        .where((F.col("t") >= t0) & (F.col("t") < t1))
-        .collect()
+        (r["doc_id"], t, v)
+        for r in small_tokens.select("doc_id", "tokens").collect()
+        for t, v in enumerate(oracle.gap_fill_series(list(r["tokens"])))
+        if v is not None and t0 <= t < t1
     )
     assert got == want and len(got) > 0
 
