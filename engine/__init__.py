@@ -8,9 +8,10 @@ Layout (SURVEY.md §7):
     engine.schema       pinned constants + fixed StructTypes
     engine.session      SparkSession builder with K3 AQE/shuffle confs
     engine.io           S1 scan, S2/S3 tier write/read (TableFormat shim), S4 synth
-    engine.fused        the 1m tier: G1 gap-fill, R1-R4 stats/detect, A1 rollup
-                        and C1/C2 payloads in one mapInArrow pass
-    engine.rollup       A2 cascade (1m -> 1h -> 1d), A4 sketches
+    engine.fused        every tier: G1 gap-fill, R1-R4 stats/detect, the 1m/1h/1d
+                        A1 rollups and C1/C2 payloads in one mapInArrow pass
+    engine.rollup       A2 cascade (1m -> 1h -> 1d; read-side hole fill and
+                        merge-mode carry), A4 sketches
     engine.compression  C1-C3 delta-of-delta + Gorilla XOR (Arrow UDFs)
     engine.lineage      L1-L3 commit protocol / resume
     engine.query        Q1-Q4 downsample read path

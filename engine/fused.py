@@ -1,8 +1,9 @@
-"""Fused doc-level pipeline: gap-fill -> rolling stats -> detect -> 1m
-rollup -> compression in ONE Arrow pass over the raw token table, with NO
-shuffle of raw points. This is the engine's only 1m implementation; the
-pinned semantics it computes (G1 gap-fill, R1-R4 stats/detect) are
-specified in engine/oracle.py, its independent reference.
+"""Fused doc-level pipeline: gap-fill -> rolling stats -> detect -> 1m,
+1h and 1d rollup -> compression in ONE Arrow pass over the raw token
+table, with NO shuffle of raw points. This is the engine's only builder of
+the rollup tiers; the pinned semantics it computes (G1 gap-fill, R1-R4
+stats/detect, A1 rollup) are specified in engine/oracle.py, its
+independent reference.
 
 Why this shape: the B:15 input is row-per-doc with the WHOLE series in one
 array, so every per-series operator (G1 gap-fill, R1-R4 stats/detect, A1
@@ -11,8 +12,12 @@ point-per-row plan must shuffle and sort every point to feed doc_id
 windows — at 196.6M points that exchange+sort saturated one machine's
 memory/disk bandwidth and capped N->4N core scaling at ~0.5-0.7. So this
 pass maps each Arrow batch of doc rows through vectorized NumPy kernels and
-emits finished rollup rows; the only exchange left in the job is bucketing
-the ~60x smaller aggregate output for the partitioned write. This is
+emits finished rollup rows of every requested tier, each doc's coarse rows
+rolled up from the same gap-filled series as its 1m rows; the only
+exchange left in the job is bucketing the ~60x smaller output for the one
+partitioned write (jobs/rollup.py). A coarse tier built as a second Spark
+pass (re-read, aggregate, exchange, commit) costs a fixed ~0.6 s per tier
+whatever its size; here it costs a few NumPy reductions per batch. This is
 exactly the sanctioned shape — "pyspark.sql DataFrame + vectorized
 pandas/Arrow UDFs (no per-row Python) throughout" (BASELINE.json:15).
 
@@ -29,8 +34,8 @@ enters.
 
 BIT-EXACTNESS: identical to engine/oracle.py on every int32 input (pinned
 by tests/test_parity.py and tests/test_fused.py, which assert row equality
-against oracle.pipeline_oracle on the full parity fixture, int32 extremes
-included):
+of every tier against oracle.pipeline_oracle on the full parity fixture,
+int32 extremes included):
   - same exact integer window sums. In-range docs use int64 cumsum
     differences: the GLOBAL cumsum over the flat batch may wrap int64, but
     two's-complement wraparound cancels in the subtraction, so any window
@@ -59,20 +64,17 @@ from engine.schema import (
     DEFAULT_WINDOW,
     EPOCH0_EPOCH_SECONDS,
     GAP_POLICIES,
+    TIER_ORDER,
     TIER_SECONDS,
 )
 
 # (w*max|v|)^2 at or above this can overflow num = w*s2 - s1^2 in int64
 _INT64_LIMIT = 2**63
 
-_ROLLUP_COLS = [
-    "doc_id", "bucket", "cnt", "vmin", "vmax", "vsum", "vmean",
-    "anom_cnt", "first_v", "last_v", "ts_dod", "v_gorilla",
-]
 _ROLLUP_DDL = (
     "doc_id string, bucket long, cnt long, vmin int, vmax int, "
     "vsum long, vmean double, anom_cnt long, first_v int, "
-    "last_v int, ts_dod binary, v_gorilla binary"
+    "last_v int, ts_dod binary, v_gorilla binary, tier string"
 )
 
 
@@ -270,19 +272,26 @@ def _flat_rollup_cols(vf: np.ndarray, anom: np.ndarray,
     )
 
 
-def fused_rollup_1m(
+def fused_rollup(
     tokens_df,
+    tiers,
     w: int = DEFAULT_WINDOW,
     k: float = DEFAULT_K,
     policy: str = "ffill",
     compress: bool = True,
-    tier: str = "1m",
 ):
-    """The shuffle-free 1m tier: token table -> finished rollup rows.
+    """The shuffle-free tier build: token table -> finished rollup rows of
+    every tier in *tiers*, tagged by a ``tier`` column.
 
     mapInArrow over the raw rows — each doc is self-contained, so the
-    operator is NARROW (no exchange, no sort). Returns the standard rollup
-    schema incl. bucket_ts; payload columns are NULL when compress=False.
+    operator is NARROW (no exchange, no sort). Each doc is gap-filled and
+    scored once; A1 then runs per tier over the same filled series at that
+    tier's width (TIER_SECONDS). A direct rollup at a coarse width equals
+    the cascade of the 1m rows (min/max/sum/cnt compose exactly;
+    tests/test_parity.py pins both against engine/oracle.py), so the 1h
+    and 1d rows need no second pass. Payloads (C1/C2) are built for the 1m
+    tier only and are NULL elsewhere or when compress=False. Returns the
+    standard rollup schema incl. bucket_ts, plus ``tier``.
 
     Round 7 (guide §4.2): the kernel consumes and emits Arrow record
     batches directly instead of pandas frames. Input series come straight
@@ -299,7 +308,9 @@ def fused_rollup_1m(
         raise ValueError(f"unknown gap-fill policy {policy!r}; one of {GAP_POLICIES}")
     if w < 2:
         raise ValueError(f"window must be >= 2 for a sample std, got {w}")
-    b = TIER_SECONDS[tier]
+    if not tiers or set(tiers) - set(TIER_ORDER):
+        raise ValueError(f"tiers must be a non-empty subset of {TIER_ORDER}, got {tiers}")
+    tiers_ = [t for t in TIER_ORDER if t in tiers]
     w_, k_, policy_, compress_ = int(w), float(k), policy, bool(compress)
 
     def run_batches(batches):
@@ -319,6 +330,7 @@ def fused_rollup_1m(
                 ("last_v", pa.int32()),
                 ("ts_dod", pa.binary()),
                 ("v_gorilla", pa.binary()),
+                ("tier", pa.string()),
             ]
         )
 
@@ -353,39 +365,54 @@ def fused_rollup_1m(
                 [vals_np[offs[j]: offs[j + 1]] for j in kept]
             ).astype(np.float64, copy=False)
             vf, seg_starts, anom = _flat_detect(vf, lengths, policy_, w_, k_)
-            (
-                nb, bucket, cnt, vmin, vmax, vsum, vmean, anom_cnt,
-                first_v, last_v, empty, pay_t, pay_v,
-            ) = _flat_rollup_cols(vf, anom, seg_starts, lengths, b, compress_)
+            for tier in tiers_:
+                pay = compress_ and tier == "1m"
+                (
+                    nb, bucket, cnt, vmin, vmax, vsum, vmean, anom_cnt,
+                    first_v, last_v, empty, pay_t, pay_v,
+                ) = _flat_rollup_cols(vf, anom, seg_starts, lengths,
+                                      TIER_SECONDS[tier], pay)
 
-            nbt = bucket.size
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_col.take(pa.array(np.repeat(kept, nb))),
-                    pa.array(bucket),
-                    pa.array(cnt),
-                    pa.array(vmin.astype(np.int32), mask=empty),
-                    pa.array(vmax.astype(np.int32), mask=empty),
-                    pa.array(vsum, mask=empty),
-                    pa.array(vmean, mask=empty),
-                    pa.array(anom_cnt),
-                    pa.array(first_v.astype(np.int32), mask=empty),
-                    pa.array(last_v.astype(np.int32), mask=empty),
-                    _binary_col(pay_t, nbt)
-                    if compress_
-                    else pa.nulls(nbt, pa.binary()),
-                    _binary_col(pay_v, nbt)
-                    if compress_
-                    else pa.nulls(nbt, pa.binary()),
-                ],
-                schema=out_schema,
-            )
+                nbt = bucket.size
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        doc_col.take(pa.array(np.repeat(kept, nb))),
+                        pa.array(bucket),
+                        pa.array(cnt),
+                        pa.array(vmin.astype(np.int32), mask=empty),
+                        pa.array(vmax.astype(np.int32), mask=empty),
+                        pa.array(vsum, mask=empty),
+                        pa.array(vmean, mask=empty),
+                        pa.array(anom_cnt),
+                        pa.array(first_v.astype(np.int32), mask=empty),
+                        pa.array(last_v.astype(np.int32), mask=empty),
+                        _binary_col(pay_t, nbt) if pay else pa.nulls(nbt, pa.binary()),
+                        _binary_col(pay_v, nbt) if pay else pa.nulls(nbt, pa.binary()),
+                        pa.repeat(tier, nbt),
+                    ],
+                    schema=out_schema,
+                )
 
     out = tokens_df.select("doc_id", "tokens").mapInArrow(run_batches, _ROLLUP_DDL)
+    width = F.lit(TIER_SECONDS[tiers_[0]])
+    for tier in tiers_[1:]:
+        width = F.when(F.col("tier") == tier, TIER_SECONDS[tier]).otherwise(width)
     return out.withColumn(
         "bucket_ts",
-        F.timestamp_seconds(F.lit(EPOCH0_EPOCH_SECONDS) + F.col("bucket") * F.lit(b)),
+        F.timestamp_seconds(F.lit(EPOCH0_EPOCH_SECONDS) + F.col("bucket") * width),
     ).select(
         "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-        "vmean", "anom_cnt", "first_v", "last_v", "ts_dod", "v_gorilla",
+        "vmean", "anom_cnt", "first_v", "last_v", "ts_dod", "v_gorilla", "tier",
     )
+
+
+def fused_rollup_1m(
+    tokens_df,
+    w: int = DEFAULT_WINDOW,
+    k: float = DEFAULT_K,
+    policy: str = "ffill",
+    compress: bool = True,
+):
+    """The 1m tier alone: fused_rollup's 1m-only call, without its ``tier``
+    column."""
+    return fused_rollup(tokens_df, ("1m",), w, k, policy, compress).drop("tier")

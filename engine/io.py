@@ -12,6 +12,10 @@ contract over parquet + a JSON manifest that carries snapshot semantics:
     like Iceberg partition overwrites + time travel;
   - manifest replace is atomic (os.replace), and data directories are
     immutable once written — a reader never sees a half-written snapshot;
+  - a write is staged: one Spark write lands the rows of one or several
+    tables under ``_staging/<uuid>``, then each table commits in turn by
+    renaming its share to ``<table>/snap-<N>`` and swapping its manifest,
+    so the rollup's three tiers cost one write and three cheap commits;
   - the manifest owns the table schema (Iceberg's table metadata): the
     first commit records it, every later commit must match it (checked
     before any data is written), and every read imposes it, so no read
@@ -24,8 +28,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +39,11 @@ from pyspark.sql import types as T
 
 from engine.schema import TOKENS_SCHEMA, assert_tokens_schema
 from engine.skew import with_part_hash
+
+# Staged writes land under <warehouse>/STAGING_DIR/<uuid> before their
+# commit renames them into a table; TIER_COL routes a multi-table write.
+STAGING_DIR = "_staging"
+TIER_COL = "tier"
 
 
 def scan_tokens(spark: SparkSession, path: str) -> DataFrame:
@@ -163,17 +174,30 @@ class ParquetManifestFormat:
     def overwrite_partitions(
         self,
         df: DataFrame,
-        table: str,
+        table: str | dict[str, str],
         n_buckets: int | None = None,
         sort_within=None,
         rebalance: bool = False,
+        on_commit=None,
     ) -> int:
         """S2: atomically replace exactly the partitions present in *df*.
 
-        *df* must carry a ``part_hash`` column (K1). Data lands in an
-        immutable per-snapshot directory first; the manifest swap is the
-        commit point, exactly the Iceberg commit ordering the lineage
-        protocol (L1) relies on.
+        *df* must carry a ``part_hash`` column (K1). *table* is one table
+        name, or a dict mapping each value of *df*'s ``tier`` column to a
+        table, in commit order: ONE Spark write then lands the rows of
+        every table, partitioned by ``(tier, part_hash)``.
+
+        Staged commit: the write goes to a fresh staging dir under the
+        warehouse (``_staging/<uuid>``). Then, per table in order, the
+        table's share of it (``tier=<value>``, or the whole dir for one
+        table) is renamed to ``<table>/snap-<current+1>`` and the table's
+        manifest is swapped — the commit point, exactly the Iceberg commit
+        ordering the lineage protocol (L1) relies on. A ``snap-<N>`` dir
+        that no snapshot references (a crash between the rename and the
+        swap) is removed before the rename. ``on_commit(table,
+        snapshot_id)`` runs after each swap; a truthy return stops there,
+        and the staged data of the tables not yet committed is deleted
+        unread. Returns the last committed snapshot id.
 
         ``sort_within`` (a Column expression or list of them) clusters
         rows inside each task's file AFTER the part_hash co-location
@@ -183,23 +207,22 @@ class ParquetManifestFormat:
         snapshot/manifest protocol is unchanged — row ORDER inside
         immutable files is the only difference.
 
-        The table's first commit records *df*'s schema (``part_hash``
-        included, every field nullable, as parquet stores them) in the
-        manifest. Every later commit must write the same column names and
-        types, in any order: otherwise it raises ValueError before any
-        data directory is created. A manifest written before schemas were
-        recorded stays unchecked.
+        A table's first commit records *df*'s schema (``part_hash``
+        included, ``tier`` not, every field nullable, as parquet stores
+        them) in the manifest. Every later commit must write the same
+        column names and types, in any order: otherwise it raises
+        ValueError before anything is written. A manifest written before
+        schemas were recorded stays unchecked.
         """
         if "part_hash" not in df.columns:
             raise ValueError("overwrite_partitions requires a part_hash column (K1)")
-        manifest = self._load(table)
-        schema = _stored_schema(df.schema)
-        if int(manifest["current"]) == 0:
-            manifest["schema"] = json.loads(schema.json())
-        elif "schema" in manifest:
-            _check_drift(table, T.StructType.fromJson(manifest["schema"]), schema)
-        snap_id = int(manifest["current"]) + 1
-        data_dir = os.path.join(self.warehouse, table, f"snap-{snap_id}")
+        routes = {None: table} if isinstance(table, str) else dict(table)
+        keys = ["part_hash"] if None in routes else [TIER_COL, "part_hash"]
+        schema = _stored_schema(df.drop(TIER_COL).schema if len(keys) > 1 else df.schema)
+        for t in routes.values():
+            manifest = self._load(t)
+            if int(manifest["current"]) > 0 and "schema" in manifest:
+                _check_drift(t, T.StructType.fromJson(manifest["schema"]), schema)
         # Co-locate each part_hash into one task before the dynamic-partition
         # write: otherwise every task opens a writer per partition value
         # (tasks x N_BUCKETS tiny files). One shuffle of already-aggregated
@@ -207,10 +230,10 @@ class ParquetManifestFormat:
         # between N_BUCKETS files and N_BUCKETS x shuffle_partitions.
         #
         # ``rebalance=True`` (round 7, guide §6 "REBALANCE hint before the
-        # write"): same part_hash clustering, but AQE sizes the task count
-        # from the data — a tiny cascade tier collapses to one or two write
-        # tasks instead of N_BUCKETS near-empty ones, and an oversized
-        # partition is skew-split into several bounded files (the Iceberg
+        # write"): same clustering, but AQE sizes the task count from the
+        # data — the small coarse tiers ride in one or two write tasks
+        # instead of N_BUCKETS near-empty ones, and an oversized partition
+        # is skew-split into several bounded files (the Iceberg
         # write.distribution-mode=hash shape). Off for callers that chain
         # sortWithinPartitions (z-order compaction): a coalesced task holds
         # several part_hash values and the writer's partition-sort would
@@ -218,13 +241,44 @@ class ParquetManifestFormat:
         from engine.schema import DEFAULT_N_BUCKETS
 
         if rebalance and sort_within is None:
-            df = df.hint("rebalance", "part_hash")
+            df = df.hint("rebalance", *keys)
         else:
-            df = df.repartition(int(n_buckets or DEFAULT_N_BUCKETS), "part_hash")
+            df = df.repartition(int(n_buckets or DEFAULT_N_BUCKETS), *keys)
         if sort_within is not None:
             cols = sort_within if isinstance(sort_within, list) else [sort_within]
             df = df.sortWithinPartitions(*cols)
-        df.write.partitionBy("part_hash").mode("errorifexists").parquet(data_dir)
+        staged = os.path.join(self.warehouse, STAGING_DIR, uuid.uuid4().hex)
+        snap_id = 0
+        try:
+            df.write.partitionBy(*keys).mode("errorifexists").parquet(staged)
+            for value, t in routes.items():
+                src = staged if value is None else os.path.join(staged, f"{TIER_COL}={value}")
+                snap_id = self._commit_dir(t, src, schema)
+                if on_commit is not None and on_commit(t, snap_id):
+                    break
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        return snap_id
+
+    def _commit_dir(self, table: str, src: str, schema: T.StructType) -> int:
+        """Rename the staged dir *src* (absent: no rows) to the table's next
+        ``snap-<N>`` and swap the manifest to a snapshot that maps its
+        part_hash dirs there."""
+        manifest = self._load(table)
+        if int(manifest["current"]) == 0:
+            manifest["schema"] = json.loads(schema.json())
+        snap_id = int(manifest["current"]) + 1
+        data_dir = os.path.join(self.warehouse, table, f"snap-{snap_id}")
+        if os.path.lexists(data_dir):
+            # left by a crash after its rename, before its manifest swap
+            if os.path.basename(data_dir) in _live_dir_names(manifest):
+                raise ValueError(f"{table}: {data_dir} is referenced by a snapshot")
+            shutil.rmtree(data_dir)
+        os.makedirs(os.path.dirname(data_dir), exist_ok=True)
+        if os.path.isdir(src):
+            os.replace(src, data_dir)
+        else:
+            os.makedirs(data_dir)
         written = [
             int(name.split("=", 1)[1])
             for name in os.listdir(data_dir)
@@ -338,8 +392,6 @@ class ParquetManifestFormat:
         surviving snapshot). Time travel to an expired snapshot raises —
         exactly the Iceberg contract.
         """
-        import shutil
-
         manifest = self._load(table)
         snaps = manifest["snapshots"]
         ids = sorted(int(s) for s in snaps)
@@ -357,11 +409,7 @@ class ParquetManifestFormat:
         # the table dir — a string compare against a differently-spelled
         # --warehouse would see every live dir as orphan and delete data the
         # current snapshot still references.
-        live_names = {
-            os.path.basename(os.path.normpath(d))
-            for s in manifest["snapshots"].values()
-            for d in s["partitions"].values()
-        }
+        live_names = _live_dir_names(manifest)
         tdir = os.path.join(self.warehouse, table)
         removed = []
         for name in os.listdir(tdir):
@@ -377,6 +425,15 @@ class ParquetManifestFormat:
 
     def read(self, table: str) -> DataFrame:
         return self.read_at(table, self.current_snapshot(table))
+
+
+def _live_dir_names(manifest: dict) -> set[str]:
+    """Basenames of the data dirs any snapshot in *manifest* references."""
+    return {
+        os.path.basename(os.path.normpath(d))
+        for s in manifest["snapshots"].values()
+        for d in s["partitions"].values()
+    }
 
 
 def _stored_schema(schema: T.StructType) -> T.StructType:

@@ -13,11 +13,24 @@ Commit protocol — the state machine (SURVEY.md §7 step 2):
                          [fmt.overwrite_partitions(data)]   (A)
                          [append lineage rows]              (B)
 
+    jobs/rollup.py stages every tier's rows in ONE write, then runs (A)
+    and (B) per tier in tier order: (A) renames the tier's staged dir to
+    its next snap-<N> and swaps its manifest (engine/io.py).
+
     Readers trust ONLY lineage (Q2). A crash between (A) and (B) leaves
     DIRTY partitions: the resume run recomputes them and (A) OVERWRITES —
     idempotent because overwrite replaces the whole partition. A crash
-    before (A) changes nothing. Therefore: resume == clean run, byte-for-
-    byte (fault-injection test in tests/test_resume.py).
+    before (A) leaves at most an unreferenced staging dir, or a snap-<N>
+    renamed into the table but not in its manifest; no reader sees
+    either, and the next commit of that table removes such a snap-<N>
+    before it renames its own into place. Therefore: resume == clean run,
+    byte-for-byte (fault-injection tests in tests/test_resume.py).
+
+Lineage rows also record the build parameters (``params``: w, k, gap
+policy, compress as one JSON string). A resume under other parameters
+would mix two builds in one epoch, so jobs/rollup.py refuses it
+(recorded_params); rows written before parameters were recorded read
+null and are not checked.
 
 Lineage storage is an append-only parquet directory: each commit writes one
 immutable file via pyarrow (driver-side, rows are tiny — one per partition),
@@ -59,6 +72,7 @@ _ARROW_SCHEMA = pa.schema(
         ("checkpoint_epoch", pa.int64()),
         ("committed_at", pa.timestamp("us", tz="UTC")),
         ("pipeline", pa.string()),
+        ("params", pa.string()),
     ]
 )
 
@@ -66,6 +80,12 @@ _ARROW_SCHEMA = pa.schema(
 _SNAPSHOT_COLS = pa.schema(
     [_ARROW_SCHEMA.field(c) for c in
      ("tier", "part_hash", "checkpoint_epoch", "output_snapshot_id")]
+)
+
+
+# The lineage columns recorded_params reads.
+_PARAMS_COLS = pa.schema(
+    [_ARROW_SCHEMA.field(c) for c in ("tier", "checkpoint_epoch", "params")]
 )
 
 
@@ -81,6 +101,7 @@ def lineage_record(
     checkpoint_epoch: int,
     output_snapshot_id: int = -1,
     pipeline: str = "",
+    params: str | None = None,
 ) -> int:
     """L1: append one lineage row per committed partition (AFTER the data
     commit — see the module-docstring state machine). Atomic: parquet file
@@ -94,10 +115,13 @@ def lineage_record(
     -1 = unknown (legacy writer); readers then fall back to the current
     snapshot.
 
-    ``pipeline`` records the job step that produced the rows: "fused" (the
-    1m tier, jobs/rollup.py), "cascade" (1h/1d) or "compact"
-    (jobs/compact.py), so operators can see which path wrote an epoch.
-    "" = unrecorded."""
+    ``pipeline`` records the job step that produced the rows: "fused"
+    (every rollup tier, jobs/rollup.py; "cascade" on 1h/1d rows written
+    before the kernel emitted them) or "compact" (jobs/compact.py), so
+    operators can see which path wrote an epoch. "" = unrecorded.
+
+    ``params`` is the build parameters' JSON string (jobs/rollup.py), None
+    for writers that have none (compaction, retention)."""
     d = _lineage_path(warehouse)
     os.makedirs(d, exist_ok=True)
     now = int(time.time() * 1_000_000)
@@ -112,6 +136,7 @@ def lineage_record(
             "checkpoint_epoch": [int(checkpoint_epoch)] * len(partition_stats),
             "committed_at": pa.array([now] * len(partition_stats), pa.timestamp("us", tz="UTC")),
             "pipeline": [pipeline] * len(partition_stats),
+            "params": pa.array([params] * len(partition_stats), pa.string()),
         },
         schema=_ARROW_SCHEMA,
     )
@@ -154,6 +179,24 @@ def committed_partition_snapshots(
         "snap": pc.fill_null(t["output_snapshot_id"], -1),
     }).group_by("part_hash").aggregate([("snap", "max")])
     return dict(zip(latest["part_hash"].to_pylist(), latest["snap_max"].to_pylist()))
+
+
+def recorded_params(warehouse: str, checkpoint_epoch: int) -> dict[str, set[str]]:
+    """tier -> the distinct build parameters recorded on the epoch's lineage
+    rows. Files written before parameters were recorded read null, which
+    is left out."""
+    files = glob.glob(os.path.join(_lineage_path(warehouse), "commit-*.parquet"))
+    if not files:
+        return {}
+    t = ds.dataset(files, schema=_PARAMS_COLS, format="parquet").to_table(
+        columns=["tier", "params"],
+        filter=(ds.field("checkpoint_epoch") == checkpoint_epoch)
+        & ds.field("params").is_valid(),
+    )
+    out: dict[str, set[str]] = {}
+    for tier, params in zip(t["tier"].to_pylist(), t["params"].to_pylist()):
+        out.setdefault(tier, set()).add(params)
+    return out
 
 
 def pending_partitions(

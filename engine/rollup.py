@@ -2,14 +2,19 @@
 BASELINE.json:6 "continuous aggregates (min/max/mean/count ...) at
 cascading retention tiers raw -> 1m -> 1h -> 1d").
 
-The 1m tier itself is built by engine/fused.py. Coarser tiers are
-re-aggregated from min/max/sum/cnt of the finer tier, never from means, so
-vmean cascades exactly: cascade(1m -> 1h) equals the 1h rollup taken
-directly over the points (tests/test_parity.py, against engine/oracle.py).
-Each cascade level aggregates an already-reduced input (60x/24x smaller),
-so its cost is negligible next to the raw scan. The sketches (A4 and the
-distinct-user cascade) carry the aggregates that do not re-aggregate
-exactly: HLL registers merge, distinct counts do not.
+Every written tier is built by engine/fused.py, straight from the raw
+series. The cascade re-aggregates min/max/sum/cnt of a finer tier, never
+means, so vmean cascades exactly: cascade(1m -> 1h) equals the 1h rollup
+taken directly over the points (tests/test_parity.py, against
+engine/oracle.py) — which is also why the kernel may emit the coarse
+tiers directly. It serves two places where only a finer tier exists:
+engine/query.py::tier_fallback fills a coarse tier's uncommitted
+partitions from the finer one at read time, and jobs/rollup.py's merge
+mode carries the coarse rows of docs outside the batch from the current
+1m view. Each cascade level aggregates an already-reduced input (60x/24x
+smaller). The sketches (A4 and the distinct-user cascade) carry the
+aggregates that do not re-aggregate exactly: HLL registers merge,
+distinct counts do not.
 """
 
 from __future__ import annotations

@@ -89,10 +89,15 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("out_rows", T.LongType(), False),
         T.StructField("checkpoint_epoch", T.LongType(), False),
         T.StructField("committed_at", T.TimestampType(), False),
-        # job step that produced the partition ("fused" 1m, "cascade" 1h/1d,
-        # "compact"; "" = unrecorded, e.g. retention) — lets an operator see
-        # which path wrote an epoch
+        # job step that produced the partition ("fused" for every rollup
+        # tier, "cascade" on 1h/1d rows written before the fused kernel
+        # emitted them, "compact"; "" = unrecorded, e.g. retention) — lets
+        # an operator see which path wrote an epoch
         T.StructField("pipeline", T.StringType(), True),
+        # build parameters of a rollup commit as JSON (w, k, gap policy,
+        # compress); null for other writers and for rows written before
+        # parameters were recorded
+        T.StructField("params", T.StringType(), True),
     ]
 )
 

@@ -42,7 +42,7 @@ def start_rollup_stream(
     available_now: bool = True,
     **rollup_kwargs,
 ):
-    """Micro-batch rollup: each batch runs the full tier cascade with
+    """Micro-batch rollup: each batch runs every rollup tier with
     epoch = batch_id (lineage-deduped, kill-safe — see module docstring)."""
     from jobs.rollup import run_rollup
 

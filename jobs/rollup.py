@@ -1,5 +1,6 @@
-"""The build path (SURVEY.md §3.1): raw tokens -> detect -> 1m -> 1h -> 1d,
-with per-partition lineage commits and kill-safe resume.
+"""The build path (SURVEY.md §3.1): raw tokens -> detect -> 1m, 1h and
+1d tiers in one fused pass and one Spark write, with per-partition lineage
+commits and kill-safe resume.
 
 Run (sandbox):
     python jobs/rollup.py --tokens /tmp/tokens --warehouse /tmp/wh --epoch 1
@@ -7,14 +8,17 @@ Run (cluster):
     spark-submit --py-files engine.zip jobs/rollup.py --tokens <iceberg-or-path> ...
 
 Resume: re-running the same command after a kill skips every partition with
-a lineage row for (tier, epoch) and recomputes only the rest — see the state
-machine in engine/lineage.py. `--stop-after-tier` exists purely to let the
+a lineage row for (tier, epoch) and recomputes only the rest, from the raw
+tokens — see the state machine in engine/lineage.py. A re-run under other
+build parameters (w, k, policy, compress) than the epoch's lineage records
+raises instead. `--stop-after-tier` exists purely to let the
 fault-injection test simulate a mid-job kill.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -24,9 +28,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from engine.fused import fused_rollup_1m
-from engine.io import ParquetManifestFormat, scan_tokens, synth_tokens
-from engine.lineage import lineage_record, pending_partitions
+from engine.fused import fused_rollup
+from engine.io import TIER_COL, ParquetManifestFormat, scan_tokens, synth_tokens
+from engine.lineage import lineage_record, pending_partitions, recorded_params
 from engine.rollup import cascade
 from engine.schema import (
     DEFAULT_K,
@@ -54,25 +58,37 @@ def run_rollup(
     compress: bool = True,
     merge_docs: bool = False,
 ) -> dict:
-    """Run (or resume) the full cascade for one checkpoint epoch.
+    """Run (or resume) the rollup tiers of one checkpoint epoch.
 
-    The 1m tier is one narrow mapInArrow pass over the raw doc rows —
-    gap-fill, stats, detect, bucket aggregates and compression in a single
-    Arrow kernel, exact for every int32 input; NO shuffle or sort of raw
-    points (engine/fused.py). The only exchange is the part_hash rebalance
-    of the ~60x smaller rollup output for the write. The pass runs in at
+    Every tier comes from one narrow mapInArrow pass over the raw doc rows
+    — gap-fill, stats, detect, the 1m, 1h and 1d bucket aggregates and the
+    1m compression in a single Arrow kernel, exact for every int32 input;
+    NO shuffle or sort of raw points (engine/fused.py). The only exchange
+    is the (tier, part_hash) rebalance of the ~60x smaller rollup output
+    for the ONE write that lands every tier (engine/io.py
+    overwrite_partitions); the tiers then commit one by one in tier order,
+    each a manifest swap followed by its lineage rows. The pass runs in at
     most one Python task per _FUSED_TASK_BYTES of parquet input (see
-    _build_1m). Its Arrow batches are counted in DOC rows (a row is a whole
-    series), sized from _ARROW_BATCH_BYTES and max(n_tok) in the parquet
-    footers — no data scan.
+    _build_tiers). Its Arrow batches are counted in DOC rows (a row is a
+    whole series), sized from _ARROW_BATCH_BYTES and max(n_tok) in the
+    parquet footers — no data scan.
+
+    Resume computes each tier's pending partitions, runs the kernel over
+    the tokens of their union, and writes each tier's pending partitions
+    only; outside merge mode nothing reads a tier back. ``stop_after_tier``
+    stops after that tier's lineage commit. Lineage records the build
+    parameters, and a requested tier whose lineage for *epoch* records
+    other ones raises ValueError before anything is written.
 
     ``merge_docs=True`` gives ACCUMULATE semantics for incremental ingest
     (streaming micro-batches): rows already in a touched partition are
     carried over (copy-on-write merge, the Iceberg MERGE shape) instead of
     being evicted by the partition overwrite, except rows for doc_ids
     re-ingested by this batch — which makes a dirty-crash replay idempotent.
-    Assumes doc-level ingest granularity (a doc arrives whole in one batch).
-    Default False = REPLACE semantics (recompute of a static input).
+    The coarse tiers carry the cascade (engine/rollup.py) of the current 1m
+    view minus the batch's docs, in the same write. Assumes doc-level
+    ingest granularity (a doc arrives whole in one batch). Default False =
+    REPLACE semantics (recompute of a static input).
 
     Returns per-tier metrics {tier: {partitions, out_rows, seconds, ...}}
     (L3); the 1m tier's ``py_tasks`` is the planned Python task count of
@@ -114,7 +130,7 @@ def run_rollup(
                 spark.conf.unset(c)
             else:
                 spark.conf.set(c, v)
-    return metrics
+    return {t: metrics[t] for t in TIER_ORDER if t in metrics}
 
 
 # Series bytes (float64) per Arrow batch of the fused kernel: cache
@@ -222,10 +238,11 @@ def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
 _FUSED_TASK_BYTES = 4 << 20
 
 
-def _build_1m(spark, toks, w, k, policy, compress, batch_rows, input_bytes):
-    """The 1m tier's fused frame (docstring of run_rollup) and the planned
-    Python task count of its stage (None when it is not known without
-    running a job). Batch sizing is in DOC rows here."""
+def _build_tiers(spark, toks, tiers, w, k, policy, compress, batch_rows,
+                 input_bytes):
+    """The fused frame of *tiers*' rows (docstring of run_rollup) and the
+    planned Python task count of its stage (None when it is not known
+    without running a job). Batch sizing is in DOC rows here."""
     spark.conf.set(
         "spark.sql.execution.arrow.maxRecordsPerBatch", str(int(batch_rows))
     )
@@ -244,11 +261,11 @@ def _build_1m(spark, toks, w, k, policy, compress, batch_rows, input_bytes):
     # exactly as before.
     splits = _planned_partitions(toks) if input_bytes is not None else None
     if splits is None:
-        return fused_rollup_1m(toks, w, k, policy, compress), None
+        return fused_rollup(toks, tiers, w, k, policy, compress), None
     max_tasks = max(1, -(-input_bytes // _FUSED_TASK_BYTES))
     if max_tasks < splits:
         toks = toks.coalesce(max_tasks)
-    return (fused_rollup_1m(toks, w, k, policy, compress),
+    return (fused_rollup(toks, tiers, w, k, policy, compress),
             min(max_tasks, splits))
 
 
@@ -347,12 +364,57 @@ def _written_stats_driver(data_dir: str) -> list[dict] | None:
         return list(ex.map(_one, files_by_part.items()))
 
 
-def _pending_only(stats: list[dict], pending_set: list[int]) -> list[dict]:
-    """Merge mode can write carried rows for touched-but-already-committed
-    partitions into the new snap dir; lineage rows are appended only for
-    PENDING partitions, exactly like the r6 ``isin(pending_set)`` re-read."""
-    pend = set(pending_set)
-    return [s for s in stats if s["part_hash"] in pend]
+def _params(w, k, policy, compress) -> str:
+    """The build parameters as lineage records them."""
+    return json.dumps({"w": int(w), "k": float(k), "policy": policy,
+                       "compress": bool(compress)}, sort_keys=True)
+
+
+def _check_params(warehouse, epoch, tiers, params) -> None:
+    """Refuse to build *tiers* of *epoch* under *params* when their lineage
+    records other parameters: a skip would serve the old build as if it
+    were this one, and a resume would mix the two in one epoch."""
+    recorded = recorded_params(warehouse, epoch)
+    for tier in tiers:
+        other = sorted(recorded.get(tier, set()) - {params})
+        if other:
+            raise ValueError(
+                f"tier {tier} epoch {epoch} was built with {', '.join(other)}; "
+                f"this run asks for {params}. Use a new epoch or warehouse."
+            )
+
+
+def _carried(fmt, tokens_df, pending, n_buckets):
+    """Merge mode: the current rows of docs NOT in this batch that the
+    write must keep, tagged by tier. 1m keeps its touched partitions
+    minus the batch's docs (the copy-on-write merge); a coarse tier gets
+    the cascade of the current 1m view minus the batch's docs over its
+    pending partitions, so it is rewritten whole into one dir."""
+    batch_docs = tokens_df.select("doc_id").distinct()
+    rest_1m = fmt.read("rollup_1m").join(batch_docs, "doc_id", "left_anti")
+    out = []
+    for tier in pending:
+        if tier == "1m":
+            # touched set from the (cheap, column-pruned) token batch —
+            # never by executing the kernel twice
+            touched = [
+                int(r["part_hash"])
+                for r in with_part_hash(tokens_df, n_buckets)
+                .select("part_hash").distinct().collect()
+            ]
+            rows = rest_1m.where(F.col("part_hash").isin(touched))
+        else:
+            fine = rest_1m
+            if len(pending[tier]) < n_buckets:
+                fine = fine.where(F.col("part_hash").isin(pending[tier]))
+            rows = with_part_hash(
+                cascade(fine.drop("part_hash", "ts_dod", "v_gorilla"), "1m", tier)
+                .withColumn("ts_dod", F.lit(None).cast("binary"))
+                .withColumn("v_gorilla", F.lit(None).cast("binary")),
+                n_buckets,
+            )
+        out.append(rows.withColumn(TIER_COL, F.lit(tier)))
+    return out
 
 
 def _run_tiers(
@@ -360,107 +422,94 @@ def _run_tiers(
     tiers, stop_after_tier, input_snapshot_id, compress, merge_docs,
     batch_rows, input_bytes, metrics,
 ) -> None:
-    for tier in tiers:
-        t_start = time.monotonic()
-        pending = pending_partitions(warehouse, tier, epoch, n_buckets)
-        if not pending:
-            metrics[tier] = {"partitions": 0, "out_rows": 0, "seconds": 0.0, "skipped": True}
+    t_start = time.monotonic()
+    unknown = sorted(set(tiers) - set(TIER_ORDER))
+    if unknown:
+        raise ValueError(f"unknown tiers {unknown}; one of {TIER_ORDER}")
+    params = _params(w, k, policy, compress)
+    _check_params(warehouse, epoch, tiers, params)
+    pending: dict[str, list[int]] = {}
+    for tier in TIER_ORDER:
+        if tier not in tiers:
             continue
-        pending_set = [int(p) for p in pending]
-        if tier == "1m":
-            # Resume filter applied BEFORE the heavy work: part_hash is a
-            # pure function of doc_id, so pruning the token table up front
-            # skips gap-fill/stats/compression for committed partitions entirely
-            # (on Iceberg with bucket(N, doc_id) this is partition pruning).
-            toks = with_part_hash(tokens_df, n_buckets)
-            if len(pending_set) < n_buckets:
-                toks = toks.where(F.col("part_hash").isin(pending_set))
-            tier_df, py_tasks = _build_1m(
-                spark, toks.drop("part_hash"), w, k, policy, compress,
-                batch_rows, input_bytes,
-            )
-            tier_df = with_part_hash(tier_df, n_buckets)
-            if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
-                # touched set from the (cheap, column-pruned) token batch
-                # — never by executing the heavy stats pipeline twice
-                touched = [
-                    int(r["part_hash"])
-                    for r in with_part_hash(tokens_df, n_buckets)
-                    .select("part_hash").distinct().collect()
-                ]
-                batch_docs = tokens_df.select("doc_id").distinct()
-                carried = (
-                    fmt.read("rollup_1m")
-                    .where(F.col("part_hash").isin(touched))
-                    .join(batch_docs, "doc_id", "left_anti")
-                )
-                tier_df = tier_df.unionByName(carried)
-            used_pipeline = "fused"
-            snapshot_for_lineage = input_snapshot_id
+        p = pending_partitions(warehouse, tier, epoch, n_buckets)
+        if p:
+            pending[tier] = [int(x) for x in p]
         else:
-            finer = TIER_ORDER[TIER_ORDER.index(tier) - 1]
-            fine_snapshot = fmt.current_snapshot(f"rollup_{finer}")
-            # part_hash partition pruning on the fine-tier scan (only when
-            # some partitions are already committed: the IN list of every
-            # bucket prunes nothing and costs a literal per bucket)
-            fine_df = fmt.read(f"rollup_{finer}")
-            if len(pending_set) < n_buckets:
-                fine_df = fine_df.where(F.col("part_hash").isin(pending_set))
-            coarse = cascade(
-                fine_df.drop("part_hash", "ts_dod", "v_gorilla"), finer, tier
-            ).withColumn("ts_dod", F.lit(None).cast("binary")).withColumn(
-                "v_gorilla", F.lit(None).cast("binary")
-            )
-            tier_df = with_part_hash(coarse, n_buckets)
-            used_pipeline = "cascade"
-            snapshot_for_lineage = fine_snapshot
+            metrics[tier] = {"partitions": 0, "out_rows": 0, "seconds": 0.0, "skipped": True}
+    if not pending:
+        return
+    # Resume filter applied BEFORE the heavy work: part_hash is a pure
+    # function of doc_id, so pruning the token table to the union of the
+    # pending sets skips every doc no pending partition holds (on Iceberg
+    # with bucket(N, doc_id) this is partition pruning).
+    union = sorted(set().union(*pending.values()))
+    toks = with_part_hash(tokens_df, n_buckets)
+    if len(union) < n_buckets:
+        toks = toks.where(F.col("part_hash").isin(union))
+    df, py_tasks = _build_tiers(
+        spark, toks.drop("part_hash"), list(pending), w, k, policy, compress,
+        batch_rows, input_bytes,
+    )
+    df = with_part_hash(df, n_buckets)
+    if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
+        for rows in _carried(fmt, tokens_df, pending, n_buckets):
+            df = df.unionByName(rows)
+    # each tier writes only its own pending partitions
+    if any(len(p) < n_buckets for p in pending.values()):
+        keep = F.lit(False)
+        for tier, p in pending.items():
+            keep = keep | ((F.col(TIER_COL) == tier) & F.col("part_hash").isin(p))
+        df = df.where(keep)
 
-        # (A) data commit — atomic manifest swap inside; the returned
-        # snapshot id goes into lineage so epoch-E readers can time-travel
-        # to exactly this commit after later epochs overwrite the partitions
-        t_write = time.monotonic()
-        out_snapshot = fmt.overwrite_partitions(
-            tier_df, f"rollup_{tier}", rebalance=True
-        )
-        write_s = time.monotonic() - t_write
+    t_last = t_start
+    t_written = None
+
+    def commit(table: str, out_snapshot: int) -> bool:
+        """(A) has just committed *table*; (L3) + (B) for its tier."""
+        nonlocal t_last, t_written
+        tier = table[len("rollup_"):]
+        # the shared write's seconds, counted once: under the first tier
+        write_s = 0.0
+        if t_written is None:
+            t_written = time.monotonic()
+            write_s = t_written - t_write
         # (L3) per-partition counts from a pruned direct read of the snap
-        # dir this commit wrote (see _written_stats — round 7).
+        # dir this commit wrote (see _written_stats — round 7). Partitions
+        # attempted but empty (no doc hashes into them at this input size)
+        # are COMPLETE, not pending — record them with 0 rows or resume
+        # would recompute them forever.
         t_stats = time.monotonic()
-        stats = _pending_only(
-            _written_stats(spark, fmt, f"rollup_{tier}", out_snapshot),
-            pending_set,
-        )
-        # Partitions attempted but empty (no doc hashes into them at this
-        # input size) are COMPLETE, not pending — record them with 0 rows or
-        # resume would recompute them forever.
+        pend = set(pending[tier])
+        stats = [s for s in _written_stats(spark, fmt, table, out_snapshot)
+                 if s["part_hash"] in pend]
         seen = {s["part_hash"] for s in stats}
-        stats += [
-            {"part_hash": p, "out_rows": 0, "in_rows": 0}
-            for p in pending_set
-            if p not in seen
-        ]
+        stats += [{"part_hash": p, "out_rows": 0, "in_rows": 0}
+                  for p in pending[tier] if p not in seen]
         stats_s = time.monotonic() - t_stats
         # (B) lineage commit — readers now see these partitions
         t_commit = time.monotonic()
         lineage_record(
-            warehouse, tier, stats, snapshot_for_lineage, epoch,
-            output_snapshot_id=out_snapshot, pipeline=used_pipeline,
+            warehouse, tier, stats, input_snapshot_id, epoch,
+            output_snapshot_id=out_snapshot, pipeline="fused", params=params,
         )
-        commit_s = time.monotonic() - t_commit
-
-        total_s = time.monotonic() - t_start
+        now = time.monotonic()
+        commit_s = now - t_commit
+        total_s = now - t_last
+        t_last = now
         metrics[tier] = {
             "partitions": len(stats),
             "out_rows": int(sum(s["out_rows"] for s in stats)),
             "seconds": round(total_s, 3),
             "skipped": False,
-            "pipeline": used_pipeline,
+            "pipeline": "fused",
             # Amdahl accounting for the scaling bench: 'write_s' is the
             # parallel compute+write action (the only phase whose wall
-            # should shrink with cores/executors); 'fixed_s' is everything
-            # latency-bound — pending-partition read, the tiny per-tier
-            # stats re-read job, and the serial lineage/manifest commits —
-            # a per-tier cost that is constant in input size and cores.
+            # should shrink with cores/executors), shared by every tier
+            # and counted under the first one; 'fixed_s' is everything
+            # latency-bound — pending-partition reads, the per-tier stats
+            # pass and the serial manifest/lineage commits — a per-tier
+            # cost that is constant in input size and cores.
             "write_s": round(write_s, 3),
             "fixed_s": round(total_s - write_s, 3),
             "stats_s": round(stats_s, 3),
@@ -468,8 +517,16 @@ def _run_tiers(
         }
         if tier == "1m":
             metrics[tier]["py_tasks"] = py_tasks
-        if stop_after_tier == tier:
-            break
+        return tier == stop_after_tier
+
+    # (A) one staged write of every pending tier, then per tier in order:
+    # manifest swap (inside), stats and lineage (commit above). The
+    # snapshot id goes into lineage so epoch-E readers can time-travel to
+    # exactly this commit after later epochs overwrite the partitions.
+    t_write = time.monotonic()
+    fmt.overwrite_partitions(
+        df, {t: f"rollup_{t}" for t in pending}, rebalance=True, on_commit=commit
+    )
 
 
 def main() -> None:

@@ -1,4 +1,4 @@
-"""The BASELINE.json:15 gate: the production 1m kernel (engine/fused.py)
+"""The BASELINE.json:15 gate: the production tier kernel (engine/fused.py)
 and the tier cascade (engine/rollup.py::cascade) vs the pandas oracle
 (engine/oracle.py), per row, for every gap policy: token-array equality for
 arrays, exact ints/bools, bit-exact doubles.
@@ -18,11 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine import oracle
-from engine.fused import _anom_flags, _flat_detect, fused_rollup_1m
+from engine.fused import _anom_flags, _flat_detect, fused_rollup, fused_rollup_1m
 from engine.parity import token_eq_check
 from engine.query import serve_raw_points
 from engine.rollup import cascade
-from engine.schema import DEFAULT_K, DEFAULT_WINDOW, GAP_POLICIES
+from engine.schema import DEFAULT_K, DEFAULT_WINDOW, GAP_POLICIES, TIER_ORDER
 from tests.conftest import AGG_COLS, oracle_rollup_rows, rollup_rows
 
 W, K = DEFAULT_WINDOW, DEFAULT_K
@@ -238,16 +238,19 @@ def test_fused_rejects_window_below_two(spark, tokens_df, tmp_path):
 
 
 def test_rollup_and_cascade_parity(spark, tokens_df, oras):
-    """Fused 1m rows and their cascaded 1h/1d rows equal the oracle's row
-    for row, vmean 0 ulp, on the full fixture (doc_negmax and doc_big
-    included), for every gap policy."""
+    """The kernel's own 1m, 1h and 1d rows, and the cascade of its 1m rows
+    into 1h/1d, each equal the oracle's row for row, vmean 0 ulp, on the
+    full fixture (doc_negmax and doc_big included), for every gap policy."""
     for policy in GAP_POLICIES:
         r1m = fused_rollup_1m(tokens_df, W, K, policy, compress=False)
         r1h = cascade(r1m, "1m", "1h")
-        tiers = {"1m": r1m, "1h": r1h, "1d": cascade(r1h, "1h", "1d")}
-        for tier, sdf in tiers.items():
+        cascaded = {"1m": r1m, "1h": r1h, "1d": cascade(r1h, "1h", "1d")}
+        fused = fused_rollup(tokens_df, TIER_ORDER, W, K, policy, compress=False)
+        for tier, sdf in cascaded.items():
             want = oracle_rollup_rows(oras[policy][f"rollup_{tier}"])
             assert rollup_rows(sdf) == want, f"{policy}:{tier}"
+            own = fused.where(F.col("tier") == tier)
+            assert rollup_rows(own) == want, f"{policy}:{tier} (kernel)"
 
 
 def test_cascade_equals_direct_rollup(spark, tokens_df, oras):

@@ -129,12 +129,14 @@ def test_tier_reads_run_no_inference_job(spark, tokens_path, tmp_path):
     assert {r["doc_id"] for r in df.collect()} == set(docs)
 
 
-def _fused_1m(spark, path):
-    """The fused 1m frame run_rollup builds over the parquet input at
-    *path*: (plan, planned Python tasks, the frame's partitions, the scan's
-    splits). The session confs _build_1m sets are restored."""
+def _fused_stage(spark, path):
+    """The fused frame of every tier run_rollup builds over the parquet
+    input at *path*: (plan, planned Python tasks, the frame's partitions,
+    the scan's splits). The session confs _build_tiers sets are
+    restored."""
     from engine.io import scan_tokens
-    from jobs.rollup import _build_1m, _footer_pass, _planned_partitions
+    from engine.schema import TIER_ORDER
+    from jobs.rollup import _build_tiers, _footer_pass, _planned_partitions
 
     keys = [
         "spark.sql.files.maxPartitionBytes",
@@ -143,8 +145,8 @@ def _fused_1m(spark, path):
     saved = {k: spark.conf.get(k, None) for k in keys}
     toks = scan_tokens(spark, path)
     try:
-        df, py_tasks = _build_1m(spark, toks, 30, 3.0, "ffill", True, 32,
-                                 _footer_pass(toks)[1])
+        df, py_tasks = _build_tiers(spark, toks, TIER_ORDER, 30, 3.0, "ffill",
+                                    True, 32, _footer_pass(toks)[1])
         return _plan(df), py_tasks, _planned_partitions(df), _planned_partitions(toks)
     finally:
         for k, v in saved.items():
@@ -152,6 +154,40 @@ def _fused_1m(spark, path):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_rollup_epoch_is_one_write(spark, tokens_path, tmp_path, monkeypatch):
+    """A fresh three-tier run_rollup lands every tier in ONE write: the
+    frame it writes has one MapInArrow and no aggregate over rollup rows
+    (the kernel emits the 1h/1d rows itself), and the whole epoch runs at
+    most 3 Spark jobs (the write's stages). It ran 9 when each coarse tier
+    was a cascade pass of its own."""
+    from engine.io import ParquetManifestFormat, scan_tokens
+    from jobs.rollup import run_rollup
+
+    plans = []
+    orig = ParquetManifestFormat.overwrite_partitions
+
+    def spy(self, df, *a, **kw):
+        plans.append(_plan(df))
+        return orig(self, df, *a, **kw)
+
+    monkeypatch.setattr(ParquetManifestFormat, "overwrite_partitions", spy)
+    toks = scan_tokens(spark, tokens_path)
+    sc = spark.sparkContext
+    group = "rollup-epoch"
+    sc.setJobGroup(group, "one rollup epoch")
+    try:
+        m = run_rollup(spark, toks, str(tmp_path / "wh"), epoch=1)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [t for t, x in m.items() if not x["skipped"]] == ["1m", "1h", "1d"]
+    assert len(plans) == 1, len(plans)
+    assert plans[0].count("MapInArrow") == 1, plans[0]
+    assert "Aggregate" not in plans[0], plans[0]
+    assert len(jobs) <= 3, jobs
 
 
 def test_fused_stage_one_task_per_4mb(spark, tmp_path):
@@ -162,7 +198,7 @@ def test_fused_stage_one_task_per_4mb(spark, tmp_path):
 
     p = str(tmp_path / "tokens")
     synth_tokens(spark, 32, n_tok=8192).repartition(8).write.parquet(p)
-    plan, py_tasks, parts, splits = _fused_1m(spark, p)
+    plan, py_tasks, parts, splits = _fused_stage(spark, p)
     assert splits > 1, splits
     assert py_tasks == parts == 1, (py_tasks, parts)
     assert "Coalesce 1" in plan and plan.count("MapInArrow") == 1, plan
@@ -194,7 +230,7 @@ def test_fused_stage_keeps_splits_above_4mb_each(spark, tmp_path):
         })
         pq.write_table(t, str(p / f"part-{i}.parquet"), compression="none")
     input_bytes = sum(f.stat().st_size for f in p.iterdir())
-    plan, py_tasks, parts, splits = _fused_1m(spark, str(p))
+    plan, py_tasks, parts, splits = _fused_stage(spark, str(p))
     assert input_bytes > splits * _FUSED_TASK_BYTES, (input_bytes, splits)
     assert "Coalesce" not in plan, plan
     assert py_tasks == parts == splits, (py_tasks, parts, splits)

@@ -534,3 +534,151 @@ def test_doc_scoped_downsample_equals_filtered_rows(spark, tokens_df, tmp_path):
         )
         assert pruned and sorted(map(tuple, pruned)) == sorted(map(tuple, full)), res
         assert {r["doc_id"] for r in pruned} <= set(docs)
+
+
+def _tiers_and_lineage(spark, wh):
+    """Every tier's current rows (payloads and bucket_ts included) and the
+    epoch's lineage (tier, part_hash, in_rows, out_rows, pipeline)."""
+    from tests.conftest import AGG_COLS, rollup_rows
+
+    fmt = ParquetManifestFormat(spark, wh)
+    rows = {t: rollup_rows(fmt.read(f"rollup_{t}"), AGG_COLS + ["ts_dod", "v_gorilla"])
+            for t in ("1m", "1h", "1d")}
+    lin = sorted(
+        (r["tier"], r["part_hash"], r["in_rows"], r["out_rows"], r["pipeline"])
+        for r in read_lineage(spark, wh).where("checkpoint_epoch = 1").collect()
+    )
+    return rows, lin
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, small_tokens, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("clean") / "wh")
+    run_rollup(spark, small_tokens, wh, epoch=1)
+    return _tiers_and_lineage(spark, wh)
+
+
+class _Kill(Exception):
+    pass
+
+
+def test_kill_after_shared_write_before_any_commit(spark, small_tokens, clean_run,
+                                                   tmp_path, monkeypatch):
+    """A kill after the one write, before the first manifest swap, leaves
+    only a staging dir that nothing reads: no tier, no lineage. The
+    re-run equals a clean run."""
+    import os
+    import shutil
+
+    wh = str(tmp_path / "wh")
+
+    def killed(*a, **kw):
+        raise _Kill
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetManifestFormat, "_commit_dir", killed)
+        m.setattr(shutil, "rmtree", lambda *a, **kw: None)  # killed: no clean-up
+        with pytest.raises(_Kill):
+            run_rollup(spark, small_tokens, wh, epoch=1)
+    staged = os.listdir(os.path.join(wh, "_staging"))
+    assert len(staged) == 1
+    assert {"tier=1m", "tier=1h", "tier=1d"} <= set(
+        os.listdir(os.path.join(wh, "_staging", staged[0])))
+    fmt = ParquetManifestFormat(spark, wh)
+    assert [fmt.current_snapshot(f"rollup_{t}") for t in ("1m", "1h", "1d")] == [0, 0, 0]
+    assert committed_partitions(wh, "1m", 1) == set()
+
+    m2 = run_rollup(spark, small_tokens, wh, epoch=1)
+    assert [x["skipped"] for x in m2.values()] == [False] * 3
+    assert _tiers_and_lineage(spark, wh) == clean_run
+
+
+def test_kill_between_coarse_swap_and_lineage(spark, small_tokens, clean_run,
+                                              tmp_path, monkeypatch):
+    """A kill after the 1h manifest swap, before its lineage rows: 1h is
+    DIRTY (data, no lineage) and 1d was never committed. The resume
+    skips 1m, rebuilds 1h and 1d from the raw tokens, and equals a clean
+    run."""
+    import jobs.rollup as rollup_mod
+
+    wh = str(tmp_path / "wh")
+    orig = rollup_mod.lineage_record
+
+    def killed_at_1h(warehouse, tier, *a, **kw):
+        if tier == "1h":
+            raise _Kill
+        return orig(warehouse, tier, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(rollup_mod, "lineage_record", killed_at_1h)
+        with pytest.raises(_Kill):
+            run_rollup(spark, small_tokens, wh, epoch=1)
+    fmt = ParquetManifestFormat(spark, wh)
+    assert [fmt.current_snapshot(f"rollup_{t}") for t in ("1m", "1h", "1d")] == [1, 1, 0]
+    assert committed_partitions(wh, "1m", 1) == set(range(DEFAULT_N_BUCKETS))
+    assert committed_partitions(wh, "1h", 1) == set()
+
+    m2 = run_rollup(spark, small_tokens, wh, epoch=1)
+    assert m2["1m"]["skipped"] and not m2["1h"]["skipped"] and not m2["1d"]["skipped"]
+    assert fmt.current_snapshot("rollup_1h") == 2
+    assert _tiers_and_lineage(spark, wh) == clean_run
+
+
+def test_unreferenced_next_snap_dir_is_replaced(spark, small_tokens, clean_run, tmp_path):
+    """A kill between a commit's rename and its manifest swap leaves a
+    snap-<current+1> dir no snapshot references. The next commit of that
+    table removes it instead of failing on the existing path."""
+    import os
+
+    wh = str(tmp_path / "wh")
+    junk = os.path.join(wh, "rollup_1m", "snap-1", "part_hash=0")
+    os.makedirs(junk)
+    with open(os.path.join(junk, "part-junk.parquet"), "wb") as f:
+        f.write(b"not parquet")
+
+    run_rollup(spark, small_tokens, wh, epoch=1)
+    assert not os.path.exists(os.path.join(junk, "part-junk.parquet"))
+    assert _tiers_and_lineage(spark, wh) == clean_run
+
+
+def test_rerun_with_other_params_raises(spark, tmp_path):
+    """Lineage records the build parameters. Re-running an epoch under
+    other ones raises, naming both, before anything is written; the same
+    parameters skip as before."""
+    import json
+
+    toks = synth_tokens(spark, 4, seed=3, n_tok=256)
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, toks, wh, epoch=1, tiers=["1m"])
+    fmt = ParquetManifestFormat(spark, wh)
+    old = json.dumps({"compress": True, "k": 3.0, "policy": "ffill", "w": 30}, sort_keys=True)
+    new = json.dumps({"compress": True, "k": 3.0, "policy": "zero", "w": 5}, sort_keys=True)
+    with pytest.raises(ValueError) as e:
+        run_rollup(spark, toks, wh, epoch=1, w=5, policy="zero")
+    assert old in str(e.value) and new in str(e.value)
+    assert fmt.current_snapshot("rollup_1m") == 1
+    assert fmt.current_snapshot("rollup_1h") == 0
+    assert run_rollup(spark, toks, wh, epoch=1, tiers=["1m"])["1m"]["skipped"]
+
+
+def test_lineage_without_params_is_unchecked(tmp_path):
+    """Lineage files written before parameters were recorded read null
+    params, which recorded_params leaves out."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.lineage import lineage_record, recorded_params
+
+    wh = str(tmp_path / "wh")
+    row = [{"part_hash": 1, "in_rows": 1, "out_rows": 1}]
+    lineage_record(wh, "1m", row, 0, 1, params='{"w": 30}')
+    lineage_record(wh, "1h", row, 0, 1)
+    legacy = pa.table({
+        "tier": ["1d"], "part_hash": pa.array([1], pa.int64()),
+        "checkpoint_epoch": pa.array([1], pa.int64()),
+    })
+    pq.write_table(legacy, os.path.join(wh, "lineage", "commit-1d-1-legacy.parquet"))
+    assert recorded_params(wh, 1) == {"1m": {'{"w": 30}'}}
+    assert recorded_params(wh, 2) == {}
