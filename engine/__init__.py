@@ -6,7 +6,8 @@ SURVEY.md §0; BASELINE.json is the authoritative spec, cited as B:<line>).
 
 Layout (SURVEY.md §7):
     engine.schema       pinned constants + fixed StructTypes
-    engine.session      SparkSession builder with K3 AQE/shuffle confs
+    engine.session      SparkSession builder with K3 AQE/shuffle confs; local
+                        masters write through engine/jvm's fork-free FileSystem
     engine.io           S1 scan, S2/S3 tier write/read (TableFormat shim), S4 synth
     engine.fused        every tier: G1 gap-fill, R1-R4 stats/detect, the 1m/1h/1d
                         A1 rollups and C1/C2 payloads in one mapInArrow pass

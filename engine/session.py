@@ -13,12 +13,35 @@ Scale notes (designed for a 1000-executor cluster, tested on local[N]):
     as Arrow batches, never pickled rows (BASELINE.json:15 "no per-row
     Python").
   - Session timezone pinned UTC so bucket_ts is deterministic everywhere.
+
+Local file writes spawn no process. Hadoop's local FileSystem sets the mode
+of every file, ``.crc`` side file and directory it creates; without
+libhadoop (pip's pyspark ships none) each of those is a forked ``chmod``, at
+several ms of CPU apiece: 239 of them in one 32-doc x 8192-token rollup
+epoch. So for ``local`` masters :func:`get_spark` compiles
+``engine/jvm/NoForkLocalFileSystem.java`` once with the JDK's ``javac``
+(against Spark's ``hadoop-client-api`` jar, into a cache dir keyed by the
+source's hash) and makes it the ``file://`` FileSystem through
+``spark.driver.extraClassPath`` and ``spark.hadoop.fs.file.impl``: the same
+modes, set through ``java.nio``; checksums and ``.crc`` files unchanged.
+Only local masters get it, because only their executors run in the driver's
+JVM; a cluster's executors write through their own FileSystems. Where there
+is no ``javac`` (or no source, as in a ``--py-files`` zip), Hadoop's own class
+stays.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -35,6 +58,63 @@ _MALLOC_ENV = {
     "MALLOC_TRIM_THRESHOLD_": str(2 * 1024**3),
     "MALLOC_TOP_PAD_": str(256 * 1024**2),
 }
+
+
+_NO_FORK_FS = "engine.jvm.NoForkLocalFileSystem"
+_NO_FORK_SRC = os.path.join(os.path.dirname(__file__), "jvm", "NoForkLocalFileSystem.java")
+
+
+def _javac() -> str | None:
+    """The ``javac`` of the JDK whose ``java`` Spark will launch, so the
+    class file's version always loads."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java:
+        return None
+    javac = os.path.join(os.path.dirname(os.path.realpath(java)), "javac")
+    return javac if os.access(javac, os.X_OK) else None
+
+
+def _no_fork_fs_classes() -> str | None:
+    """Classes dir holding the compiled NoForkLocalFileSystem, or None when
+    it cannot be built here. Compiled once per source hash into
+    ``$XDG_CACHE_HOME/ts-rollup-engine`` (``~/.cache`` by default), outside
+    the work tree; the finished dir appears by one atomic rename, so
+    concurrent sessions never load a half-written class."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = _javac()
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if javac is None or not jars or not os.path.exists(_NO_FORK_SRC):
+        return None
+    with open(_NO_FORK_SRC, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(jars[0]).encode()).hexdigest()
+    root = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "ts-rollup-engine",
+    )
+    out = os.path.join(root, f"jvm-{key[:16]}")
+    if os.path.isdir(out):
+        return out
+    try:
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".jvm-", dir=root)
+    except OSError:
+        return None
+    try:
+        subprocess.run(
+            [javac, "-nowarn", "-d", tmp, "-cp", jars[0], _NO_FORK_SRC],
+            check=True, capture_output=True, timeout=300,
+        )
+        os.rename(tmp, out)
+    except subprocess.CalledProcessError as e:
+        warnings.warn("NoForkLocalFileSystem did not compile; Hadoop's local "
+                      "FileSystem stays:\n" + e.stderr.decode(errors="replace")[-2000:])
+    except (OSError, subprocess.TimeoutExpired):
+        pass  # another session renamed its copy first, or javac hung
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
 
 
 def get_spark(
@@ -111,7 +191,21 @@ def get_spark(
     # allocator profile explicitly
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # local masters only (their executors share the driver's JVM), and only
+    # when this call launches that JVM: a running one (spark-submit's, or an
+    # earlier session's) keeps its classpath, and would not find the class
+    launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    local = re.fullmatch(r"local(\[.*\])?", master)
+    classes = _no_fork_fs_classes() if local and launches_jvm else None
+    if classes is not None:
+        builder = builder.config("spark.hadoop.fs.file.impl", _NO_FORK_FS)
+        user_cp = extra_conf.pop("spark.driver.extraClassPath", None)
+        builder = builder.config(
+            "spark.driver.extraClassPath",
+            os.pathsep.join(p for p in (classes, user_cp) if p),
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

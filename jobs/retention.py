@@ -22,26 +22,37 @@ Time travel is unaffected by design: drops are metadata-only commits and
 rewrites create new snapshots, so ``fmt.read_at(pre_expiry_snapshot)``
 still serves the expired rows until snapshots are vacuumed (Iceberg
 expire-snapshots model). Pinned by tests/test_retention.py.
+
+Snapshot expiry also removes staging dirs (``<warehouse>/_staging/<uuid>``)
+older than ``STAGING_MAX_AGE_S``: a write removes its own when it ends, so
+an old one was left by a process killed mid-write.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import re
+import shutil
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from engine.io import ParquetManifestFormat
+from engine.io import STAGING_DIR, ParquetManifestFormat
 from engine.lineage import lineage_record, read_lineage
 from engine.retention import apply_retention
 from engine.schema import TIER_ORDER
 from engine.session import get_spark
 
 _DUR = {"s": 1, "m": 60, "h": 3600, "d": 86400}
+
+# A staging dir untouched this long belongs to no running write (Iceberg
+# remove_orphan_files' older_than guard, which keeps in-flight files safe).
+STAGING_MAX_AGE_S = 86400
 
 
 def parse_duration(text: str) -> int:
@@ -101,6 +112,8 @@ def run_snapshot_expiry(
     newest ``keep_last`` snapshots and delete data dirs no surviving
     snapshot references. By default lineage epochs expire WITH their
     snapshots — only the keep-last window survives (Iceberg contract).
+    Then staging dirs older than ``STAGING_MAX_AGE_S`` (the leftovers of
+    killed writes) are deleted, listed under ``metrics["_staging"]``.
 
     ``pin_epochs``: checkpoint epochs whose rollup commits must stay
     time-travelable past the keep-last window (e.g. an epoch a downstream
@@ -165,7 +178,24 @@ def run_snapshot_expiry(
                 metrics[tier]["pinned_snapshots"] = sorted(pins[tier])
         except (ValueError, FileNotFoundError) as e:
             metrics[tier] = {"skipped": True, "reason": str(e)[:80]}
+    metrics[STAGING_DIR] = {"removed_dirs": _remove_stale_staging(warehouse)}
     return metrics
+
+
+def _remove_stale_staging(warehouse: str) -> list[str]:
+    """Delete ``_staging/<uuid>`` dirs whose mtime is older than
+    ``STAGING_MAX_AGE_S``; returns their paths."""
+    root = os.path.join(warehouse, STAGING_DIR)
+    if not os.path.isdir(root):
+        return []
+    cutoff = time.time() - STAGING_MAX_AGE_S
+    removed = []
+    for name in sorted(os.listdir(root)):
+        path = os.path.join(root, name)
+        if os.path.getmtime(path) < cutoff:
+            shutil.rmtree(path)
+            removed.append(path)
+    return removed
 
 
 def main() -> None:
@@ -212,8 +242,10 @@ def main() -> None:
             spark, args.warehouse, list(TIER_ORDER), args.expire_snapshots,
             pin_epochs=set(args.pin_epoch) if args.pin_epoch else None,
         )
+        staging = sm.pop(STAGING_DIR)
         for tier, m in sm.items():
             print(f"expire-snapshots tier={tier} {m}")
+        print(f"expire-snapshots staging {staging}")
 
 
 if __name__ == "__main__":

@@ -184,3 +184,134 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     assert sorted(tuple(r) for r in got.drop("part_hash").collect()) == [
         ("a", 1, 2.0), ("b", 2, 4.0)
     ]
+
+
+# -- the session's local FileSystem (engine/jvm/NoForkLocalFileSystem.java) --
+
+_NO_FORK = "engine.jvm.NoForkLocalFileSystem"
+
+
+def _require_no_fork_fs():
+    from engine.session import _javac
+
+    if _javac() is None:
+        pytest.skip("no javac: the session keeps Hadoop's local FileSystem")
+
+
+def _local_fs(spark):
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
+
+
+def _jpath(spark, p):
+    return spark._jvm.org.apache.hadoop.fs.Path("file://" + str(p))
+
+
+def _modes(root):
+    """{relative path: permission bits} of everything under *root*."""
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for n in dirs + files:
+            p = os.path.join(d, n)
+            out[os.path.relpath(p, root)] = os.stat(p).st_mode & 0o7777
+    return out
+
+
+def test_local_fs_is_the_engines_and_keeps_modes_and_checksums(spark, tmp_path):
+    """A partitioned parquet write through the session's FileSystem gives
+    the stock FS's modes (files 0644, dirs 0755 under Hadoop's default
+    umask 022), still writes a .crc per file, and a flipped data byte
+    still fails the read with ChecksumException."""
+    _require_no_fork_fs()
+    fs = _local_fs(spark)
+    assert fs.getClass().getName() == _NO_FORK
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert conf.get("fs.permissions.umask-mode", "022") == "022"
+
+    out = tmp_path / "w"
+    spark.range(400).selectExpr("id", "id % 4 AS part_hash").write.partitionBy(
+        "part_hash").parquet(str(out))
+    modes = _modes(out)
+    files = {p: m for p, m in modes.items() if os.path.isfile(out / p)}
+    dirs = {p: m for p, m in modes.items() if os.path.isdir(out / p)}
+    data = [p for p in files if p.endswith(".parquet")]
+    assert sorted(dirs) == [f"part_hash={h}" for h in range(4)]
+    assert set(dirs.values()) == {0o755} and set(files.values()) == {0o644}
+    for p in data:
+        head, name = os.path.split(p)
+        assert os.path.join(head, f".{name}.crc") in files
+
+    # the stock FileSystem, same calls, same modes
+    stock = spark._jvm.org.apache.hadoop.fs.LocalFileSystem()
+    stock.initialize(spark._jvm.java.net.URI("file:///"), conf)
+    ref = tmp_path / "stock"
+    assert stock.mkdirs(_jpath(spark, ref / "d"))
+    stock.create(_jpath(spark, ref / "d" / "f")).close()
+    assert _modes(ref) == {"d": 0o755, "d/f": 0o644, "d/.f.crc": 0o644}
+
+    victim = out / data[0]
+    raw = bytearray(victim.read_bytes())
+    raw[len(raw) // 2] ^= 0xFF
+    victim.write_bytes(bytes(raw))
+    with pytest.raises(Exception, match="ChecksumException"):
+        spark.read.parquet(str(out)).collect()
+
+
+def test_set_permission_spawns_no_process(spark, tmp_path):
+    """100 setPermission calls through the session's FileSystem leave the
+    JVM's reaped-children CPU unchanged; the same calls on Hadoop's stock
+    raw FS (one chmod child each without libhadoop) raise it. A sticky
+    mode, which java.nio cannot express, still lands exactly."""
+    _require_no_fork_fs()
+    jvm = spark._jvm
+    pid = int(jvm.java.lang.ProcessHandle.current().pid())
+
+    def children_ticks():
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return int(fields[13]) + int(fields[14])  # cutime + cstime
+
+    target = tmp_path / "f"
+    target.write_bytes(b"x")
+    path = _jpath(spark, target)
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission
+    modes = [perm.createImmutable(m) for m in (0o600, 0o644)]
+
+    def chmod_100(fs):
+        before = children_ticks()
+        for i in range(100):
+            fs.setPermission(path, modes[i % 2])
+        assert os.stat(target).st_mode & 0o7777 == 0o644
+        return children_ticks() - before
+
+    assert chmod_100(_local_fs(spark)) == 0
+    stock = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+    stock.initialize(jvm.java.net.URI("file:///"),
+                     spark.sparkContext._jsc.hadoopConfiguration())
+    assert chmod_100(stock) > 0
+
+    sticky = tmp_path / "sticky"
+    sticky.mkdir()
+    _local_fs(spark).setPermission(_jpath(spark, sticky), perm.createImmutable(0o1777))
+    assert os.stat(sticky).st_mode & 0o7777 == 0o1777
+
+
+def test_no_fork_fs_compiles_once_and_needs_javac(tmp_path, monkeypatch):
+    """The class compiles into the cache dir keyed by the source hash, a
+    second call reuses it, and without javac there is no class (the
+    session keeps Hadoop's)."""
+    import engine.session as session
+
+    _require_no_fork_fs()
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    out = session._no_fork_fs_classes()
+    assert out is not None and out.startswith(str(tmp_path))
+    cls = os.path.join(out, "engine", "jvm", "NoForkLocalFileSystem.class")
+    mtime = os.stat(cls).st_mtime_ns
+    assert session._no_fork_fs_classes() == out
+    assert os.stat(cls).st_mtime_ns == mtime
+    assert os.listdir(os.path.dirname(out)) == [os.path.basename(out)]  # no temp dir left
+
+    monkeypatch.setattr(session, "_javac", lambda: None)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "other"))
+    assert session._no_fork_fs_classes() is None

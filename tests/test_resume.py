@@ -682,3 +682,37 @@ def test_lineage_without_params_is_unchecked(tmp_path):
     pq.write_table(legacy, os.path.join(wh, "lineage", "commit-1d-1-legacy.parquet"))
     assert recorded_params(wh, 1) == {"1m": {'{"w": 30}'}}
     assert recorded_params(wh, 2) == {}
+
+
+def test_snapshot_expiry_removes_stale_staging(spark, small_tokens, tmp_path,
+                                               monkeypatch):
+    """The staging dir a killed write leaves is removed by snapshot expiry
+    once it is older than STAGING_MAX_AGE_S; a fresh one (a write that may
+    still be running) is kept."""
+    import os
+    import shutil
+
+    from jobs.retention import STAGING_MAX_AGE_S, run_snapshot_expiry
+
+    wh = str(tmp_path / "wh")
+
+    def killed(*a, **kw):
+        raise _Kill
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetManifestFormat, "_commit_dir", killed)
+        m.setattr(shutil, "rmtree", lambda *a, **kw: None)  # killed: no clean-up
+        with pytest.raises(_Kill):
+            run_rollup(spark, small_tokens, wh, epoch=1)
+    root = os.path.join(wh, "_staging")
+    (leaked,) = [os.path.join(root, n) for n in os.listdir(root)]
+    old = os.path.getmtime(leaked) - STAGING_MAX_AGE_S - 60
+    os.utime(leaked, (old, old))
+    fresh = os.path.join(root, "fresh")
+    os.makedirs(os.path.join(fresh, "tier=1m"))
+
+    m = run_snapshot_expiry(spark, wh, ["1m", "1h", "1d"], keep_last=1)
+    assert m["_staging"] == {"removed_dirs": [leaked]}
+    assert os.listdir(root) == ["fresh"]
+    m = run_snapshot_expiry(spark, wh, ["1m", "1h", "1d"], keep_last=1)
+    assert m["_staging"] == {"removed_dirs": []}

@@ -2,6 +2,11 @@
 
     python tools/package.py          # writes dist/engine.zip
     spark-submit --py-files dist/engine.zip jobs/rollup.py --tokens ... --warehouse ...
+
+Only ``.py`` files go in: ``engine/jvm/NoForkLocalFileSystem.java`` is
+compiled and loaded only for ``local`` masters, whose driver runs from a
+checkout, and a cluster's executors write through their own FileSystems.
+Run from the zip, ``get_spark`` finds no source and keeps Hadoop's class.
 """
 
 from __future__ import annotations
