@@ -48,11 +48,11 @@ int32 extremes included):
   - same compression kernels (engine/compression.py — single
     implementation).
 
-Arrow batch sizing: one row here is a whole series (n_tok values), so the
-caller must size spark.sql.execution.arrow.maxRecordsPerBatch in ROWS OF
-DOCS, not the point-stream default. jobs/rollup.py derives the row count
-from a byte budget (2 MB of float64 series per batch: 32 rows at
-8192-token docs). The output does not depend on the batch size.
+Arrow batch sizing: one row here is a whole series (n_tok values), so a
+batch is sized in bytes, not rows: jobs/rollup.py sets
+spark.sql.execution.arrow.maxBytesPerBatch to 1 MiB of Arrow input (~2 MiB
+of float64 series: 32 rows of 8192-token docs, 3 of 86400-token docs).
+The output does not depend on the batch size.
 """
 
 from __future__ import annotations

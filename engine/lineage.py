@@ -251,3 +251,91 @@ def partition_stats_from_rollup(rollup_df: DataFrame) -> list[dict]:
         }
         for r in rows
     ]
+
+
+# Commits at or below this many rows have their L3 stats computed driver-
+# side with pyarrow (out_rows straight from footer num_rows, in_rows = sum
+# of the one ``cnt`` column) instead of a Spark job — the job itself costs
+# ~0.25 s of scheduling/listing regardless of data size, which dominates
+# when the commit is small (every coarse tier at bench scale). The row
+# count comes from parquet FOOTERS (a metadata read, the same thing Spark
+# planning does), so routing costs no data I/O; below the cutover the
+# driver materializes only the int64 cnt column (4 M rows = 32 MB, bounded
+# regardless of how wide the tier schema is). The cutover is data-sized,
+# not core-count-sized (the broadcast-threshold shape): a 100 TB tier
+# commit exceeds any sane threshold and takes the distributed job.
+_STATS_DRIVER_MAX_ROWS = 4_000_000
+
+
+def written_partition_stats(spark: SparkSession, fmt, table: str,
+                            out_snapshot: int) -> list[dict]:
+    """L3 stats of the ``snap-<out_snapshot>`` dir a commit of *table* just
+    wrote: partition_stats_from_rollup's rows, read from that dir alone
+    with an explicit 2-column schema rather than through ``fmt.read`` of
+    the whole view. That drops the manifest union/basePath planning,
+    parquet schema inference and the scan of partitions the commit did not
+    touch; the job reads only the ``cnt`` column of the new files.
+
+    When the whole commit is small (<= _STATS_DRIVER_MAX_ROWS rows, counted
+    from parquet footers) the same two numbers come from a driver-side
+    pyarrow pass over the snap dir's files instead — exactly the files the
+    distributed job would scan, so the two paths are interchangeable
+    (pinned by
+    tests/test_resume.py::test_written_stats_driver_matches_spark_job).
+    The driver pass is only a shortcut: if it raises (an unexpected
+    ``part_hash=`` dir name, an unreadable footer) the Spark job runs.
+
+    Every partition a commit writes lives under its new snap dir
+    (overwrite_partitions replaces whole partitions), so the read is
+    exactly the committed data of the partitions it wrote: a rollup
+    epoch's pending set, or every live partition of a compaction."""
+    data_dir = os.path.join(fmt.warehouse, table, f"snap-{out_snapshot}")
+    try:
+        stats = _written_stats_driver(data_dir)
+    except (OSError, ValueError, pa.ArrowException):
+        stats = None
+    if stats is not None:
+        return stats
+    df = (
+        spark.read.schema("cnt long, part_hash long")
+        .option("basePath", data_dir)
+        .parquet(data_dir)
+    )
+    return partition_stats_from_rollup(df)
+
+
+def _written_stats_driver(data_dir: str) -> list[dict] | None:
+    """written_partition_stats' driver-side pass; None above the row
+    cutover."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    files_by_part: dict[int, list[str]] = {}
+    for name in os.listdir(data_dir):
+        if not name.startswith("part_hash="):
+            continue
+        pdir = os.path.join(data_dir, name)
+        fs = [os.path.join(pdir, f) for f in os.listdir(pdir)
+              if f.endswith(".parquet")]
+        if fs:  # the Spark job sees no rows, so no stats row, for an empty dir
+            files_by_part[int(name.split("=", 1)[1])] = fs
+    all_paths = [p for fs in files_by_part.values() for p in fs]
+    # footer opens and (below the cutover) the one-column reads both release
+    # the GIL in pyarrow — a small thread pool turns 64 sequential ~1-2 ms
+    # opens into a few ms total
+    with ThreadPoolExecutor(min(16, max(1, len(all_paths)))) as ex:
+        handles = dict(zip(all_paths, ex.map(pq.ParquetFile, all_paths)))
+        total_rows = sum(h.metadata.num_rows for h in handles.values())
+        if total_rows > _STATS_DRIVER_MAX_ROWS:
+            return None
+
+        def _one(item: tuple[int, list[str]]) -> dict:
+            p, fs = item
+            out_rows = 0
+            in_rows = 0
+            for path in fs:
+                t = handles[path].read(columns=["cnt"])
+                out_rows += handles[path].metadata.num_rows
+                in_rows += int(pc.sum(t["cnt"]).as_py() or 0)
+            return {"part_hash": p, "out_rows": out_rows, "in_rows": in_rows}
+
+        return list(ex.map(_one, files_by_part.items()))

@@ -179,9 +179,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "1024"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Cap Arrow batch size so grouped-map compression kernels (C1-C3)
-        # never materialize unbounded pandas frames per call (SURVEY.md §4
-        # spill row): a (doc_id, bucket) group is <= 86400 points anyway.
+        # Rows per Arrow batch sent to a Python stage. The fused rollup
+        # stage, whose rows are whole series, also cuts its batches by
+        # bytes (jobs/rollup.py _ARROW_BATCH_BYTES), which binds first.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -21,3 +21,13 @@ def planned_partitions(df) -> int | None:
     if plan.nodeName() == "AdaptiveSparkPlan":
         return None
     return int(plan.execute().getNumPartitions())
+
+
+def planned_input_bytes(df) -> int | None:
+    """Input bytes of *df*'s optimized plan, without running a job: for a
+    file scan, the summed sizes of its files (Spark's own plan statistic).
+    None when *df* reads no files (cached, in-memory or generated input),
+    whose statistic is a guess rather than a size."""
+    if not df.inputFiles():
+        return None
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

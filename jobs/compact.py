@@ -46,7 +46,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from engine.io import ParquetManifestFormat
-from engine.lineage import lineage_record, partition_stats_from_rollup
+from engine.lineage import lineage_record, written_partition_stats
 from engine.schema import TIER_ORDER
 from engine.session import get_spark
 
@@ -84,8 +84,7 @@ def compact_tier(spark, fmt: ParquetManifestFormat, warehouse: str,
     snap = fmt.overwrite_partitions(
         fmt.read(table), table, sort_within=sort_within
     )
-    written = fmt.read_at(table, snap)
-    stats = partition_stats_from_rollup(written)
+    stats = written_partition_stats(spark, fmt, table, snap)
     lineage_record(
         warehouse, f"compact_{tier}", stats, input_snapshot_id=snap - 1,
         checkpoint_epoch=epoch, output_snapshot_id=snap, pipeline="compact",

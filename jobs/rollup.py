@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -30,7 +29,12 @@ from pyspark.sql import functions as F
 
 from engine.fused import fused_rollup
 from engine.io import TIER_COL, ParquetManifestFormat, scan_tokens, synth_tokens
-from engine.lineage import lineage_record, pending_partitions, recorded_params
+from engine.lineage import (
+    lineage_record,
+    pending_partitions,
+    recorded_params,
+    written_partition_stats,
+)
 from engine.rollup import cascade
 from engine.schema import (
     DEFAULT_K,
@@ -40,6 +44,7 @@ from engine.schema import (
 )
 from engine.session import get_spark
 from engine.skew import with_part_hash
+from engine.util import planned_input_bytes as _planned_input_bytes
 from engine.util import planned_partitions as _planned_partitions
 
 
@@ -68,10 +73,10 @@ def run_rollup(
     for the ONE write that lands every tier (engine/io.py
     overwrite_partitions); the tiers then commit one by one in tier order,
     each a manifest swap followed by its lineage rows. The pass runs in at
-    most one Python task per _FUSED_TASK_BYTES of parquet input (see
-    _build_tiers). Its Arrow batches are counted in DOC rows (a row is a
-    whole series), sized from _ARROW_BATCH_BYTES and max(n_tok) in the
-    parquet footers — no data scan.
+    most one Python task per _FUSED_TASK_BYTES of file input, and Spark
+    cuts its Arrow input batches at _ARROW_BATCH_BYTES (see _build_tiers):
+    both sizes come from what Spark already knows, with no job and no
+    footer read.
 
     Resume computes each tier's pending partitions, runs the kernel over
     the tokens of their union, and writes each tier's pending partitions
@@ -104,7 +109,7 @@ def run_rollup(
     _tuned = [
         "spark.sql.parquet.columnarReaderBatchSize",
         "spark.sql.files.maxPartitionBytes",
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.execution.arrow.maxBytesPerBatch",
     ]
     _saved = {c: spark.conf.get(c, None) for c in _tuned}
 
@@ -115,14 +120,11 @@ def run_rollup(
     # max — bounded regardless of parallelism.
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
 
-    max_n_tok, input_bytes = _footer_pass(tokens_df)
-    batch_rows = _cache_blocked_rows(spark, tokens_df, max_n_tok)
-
     try:
         _run_tiers(
             spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
             tiers, stop_after_tier, input_snapshot_id, compress, merge_docs,
-            batch_rows, input_bytes, metrics,
+            metrics,
         )
     finally:
         for c, v in _saved.items():
@@ -133,101 +135,19 @@ def run_rollup(
     return {t: metrics[t] for t in TIER_ORDER if t in metrics}
 
 
-# Series bytes (float64) per Arrow batch of the fused kernel: cache
-# blocking. The flat kernel makes ~15 vectorized passes over each batch, so
-# a batch that fits L2/L3 keeps those passes out of DRAM and the job's
-# memory traffic collapses to ~2 passes (scan + emit). On hosts where memory
-# bandwidth, not CPU, is the ceiling (any host, at enough cores), this is
-# what lets the narrow plan keep scaling with cores (BENCH/BASELINE.md).
-_ARROW_BATCH_BYTES = 2 << 20
+# Arrow input bytes per batch of the fused kernel: cache blocking. One
+# batch of int32 tokens becomes ~2x its bytes of float64 series, and the
+# flat kernel makes ~15 vectorized passes over it, so a batch that fits
+# L2/L3 keeps those passes out of DRAM and the job's memory traffic
+# collapses to ~2 passes (scan + emit). On hosts where memory bandwidth,
+# not CPU, is the ceiling (any host, at enough cores), this is what lets
+# the narrow plan keep scaling with cores (BENCH/BASELINE.md). Spark cuts
+# each batch after the row that reaches this size, so a batch follows its
+# own docs' lengths: 32 rows of 8192-token docs, 3 of 86400-token docs.
+_ARROW_BATCH_BYTES = 1 << 20
 
 
-def _cache_blocked_rows(spark, tokens_df, footer_max: int | None) -> int:
-    """Doc rows per Arrow batch so one batch's float64 series stay cache-
-    resident for the flat kernel's passes: _ARROW_BATCH_BYTES / (8 * max
-    n_tok).
-
-    max(n_tok) is *footer_max* when the footer pass found it (a pure
-    metadata pass, ~ms for 64 files), else it comes from a Spark aggregate
-    with parquet aggregate pushdown (still footer-only, but the job costs
-    ~0.2 s of scheduling). Falls back to the 4096 synth bulk length if the
-    column is missing or the aggregate errors. Batch sizing only — the
-    fused kernel's output is batch-size-invariant (tests/test_fused.py)."""
-    max_tok = 4096
-    if footer_max is not None:
-        max_tok = footer_max
-    elif "n_tok" in tokens_df.columns:
-        saved = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
-        try:
-            spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-            row = tokens_df.agg(F.max("n_tok")).collect()[0]
-            if row[0] is not None:
-                max_tok = int(row[0])
-        except Exception:
-            pass
-        finally:
-            spark.conf.set("spark.sql.parquet.aggregatePushdown", saved)
-    return int(min(8192, max(16, _ARROW_BATCH_BYTES // (8 * max(max_tok, 1)))))
-
-
-def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
-    """``(max n_tok, input bytes)`` of a parquet fileset, read on the driver
-    from file sizes and row-group statistics — no Spark job.
-
-    Both are None unless every input file is a local ``.parquet`` file (a
-    plain path or a ``file:`` URI): other filesystems are never opened from
-    the driver. max n_tok alone is None when the column is missing or a row
-    group lacks its min/max statistics (the caller then runs the pushdown
-    aggregate). The stats max is exact for int64 columns, and the
-    unfiltered file-level max is the same bound the caller's unfiltered
-    aggregate would compute."""
-    try:
-        files = tokens_df.inputFiles()
-    except Exception:
-        return None, None
-    paths = []
-    for f in files:
-        if f.startswith("file:"):
-            f = "/" + f[5:].lstrip("/")  # file:///p, file:/p -> /p
-        elif not f.startswith("/"):
-            return None, None  # hdfs://, s3a://, ...
-        if not f.split("?", 1)[0].endswith(".parquet"):
-            return None, None
-        paths.append(f)
-    if not paths:
-        return None, None
-    import pyarrow.parquet as pq
-
-    try:
-        input_bytes = sum(os.path.getsize(p) for p in paths)
-    except OSError:
-        return None, None
-    if "n_tok" not in tokens_df.columns:
-        return None, input_bytes
-    mx = 0
-    try:
-        for p in paths:
-            md = pq.ParquetFile(p).metadata
-            # statistics are per LEAF column: a nested column before n_tok
-            # has several leaves, so the Arrow field index would be wrong
-            leaf = next(
-                (j for j in range(md.num_columns)
-                 if md.schema.column(j).path == "n_tok"),
-                None,
-            )
-            if leaf is None:
-                return None, input_bytes
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(leaf).statistics
-                if st is None or not st.has_min_max:
-                    return None, input_bytes
-                mx = max(mx, int(st.max))
-    except Exception:
-        return None, input_bytes
-    return (mx if mx > 0 else None), input_bytes
-
-
-# Parquet input bytes per Python task of the fused 1m stage. Every Python
+# Input file bytes per Python task of the fused stage. Every Python
 # task pays ~0.2 worker CPU-s of set-up on PySpark 4.1 whatever its body
 # (worker_util.setup_spark_files calls importlib.invalidate_caches(), which
 # re-reads the pyspark.zip directory once per zipimporter) — about what the
@@ -238,13 +158,12 @@ def _footer_pass(tokens_df) -> tuple[int | None, int | None]:
 _FUSED_TASK_BYTES = 4 << 20
 
 
-def _build_tiers(spark, toks, tiers, w, k, policy, compress, batch_rows,
-                 input_bytes):
+def _build_tiers(spark, toks, tiers, w, k, policy, compress):
     """The fused frame of *tiers*' rows (docstring of run_rollup) and the
     planned Python task count of its stage (None when it is not known
-    without running a job). Batch sizing is in DOC rows here."""
+    without running a job)."""
     spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(int(batch_rows))
+        "spark.sql.execution.arrow.maxBytesPerBatch", str(_ARROW_BATCH_BYTES)
     )
     # With no exchange, the fused stage runs one Python task per scan
     # split. Spark's split size is min(maxPartitionBytes, max(4 MB,
@@ -258,7 +177,8 @@ def _build_tiers(spark, toks, tiers, w, k, policy, compress, batch_rows,
     # kernel: a narrow coalesce merges the splits into one task per
     # _FUSED_TASK_BYTES of input (still no exchange — raw points are
     # never shuffled). An input with more bytes per split plans
-    # exactly as before.
+    # exactly as before, and so does one that reads no files.
+    input_bytes = _planned_input_bytes(toks)
     splits = _planned_partitions(toks) if input_bytes is not None else None
     if splits is None:
         return fused_rollup(toks, tiers, w, k, policy, compress), None
@@ -267,101 +187,6 @@ def _build_tiers(spark, toks, tiers, w, k, policy, compress, batch_rows,
         toks = toks.coalesce(max_tasks)
     return (fused_rollup(toks, tiers, w, k, policy, compress),
             min(max_tasks, splits))
-
-
-# Commits at or below this many rows have their L3 stats computed driver-
-# side with pyarrow (out_rows straight from footer num_rows, in_rows = sum
-# of the one ``cnt`` column) instead of a Spark job — the job itself costs
-# ~0.25 s of scheduling/listing regardless of data size, which dominates
-# when the commit is small (every cascade tier at bench scale). The row
-# count comes from parquet FOOTERS (a metadata read, the same thing Spark
-# planning does), so routing costs no data I/O; below the cutover the
-# driver materializes only the int64 cnt column (4 M rows = 32 MB, bounded
-# regardless of how wide the tier schema is). The cutover is data-sized,
-# not core-count-sized (the broadcast-threshold shape): a 100 TB tier
-# commit exceeds any sane threshold and takes the distributed job.
-_STATS_DRIVER_MAX_ROWS = 4_000_000
-
-
-def _written_stats(spark, fmt, table: str, out_snapshot: int) -> list[dict]:
-    """Round 7 (guide §1/§6): the L3 stats job scans the snap dir this
-    commit just wrote — directly, with an explicit 2-column schema — instead
-    of ``fmt.read`` of the whole current view. That drops (a) the manifest
-    union/basePath planning, (b) parquet schema inference (footer reads for
-    all 12 columns), and (c) the scan of partitions untouched by this
-    commit; the job reads only the ``cnt`` column of the new files. An
-    Observation on the write itself was measured SLOWER (~0.9 s fixed
-    per-query planning/codegen for 2x64 conditional aggregates vs ~0.2 s
-    for this pruned job), so the separate-job shape stays.
-
-    When the whole commit is small (<= _STATS_DRIVER_MAX_ROWS rows, counted
-    from parquet footers) the same two numbers come from a driver-side
-    pyarrow pass over the snap dir's files instead — exactly the files the
-    distributed job would scan, so the two paths are interchangeable
-    (pinned by
-    tests/test_resume.py::test_written_stats_driver_matches_spark_job).
-    The driver pass is only a shortcut: if it raises (an unexpected
-    ``part_hash=`` dir name, an unreadable footer) the Spark job runs.
-
-    Every partition written by this commit lives under the new snap dir
-    (overwrite_partitions replaces whole partitions), so the re-read is
-    exactly the committed data for the pending set."""
-    import pyarrow as pa
-
-    data_dir = os.path.join(fmt.warehouse, table, f"snap-{out_snapshot}")
-    try:
-        stats = _written_stats_driver(data_dir)
-    except (OSError, ValueError, pa.ArrowException):
-        stats = None
-    if stats is not None:
-        return stats
-    df = (
-        spark.read.schema("cnt long, part_hash long")
-        .option("basePath", data_dir)
-        .parquet(data_dir)
-    )
-    from engine.lineage import partition_stats_from_rollup
-
-    return partition_stats_from_rollup(df)
-
-
-def _written_stats_driver(data_dir: str) -> list[dict] | None:
-    """_written_stats' driver-side pass; None above the row cutover."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    files_by_part: dict[int, list[str]] = {}
-    for name in os.listdir(data_dir):
-        if not name.startswith("part_hash="):
-            continue
-        pdir = os.path.join(data_dir, name)
-        fs = [os.path.join(pdir, f) for f in os.listdir(pdir)
-              if f.endswith(".parquet")]
-        if fs:  # the Spark job sees no rows, so no stats row, for an empty dir
-            files_by_part[int(name.split("=", 1)[1])] = fs
-    all_paths = [p for fs in files_by_part.values() for p in fs]
-    # footer opens and (below the cutover) the one-column reads both release
-    # the GIL in pyarrow — a small thread pool turns 64 sequential ~1-2 ms
-    # opens into a few ms total
-    with ThreadPoolExecutor(min(16, max(1, len(all_paths)))) as ex:
-        handles = dict(zip(all_paths, ex.map(pq.ParquetFile, all_paths)))
-        total_rows = sum(h.metadata.num_rows for h in handles.values())
-        if total_rows > _STATS_DRIVER_MAX_ROWS:
-            return None
-        import pyarrow.compute as pc
-
-        def _one(item: tuple[int, list[str]]) -> dict:
-            p, fs = item
-            out_rows = 0
-            in_rows = 0
-            for path in fs:
-                t = handles[path].read(columns=["cnt"])
-                out_rows += handles[path].metadata.num_rows
-                in_rows += int(pc.sum(t["cnt"]).as_py() or 0)
-            return {"part_hash": p, "out_rows": out_rows, "in_rows": in_rows}
-
-        return list(ex.map(_one, files_by_part.items()))
 
 
 def _params(w, k, policy, compress) -> str:
@@ -419,8 +244,7 @@ def _carried(fmt, tokens_df, pending, n_buckets):
 
 def _run_tiers(
     spark, fmt, tokens_df, warehouse, epoch, w, k, policy, n_buckets,
-    tiers, stop_after_tier, input_snapshot_id, compress, merge_docs,
-    batch_rows, input_bytes, metrics,
+    tiers, stop_after_tier, input_snapshot_id, compress, merge_docs, metrics,
 ) -> None:
     t_start = time.monotonic()
     unknown = sorted(set(tiers) - set(TIER_ORDER))
@@ -449,7 +273,6 @@ def _run_tiers(
         toks = toks.where(F.col("part_hash").isin(union))
     df, py_tasks = _build_tiers(
         spark, toks.drop("part_hash"), list(pending), w, k, policy, compress,
-        batch_rows, input_bytes,
     )
     df = with_part_hash(df, n_buckets)
     if merge_docs and fmt.current_snapshot("rollup_1m") > 0:
@@ -475,14 +298,16 @@ def _run_tiers(
             t_written = time.monotonic()
             write_s = t_written - t_write
         # (L3) per-partition counts from a pruned direct read of the snap
-        # dir this commit wrote (see _written_stats — round 7). Partitions
+        # dir this commit wrote (written_partition_stats). Partitions
         # attempted but empty (no doc hashes into them at this input size)
         # are COMPLETE, not pending — record them with 0 rows or resume
         # would recompute them forever.
         t_stats = time.monotonic()
         pend = set(pending[tier])
-        stats = [s for s in _written_stats(spark, fmt, table, out_snapshot)
-                 if s["part_hash"] in pend]
+        stats = [
+            s for s in written_partition_stats(spark, fmt, table, out_snapshot)
+            if s["part_hash"] in pend
+        ]
         seen = {s["part_hash"] for s in stats}
         stats += [{"part_hash": p, "out_rows": 0, "in_rows": 0}
                   for p in pending[tier] if p not in seen]

@@ -45,25 +45,71 @@ def test_fused_payloads_equal_pointstream_kernel(spark, tokens_df, token_rows):
 
 
 def test_fused_batch_size_invariant(spark, tokens_df):
-    """One doc per Arrow batch and every doc in one batch give the same
+    """One doc per Arrow batch, every doc in one batch and batches cut by
+    bytes (a few docs each, as many as their lengths allow) give the same
     rows and payloads. The one-batch run puts the int32-extreme docs
     (exact route) and the in-range docs into a single flat array, whose
     global int64 cumsum wraps."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    saved = spark.conf.get(key, None)
+    rows_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    bytes_key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    saved = {k: spark.conf.get(k, None) for k in (rows_key, bytes_key)}
     cols = AGG_COLS + ["ts_dod", "v_gorilla"]
     try:
-        spark.conf.set(key, "1")
+        spark.conf.set(rows_key, "1")
         one = rollup_rows(fused_rollup_1m(tokens_df), cols)
-        spark.conf.set(key, "4096")
+        spark.conf.set(rows_key, "4096")
         batched = rollup_rows(fused_rollup_1m(tokens_df.coalesce(1)), cols)
+        spark.conf.set(bytes_key, "4096")
+        by_bytes = rollup_rows(fused_rollup_1m(tokens_df.coalesce(1)), cols)
     finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-    assert one and one == batched
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert one and one == batched == by_bytes
     assert sum(r[8] for r in one if r[0] == "doc_big") > 0
+
+
+def test_fused_batches_are_cut_by_bytes(spark):
+    """The conf _build_tiers sets bounds every Arrow input batch of the
+    fused stage by bytes, whatever the docs' lengths: 86,400-token docs
+    and 16-token docs in one input give batches of at most the budget plus
+    one row, and the short docs share batches by the dozen (more than the
+    16 rows a row count sized for the longest doc would allow)."""
+    import pyarrow as pa
+
+    from engine.io import synth_tokens
+    from engine.schema import TIER_ORDER
+    from jobs.rollup import _ARROW_BATCH_BYTES, _build_tiers
+
+    longest = 86_400
+    toks = synth_tokens(spark, 24, n_tok=longest, seed=3).unionByName(
+        synth_tokens(spark, 200, n_tok=16, seed=4)
+    ).coalesce(1)
+    keys = ["spark.sql.files.maxPartitionBytes",
+            "spark.sql.execution.arrow.maxBytesPerBatch"]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+
+    def sizes(it):
+        for b in it:
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows], "nbytes": [b.nbytes]})
+
+    try:
+        _build_tiers(spark, toks, TIER_ORDER, W, K, "ffill", True)
+        batches = toks.mapInArrow(sizes, "rows long, nbytes long").collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # one row of the longest doc: int32 values, validity bits, offsets/ids
+    one_row = longest * 4 + longest // 8 + 256
+    assert sum(r["rows"] for r in batches) == 224
+    assert max(r["nbytes"] for r in batches) <= _ARROW_BATCH_BYTES + one_row, batches
+    assert max(r["rows"] for r in batches) > 16, batches
 
 
 def test_fused_task_cap_keeps_rows(spark, tmp_path, monkeypatch):

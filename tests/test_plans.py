@@ -136,17 +136,17 @@ def _fused_stage(spark, path):
     restored."""
     from engine.io import scan_tokens
     from engine.schema import TIER_ORDER
-    from jobs.rollup import _build_tiers, _footer_pass, _planned_partitions
+    from jobs.rollup import _build_tiers, _planned_partitions
 
     keys = [
         "spark.sql.files.maxPartitionBytes",
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.execution.arrow.maxBytesPerBatch",
     ]
     saved = {k: spark.conf.get(k, None) for k in keys}
     toks = scan_tokens(spark, path)
     try:
         df, py_tasks = _build_tiers(spark, toks, TIER_ORDER, 30, 3.0, "ffill",
-                                    True, 32, _footer_pass(toks)[1])
+                                    True)
         return _plan(df), py_tasks, _planned_partitions(df), _planned_partitions(toks)
     finally:
         for k, v in saved.items():
@@ -188,6 +188,31 @@ def test_rollup_epoch_is_one_write(spark, tokens_path, tmp_path, monkeypatch):
     assert plans[0].count("MapInArrow") == 1, plans[0]
     assert "Aggregate" not in plans[0], plans[0]
     assert len(jobs) <= 3, jobs
+
+
+def test_rollup_epoch_on_cached_input_runs_no_sizing_job(spark, tmp_path):
+    """A cached input reads no files, and sizing the fused stage costs no
+    job: Spark cuts its Arrow batches by bytes, so the epoch runs only
+    the write's 2 jobs (a max(n_tok) aggregate to size them would add 2:
+    the aggregate and its exchange)."""
+    from engine.io import synth_tokens
+    from jobs.rollup import run_rollup
+
+    toks = synth_tokens(spark, 8, n_tok=512, seed=9).cache()
+    toks.count()
+    sc = spark.sparkContext
+    group = "rollup-cached"
+    sc.setJobGroup(group, "one rollup epoch over a cached input")
+    try:
+        m = run_rollup(spark, toks, str(tmp_path / "wh"), epoch=1)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        toks.unpersist()
+    assert [t for t, x in m.items() if not x["skipped"]] == ["1m", "1h", "1d"]
+    assert m["1m"]["py_tasks"] is None
+    assert len(jobs) <= 2, jobs
 
 
 def test_fused_stage_one_task_per_4mb(spark, tmp_path):

@@ -283,16 +283,18 @@ def test_downsample_cli_end_to_end(spark, small_tokens, tmp_path):
 def test_written_stats_driver_matches_spark_job(
     spark, small_tokens, tmp_path, monkeypatch
 ):
-    """Round 7: _written_stats has two interchangeable paths — a driver-side
-    pyarrow pass for small commits and the distributed 2-column Spark job
-    above the size cutover. Force each in turn on the same committed snap
-    dirs and pin identical per-partition (out_rows, in_rows)."""
+    """written_partition_stats has two interchangeable paths — a
+    driver-side pyarrow pass for small commits and the distributed 2-column
+    Spark job above the size cutover. Force each in turn on the same
+    committed snap dirs and pin identical per-partition (out_rows,
+    in_rows)."""
     import os
 
     import pyarrow.parquet as pq
 
-    import jobs.rollup as rollup_mod
+    import engine.lineage as lineage_mod
 
+    stats_of = lineage_mod.written_partition_stats
     wh = str(tmp_path / "wh_paths")
     run_rollup(spark, small_tokens, wh, epoch=1)
     fmt = ParquetManifestFormat(spark, wh)
@@ -302,10 +304,10 @@ def test_written_stats_driver_matches_spark_job(
         # a partition dir holding no parquet file: neither path reports it
         os.makedirs(os.path.join(wh, f"rollup_{tier}", f"snap-{snap}",
                                  f"part_hash={DEFAULT_N_BUCKETS + 7}"))
-        monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
-        via_driver = rollup_mod._written_stats(spark, fmt, f"rollup_{tier}", snap)
-        monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", -1)
-        via_spark = rollup_mod._written_stats(spark, fmt, f"rollup_{tier}", snap)
+        monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
+        via_driver = stats_of(spark, fmt, f"rollup_{tier}", snap)
+        monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", -1)
+        via_spark = stats_of(spark, fmt, f"rollup_{tier}", snap)
         assert sorted(via_driver, key=key) == sorted(via_spark, key=key), tier
         assert DEFAULT_N_BUCKETS + 7 not in {s["part_hash"] for s in via_driver}
 
@@ -314,13 +316,13 @@ def test_written_stats_driver_matches_spark_job(
     def _broken(*a, **kw):
         raise OSError("unreadable footer")
 
-    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
+    monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
     monkeypatch.setattr(pq, "ParquetFile", _broken)
     snap = fmt.current_snapshot("rollup_1m")
-    via_fallback = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
+    via_fallback = stats_of(spark, fmt, "rollup_1m", snap)
     monkeypatch.undo()
-    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", -1)
-    via_spark = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
+    monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", -1)
+    via_spark = stats_of(spark, fmt, "rollup_1m", snap)
     assert via_fallback and sorted(via_fallback, key=key) == sorted(via_spark, key=key)
 
 
@@ -334,8 +336,9 @@ def test_written_stats_paths_agree_on_multifile_partitions(
     values)."""
     import shutil
 
-    import jobs.rollup as rollup_mod
+    import engine.lineage as lineage_mod
 
+    stats_of = lineage_mod.written_partition_stats
     wh = str(tmp_path / "wh_multi")
     run_rollup(spark, small_tokens, wh, epoch=1, tiers=["1m"])
     fmt = ParquetManifestFormat(spark, wh)
@@ -348,88 +351,48 @@ def test_written_stats_paths_agree_on_multifile_partitions(
     )
     dup = files[0]
     shutil.copy(dup, os.path.join(os.path.dirname(dup), "part-dup.c000.snappy.parquet"))
-    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
-    via_driver = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
-    monkeypatch.setattr(rollup_mod, "_STATS_DRIVER_MAX_ROWS", -1)
-    via_spark = rollup_mod._written_stats(spark, fmt, "rollup_1m", snap)
+    monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", 1 << 60)
+    via_driver = stats_of(spark, fmt, "rollup_1m", snap)
+    monkeypatch.setattr(lineage_mod, "_STATS_DRIVER_MAX_ROWS", -1)
+    via_spark = stats_of(spark, fmt, "rollup_1m", snap)
     key = lambda s: s["part_hash"]  # noqa: E731
     assert sorted(via_driver, key=key) == sorted(via_spark, key=key)
 
 
-def test_footer_max_n_tok_falls_back_without_stats(spark, tmp_path):
-    """_footer_max_n_tok must return None (-> pushdown-aggregate fallback)
-    when any row group lacks n_tok statistics, and the exact max when
-    stats exist."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_non_file_input_gets_no_task_cap(spark):
+    """An input that reads no files (here in-memory rows) has no input
+    size in its plan: the fused stage plans with neither a task cap nor a
+    Coalesce, one Python task per input partition as Spark planned it."""
+    from engine.schema import TIER_ORDER, TOKENS_SCHEMA
+    from engine.util import planned_input_bytes
+    from jobs.rollup import _build_tiers
 
-    from jobs.rollup import _footer_pass
-
-    t = pa.table({"doc_id": ["a", "b"], "n_tok": pa.array([7, 12], pa.int64())})
-    p_stats = str(tmp_path / "with_stats")
-    p_none = str(tmp_path / "no_stats")
-    import os
-
-    os.makedirs(p_stats)
-    os.makedirs(p_none)
-    pq.write_table(t, os.path.join(p_stats, "f.parquet"))
-    pq.write_table(
-        t, os.path.join(p_none, "f.parquet"), write_statistics=False
+    keys = ["spark.sql.files.maxPartitionBytes",
+            "spark.sql.execution.arrow.maxBytesPerBatch"]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    toks = spark.createDataFrame(
+        [("a", [1, 2, 3], 3, "cc"), ("b", [4, 5], 2, "cc")], TOKENS_SCHEMA
     )
-    assert _footer_pass(spark.read.parquet(p_stats))[0] == 12
-    assert _footer_pass(spark.read.parquet(p_none))[0] is None
-
-
-def test_footer_pass_finds_n_tok_leaf_after_nested_column(spark, tmp_path):
-    """Row-group statistics are per parquet LEAF: a struct column before
-    n_tok has two leaves, so n_tok's Arrow field index names another
-    column. The pass finds n_tok by its path and also sums file bytes."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from jobs.rollup import _footer_pass
-
-    t = pa.table({
-        "doc_id": ["a", "b"],
-        "meta": pa.array([{"x": 900, "y": 1000}, {"x": 901, "y": 1001}]),
-        "n_tok": pa.array([7, 12], pa.int64()),
-    })
-    p = str(tmp_path / "nested")
-    os.makedirs(p)
-    f = os.path.join(p, "f.parquet")
-    pq.write_table(t, f)
-    assert _footer_pass(spark.read.parquet(p)) == (12, os.path.getsize(f))
-
-
-def test_footer_pass_skips_non_local_files(monkeypatch):
-    """An hdfs:// input is never opened from the driver: no cap, no
-    footer max."""
-    import pyarrow.parquet as pq
-
-    from jobs.rollup import _footer_pass
-
-    class _Remote:
-        columns = ["doc_id", "tokens", "n_tok", "source"]
-
-        def inputFiles(self):
-            return ["hdfs://nn:8020/t/part-0.parquet", "file:/t/part-1.parquet"]
-
-    def _no_open(*a, **kw):
-        raise AssertionError("opened a file")
-
-    monkeypatch.setattr(pq, "ParquetFile", _no_open)
-    monkeypatch.setattr("os.path.getsize", _no_open)
-    assert _footer_pass(_Remote()) == (None, None)
+    try:
+        df, py_tasks = _build_tiers(spark, toks, TIER_ORDER, 30, 3.0, "ffill", True)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert planned_input_bytes(toks) is None
+    assert py_tasks is None
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" not in plan and "MapInArrow" in plan, plan
 
 
 def test_observed_lineage_stats_match_written_tier(spark, small_tokens, tmp_path):
-    """Round 7: L3 per-partition stats are collected as observation metrics
-    on the write action itself (jobs/rollup._observed_stats) instead of a
-    per-tier re-read job. Pin the recorded lineage rows against a direct
-    re-read of each written tier (the r6 mechanism) — identical out_rows /
-    in_rows per partition, zero-row pending partitions recorded as zeros."""
+    """L3 per-partition stats are read from the snap dir each commit wrote
+    (engine/lineage.py::written_partition_stats). Pin the recorded lineage
+    rows against a re-read of each whole tier through the manifest —
+    identical out_rows / in_rows per partition, zero-row pending
+    partitions recorded as zeros."""
     from engine.lineage import partition_stats_from_rollup
 
     wh = str(tmp_path / "wh_obs")
