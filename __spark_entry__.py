@@ -2396,8 +2396,7 @@ def q_detector_ensemble(spark, sf_dir):
 
 
 def q_sliding_window_counts(spark, sf_dir):
-    """X-surface sliding-window aggregate in BATCH form (round 4; the
-    streaming twin is engine/streaming.py::windowed_event_counts): 5-minute
+    """X-surface sliding-window aggregate in BATCH form (round 4): 5-minute
     windows sliding every minute over event time, per user — one
     F.window(ts, '5 minutes', '1 minute') groupBy, pure Catalyst. Window
     starts surface as BIGINT epoch seconds so the DuckDB oracle (which

@@ -12,11 +12,11 @@ Layout (SURVEY.md §7):
     engine.fused        every tier: G1 gap-fill, R1-R4 stats/detect, the 1m/1h/1d
                         A1 rollups and C1/C2 payloads in one mapInArrow pass
     engine.rollup       A2 cascade (1m -> 1h -> 1d; read-side hole fill and
-                        merge-mode carry), A4 sketches
-    engine.compression  C1-C3 delta-of-delta + Gorilla XOR (Arrow UDFs)
+                        merge-mode carry), the distinct-user sketch cascade
+    engine.compression  C1-C3 delta-of-delta + Gorilla XOR (mapInArrow decode)
     engine.lineage      L1-L3 commit protocol / resume
     engine.query        Q1-Q4 downsample read path
-    engine.skew         K1-K2 bucketing + salting
+    engine.skew         K1 bucketing (doc_id hash buckets, bucket pruning)
     engine.oracle       single-machine pandas/NumPy twin (the pytest gate) and
                         the pinned G1 / R1-R4 spec
 """

@@ -71,8 +71,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_U64 = np.uint64
-
 # Frame magic/version bytes (module docstring): v1 = the round-3
 # window-rule variant. Legacy (round-3 and earlier) frames have no magic —
 # their first byte is n's top byte (0x00) — and are rejected loudly.
@@ -913,8 +911,8 @@ def gorilla_decompress_many(frames: list) -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration: the Arrow decode UDF and the mapInArrow raw-point
-# decode pass (the encoders run inside engine/fused.py)
+# Spark integration: the mapInArrow raw-point decode pass (the encoders
+# run inside engine/fused.py)
 # ---------------------------------------------------------------------------
 
 
@@ -946,72 +944,15 @@ def _decode_frames(frames: list, decoder, single, on_error: str) -> tuple:
     return flat, counts, ok
 
 
-def _decode_series(frames, decoder, single, on_error):
-    """One Arrow batch of frames -> pandas Series of int64 point arrays
-    (NULL frames stay NULL; quarantined frames come back NULL). The only
-    per-frame Python is the bytes() view and the flat-array split."""
-    import pandas as pd
-
-    mask = frames.notna().to_numpy()
-    fl = [bytes(b) for b, m in zip(frames, mask) if m]
-    vals = np.empty(len(frames), dtype=object)
-    if fl:
-        flat, counts, ok = _decode_frames(fl, decoder, single, on_error)
-        po = np.empty(len(fl), dtype=object)
-        po[:] = np.split(flat, np.cumsum(counts)[:-1])
-        po[~ok] = None
-        vals[np.flatnonzero(mask)] = po
-    return pd.Series(vals, index=frames.index)
-
-
-def decompress_columns(compressed_df, on_error: str = "raise"):
-    """C3 as a scalar Arrow UDF: (ts_dod, v_gorilla) -> point arrays.
-
-    Round 4: routed through the TRANSPOSED vectorized decoders
-    (dod_decompress_many / gorilla_decompress_many) — one NumPy round per
-    point index across the whole Arrow batch's frames, mirroring the
-    round-3 encoder vectorization. Per-point Python is gone from the read
-    path.
-
-    ``on_error``: 'raise' (default) fails the query on any corrupt or
-    legacy frame; 'null' quarantines undecodable frames as NULL point
-    arrays so an unattended scan survives isolated corruption — audit the
-    quarantined rows afterwards with
-    ``where("ts_dod is not null and ts_points is null")``.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, LongType
-
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    # lambdas, not annotated defs: `from __future__ import annotations` turns
-    # hints into strings pyspark cannot resolve inside a nested scope
-    _ts = F.pandas_udf(
-        lambda frames: _decode_series(
-            frames, dod_decompress_many, dod_decompress, on_error
-        ),
-        ArrayType(LongType()),
-    )
-    _vs = F.pandas_udf(
-        lambda frames: _decode_series(
-            frames, gorilla_decompress_many, gorilla_decompress, on_error
-        ),
-        ArrayType(LongType()),
-    )
-
-    return compressed_df.withColumn("ts_points", _ts("ts_dod")).withColumn(
-        "v_points", _vs("v_gorilla")
-    )
-
-
 def decode_raw_points(payload_df, t0=None, t1=None, on_error: str = "raise"):
     """C3 as ONE mapInArrow pass: (doc_id, ts_dod, v_gorilla) rows -> flat
     (doc_id, t, v) raw points, trimmed to [t0, t1) (either end optional).
 
-    Each payload is decoded exactly once, through the same vectorized
-    multi-frame decoders as decompress_columns; no array column, zip or
-    explode is ever materialized, so Catalyst has no generator filter to
-    duplicate below the projection (it did with arrays_zip + explode: two
+    Each payload is decoded exactly once, through the vectorized
+    multi-frame decoders (dod_decompress_many / gorilla_decompress_many:
+    one NumPy round per point index across the batch's frames); no array
+    column, zip or explode is ever materialized, so Catalyst has no
+    generator filter to duplicate below the projection (it did with arrays_zip + explode: two
     ArrowEvalPython nodes, each running both decoders). Rows with a NULL
     payload serve nothing.
 

@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from engine.schema import TOKENS_SCHEMA, assert_tokens_schema
-from engine.skew import with_part_hash
+from engine.schema import assert_tokens_schema
 
 # Staged writes land under <warehouse>/STAGING_DIR/<uuid> before their
 # commit renames them into a table; TIER_COL routes a multi-table write.
@@ -455,17 +454,6 @@ def _check_drift(table: str, recorded: T.StructType, written: T.StructType) -> N
         raise ValueError(f"{table}: commit schema drifts from the table's ({'; '.join(diff)})")
 
 
-def write_tier(
-    fmt: ParquetManifestFormat, df: DataFrame, tier: str, n_buckets: int | None = None
-) -> int:
-    """S2 wrapper: attach part_hash if absent and commit one rollup tier."""
-    if "part_hash" not in df.columns:
-        from engine.schema import DEFAULT_N_BUCKETS
-
-        df = with_part_hash(df, n_buckets or DEFAULT_N_BUCKETS)
-    return fmt.overwrite_partitions(df, f"rollup_{tier}", n_buckets)
-
-
 def scan_tier(
     fmt: ParquetManifestFormat, tier: str, snapshot_id: int | None = None
 ) -> DataFrame:
@@ -474,118 +462,3 @@ def scan_tier(
     if snapshot_id is None:
         return fmt.read(table)
     return fmt.read_at(table, snapshot_id)
-
-
-# ---------------------------------------------------------------------------
-# S1 for schema-less ingest formats (JSONL / CSV).
-#
-# Parquet carries its schema in the footer, so scan_tokens validates for
-# free. JSON and CSV carry none: the reader is given an explicit
-# format-native schema with mode=FAILFAST (malformed lines and type
-# mismatches raise instead of becoming nulls), and because JSON integers
-# are int64, one validation pass asserts every token fits int32 BEFORE the
-# downcast — a silent wrap here would corrupt series values. That pass is
-# a real scan; it is the honest price of a footer-less format and runs
-# once at ingest, not per query.
-# ---------------------------------------------------------------------------
-
-_TOKENS_JSONL_READ = (
-    "doc_id string, tokens array<long>, n_tok long, source string"
-)
-_TOKENS_CSV_READ = "doc_id string, tokens string, n_tok int, source string"
-_CSV_NULL_TOKEN = "NA"  # in-array gap sentinel inside the joined string
-
-
-def _downcast_validated(df: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    lim = 2**31 - 1
-    bad = df.where(
-        F.exists(
-            "tokens", lambda x: x.isNotNull() & ((x > lim) | (x < -lim - 1))
-        )
-        | (F.col("n_tok") > lim)
-        | (F.col("n_tok") < 0)
-    )
-    sample = bad.select("doc_id").limit(1).collect()
-    if sample:
-        raise ValueError(
-            f"token ingest: value outside int32 at doc_id="
-            f"{sample[0]['doc_id']!r} (tokens are pinned array<int32>)"
-        )
-    out = df.select(
-        F.col("doc_id").cast("string"),
-        F.col("tokens").cast("array<int>").alias("tokens"),
-        F.col("n_tok").cast("int").alias("n_tok"),
-        F.col("source").cast("string"),
-    )
-    assert_tokens_schema(out)
-    return out
-
-
-def scan_tokens_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """S1 over JSON-lines: explicit schema + FAILFAST, then the int32
-    validation pass and downcast to the pinned TOKENS_SCHEMA."""
-    df = (
-        spark.read.schema(_TOKENS_JSONL_READ)
-        .option("mode", "FAILFAST")
-        .json(path)
-    )
-    return _downcast_validated(df)
-
-
-def scan_tokens_csv(spark: SparkSession, path: str) -> DataFrame:
-    """S1 over CSV: tokens travel as one space-joined field with
-    _CSV_NULL_TOKEN marking in-array gaps ('' = empty array); explicit
-    schema + FAILFAST + header, then the shared validation/downcast."""
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.schema(_TOKENS_CSV_READ)
-        .option("mode", "FAILFAST")
-        .option("header", "true")
-        .csv(path)
-    )
-    toks = F.when(F.col("tokens").isNull() | (F.col("tokens") == ""),
-                  F.expr("cast(array() as array<long>)")).otherwise(
-        F.expr(
-            f"transform(split(tokens, ' '), "
-            f"x -> CASE WHEN x = '{_CSV_NULL_TOKEN}' THEN NULL "
-            f"ELSE cast(x AS long) END)"
-        )
-    )
-    return _downcast_validated(
-        df.select("doc_id", toks.alias("tokens"), F.col("n_tok").cast("long"), "source")
-    )
-
-
-def scan_tokens_orc(spark: SparkSession, path: str) -> DataFrame:
-    """S1 over ORC: like parquet, ORC carries a typed schema in the file
-    (footer), so the fail-fast contract is the scan_tokens one — read the
-    file's OWN schema and validate it (imposing TOKENS_SCHEMA would mask
-    drift); no downcast pass needed, array<int> is ORC-native."""
-    df = spark.read.orc(path)
-    assert_tokens_schema(df)
-    return df
-
-
-def write_tokens_orc(df: DataFrame, path: str) -> None:
-    """Inverse of scan_tokens_orc (type-preserving, no string encoding)."""
-    df.write.mode("errorifexists").orc(path)
-
-
-def write_tokens_jsonl(df: DataFrame, path: str) -> None:
-    """Inverse of scan_tokens_jsonl (nulls inside arrays survive JSON)."""
-    df.write.mode("errorifexists").json(path)
-
-
-def write_tokens_csv(df: DataFrame, path: str) -> None:
-    """Inverse of scan_tokens_csv: gaps become _CSV_NULL_TOKEN."""
-    from pyspark.sql import functions as F
-
-    df.select(
-        "doc_id",
-        F.array_join(F.col("tokens").cast("array<string>"), " ", _CSV_NULL_TOKEN).alias("tokens"),
-        "n_tok",
-        "source",
-    ).write.mode("errorifexists").option("header", "true").csv(path)

@@ -149,8 +149,8 @@ def lineage_record(
 
 def committed_partitions(warehouse: str, tier: str, checkpoint_epoch: int) -> set[int]:
     """L2 driver-side: the DONE set for (tier, epoch). The lineage table is
-    tiny (one row per partition-commit), so reading it on the driver is the
-    cheap path; the Spark-side anti-join variant is resume_filter()."""
+    tiny (one row per partition-commit), so it is read on the driver, with
+    no Spark job."""
     return set(committed_partition_snapshots(warehouse, tier, checkpoint_epoch))
 
 
@@ -220,16 +220,6 @@ def read_lineage(spark: SparkSession, warehouse: str) -> DataFrame:
 
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return spark.read.parquet(d)
-
-
-def resume_filter(work_units: DataFrame, lineage: DataFrame, tier: str, checkpoint_epoch: int) -> DataFrame:
-    """L2 Spark-side form: anti-join work units (any df with part_hash)
-    against committed lineage rows. Used when the work-unit list itself is
-    distributed; the driver-side set-difference above is the common path."""
-    done = lineage.where(
-        (F.col("tier") == tier) & (F.col("checkpoint_epoch") == checkpoint_epoch)
-    ).select("part_hash")
-    return work_units.join(F.broadcast(done), "part_hash", "left_anti")
 
 
 def partition_stats_from_rollup(rollup_df: DataFrame) -> list[dict]:

@@ -181,8 +181,8 @@ def serve_raw_points(
 
     ``on_error='null'`` quarantines corrupt payloads, and rows whose two
     frames disagree on the point count, instead of failing the scan (their
-    buckets simply yield no rows; audit them via
-    decompress_columns(df, on_error='null') — see its docstring).
+    buckets simply yield no rows, so a 1m row with cnt > 0 and no served
+    point marks one).
     """
     from engine.compression import decode_raw_points
 

@@ -12,9 +12,9 @@ engine/query.py::tier_fallback fills a coarse tier's uncommitted
 partitions from the finer one at read time, and jobs/rollup.py's merge
 mode carries the coarse rows of docs outside the batch from the current
 1m view. Each cascade level aggregates an already-reduced input (60x/24x
-smaller). The sketches (A4 and the distinct-user cascade) carry the
-aggregates that do not re-aggregate exactly: HLL registers merge,
-distinct counts do not.
+smaller). The distinct-user sketch cascade carries the aggregate that
+does not re-aggregate exactly: HLL registers merge, distinct counts do
+not.
 """
 
 from __future__ import annotations
@@ -62,16 +62,6 @@ def cascade(rollup_fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFra
     return out.select(
         "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
         "vmean", "anom_cnt", "first_v", "last_v",
-    )
-
-
-def approx_distinct_docs(rollup: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """A4: HLL++ cardinality of series per tier (monitoring; rows-only
-    check). rsd=0.02 sizes the sketch (~2.6k registers, still tiny) so the
-    observed relative error stays under 2% — pinned by
-    tests/test_quality.py (Spark's 0.05 default measured 2.2% at n=500)."""
-    return rollup.agg(
-        F.approx_count_distinct("doc_id", rsd).alias("approx_docs")
     )
 
 

@@ -197,7 +197,16 @@ def get_spark(
     # earlier session's) keeps its classpath, and would not find the class
     launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     local = re.fullmatch(r"local(\[.*\])?", master)
-    classes = _no_fork_fs_classes() if local and launches_jvm else None
+    classes = None
+    if local and launches_jvm:
+        # local Python workers import the engine through the JVM's
+        # environment, not this process's sys.path: put the package root
+        # on it before the JVM launches, so jobs run from any cwd
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if root not in paths:
+            os.environ["PYTHONPATH"] = os.pathsep.join([root] + paths)
+        classes = _no_fork_fs_classes()
     if classes is not None:
         builder = builder.config("spark.hadoop.fs.file.impl", _NO_FORK_FS)
         user_cp = extra_conf.pop("spark.driver.extraClassPath", None)

@@ -94,37 +94,31 @@ def test_empty_and_singleton():
 
 def test_spark_attach_and_decompress_roundtrip(spark, tokens_df, token_rows):
     """End-to-end: the fused 1m kernel compresses per (doc_id, 1m bucket)
-    on the full fixture (int32 extremes included), the scalar Arrow UDF
-    reads the payloads back, and they equal the raw non-null points —
-    token-array equality (B:15)."""
-    from engine.compression import decompress_columns
-    from engine.fused import fused_rollup_1m
+    on the full fixture (int32 extremes included), serve_raw_points'
+    mapInArrow pass reads the payloads back as flat (doc_id, t, v) points,
+    and they equal the raw non-null gap-filled points — token-array
+    equality (B:15) — with each bucket serving exactly its cnt points."""
+    from collections import Counter
 
-    decoded = decompress_columns(fused_rollup_1m(tokens_df)).select(
-        "doc_id", "bucket", "cnt", "ts_points", "v_points"
-    )
-    rows = decoded.collect()
-    assert len(rows) > 0
-
-    # expected: non-null (t, v) per (doc_id, bucket) from the oracle side
     from engine import oracle
+    from engine.fused import fused_rollup_1m
+    from engine.query import serve_raw_points
 
-    expected = {}
-    for row in token_rows:
-        filled = oracle.gap_fill_series(row["tokens"], "ffill")
-        for t, v in enumerate(filled):
-            key = (row["doc_id"], t // 60)
-            expected.setdefault(key, [])  # all-null buckets: empty frame
-            if v is not None:
-                expected[key].append((t, v))
-
-    for r in rows:
-        key = (r["doc_id"], r["bucket"])
-        want = expected.get(key, [])
-        assert len(r["ts_points"]) == r["cnt"] == len(want), key
-        got = list(zip(r["ts_points"], r["v_points"]))
-        assert got == want, f"{key}: decompressed points differ"
-    assert set(expected) == {(r["doc_id"], r["bucket"]) for r in rows}
+    r1m = fused_rollup_1m(tokens_df).cache()
+    got = sorted(tuple(r) for r in serve_raw_points(r1m).collect())
+    want = sorted(
+        (row["doc_id"], t, v)
+        for row in token_rows
+        for t, v in enumerate(oracle.gap_fill_series(row["tokens"], "ffill"))
+        if v is not None
+    )
+    assert got == want and len(got) > 0
+    cnt = {
+        (r["doc_id"], r["bucket"]): r["cnt"]
+        for r in r1m.where("cnt > 0").select("doc_id", "bucket", "cnt").collect()
+    }
+    assert Counter((d, t // 60) for d, t, _ in got) == cnt
+    r1m.unpersist()
 
 
 def test_vectorized_many_byte_identical_to_sequential():
@@ -259,34 +253,6 @@ def _poisoned_1m(tokens_df):
     return r1m, poisoned, victim, filled
 
 
-def test_decode_quarantine_mode(spark, tokens_df):
-    """on_error='null' must survive corrupt payloads: the poisoned frame
-    comes back as a NULL point array (auditable), every healthy frame in
-    the same Arrow batch still decodes exactly, and the default strict
-    mode still fails loudly."""
-    import pytest
-
-    from engine.compression import decompress_columns
-
-    r1m, poisoned, victim, _ = _poisoned_1m(tokens_df)
-
-    with pytest.raises(Exception, match="magic"):
-        decompress_columns(poisoned).select("ts_points").collect()
-
-    dec = decompress_columns(poisoned, on_error="null").cache()
-    bad = dec.where("ts_dod is not null and ts_points is null").collect()
-    assert [(r["doc_id"], r["bucket"]) for r in bad] == [
-        (victim["doc_id"], victim["bucket"])
-    ]
-    # healthy rows: every decoded array length still equals cnt
-    ok = dec.where("ts_points is not null").selectExpr(
-        "sum(cast(size(ts_points) != cnt as int)) as mismatches"
-    ).collect()[0]
-    assert ok["mismatches"] == 0
-    r1m.unpersist()
-    dec.unpersist()
-
-
 def test_raw_points_quarantine_mode(spark, tokens_df):
     """serve_raw_points' single decode pass keeps on_error='null': the
     poisoned bucket serves no points, every other bucket serves exactly
@@ -404,22 +370,20 @@ def test_corrupt_count_rejected_before_allocation():
 
 
 def test_truncated_frame_quarantined_in_null_mode():
-    """_decode_series with on_error='null': a truncated frame in the batch
-    quarantines to NULL while every healthy frame (including ones AFTER
-    the bad one) still decodes exactly."""
-    import pandas as pd
-
-    from engine.compression import _decode_series, dod_decompress_many
+    """_decode_frames with on_error='null': a truncated frame in the batch
+    is quarantined (ok False, zero points) while every healthy frame
+    (including ones AFTER the bad one) still decodes exactly."""
+    from engine.compression import _decode_frames
 
     ts = np.arange(0, 180, 3, dtype=np.int64)
     good = dod_compress(ts)
     trunc = good[:-2]
-    s = pd.Series([good, trunc, None, good], dtype=object)
-    out = _decode_series(s, dod_decompress_many, dod_decompress, "null")
-    assert list(out[0]) == ts.tolist()
-    assert out[1] is None
-    assert out[2] is None
-    assert list(out[3]) == ts.tolist()
+    flat, counts, ok = _decode_frames(
+        [good, trunc, good], dod_decompress_many, dod_decompress, "null"
+    )
+    assert ok.tolist() == [True, False, True]
+    assert counts.tolist() == [ts.size, 0, ts.size]
+    assert flat.tolist() == ts.tolist() * 2
 
 
 def test_far_overrun_raises_valueerror_not_indexerror():

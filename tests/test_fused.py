@@ -162,9 +162,9 @@ def test_run_rollup_tiers_equal_oracle(spark, tokens_df, token_rows, ora, tmp_pa
     with anomalies) writes 1m/1h/1d tiers equal to the oracle row for row,
     1m payloads that decode to the oracle's gap-filled points, and lineage
     that names the fused kernel for every tier."""
-    from engine.compression import decompress_columns
     from engine.io import ParquetManifestFormat
     from engine.lineage import read_lineage
+    from engine.query import serve_raw_points
     from jobs.rollup import run_rollup
 
     wh = str(tmp_path / "wh")
@@ -181,18 +181,14 @@ def test_run_rollup_tiers_equal_oracle(spark, tokens_df, token_rows, ora, tmp_pa
     assert any(r[0] == "doc_big" and r[8] > 0 for r in got["1m"])
 
     filled = {r["doc_id"]: r["tokens"] for r in ora["filled"].to_dict("records")}
-    dec = decompress_columns(fmt.read("rollup_1m")).select(
-        "doc_id", "bucket", "ts_points", "v_points"
+    got_pts = sorted(
+        tuple(r) for r in serve_raw_points(fmt.read("rollup_1m")).collect()
     )
-    b = TIER_SECONDS["1m"]
-    n = 0
-    for r in dec.collect():
-        lo = r["bucket"] * b
-        want = [(t, v) for t, v in enumerate(filled[r["doc_id"]][lo:lo + b], lo)
-                if v is not None]
-        assert list(zip(r["ts_points"], r["v_points"])) == want, (r[0], r[1])
-        n += len(want)
-    assert n == sum(v is not None for f in filled.values() for v in f)
+    want_pts = sorted(
+        (d, t, v) for d, f in filled.items() for t, v in enumerate(f)
+        if v is not None
+    )
+    assert got_pts == want_pts and got_pts
 
 
 def test_fused_guard_catches_s1_squared_overflow(token_rows):

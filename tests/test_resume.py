@@ -5,10 +5,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from engine.io import ParquetManifestFormat, synth_tokens, write_tier
+from engine.io import ParquetManifestFormat, synth_tokens
 from engine.lineage import committed_partitions, pending_partitions, read_lineage
 from engine.query import anomaly_filter, downsample, resolution_pick, tier_fallback
 from engine.schema import DEFAULT_N_BUCKETS
+from engine.skew import with_part_hash
 from jobs.rollup import run_rollup
 
 N_DOCS = 40
@@ -65,7 +66,7 @@ def test_crash_between_data_and_lineage_is_recomputed(spark, small_tokens, tmp_p
     garbage = fused_rollup_1m(small_tokens.limit(3)).withColumn(
         "cnt", F.lit(-999).cast("long")
     )
-    write_tier(fmt, garbage, "1m")
+    fmt.overwrite_partitions(with_part_hash(garbage), "rollup_1m")
     assert committed_partitions(wh, "1m", 1) == set()  # invisible to readers
 
     run_rollup(spark, small_tokens, wh, epoch=1)
@@ -82,7 +83,6 @@ def test_tier_fallback_serves_holes_from_finer_tier(spark, small_tokens, tmp_pat
     # commit 1h for partitions < 32 only (simulate partial 1h job)
     from engine.lineage import lineage_record, partition_stats_from_rollup
     from engine.rollup import cascade
-    from engine.skew import with_part_hash
 
     fine = fmt.read("rollup_1m").where("part_hash < 32")
     half = with_part_hash(cascade(fine.drop("part_hash"), "1m", "1h"))
@@ -122,7 +122,6 @@ def test_incremental_epochs_disjoint_docs(spark, tmp_path):
     }
     # overwrite-partition semantics: epoch 2 replaces exactly the partitions
     # its docs hash into; epoch-1 docs in untouched partitions survive
-    from engine.skew import with_part_hash
 
     b_parts = {
         r["part_hash"]
@@ -247,7 +246,9 @@ def test_lineage_metrics_queryable(spark, small_tokens, tmp_path):
 def test_downsample_cli_end_to_end(spark, small_tokens, tmp_path):
     """jobs/downsample.py: both CLI forms (tier aggregates and --raw Q5)
     run as real processes against a warehouse built in this session and
-    return the same rows the library calls produce."""
+    return the same rows the library calls produce. They run from outside
+    the repo with no PYTHONPATH: --raw starts Python workers, which must
+    still import the engine."""
     import os
     import subprocess
     import sys as _sys
@@ -260,8 +261,9 @@ def test_downsample_cli_end_to_end(spark, small_tokens, tmp_path):
         cmd = [_sys.executable, os.path.join(repo, "jobs", "downsample.py"),
                "--warehouse", wh, "--epoch", "1", "--master", "local[2]",
                *extra]
-        env = dict(os.environ, SPARK_DRIVER_MEMORY="2g")
-        r = subprocess.run(cmd, cwd=repo, capture_output=True, text=True,
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["SPARK_DRIVER_MEMORY"] = "2g"
+        r = subprocess.run(cmd, cwd=tmp_path, capture_output=True, text=True,
                            env=env, timeout=420)
         assert r.returncode == 0, r.stderr[-3000:]
         return int(r.stdout.split("rows=")[1].split()[0])

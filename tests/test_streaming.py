@@ -1,16 +1,15 @@
-"""Structured Streaming shell tests: micro-batch rollup with lineage dedupe
-+ watermark/window aggregate (engine/streaming.py)."""
+"""Structured Streaming tests (engine/streaming.py): micro-batch rollup with
+lineage dedupe, and the stateful detectors jobs/stream_detect.py runs."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from engine.io import ParquetManifestFormat, synth_tokens
 from engine.lineage import read_lineage
-from engine.streaming import start_rollup_stream, windowed_event_counts
+from engine.streaming import start_rollup_stream
 
 
 def test_stream_rollup_two_drops(spark, tmp_path):
@@ -94,14 +93,15 @@ def test_stream_accumulates_disjoint_docs(spark, tmp_path):
 
 
 def test_stateful_detect_continues_across_batches(spark, tmp_path):
-    """applyInPandasWithState detector (engine/streaming.py): the per-user
-    window tail carried in state must let batch-2 events be scored against
-    batch-1 history — flags across two restarts (same checkpoint) equal the
-    pandas rolling oracle over the concatenated series."""
+    """applyInPandasWithState detector (engine/streaming.py) with no
+    reorder window: the per-user window tail carried in state must let
+    batch-2 events be scored against batch-1 history — flags across two
+    restarts (same checkpoint) equal the pandas rolling oracle over the
+    concatenated series."""
     import numpy as np
     import pandas as pd
 
-    from engine.streaming import stateful_detect_stream
+    from engine.streaming import stateful_detect_stream_late
 
     # self-inclusion ceiling (SURVEY.md §2.1a): max score = (w-1)/sqrt(w),
     # so detection needs (w-1)/sqrt(w) > k — w=12, k=2.5 gives 3.18 > 2.5
@@ -142,7 +142,7 @@ def test_stateful_detect_continues_across_batches(spark, tmp_path):
             "event_id long, ts timestamp, user_id long, value double"
         ).parquet(f"{src}/*")
         q = (
-            stateful_detect_stream(stream, w=w, k=k)
+            stateful_detect_stream_late(stream, w=w, k=k, reorder_seconds=0)
             .writeStream.format("parquet")
             .option("path", outdir)
             .outputMode("append")
@@ -184,48 +184,6 @@ def test_stateful_detect_continues_across_batches(spark, tmp_path):
     assert spike_ids <= fired
 
 
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    """The streaming window aggregate (availableNow over a file stream)
-    must equal the same aggregate computed in batch."""
-    src = str(tmp_path / "events")
-    ev = (
-        spark.range(500)
-        .select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 7).alias("ts"),
-            F.pmod(F.col("id"), F.lit(10)).alias("user_id"),
-            (F.pmod(F.xxhash64("id"), F.lit(1000)) / 10.0).alias("value"),
-        )
-    )
-    ev.write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id bigint, value double"
-    ).parquet(src)
-    agg = windowed_event_counts(stream, window="1 minute", watermark="2 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["window_start"], r["user_id"]): (r["cnt"], r["vmin"], r["vmax"])
-        for r in spark.sql("SELECT * FROM winagg").collect()
-    }
-    batch = (
-        ev.groupBy(F.window("ts", "1 minute").alias("w"), "user_id")
-        .agg(F.count("*").alias("cnt"), F.min("value").alias("vmin"), F.max("value").alias("vmax"))
-        .select(F.col("w.start").alias("ws"), "user_id", "cnt", "vmin", "vmax")
-    )
-    want = {
-        (r["ws"], r["user_id"]): (r["cnt"], r["vmin"], r["vmax"])
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_stateful_detect_multichunk_batch(spark, tmp_path):
     """ADVICE r02: applyInPandasWithState delivers one key's batch as
     MULTIPLE unordered Arrow chunks once rows exceed arrow
@@ -236,7 +194,7 @@ def test_stateful_detect_multichunk_batch(spark, tmp_path):
 
     import pandas as pd
 
-    from engine.streaming import stateful_detect_stream
+    from engine.streaming import stateful_detect_stream_late
 
     w, k = 12, 2.5
     src = str(tmp_path / "events")
@@ -266,7 +224,7 @@ def test_stateful_detect_multichunk_batch(spark, tmp_path):
             "event_id long, ts timestamp, user_id long, value double"
         ).parquet(f"{src}/*")
         q = (
-            stateful_detect_stream(stream, w=w, k=k)
+            stateful_detect_stream_late(stream, w=w, k=k, reorder_seconds=0)
             .writeStream.format("parquet")
             .option("path", outdir)
             .outputMode("append")
@@ -447,52 +405,6 @@ def test_stream_detect_cli_end_to_end(spark, tmp_path):
     em = emitted.sort_values("event_id")
     assert (em["is_anom"].to_numpy() == want).all()
     assert bool(em[em["event_id"] == 25]["is_anom"].iloc[0])
-
-
-def test_sliding_window_batch_stream_parity(spark, tmp_path):
-    """Pin the documented twins to each other (round-5 verdict task #3):
-    q_sliding_window_counts (batch, DuckDB-oracled) and
-    windowed_event_counts(window='5 minutes', slide='1 minute') run in
-    availableNow mode over the SAME events fixture must produce the same
-    (window_start, user_id) -> (cnt, vsum) multiset."""
-    import shutil
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    import __spark_entry__ as entrymod
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
-    src = str(tmp_path / "events_stream")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "events.parquet"))
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(src)
-    agg = windowed_event_counts(stream, window="5 minutes", slide="1 minute")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("slidewin")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["ws"], r["user_id"]): (r["cnt"], r["vsum"])
-        for r in spark.sql(
-            "SELECT cast(unix_timestamp(window_start) as long) ws, user_id, "
-            "cnt, round(vsum, 4) vsum FROM slidewin"
-        ).collect()
-    }
-    want = {
-        (r["window_start"], r["user_id"]): (r["cnt"], r["vsum"])
-        for r in entrymod.queries()["sliding_window_counts"](spark, sf_dir).collect()
-    }
-    assert got == want and len(got) > 100
 
 
 def test_session_window_batch_stream_parity(spark, tmp_path):
@@ -797,121 +709,6 @@ def test_stream_detect_cli_psi_mode(spark, tmp_path):
         assert abs(last[et]["psi"] - w["psi"]) < 6e-5, et
 
 
-def test_dedup_stream_batch_parity(spark, tmp_path):
-    """dedup_stream (dropDuplicatesWithinWatermark) vs the batch exact
-    dedup over a stream where EVERY event is delivered twice (the same
-    parquet file copied twice into the source dir — the at-least-once
-    redelivery shape): the appended output must be exactly the distinct
-    row set, i.e. equal to batch DISTINCT on (event_id), no dupes, no
-    drops."""
-    import shutil
-    from pathlib import Path
-
-    from engine.streaming import dedup_stream
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
-    src = str(tmp_path / "dup_stream")
-    os.makedirs(src)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "a.parquet"))
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, "b.parquet"))
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # the two deliveries land in
-        .parquet(src)                     # separate micro-batches
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedupstream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql(
-        "SELECT event_id, count(*) c FROM dedupstream GROUP BY event_id"
-    ).collect()
-    batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    n_distinct = batch.select("event_id").distinct().count()
-    assert len(got) == n_distinct
-    assert all(r["c"] == 1 for r in got), "stream emitted a duplicate"
-    # every batch event survived (first arrival kept)
-    total = spark.sql("SELECT count(*) c FROM dedupstream").collect()[0]["c"]
-    assert total == n_distinct
-
-
-def test_stream_stream_interval_join_matches_batch_pairs(spark, tmp_path):
-    """interval_pair_stream (stream-stream interval join with two-sided
-    event-time bounds) vs the batch q_event_pairs_within_minute: per-user
-    pair counts over the same events fixture must be identical."""
-    import shutil
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from engine.streaming import interval_pair_stream
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
-    src = str(tmp_path / "pair_stream")
-    tbl = os.path.join(src, "events.parquet")  # a DIRECTORY: fixture + burst
-    os.makedirs(tbl)
-    shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                os.path.join(tbl, "part-0.parquet"))
-    # a crafted 20-event burst (5 s apart) makes the pair volume
-    # non-trivial: 20 events x 12 successors inside 60 s
-    burst = spark.createDataFrame(
-        [(10_000 + i, i * 5, 999, "burst", 1.0, "{}") for i in range(20)],
-        "event_id long, off long, user_id long, event_type string, "
-        "value double, props string",
-    ).select(
-        "event_id",
-        F.expr(
-            "timestamp'2024-01-05 00:00:00' + make_interval(0,0,0,0,0,0,off)"
-        ).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
-    burst.coalesce(1).write.mode("append").parquet(tbl)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    a = spark.readStream.schema(schema).parquet(tbl)
-    b = spark.readStream.schema(schema).parquet(tbl)
-    q = (
-        interval_pair_stream(a, b)
-        .writeStream.format("memory")
-        .queryName("pairstream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_pairs"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["user_id"]: r["pairs"]
-        for r in spark.sql(
-            "SELECT user_id, count(*) pairs FROM pairstream GROUP BY user_id"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: r["pairs"]
-        for r in entrymod.queries()["event_pairs_within_minute"](
-            spark, src
-        ).collect()
-    }
-    assert got == want
-    # 20 events 5 s apart: event i pairs with min(12, 19-i) successors
-    assert got[999] == sum(min(12, 19 - i) for i in range(20))  # = 162
-    assert sum(got.values()) > 100
-
-
 def test_psi_stream_cent_quantization_matches_batch_round(spark):
     """ADVICE r5: psi_stream quantizes cents with sign-aware
     floor(|v|*100 + 0.5) — HALF_UP, the same semantics as the batch
@@ -933,306 +730,3 @@ def test_psi_stream_cent_quantization_matches_batch_round(spark):
     v = np.asarray(vals, dtype=np.float64) * 100
     got = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype(np.int64)
     assert got.tolist() == want
-
-
-def test_latest_state_batch_stream_parity(spark, tmp_path):
-    """Round-6 twin pin: latest_state_stream (O(1)-state CDC compaction)
-    over TWO file drops with a checkpointed restart, compacted by
-    keeping each key's max-(last_ts_us, last_event_id) emitted row, must
-    equal the batch q_latest_state serving view row-for-row — including
-    a crafted same-timestamp tie (decided by event_id on both sides) and
-    a crafted LATE event in drop 2 (older than drop 1's head: it must
-    NOT displace the newer state)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    import __spark_entry__ as entrymod
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    # crafted rows: user 7001 gets two events at the SAME microsecond
-    # (tie -> higher event_id wins); the second lands in drop 2 but is
-    # event-time OLDER than user 7002's drop-2 event (late-arrival path)
-    crafted = spark.createDataFrame(
-        [
-            (900001, "2024-06-01 00:00:00", 7001, "click", 1.0),
-            (900003, "2024-06-01 00:00:00", 7001, "view", 2.0),
-            (900002, "2024-06-02 00:00:00", 7002, "click", 3.0),
-        ],
-        "event_id long, ts_s string, user_id long, event_type string, "
-        "value double",
-    ).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id",
-        "event_type", "value",
-    )
-    t_split = ev.agg(
-        F.expr("percentile(unix_timestamp(ts), 0.5)").cast("long").alias("t")
-    ).collect()[0]["t"]
-    d1 = ev.where(F.unix_timestamp("ts") < t_split).unionByName(
-        crafted.where(F.col("event_id") == 900001)
-    )
-    d2 = ev.where(F.unix_timestamp("ts") >= t_split).unionByName(
-        crafted.where(F.col("event_id") != 900001)
-    )
-    full = ev.unionByName(crafted)
-
-    src = str(tmp_path / "events_ls")
-    ckpt = str(tmp_path / "ckpt_ls")
-    outdir = str(tmp_path / "out_ls")
-    os.makedirs(src)
-
-    from engine.streaming import latest_state_stream
-
-    def run():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
-        ).parquet(f"{src}/*")
-        q = (
-            latest_state_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    d1.write.parquet(f"{src}/d1")
-    run()
-    d2.write.parquet(f"{src}/d2")
-    run()
-
-    # compact the append log exactly like a MERGE sink: last state per key
-    emitted = spark.read.parquet(outdir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("last_ts_us"), F.desc("last_event_id")
-    )
-    got = {
-        r["user_id"]: (
-            r["last_event_id"],
-            r["last_type"],
-            r["v4"],
-            r["last_ts_us"] // 1_000_000,
-        )
-        for r in emitted.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "user_id", "last_event_id", "last_type", "last_ts_us",
-            F.round("last_value", 4).alias("v4"),
-        )
-        .collect()
-    }
-
-    # batch twin over the full log (same Spark round applied by the query)
-    tmp = str(tmp_path / "sf_full")
-    os.makedirs(tmp)
-    full.write.parquet(os.path.join(tmp, "events.parquet"))
-    want = {
-        r["user_id"]: (
-            r["last_event_id"], r["last_type"], r["last_value"], r["last_ts"]
-        )
-        for r in entrymod.q_latest_state(spark, tmp).collect()
-    }
-    assert got == want
-    # the crafted semantics actually decided: tie by event_id, late loses
-    assert want[7001][0] == 900003 and want[7001][1] == "view"
-    assert want[7002][0] == 900002
-
-
-def test_flatline_batch_stream_parity(spark, tmp_path):
-    """Round-6 twin pin: flatline_stream (O(1)-state stuck-sensor alarm)
-    over TWO file drops with a checkpointed restart must emit, for every
-    event, the run length of identical HALF_UP cents ending at that
-    event — equal to an independent pandas gaps-and-islands recompute
-    over the full log. The crafted corpus includes a 12-reading constant
-    run SPLIT 6/6 across the restart boundary (drop-2 lengths must read
-    7..12, proving state carriage), an alternating series (every run
-    length 1), and an exact half-tie value (12.125 -> 1213 cents,
-    HALF_UP) that half-to-even rounding would misbin."""
-    import numpy as np
-    import pandas as pd
-
-    from engine.streaming import flatline_stream
-
-    rows = []
-    # user 8001: 12 identical readings, minute-spaced, split 6/6
-    for i in range(12):
-        rows.append((810000 + i, f"2024-06-01 00:{i:02d}:00", 8001, 7.25))
-    # user 8002: alternating values -> all runs length 1
-    for i in range(10):
-        rows.append(
-            (820000 + i, f"2024-06-01 00:{i:02d}:30", 8002,
-             1.0 if i % 2 else 2.0)
-        )
-    # user 8003: half-tie cents (12.125*100 = 1212.5 -> 1213 HALF_UP),
-    # twice, then a genuinely different cent (12.14 -> 1214; note 12.13
-    # would NOT break the run — it rounds to the same 1213), then the
-    # tie value again
-    for i, v in enumerate([12.125, 12.125, 12.14, 12.125]):
-        rows.append((830000 + i, f"2024-06-01 01:{i:02d}:00", 8003, v))
-    pdf_all = pd.DataFrame(
-        rows, columns=["event_id", "ts_s", "user_id", "value"]
-    )
-    ev = spark.createDataFrame(
-        pdf_all, "event_id long, ts_s string, user_id long, value double"
-    ).select(
-        "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "value"
-    )
-    d1 = ev.where(
-        (F.col("user_id") != 8001) | (F.col("event_id") < 810006)
-    ).where(F.col("user_id") != 8003)
-    d2 = ev.subtract(d1)
-
-    src = str(tmp_path / "events_fl")
-    ckpt = str(tmp_path / "ckpt_fl")
-    outdir = str(tmp_path / "out_fl")
-    os.makedirs(src)
-
-    def run():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        ).parquet(f"{src}/*")
-        q = (
-            flatline_stream(stream, flat_min=5)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    d1.write.parquet(f"{src}/d1")
-    run()
-    d2.write.parquet(f"{src}/d2")
-    run()
-
-    got = {
-        r["event_id"]: (r["cents"], r["run_len"], r["is_flat"])
-        for r in spark.read.parquet(outdir).collect()
-    }
-
-    # independent recompute: pandas gaps-and-islands over the full log
-    full = pdf_all.sort_values(["user_id", "ts_s", "event_id"]).copy()
-    v = full["value"].to_numpy(np.float64) * 100
-    full["c"] = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype(np.int64)
-    want = {}
-    for _, g in full.groupby("user_id", sort=False):
-        run_id = (g["c"] != g["c"].shift()).cumsum()
-        rl = g.groupby(run_id).cumcount() + 1
-        for eid, cc, r in zip(g["event_id"], g["c"], rl):
-            want[int(eid)] = (int(cc), int(r), bool(r >= 5))
-    assert got == want
-    # the crafted semantics actually decided:
-    assert got[810011] == (725, 12, True)   # spans the restart: 12 not 6
-    assert got[810006][1] == 7              # first drop-2 reading continues
-    assert all(got[820000 + i][1] == 1 for i in range(10))  # alternating
-    assert got[830000][0] == 1213           # HALF_UP half-tie cents
-    assert got[830002][0] == 1214           # the run breaker
-    assert got[830003][1] == 1              # broken by 12.14 in between
-
-
-def test_burn_stream_parity_and_restart(spark, tmp_path):
-    """burn_stream (engine/streaming.py): closed-hour burn rows across a
-    checkpointed two-drop run equal an independent pandas reference over
-    the full series (prefix-baseline semantics, integer cross-multiplied
-    flag), the drop boundary mid-hour does NOT split that hour (it stays
-    open in state and closes with all its events counted), and the final
-    open hour of the whole stream is never emitted."""
-    import numpy as np
-    import pandas as pd
-
-    from engine.streaming import burn_stream
-
-    t0 = 1704067200  # aligned to an hour boundary
-    rows = []
-    eid = 0
-    # user 1: 5 hours; hour 2 is an error storm (burning), hour 4 stays
-    # open. user 2: error-free (burning must be NULL on every row).
-    plan = {
-        1: [(0, 10, 1), (1, 8, 0), (2, 12, 9), (3, 10, 1), (4, 3, 0)],
-        2: [(0, 6, 0), (1, 6, 0), (2, 6, 0), (3, 2, 0)],
-    }
-    for uid, hours in plan.items():
-        for h, n, e in hours:
-            for k in range(n):
-                rows.append(
-                    (eid, t0 + h * 3600 + k * 60, uid,
-                     "error" if k < e else "click")
-                )
-                eid += 1
-    df = pd.DataFrame(rows, columns=["event_id", "epoch", "user_id", "event_type"])
-    df = df.sort_values("epoch").reset_index(drop=True)
-    # split mid-hour-2 so the drop boundary cuts an open hour
-    cut = int((df["epoch"] < t0 + 2 * 3600 + 600).sum())
-    src = str(tmp_path / "events_burn")
-    ckpt = str(tmp_path / "ckpt_burn")
-    outdir = str(tmp_path / "out_burn")
-    os.makedirs(src)
-
-    def write(part, name):
-        spark.createDataFrame(
-            part, "event_id long, epoch long, user_id long, event_type string"
-        ).select(
-            "event_id", F.timestamp_seconds("epoch").alias("ts"),
-            "user_id", "event_type",
-        ).coalesce(1).write.parquet(f"{src}/{name}")
-
-    def run():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string"
-        ).parquet(f"{src}/*")
-        q = (
-            burn_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    write(df.iloc[:cut], "d1")
-    run()
-    write(df.iloc[cut:], "d2")
-    run()
-
-    got = (
-        spark.read.parquet(outdir)
-        .toPandas()
-        .sort_values(["user_id", "hour"])
-        .reset_index(drop=True)
-    )
-
-    # independent reference: closed hours (all but each user's max hour),
-    # inclusive prefix baseline, integer cross-multiplied flag
-    want_rows = []
-    for uid, hours in plan.items():
-        cn = ce = 0
-        for h, n, e in hours[:-1]:
-            cn += n
-            ce += e
-            burning = None if ce == 0 else (e * cn >= 2 * n * ce)
-            want_rows.append((uid, h, n, e, cn, ce, burning))
-    want = pd.DataFrame(
-        want_rows,
-        columns=["user_id", "hour", "n", "n_err", "cum_n", "cum_err", "burning"],
-    ).sort_values(["user_id", "hour"]).reset_index(drop=True)
-    want["hour"] = want["hour"] + t0 // 3600
-
-    assert len(got) == len(want), (got, want)
-    for col in ("user_id", "hour", "n", "n_err", "cum_n", "cum_err"):
-        assert got[col].astype("int64").tolist() == want[col].astype("int64").tolist(), col
-    got_b = [None if pd.isna(x) else bool(x) for x in got["burning"]]
-    want_b = [x for x in want["burning"]]
-    assert got_b == want_b, (got_b, want_b)
-    # the storm hour is the only burning row
-    storm = got[(got["user_id"] == 1) & (got["hour"] == t0 // 3600 + 2)]
-    assert storm["burning"].tolist() == [True]
