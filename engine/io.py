@@ -19,7 +19,10 @@ contract over parquet + a JSON manifest that carries snapshot semantics:
   - the manifest owns the table schema (Iceberg's table metadata): the
     first commit records it, every later commit must match it (checked
     before any data is written), and every read imposes it, so no read
-    runs a parquet footer-inference job.
+    runs a parquet footer-inference job;
+  - data directories never change under a snapshot, so a read resolves
+    each snapshot's scan once per format instance and serves it again
+    with no JVM call (``read_at``).
 
 Swapping in Iceberg on a cluster touches only this module.
 """
@@ -38,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.schema import assert_tokens_schema
+from engine.skew import in_sql
 
 # Staged writes land under <warehouse>/STAGING_DIR/<uuid> before their
 # commit renames them into a table; TIER_COL routes a multi-table write.
@@ -139,6 +143,8 @@ class ParquetManifestFormat:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
+        # (table, snapshot id, committed_at_unix) -> its scan (read_at)
+        self._scans: dict[tuple, DataFrame] = {}
         os.makedirs(warehouse, exist_ok=True)
 
     # -- manifest helpers ---------------------------------------------------
@@ -325,33 +331,56 @@ class ParquetManifestFormat:
 
         A snapshot's live partitions generally span several immutable
         ``snap-N`` data directories (each incremental commit rewrote only a
-        subset). Spark's partition discovery cannot infer ``part_hash``
-        through the non-partition ``snap-N`` level when paths mix snap dirs
-        (CONFLICTING_DIRECTORY_STRUCTURES), so each snap dir is read with
-        itself as ``basePath`` and the reads are unioned — a union of
-        scan nodes, one per historical commit that still owns live
-        partitions (bounded by commit count, exactly like an Iceberg
-        manifest listing one file set per surviving snapshot)."""
+        subset). Each snap dir is read as ONE path, its own ``basePath``
+        (partition discovery cannot infer ``part_hash`` through the
+        non-partition ``snap-N`` level when paths mix snap dirs), and the
+        reads are unioned — one scan node per historical commit that still
+        owns live partitions (bounded by commit count, exactly like an
+        Iceberg manifest listing one file set per surviving snapshot).
+        When a dir also holds partitions that a later commit superseded
+        (or retention dropped), its branch gets one ``part_hash IN (...)``
+        filter of its live partitions, which partition pruning applies.
+
+        Snapshots are immutable, so the scan is resolved once per snapshot
+        and memoized on this instance: the manifest is loaded on every
+        call, and only a snapshot it still holds is looked up, keyed on
+        ``(table, snapshot id, committed_at_unix)`` — a warehouse rebuilt
+        at the same path commits the same ids at other times. Entries of
+        snapshots the manifest no longer holds (expired, or rebuilt) are
+        dropped on each call, so the memo holds at most the retained
+        snapshots. A repeated read of a snapshot costs no JVM call."""
         manifest = self._load(table)
+        live = {
+            (int(sid), s.get("committed_at_unix"))
+            for sid, s in manifest["snapshots"].items()
+        }
+        for key in [k for k in self._scans if k[0] == table and k[1:] not in live]:
+            del self._scans[key]
         snap = manifest["snapshots"].get(str(snapshot_id))
         if snap is None:
             raise ValueError(f"{table}: no snapshot {snapshot_id}")
-        by_dir: dict[str, list[int]] = {}
+        key = (table, int(snapshot_id), snap.get("committed_at_unix"))
+        if key not in self._scans:
+            self._scans[key] = self._scan(table, snapshot_id, snap, manifest.get("schema"))
+        return self._scans[key]
+
+    def _scan(self, table: str, snapshot_id: int, snap: dict, schema: dict | None) -> DataFrame:
+        """The union of one scan per snap dir of *snap* (see read_at)."""
+        by_dir: dict[str, set[int]] = {}
         for h, d in snap["partitions"].items():
-            by_dir.setdefault(d, []).append(int(h))
+            by_dir.setdefault(d, set()).add(int(h))
         if not by_dir:
             raise ValueError(f"{table}@{snapshot_id} is empty")
-        schema = manifest.get("schema")
-        dfs = []
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        out = None
         for d in sorted(by_dir):
-            paths = [os.path.join(d, f"part_hash={h}") for h in sorted(by_dir[d])]
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(T.StructType.fromJson(schema))
-            dfs.append(reader.option("basePath", d).parquet(*paths))
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
+            df = reader.parquet(d)
+            on_disk = {name for name in os.listdir(d) if name.startswith("part_hash=")}
+            if on_disk != {f"part_hash={h}" for h in by_dir[d]}:
+                df = df.where(in_sql("part_hash", sorted(by_dir[d])))
+            out = df if out is None else out.unionByName(df)
         return out
 
     def snapshot_dirs(self, table: str, snapshot_id: int | None = None) -> dict:

@@ -7,18 +7,24 @@ action. No Python kernels anywhere on this path, with one deliberate
 exception: serve_raw_points (Q5) decodes compression payloads in one
 mapInArrow pass (engine/compression.py::decode_raw_points) after Catalyst
 has pruned the scan.
+
+Planning is driver work whose cost is counted in py4j round trips, so it
+is kept independent of the partitions, docs and snap dirs a read covers:
+each filter is one SQL string built from validated values
+(engine/skew.py: in_sql, doc_buckets_filter), the cascade is fixed SQL
+text (engine/rollup.py), and a snapshot's scan is resolved once per
+format instance (engine/io.py::read_at).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from engine.io import ParquetManifestFormat, scan_tier
 from engine.lineage import committed_partition_snapshots
 from engine.rollup import cascade
 from engine.schema import DEFAULT_N_BUCKETS, TIER_ORDER, TIER_SECONDS
-from engine.skew import doc_buckets_filter, with_part_hash
+from engine.skew import doc_buckets_filter, in_sql, sql_int, with_part_hash
 
 
 def resolution_pick(resolution_seconds: int) -> str:
@@ -37,20 +43,22 @@ def resolution_pick(resolution_seconds: int) -> str:
 
 def anomaly_filter(rollup: DataFrame) -> DataFrame:
     """Q3: only buckets containing at least one flagged point."""
-    return rollup.where(F.col("anom_cnt") > 0)
+    return rollup.where("anom_cnt > 0")
 
 
 def range_filter(rollup: DataFrame, tier: str, t0: int | None, t1: int | None) -> DataFrame:
     """Q4: positional time-range slice [t0, t1) in raw steps. The predicate
     is on the bucket column — sargable, so it prunes row groups (and, with
-    bucket-range partitioning on a cluster, whole partitions)."""
+    bucket-range partitioning on a cluster, whole partitions). Both
+    bounds are one SQL predicate of int literals (engine/skew.py::sql_int:
+    a non-int bound raises TypeError)."""
     b = TIER_SECONDS[tier]
-    out = rollup
+    bounds = []
     if t0 is not None:
-        out = out.where(F.col("bucket") >= t0 // b)
+        bounds.append(f"bucket >= {sql_int(t0 // b)}")
     if t1 is not None:
-        out = out.where(F.col("bucket") <= (t1 - 1) // b)
-    return out
+        bounds.append(f"bucket <= {sql_int((t1 - 1) // b)}")
+    return rollup.where(" AND ".join(bounds)) if bounds else rollup
 
 
 def tier_fallback(
@@ -109,10 +117,13 @@ def tier_fallback(
         pieces = []
         for s in sorted(by_snap):
             df = scan_tier(fmt, t, None if s < 0 else s)
+            conds = []
             if len(by_snap[s]) < n_buckets:  # else the IN list prunes nothing
-                df = df.where(F.col("part_hash").isin(by_snap[s]))
+                conds.append(in_sql("part_hash", sorted(by_snap[s])))
             if doc_filter is not None:
-                df = df.where(doc_filter)
+                conds.append(doc_filter)
+            if conds:
+                df = df.where(" AND ".join(conds))
             pieces.append(df)
         out = pieces[0]
         for df in pieces[1:]:
@@ -188,8 +199,8 @@ def serve_raw_points(
 
     df = range_filter(rollup_1m, "1m", t0, t1)
     if doc_ids:
-        df = df.where(F.col("doc_id").isin(doc_ids))
-    payloads = df.where(F.col("cnt") > 0).hint("rebalance")
+        df = df.where(in_sql("doc_id", doc_ids))
+    payloads = df.where("cnt > 0").hint("rebalance")
     return decode_raw_points(payloads, t0, t1, on_error)
 
 
@@ -213,10 +224,10 @@ def downsample(
     df = tier_fallback(spark, fmt, tier, checkpoint_epoch, n_buckets, doc_ids)
     df = range_filter(df, tier, t0, t1)
     if doc_ids:
-        df = df.where(F.col("doc_id").isin(doc_ids))
+        df = df.where(in_sql("doc_id", doc_ids))
     if anomalies_only:
         df = anomaly_filter(df)
-    return df.select(
+    return df.selectExpr(
         "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
         "vmean", "anom_cnt", "first_v", "last_v",
     )

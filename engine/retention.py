@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from engine.io import ParquetManifestFormat
 from engine.schema import TIER_SECONDS
+from engine.skew import in_sql, sql_int
 
 
 def expired_cutoff_bucket(tier: str, now_t: int, retain_seconds: int) -> int:
@@ -100,9 +101,7 @@ def apply_retention(
             m["dropped_partitions"] = len(fully)
         # (3) rewrite only the straddlers, keeping retained rows
         if straddle:
-            keep = df.where(
-                F.col("part_hash").isin(straddle) & (F.col("bucket") >= cutoff)
-            )
+            keep = df.where(f"{in_sql('part_hash', straddle)} AND bucket >= {sql_int(cutoff)}")
             fmt.overwrite_partitions(keep, table, n_buckets=len(straddle))
             m["rewritten_partitions"] = len(straddle)
     return metrics

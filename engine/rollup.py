@@ -23,12 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from engine.schema import EPOCH0_EPOCH_SECONDS, TIER_SECONDS
-
-
-def _bucket_ts(bucket_col, bucket_seconds: int):
-    return F.timestamp_seconds(
-        F.lit(EPOCH0_EPOCH_SECONDS) + bucket_col * F.lit(bucket_seconds)
-    )
+from engine.skew import sql_int
 
 
 def cascade(rollup_fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFrame:
@@ -37,31 +32,30 @@ def cascade(rollup_fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFra
     Exact because only min/max/sum/cnt cascade; vmean is recomputed from the
     cascaded vsum/cnt. first_v/last_v chain via min_by/max_by on the fine
     bucket id (null-bucket-stat rows ignored through the null ordering key).
+
+    Every expression is fixed SQL text over code constants, parsed once by
+    the JVM: a Column tree would cost the driver a gateway round trip per
+    node. The aggregate lists the output columns in order, bucket_ts and
+    vmean included, so no projection follows it.
     """
     bf, bc = TIER_SECONDS[fine_tier], TIER_SECONDS[coarse_tier]
     if bc % bf != 0 or bc <= bf:
         raise ValueError(f"cannot cascade {fine_tier} -> {coarse_tier}")
-    ratio = bc // bf
-    bucket_if_data = F.when(F.col("first_v").isNotNull(), F.col("bucket"))
-    out = (
-        rollup_fine.groupBy(
-            "doc_id", F.expr(f"bucket DIV {ratio}").alias("bucket")
-        )
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-            F.sum("anom_cnt").alias("anom_cnt"),
-            F.min_by("first_v", bucket_if_data).alias("first_v"),
-            F.max_by("last_v", bucket_if_data).alias("last_v"),
-        )
-        .withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt"), F.lit(0)))
-        .withColumn("bucket_ts", _bucket_ts(F.col("bucket"), bc))
+    coarse = f"bucket DIV {sql_int(bc // bf)}"
+    data_bucket = "CASE WHEN first_v IS NOT NULL THEN bucket END"
+    aggs = (
+        f"timestamp_seconds({sql_int(EPOCH0_EPOCH_SECONDS)} + ({coarse}) * {sql_int(bc)}) AS bucket_ts",
+        "sum(cnt) AS cnt",
+        "min(vmin) AS vmin",
+        "max(vmax) AS vmax",
+        "sum(vsum) AS vsum",
+        "sum(vsum) / nullif(sum(cnt), 0) AS vmean",
+        "sum(anom_cnt) AS anom_cnt",
+        f"min_by(first_v, {data_bucket}) AS first_v",
+        f"max_by(last_v, {data_bucket}) AS last_v",
     )
-    return out.select(
-        "doc_id", "bucket", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
-        "vmean", "anom_cnt", "first_v", "last_v",
+    return rollup_fine.groupBy("doc_id", F.expr(f"{coarse} AS bucket")).agg(
+        *[F.expr(a) for a in aggs]
     )
 
 

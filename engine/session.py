@@ -172,8 +172,8 @@ def get_spark(
         # cost (~0.15 s) dwarfs listing a manifest read's <= n_buckets
         # leaf dirs. The default 32 predates driver-side parallel listing;
         # a distributed job only pays off at many thousands of paths —
-        # production tables here expose at most n_buckets partition dirs
-        # per snap dir (engine/io.py read_at), far below 1024.
+        # read_at (engine/io.py) lists one path per snap dir, holding at
+        # most n_buckets partition dirs, far below 1024.
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             os.environ.get("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "1024"),

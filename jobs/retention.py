@@ -47,6 +47,7 @@ from engine.lineage import lineage_record, read_lineage
 from engine.retention import apply_retention
 from engine.schema import TIER_ORDER
 from engine.session import get_spark
+from engine.skew import in_sql
 
 _DUR = {"s": 1, "m": 60, "h": 3600, "d": 86400}
 
@@ -131,8 +132,8 @@ def run_snapshot_expiry(
         lineage = read_lineage(spark, warehouse)
         rows = (
             lineage.where(
-                F.col("tier").isin(list(tiers))
-                & F.col("checkpoint_epoch").isin([int(e) for e in pin_epochs])
+                f"{in_sql('tier', list(tiers))} AND "
+                f"{in_sql('checkpoint_epoch', [int(e) for e in pin_epochs])}"
             )
             .select("tier", "checkpoint_epoch", "output_snapshot_id")
             .distinct()

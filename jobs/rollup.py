@@ -43,7 +43,7 @@ from engine.schema import (
     TIER_ORDER,
 )
 from engine.session import get_spark
-from engine.skew import with_part_hash
+from engine.skew import in_sql, sql_str, with_part_hash
 from engine.util import planned_input_bytes as _planned_input_bytes
 from engine.util import planned_partitions as _planned_partitions
 
@@ -227,11 +227,11 @@ def _carried(fmt, tokens_df, pending, n_buckets):
                 for r in with_part_hash(tokens_df, n_buckets)
                 .select("part_hash").distinct().collect()
             ]
-            rows = rest_1m.where(F.col("part_hash").isin(touched))
+            rows = rest_1m.where(in_sql("part_hash", touched))
         else:
             fine = rest_1m
             if len(pending[tier]) < n_buckets:
-                fine = fine.where(F.col("part_hash").isin(pending[tier]))
+                fine = fine.where(in_sql("part_hash", pending[tier]))
             rows = with_part_hash(
                 cascade(fine.drop("part_hash", "ts_dod", "v_gorilla"), "1m", tier)
                 .withColumn("ts_dod", F.lit(None).cast("binary"))
@@ -270,7 +270,7 @@ def _run_tiers(
     union = sorted(set().union(*pending.values()))
     toks = with_part_hash(tokens_df, n_buckets)
     if len(union) < n_buckets:
-        toks = toks.where(F.col("part_hash").isin(union))
+        toks = toks.where(in_sql("part_hash", union))
     df, py_tasks = _build_tiers(
         spark, toks.drop("part_hash"), list(pending), w, k, policy, compress,
     )
@@ -280,10 +280,10 @@ def _run_tiers(
             df = df.unionByName(rows)
     # each tier writes only its own pending partitions
     if any(len(p) < n_buckets for p in pending.values()):
-        keep = F.lit(False)
-        for tier, p in pending.items():
-            keep = keep | ((F.col(TIER_COL) == tier) & F.col("part_hash").isin(p))
-        df = df.where(keep)
+        df = df.where(" OR ".join(
+            f"({TIER_COL} = {sql_str(tier)} AND {in_sql('part_hash', p)})"
+            for tier, p in pending.items()
+        ))
 
     t_last = t_start
     t_written = None

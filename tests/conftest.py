@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 import random
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -144,3 +145,24 @@ def ora(token_rows):
     from engine import oracle
 
     return oracle.pipeline_oracle(token_rows)
+
+
+@contextmanager
+def gateway_commands(spark):
+    """Collect the py4j commands the driver sends to the JVM inside the
+    block, memory release (``m\\nd``, sent when a Python proxy of a JVM
+    object is garbage-collected) left out."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = send

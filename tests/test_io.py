@@ -124,6 +124,79 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     ]
 
 
+# -- read_at: one scan per snap dir, memoized per snapshot --
+
+_ROWS = "doc_id string, bucket long, vmean double"
+
+
+def _commit(spark, fmt, rows) -> int:
+    return fmt.overwrite_partitions(
+        with_part_hash(spark.createDataFrame(rows, _ROWS)), "rollup_1m"
+    )
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select("doc_id", "bucket", "vmean").collect())
+
+
+def test_read_at_serves_live_partitions_and_memoizes_the_scan(spark, tmp_path):
+    """A snapshot over two snap dirs serves only its live partitions: the
+    older dir still holds the partition the later commit superseded. A
+    second read of the snapshot through the same instance sends the JVM
+    no command but memory release, and returns the same scan."""
+    from engine.io import ParquetManifestFormat
+    from tests.conftest import gateway_commands
+
+    fmt = ParquetManifestFormat(spark, str(tmp_path / "wh"))
+    s1 = _commit(spark, fmt, [(f"d{i}", 1, float(i)) for i in range(8)])
+    s2 = _commit(spark, fmt, [("d0", 1, 100.0)])
+    assert len(fmt.snapshot_dirs("rollup_1m", s2)) == 2
+    old = fmt.read_at("rollup_1m", s1).collect()
+    superseded = {r["part_hash"] for r in old if r["doc_id"] == "d0"}
+    want = sorted(
+        [("d0", 1, 100.0)]
+        + [(r["doc_id"], 1, r["vmean"]) for r in old if r["part_hash"] not in superseded]
+    )
+    first = fmt.read_at("rollup_1m", s2)
+    with gateway_commands(spark) as sent:
+        again = fmt.read_at("rollup_1m", s2)
+    assert sent == [] and again is first
+    assert _rows(again) == want
+
+
+def test_read_at_memo_misses_a_warehouse_rebuilt_at_the_same_path(spark, tmp_path):
+    """A warehouse deleted and rebuilt at the same path commits the same
+    snapshot id again; the instance that read the old one serves the new
+    rows."""
+    import shutil
+
+    from engine.io import ParquetManifestFormat
+
+    wh = str(tmp_path / "wh")
+    fmt = ParquetManifestFormat(spark, wh)
+    sid = _commit(spark, fmt, [("a", 1, 1.0), ("b", 1, 2.0)])
+    assert _rows(fmt.read_at("rollup_1m", sid)) == [("a", 1, 1.0), ("b", 1, 2.0)]
+    shutil.rmtree(wh)
+    assert _commit(spark, fmt, [("c", 2, 3.0)]) == sid
+    assert _rows(fmt.read_at("rollup_1m", sid)) == [("c", 2, 3.0)]
+
+
+def test_read_at_memo_forgets_expired_snapshots(spark, tmp_path):
+    """After expire_snapshots, reading an expired id raises and the
+    instance holds no scan of it; the retained snapshot still reads."""
+    from engine.io import ParquetManifestFormat
+
+    fmt = ParquetManifestFormat(spark, str(tmp_path / "wh"))
+    sids = [_commit(spark, fmt, [("a", 1, float(i))]) for i in range(3)]
+    for sid in sids:
+        fmt.read_at("rollup_1m", sid)
+    fmt.expire_snapshots("rollup_1m", keep_last=1)
+    with pytest.raises(ValueError, match=f"no snapshot {sids[0]}"):
+        fmt.read_at("rollup_1m", sids[0])
+    assert {sid for _, sid, _ in fmt._scans} == {sids[-1]}
+    assert _rows(fmt.read_at("rollup_1m", sids[-1])) == [("a", 1, 2.0)]
+
+
 # -- the session's local FileSystem (engine/jvm/NoForkLocalFileSystem.java) --
 
 _NO_FORK = "engine.jvm.NoForkLocalFileSystem"

@@ -129,6 +129,40 @@ def test_tier_reads_run_no_inference_job(spark, tokens_path, tmp_path):
     assert {r["doc_id"] for r in df.collect()} == set(docs)
 
 
+# Gateway commands to plan the fallback read below, measured with PySpark
+# 4.1: 607 when every read resolved its scans again, one path per
+# part_hash dir, and predicates and the cascade were Column trees; 81 with
+# memoized scans and SQL-text predicates. The bound leaves ~50 % headroom.
+FALLBACK_PLAN_COMMANDS = 120
+
+
+def test_fallback_read_plans_in_few_gateway_commands(spark, tokens_path, tmp_path):
+    """Planning a read costs the driver a bounded number of JVM calls,
+    independent of the partitions, docs and snap dirs it covers. The read
+    is a 2-doc 1d downsample that cascades from 1h (1d is uncommitted)
+    over a snapshot spanning two snap dirs, planned once before counting
+    so its scans are resolved."""
+    from engine.io import ParquetManifestFormat, scan_tokens
+    from engine.query import downsample
+    from jobs.rollup import run_rollup
+    from tests.conftest import gateway_commands
+
+    wh = str(tmp_path / "wh")
+    toks = scan_tokens(spark, tokens_path)
+    run_rollup(spark, toks, wh, epoch=1, tiers=["1m", "1h"], compress=False)
+    few = ["doc_00000001", "doc_00000002", "doc_00000003"]
+    run_rollup(spark, toks.where(F.col("doc_id").isin(few)), wh, epoch=2,
+               tiers=["1m", "1h"], compress=False)
+    fmt = ParquetManifestFormat(spark, wh)
+    assert len(fmt.snapshot_dirs("rollup_1h")) == 2
+    docs = ["doc_00000001", "doc_00000004"]
+    downsample(spark, fmt, 2, docs, resolution_seconds=86400)
+    with gateway_commands(spark) as sent:
+        df = downsample(spark, fmt, 2, docs, resolution_seconds=86400)
+    assert len(sent) <= FALLBACK_PLAN_COMMANDS, len(sent)
+    assert {r["doc_id"] for r in df.collect()} == set(docs)
+
+
 def _fused_stage(spark, path):
     """The fused frame of every tier run_rollup builds over the parquet
     input at *path*: (plan, planned Python tasks, the frame's partitions,

@@ -228,6 +228,68 @@ def test_serve_raw_points_from_payloads(spark, small_tokens, tmp_path):
     assert "bucket" in plan.split("ArrowEvalPython")[0] or "PushedFilters" in plan
 
 
+# quote, backslash, comment marker, parenthesis, newline, non-ASCII, empty
+ODD_DOC_IDS = ["it's", "back\\slash", "a--b", "x)", "two\nlines",
+               "dôc'); DROP--", "ünï☃", ""]
+
+
+def test_reads_serve_doc_ids_exactly_whatever_their_characters(spark, tmp_path):
+    """Doc ids reach read predicates as SQL text (engine/skew.py): ids
+    holding SQL metacharacters are served exactly by downsample (the 1h
+    tier, and 1d cascaded from it) and serve_raw_points, alone and
+    together, and no other doc's rows leak in."""
+    import random
+
+    from engine import oracle
+    from engine.query import serve_raw_points
+    from engine.schema import TOKENS_SCHEMA
+
+    rng = random.Random(7)
+    rows = [
+        {"doc_id": d, "n_tok": 300, "source": "cc",
+         "tokens": [None if rng.random() < 0.05 else rng.randrange(50000)
+                    for _ in range(300)]}
+        for d in ODD_DOC_IDS + [f"doc_{i:08d}" for i in range(24)]
+    ]
+    wh = str(tmp_path / "odd")
+    run_rollup(spark, spark.createDataFrame(rows, TOKENS_SCHEMA), wh, epoch=1,
+               tiers=["1m", "1h"])
+    fmt = ParquetManifestFormat(spark, wh)
+    points = {
+        r["doc_id"]: [(r["doc_id"], t, v)
+                      for t, v in enumerate(oracle.gap_fill_series(r["tokens"]))
+                      if v is not None]
+        for r in rows
+    }
+    full = {res: sorted(tuple(r) for r in downsample(
+        spark, fmt, 1, resolution_seconds=res).collect()) for res in (3600, 86400)}
+    r1m = fmt.read("rollup_1m")
+    for docs in [[d] for d in ODD_DOC_IDS] + [ODD_DOC_IDS]:
+        for res, want in full.items():
+            got = sorted(tuple(r) for r in downsample(
+                spark, fmt, 1, docs, resolution_seconds=res).collect())
+            assert got == [r for r in want if r[0] in docs] and got, (docs, res)
+        got = sorted(tuple(r) for r in serve_raw_points(r1m, doc_ids=docs).collect())
+        assert got == sorted(p for d in docs for p in points[d]), docs
+
+
+@pytest.mark.parametrize("bad", ["1) OR (1=1", 1.5, True, None])
+def test_int_literals_reject_non_ints_before_any_sql(spark, bad):
+    """Ints reach SQL text only as ints: anything else raises TypeError
+    before a predicate is built."""
+    from engine.query import range_filter
+    from engine.skew import in_sql, sql_int
+
+    with pytest.raises(TypeError):
+        sql_int(bad)
+    if not isinstance(bad, str):  # in_sql spells a str as a string literal
+        with pytest.raises(TypeError):
+            in_sql("part_hash", [1, bad])
+    if isinstance(bad, (str, float)):  # None is no bound; True // 3600 is 0
+        with pytest.raises(TypeError):
+            range_filter(spark.range(1), "1h", bad, None)
+
+
 def test_lineage_metrics_queryable(spark, small_tokens, tmp_path):
     wh = str(tmp_path / "lin")
     run_rollup(spark, small_tokens, wh, epoch=1)
