@@ -372,20 +372,14 @@ def _pack_frames(
     goff = cb + np.repeat(fboff[:-1] * 8 - cb[estarts], ec)
     words = np.zeros(int(fboff[-1]) // 8 + 2, dtype=np.uint64)
 
-    # INVARIANT (callers): ev[k] < 2**eb[k] — every encoder emits values
-    # already confined to their declared widths (prefix|payload built per
-    # branch), so no defensive mask pass here; the per-frame byte-identity
+    # INVARIANTS (callers): ev[k] < 2**eb[k] and eb[k] >= 1 — every encoder
+    # emits a dense entry stream (no zero-width slot) of values already
+    # confined to their declared widths (prefix|payload built per branch),
+    # so no gather or defensive mask pass here; the per-frame byte-identity
     # fuzz vs the sequential encoders pins this.
-    if eb.size == 0 or int(eb.min()) > 0:
-        # dense entry stream (gorilla round-5 layout): nothing to drop
-        v, nb, off = ev, eb.astype(np.uint64), goff
-    else:
-        use = eb > 0
-        v = ev[use]
-        nb = eb[use].astype(np.uint64)
-        off = goff[use]
-    w = off >> 6
-    o = (off & 63).astype(np.uint64)
+    nb = eb.astype(np.uint64)
+    w = goff >> 6
+    o = (goff & 63).astype(np.uint64)
     end = o + nb
     spill = end > 64
     # main word holds the entry's high bits: left-align when it fits,
@@ -393,9 +387,9 @@ def _pack_frames(
     sh1 = np.where(spill, end - np.uint64(64), np.uint64(64) - end)
     shr = np.where(spill, sh1, np.uint64(0))
     shl = np.where(spill, np.uint64(0), sh1)
-    _scatter_or(words, w, (v >> shr) << shl)
+    _scatter_or(words, w, (ev >> shr) << shl)
     if spill.any():
-        sv = v[spill]
+        sv = ev[spill]
         sh2 = np.uint64(128) - end[spill]
         _scatter_or(words, w[spill] + 1, (sv << sh2) & _M64)
     return words.astype(">u8").tobytes(), fboff
@@ -415,8 +409,8 @@ def _dod_entries(ts_flat: np.ndarray, counts: np.ndarray) -> tuple:
     Round-7 layout: DENSE entry stream (the gorilla round-5 shape) — per
     frame 2 header slots (+1 first-value slot when n >= 1), ONE slot per
     later point, plus one 64-bit raw slot right after each '1111'-prefixed
-    big dod. No zero-width slots exist, so _pack_frames takes its dense
-    fast path (no entry gather), and every entry array is half the size of
+    big dod. No zero-width slots exist (_pack_frames relies on it, with
+    no entry gather), and every entry array is half the size of
     the old 2-slots-per-point frame-major layout. Point slots additionally
     default to (v=0, b=1) — the dod == 0 single-'0'-bit case that
     dominates regular streams — so the bucket classification and its
@@ -523,8 +517,8 @@ def _gorilla_entries(vals_flat: np.ndarray, counts: np.ndarray) -> tuple:
     rare on real token streams), so the entry stream is laid out DENSE:
     per frame 2 header slots (+1 first-value slot when n >= 1), one slot
     per later point, plus one overflow slot right after each unfused
-    point. No zero-width slots exist, which lets _pack_frames skip its
-    entry gather entirely; slot positions come from a segmented exclusive
+    point. No zero-width slots exist, which _pack_frames relies on (no
+    entry gather); slot positions come from a segmented exclusive
     cumsum of the overflow flags."""
     vs = np.asarray(vals_flat, dtype=np.int64)
     counts = np.asarray(counts, dtype=np.int64)

@@ -180,9 +180,7 @@ class ParquetManifestFormat:
         self,
         df: DataFrame,
         table: str | dict[str, str],
-        n_buckets: int | None = None,
         sort_within=None,
-        rebalance: bool = False,
         on_commit=None,
     ) -> int:
         """S2: atomically replace exactly the partitions present in *df*.
@@ -204,13 +202,21 @@ class ParquetManifestFormat:
         and the staged data of the tables not yet committed is deleted
         unread. Returns the last committed snapshot id.
 
+        Every write distributes one way: a REBALANCE hint on the partition
+        keys (the Iceberg ``write.distribution-mode=hash`` shape). Each
+        partition lands in one task, so it is one file rather than one per
+        task, and AQE sizes the task count from the data: small commits
+        ride in a task or two, and only an oversized partition is split
+        into several bounded files.
+
         ``sort_within`` (a Column expression or list of them) clusters
-        rows inside each task's file AFTER the part_hash co-location
-        shuffle — the Iceberg write sort-order / Delta OPTIMIZE ZORDER
-        hook (engine/zorder.py builds the Morton key). A pure expression
-        sort: nothing is materialized into the written schema, and the
-        snapshot/manifest protocol is unchanged — row ORDER inside
-        immutable files is the only difference.
+        rows inside each partition's file — the Iceberg write sort-order /
+        Delta OPTIMIZE ZORDER hook (engine/zorder.py builds the Morton
+        key). Rows are sorted by the partition keys first, so a task that
+        holds several partitions already meets the writer's partition
+        ordering and keeps the clustering inside each. A pure expression
+        sort: nothing is materialized into the written schema, and row
+        ORDER inside immutable files is the only difference.
 
         A table's first commit records *df*'s schema (``part_hash``
         included, ``tier`` not, every field nullable, as parquet stores
@@ -228,30 +234,10 @@ class ParquetManifestFormat:
             manifest = self._load(t)
             if int(manifest["current"]) > 0 and "schema" in manifest:
                 _check_drift(t, T.StructType.fromJson(manifest["schema"]), schema)
-        # Co-locate each part_hash into one task before the dynamic-partition
-        # write: otherwise every task opens a writer per partition value
-        # (tasks x N_BUCKETS tiny files). One shuffle of already-aggregated
-        # rows buys one file per partition — at 100 TB this is the difference
-        # between N_BUCKETS files and N_BUCKETS x shuffle_partitions.
-        #
-        # ``rebalance=True`` (round 7, guide §6 "REBALANCE hint before the
-        # write"): same clustering, but AQE sizes the task count from the
-        # data — the small coarse tiers ride in one or two write tasks
-        # instead of N_BUCKETS near-empty ones, and an oversized partition
-        # is skew-split into several bounded files (the Iceberg
-        # write.distribution-mode=hash shape). Off for callers that chain
-        # sortWithinPartitions (z-order compaction): a coalesced task holds
-        # several part_hash values and the writer's partition-sort would
-        # reorder across them.
-        from engine.schema import DEFAULT_N_BUCKETS
-
-        if rebalance and sort_within is None:
-            df = df.hint("rebalance", *keys)
-        else:
-            df = df.repartition(int(n_buckets or DEFAULT_N_BUCKETS), *keys)
+        df = df.hint("rebalance", *keys)
         if sort_within is not None:
             cols = sort_within if isinstance(sort_within, list) else [sort_within]
-            df = df.sortWithinPartitions(*cols)
+            df = df.sortWithinPartitions(*keys, *cols)
         staged = os.path.join(self.warehouse, STAGING_DIR, uuid.uuid4().hex)
         snap_id = 0
         try:
@@ -267,13 +253,12 @@ class ParquetManifestFormat:
 
     def _commit_dir(self, table: str, src: str, schema: T.StructType) -> int:
         """Rename the staged dir *src* (absent: no rows) to the table's next
-        ``snap-<N>`` and swap the manifest to a snapshot that maps its
-        part_hash dirs there."""
+        ``snap-<N>`` and commit a snapshot that maps its part_hash dirs
+        there."""
         manifest = self._load(table)
         if int(manifest["current"]) == 0:
             manifest["schema"] = json.loads(schema.json())
-        snap_id = int(manifest["current"]) + 1
-        data_dir = os.path.join(self.warehouse, table, f"snap-{snap_id}")
+        data_dir = os.path.join(self.warehouse, table, f"snap-{int(manifest['current']) + 1}")
         if os.path.lexists(data_dir):
             # left by a crash after its rename, before its manifest swap
             if os.path.basename(data_dir) in _live_dir_names(manifest):
@@ -284,21 +269,11 @@ class ParquetManifestFormat:
             os.replace(src, data_dir)
         else:
             os.makedirs(data_dir)
-        written = [
-            int(name.split("=", 1)[1])
-            for name in os.listdir(data_dir)
-            if name.startswith("part_hash=")
-        ]
-        parts = dict(manifest["snapshots"][str(manifest["current"])]["partitions"])
-        for h in written:
-            parts[str(h)] = data_dir
-        manifest["snapshots"][str(snap_id)] = {
-            "partitions": parts,
-            "committed_at_unix": time.time(),
-        }
-        manifest["current"] = snap_id
-        self._store(table, manifest)
-        return snap_id
+        parts = _current_partitions(manifest)
+        for name in os.listdir(data_dir):
+            if name.startswith("part_hash="):
+                parts[str(int(name.split("=", 1)[1]))] = data_dir
+        return self._commit(table, manifest, parts)
 
     def drop_partitions(self, table: str, part_hashes: list[int]) -> int:
         """Metadata-only commit removing partitions from the CURRENT view
@@ -306,12 +281,18 @@ class ParquetManifestFormat:
         file is touched: prior snapshots still reference the dirs, so time
         travel to before the drop still serves the rows."""
         manifest = self._load(table)
-        snap_id = int(manifest["current"]) + 1
-        parts = dict(manifest["snapshots"][str(manifest["current"])]["partitions"])
+        parts = _current_partitions(manifest)
         for h in part_hashes:
             parts.pop(str(int(h)), None)
+        return self._commit(table, manifest, parts)
+
+    def _commit(self, table: str, manifest: dict, partitions: dict) -> int:
+        """The commit point of every snapshot: add the snapshot after
+        *manifest*'s current one, mapping *partitions* (part_hash -> data
+        dir), make it current and swap the manifest. Returns its id."""
+        snap_id = int(manifest["current"]) + 1
         manifest["snapshots"][str(snap_id)] = {
-            "partitions": parts,
+            "partitions": partitions,
             "committed_at_unix": time.time(),
         }
         manifest["current"] = snap_id
@@ -366,9 +347,7 @@ class ParquetManifestFormat:
 
     def _scan(self, table: str, snapshot_id: int, snap: dict, schema: dict | None) -> DataFrame:
         """The union of one scan per snap dir of *snap* (see read_at)."""
-        by_dir: dict[str, set[int]] = {}
-        for h, d in snap["partitions"].items():
-            by_dir.setdefault(d, set()).add(int(h))
+        by_dir = _by_dir(snap)
         if not by_dir:
             raise ValueError(f"{table}@{snapshot_id} is empty")
         reader = self.spark.read
@@ -392,10 +371,7 @@ class ParquetManifestFormat:
         snap = manifest["snapshots"].get(str(sid))
         if snap is None:
             raise ValueError(f"{table}: no snapshot {sid}")
-        by_dir: dict[str, list[int]] = {}
-        for h, d in snap["partitions"].items():
-            by_dir.setdefault(d, []).append(int(h))
-        return by_dir
+        return _by_dir(snap)
 
     def expire_snapshots(
         self,
@@ -455,6 +431,19 @@ class ParquetManifestFormat:
         return self.read_at(table, self.current_snapshot(table))
 
 
+def _current_partitions(manifest: dict) -> dict[str, str]:
+    """A copy of the current snapshot's part_hash -> data dir map."""
+    return dict(manifest["snapshots"][str(manifest["current"])]["partitions"])
+
+
+def _by_dir(snap: dict) -> dict[str, list[int]]:
+    """data dir -> the part_hashes *snap* maps to it."""
+    by_dir: dict[str, list[int]] = {}
+    for h, d in snap["partitions"].items():
+        by_dir.setdefault(d, []).append(int(h))
+    return by_dir
+
+
 def _live_dir_names(manifest: dict) -> set[str]:
     """Basenames of the data dirs any snapshot in *manifest* references."""
     return {
@@ -482,12 +471,3 @@ def _check_drift(table: str, recorded: T.StructType, written: T.StructType) -> N
         )
         raise ValueError(f"{table}: commit schema drifts from the table's ({'; '.join(diff)})")
 
-
-def scan_tier(
-    fmt: ParquetManifestFormat, tier: str, snapshot_id: int | None = None
-) -> DataFrame:
-    """S3 wrapper."""
-    table = f"rollup_{tier}"
-    if snapshot_id is None:
-        return fmt.read(table)
-    return fmt.read_at(table, snapshot_id)

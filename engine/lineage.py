@@ -34,8 +34,12 @@ null and are not checked.
 
 Lineage storage is an append-only parquet directory: each commit writes one
 immutable file via pyarrow (driver-side, rows are tiny — one per partition),
-so no Spark job and no read-modify-write race. On a real cluster this table
-would be an Iceberg append; the contract is identical.
+so no Spark job and no read-modify-write race. Every lookup (resume, the
+read path's committed sets, retention markers, expiry pins) is one
+driver-side Arrow scan through lineage_rows, so no lookup runs a Spark job
+either. This module is the only code that knows where the files live. On a
+real cluster this table would be an Iceberg append; the contract is
+identical.
 
 Row-count semantics: out_rows = rows written to the partition; in_rows =
 sum(cnt) over those rows = non-null raw points covered by the partition —
@@ -74,18 +78,6 @@ _ARROW_SCHEMA = pa.schema(
         ("pipeline", pa.string()),
         ("params", pa.string()),
     ]
-)
-
-# The lineage columns committed_partition_snapshots reads.
-_SNAPSHOT_COLS = pa.schema(
-    [_ARROW_SCHEMA.field(c) for c in
-     ("tier", "part_hash", "checkpoint_epoch", "output_snapshot_id")]
-)
-
-
-# The lineage columns recorded_params reads.
-_PARAMS_COLS = pa.schema(
-    [_ARROW_SCHEMA.field(c) for c in ("tier", "checkpoint_epoch", "params")]
 )
 
 
@@ -147,32 +139,33 @@ def lineage_record(
     return len(partition_stats)
 
 
-def committed_partitions(warehouse: str, tier: str, checkpoint_epoch: int) -> set[int]:
-    """L2 driver-side: the DONE set for (tier, epoch). The lineage table is
-    tiny (one row per partition-commit), so it is read on the driver, with
-    no Spark job."""
-    return set(committed_partition_snapshots(warehouse, tier, checkpoint_epoch))
+def lineage_rows(warehouse: str, columns: list[str], where=None) -> pa.Table:
+    """The lineage table's *columns*, filtered by the pyarrow expression
+    *where*, in one driver-side scan (the table is tiny: one row per
+    partition-commit). A column a file predates reads null. With no
+    lineage files this is an empty table, and no dataset is scanned."""
+    files = glob.glob(os.path.join(_lineage_path(warehouse), "commit-*.parquet"))
+    if not files:
+        return _ARROW_SCHEMA.empty_table().select(columns)
+    return ds.dataset(files, schema=_ARROW_SCHEMA, format="parquet").to_table(
+        columns=columns, filter=where
+    )
 
 
 def committed_partition_snapshots(
     warehouse: str, tier: str, checkpoint_epoch: int
 ) -> dict[int, int]:
-    """L2: committed part_hash -> output snapshot id for (tier, epoch).
+    """L2: committed part_hash -> output snapshot id for (tier, epoch);
+    its keys are the DONE set.
 
     A partition committed more than once inside one epoch (dirty-crash
     recompute) keeps the LATEST output snapshot. -1 means the writer
-    predates output-snapshot recording (readers use the current snapshot).
-
-    One columnar pass: only the four columns this needs are read, the
-    (tier, epoch) filter runs in pyarrow, and the max per part_hash is an
-    Arrow group-by. A file without ``output_snapshot_id`` reads it as null,
-    i.e. -1."""
-    files = glob.glob(os.path.join(_lineage_path(warehouse), "commit-*.parquet"))
-    if not files:
-        return {}
-    t = ds.dataset(files, schema=_SNAPSHOT_COLS, format="parquet").to_table(
-        filter=(ds.field("tier") == tier)
-        & (ds.field("checkpoint_epoch") == checkpoint_epoch)
+    predates output-snapshot recording (readers use the current snapshot);
+    a file without ``output_snapshot_id`` reads it as null, i.e. -1. The
+    max per part_hash is an Arrow group-by."""
+    t = lineage_rows(
+        warehouse, ["part_hash", "output_snapshot_id"],
+        (pc.field("tier") == tier) & (pc.field("checkpoint_epoch") == checkpoint_epoch),
     )
     latest = pa.table({
         "part_hash": t["part_hash"],
@@ -185,13 +178,9 @@ def recorded_params(warehouse: str, checkpoint_epoch: int) -> dict[str, set[str]
     """tier -> the distinct build parameters recorded on the epoch's lineage
     rows. Files written before parameters were recorded read null, which
     is left out."""
-    files = glob.glob(os.path.join(_lineage_path(warehouse), "commit-*.parquet"))
-    if not files:
-        return {}
-    t = ds.dataset(files, schema=_PARAMS_COLS, format="parquet").to_table(
-        columns=["tier", "params"],
-        filter=(ds.field("checkpoint_epoch") == checkpoint_epoch)
-        & ds.field("params").is_valid(),
+    t = lineage_rows(
+        warehouse, ["tier", "params"],
+        (pc.field("checkpoint_epoch") == checkpoint_epoch) & pc.field("params").is_valid(),
     )
     out: dict[str, set[str]] = {}
     for tier, params in zip(t["tier"].to_pylist(), t["params"].to_pylist()):
@@ -208,18 +197,8 @@ def pending_partitions(
     """L2: work units not yet committed. The work-unit universe is the
     static bucket range 0..n_buckets-1 (K1 hashing), so no input scan is
     needed to plan a resume."""
-    done = committed_partitions(warehouse, tier, checkpoint_epoch)
+    done = committed_partition_snapshots(warehouse, tier, checkpoint_epoch)
     return [p for p in range(n_buckets) if p not in done]
-
-
-def read_lineage(spark: SparkSession, warehouse: str) -> DataFrame:
-    """The lineage table as a DataFrame (for Q2 and metrics queries)."""
-    d = _lineage_path(warehouse)
-    if not glob.glob(os.path.join(d, "commit-*.parquet")):
-        from engine.schema import LINEAGE_SCHEMA
-
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.parquet(d)
 
 
 def partition_stats_from_rollup(rollup_df: DataFrame) -> list[dict]:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from engine.io import ParquetManifestFormat, scan_tier
+from engine.io import ParquetManifestFormat
 from engine.lineage import committed_partition_snapshots
 from engine.rollup import cascade
 from engine.schema import DEFAULT_N_BUCKETS, TIER_ORDER, TIER_SECONDS
@@ -114,9 +114,10 @@ def tier_fallback(
         by_snap: dict[int, list[int]] = {}
         for p, s in snap_by_part.items():
             by_snap.setdefault(s, []).append(int(p))
+        table = f"rollup_{t}"
         pieces = []
         for s in sorted(by_snap):
-            df = scan_tier(fmt, t, None if s < 0 else s)
+            df = fmt.read_at(table, s) if s >= 0 else fmt.read(table)
             conds = []
             if len(by_snap[s]) < n_buckets:  # else the IN list prunes nothing
                 conds.append(in_sql("part_hash", sorted(by_snap[s])))

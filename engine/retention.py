@@ -102,6 +102,6 @@ def apply_retention(
         # (3) rewrite only the straddlers, keeping retained rows
         if straddle:
             keep = df.where(f"{in_sql('part_hash', straddle)} AND bucket >= {sql_int(cutoff)}")
-            fmt.overwrite_partitions(keep, table, n_buckets=len(straddle))
+            fmt.overwrite_partitions(keep, table)
             m["rewritten_partitions"] = len(straddle)
     return metrics

@@ -78,30 +78,6 @@ ROLLUP_SCHEMA = T.StructType(
     ]
 )
 
-# Lineage table (SURVEY.md §1.3; BASELINE.json:6 "per-partition lineage rows").
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("part_hash", T.LongType(), False),
-        T.StructField("input_snapshot_id", T.LongType(), False),
-        T.StructField("output_snapshot_id", T.LongType(), False),
-        T.StructField("in_rows", T.LongType(), False),
-        T.StructField("out_rows", T.LongType(), False),
-        T.StructField("checkpoint_epoch", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-        # job step that produced the partition ("fused" for every rollup
-        # tier, "cascade" on 1h/1d rows written before the fused kernel
-        # emitted them, "compact"; "" = unrecorded, e.g. retention) — lets
-        # an operator see which path wrote an epoch
-        T.StructField("pipeline", T.StringType(), True),
-        # build parameters of a rollup commit as JSON (w, k, gap policy,
-        # compress); null for other writers and for rows written before
-        # parameters were recorded
-        T.StructField("params", T.StringType(), True),
-    ]
-)
-
-
 def assert_tokens_schema(df) -> None:
     """Fail fast if *df* does not carry the pinned input schema (S1).
 

@@ -81,23 +81,28 @@ def stateful_detect_stream_late(
     buffer for late data.
 
     Semantics — bounded out-of-order buffer, TSDB-style:
-      - events are ordered by whole-second ``ts``, then ``event_id``;
+      - events are ordered by ``ts`` at full (microsecond) precision,
+        then ``event_id`` — the batch query's window order
+        (``__spark_entry__._scored_events``);
       - per user, events are HELD BACK until the user's high watermark
         (max ts seen) has advanced past ``ts + reorder_seconds``; held
         events are kept sorted in state, so any late event arriving within
         the reorder window lands in its correct window position before
         scoring. Output is therefore delayed by up to the reorder window
         but scored exactly as if the stream had been in order.
-      - an event arriving LATER than the reorder window (its slot already
-        emitted) cannot be retro-inserted: it is emitted immediately with
-        ``is_late = true`` and a NULL score, never silently dropped.
+      - an event that sorts at or before the last emitted ``(ts,
+        event_id)`` (its slot already emitted) cannot be retro-inserted:
+        it is emitted immediately with ``is_late = true`` and a NULL
+        score, never silently dropped. An event that sorts after it is
+        in order, even in the same second.
       - ``flush_after_ms`` (ProcessingTimeTimeout) flushes a user's
         remaining buffer after that much processing-time silence — the
         stream-end story; None disables.
 
-    State per user: O(w + events-in-reorder-window). Scoring is a
-    vectorized cumulative-sum kernel. Exactness vs the pandas oracle over
-    the fully-ordered series is pinned by tests/test_streaming.py.
+    State per user: O(w + events-in-reorder-window), plus the last emitted
+    ``(ts, event_id)`` key. Scoring is a vectorized cumulative-sum kernel.
+    Exactness vs the pandas oracle over the fully-ordered series is pinned
+    by tests/test_streaming.py.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -107,7 +112,7 @@ def stateful_detect_stream_late(
     )
     state_schema = (
         "tail array<double>, buf_ts array<long>, buf_eid array<long>, "
-        "buf_val array<double>, emitted_until long"
+        "buf_val array<double>, last_ts long, last_eid long"
     )
 
     def fn(key, pdf_iter, state):
@@ -115,7 +120,7 @@ def stateful_detect_stream_late(
         import pandas as pd
 
         if state.exists:
-            tail0, bts, beid, bval, emitted_until = state.get
+            tail0, bts, beid, bval, last_ts, last_eid = state.get
             tail = np.asarray(tail0, dtype=np.float64)
             buf = (
                 np.asarray(bts, dtype=np.int64),
@@ -125,13 +130,13 @@ def stateful_detect_stream_late(
         else:
             tail = np.empty(0)
             buf = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
-            emitted_until = -(2**62)
+            last_ts = last_eid = -(2**62)
 
         chunks = [pdf for pdf in pdf_iter]
         uid = int(key[0])
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True)
-            ts = (pdf["ts"].astype("int64") // 10**9).to_numpy()
+            ts = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
             eid = pdf["event_id"].to_numpy(dtype=np.int64)
             val = pdf["value"].to_numpy(dtype=np.float64)
         else:
@@ -140,7 +145,7 @@ def stateful_detect_stream_late(
             val = np.empty(0)
 
         # events whose slot has already been emitted: flag, never insert
-        too_late = ts < emitted_until
+        too_late = (ts < last_ts) | ((ts == last_ts) & (eid <= last_eid))
         late_out = (eid[too_late], val[too_late])
         ts, eid, val = ts[~too_late], eid[~too_late], val[~too_late]
 
@@ -157,8 +162,8 @@ def stateful_detect_stream_late(
         if flushing:
             horizon = 2**62  # emit everything
         else:
-            hi = int(all_ts.max()) if all_ts.size else emitted_until
-            horizon = hi - int(reorder_seconds)
+            hi = int(all_ts.max()) if all_ts.size else last_ts
+            horizon = hi - int(reorder_seconds) * 1_000_000
         ready = all_ts <= horizon
         n_ready = int(np.count_nonzero(ready))
 
@@ -192,7 +197,7 @@ def stateful_detect_stream_late(
                 )
             )
             tail = buf2[-(w - 1):] if w > 1 else np.empty(0)
-            emitted_until = int(all_ts[n_ready - 1]) + 1
+            last_ts, last_eid = int(all_ts[n_ready - 1]), int(all_eid[n_ready - 1])
         if late_out[0].size:
             outs.append(
                 pd.DataFrame(
@@ -213,7 +218,8 @@ def stateful_detect_stream_late(
                 all_ts[n_ready:].tolist(),
                 all_eid[n_ready:].tolist(),
                 all_val[n_ready:].tolist(),
-                int(emitted_until),
+                int(last_ts),
+                int(last_eid),
             )
         )
         if flush_after_ms is not None and not flushing:

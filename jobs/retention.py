@@ -17,6 +17,8 @@ expired nothing (so the no-op is durable too). Re-running the same
 the manifest commit and the lineage append re-runs expiry, which is
 idempotent (the cutoff re-derives, already-dropped partitions are gone
 from the current view, straddlers rewrite to the same retained rows).
+Both this resume check and ``--pin-epoch``'s pin resolution read lineage
+on the driver (engine/lineage.py::lineage_rows) and run no Spark job.
 
 Time travel is unaffected by design: drops are metadata-only commits and
 rewrites create new snapshots, so ``fmt.read_at(pre_expiry_snapshot)``
@@ -40,14 +42,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
 
 from engine.io import STAGING_DIR, ParquetManifestFormat
-from engine.lineage import lineage_record, read_lineage
+from engine.lineage import lineage_record, lineage_rows
 from engine.retention import apply_retention
 from engine.schema import TIER_ORDER
 from engine.session import get_spark
-from engine.skew import in_sql
 
 _DUR = {"s": 1, "m": 60, "h": 3600, "d": 86400}
 
@@ -72,17 +73,13 @@ def run_retention(
 ) -> dict:
     """Apply *policy* tier by tier with per-tier resume via lineage."""
     fmt = ParquetManifestFormat(spark, warehouse)
-    lineage = read_lineage(spark, warehouse)
+    done = set(lineage_rows(
+        warehouse, ["tier"], pc.field("checkpoint_epoch") == epoch
+    )["tier"].to_pylist())
     metrics: dict = {}
     for tier, retain_seconds in policy.items():
         marker = f"expire_{tier}"
-        done = (
-            lineage.where(
-                (F.col("tier") == marker) & (F.col("checkpoint_epoch") == epoch)
-            ).limit(1).count()
-            > 0
-        )
-        if done:
+        if marker in done:
             metrics[tier] = {"skipped": True}
             continue
         pre_snapshot = fmt.current_snapshot(f"rollup_{tier}")
@@ -129,22 +126,16 @@ def run_snapshot_expiry(
         # lineage row in any tier is an operator error (typo, or the epoch
         # already expired) — deleting what the flag asked to preserve must
         # not exit 0 silently, and must not commit any expiry first
-        lineage = read_lineage(spark, warehouse)
-        rows = (
-            lineage.where(
-                f"{in_sql('tier', list(tiers))} AND "
-                f"{in_sql('checkpoint_epoch', [int(e) for e in pin_epochs])}"
-            )
-            .select("tier", "checkpoint_epoch", "output_snapshot_id")
-            .distinct()
-            .collect()
-        )
+        rows = lineage_rows(
+            warehouse, ["tier", "checkpoint_epoch", "output_snapshot_id"],
+            pc.field("tier").isin(list(tiers))
+            & pc.field("checkpoint_epoch").isin([int(e) for e in pin_epochs]),
+        ).to_pylist()
         for r in rows:
-            if int(r["output_snapshot_id"]) >= 0:
-                pins[r["tier"]].add(int(r["output_snapshot_id"]))
-        unmatched = {int(e) for e in pin_epochs} - {
-            int(r["checkpoint_epoch"]) for r in rows
-        }
+            snap = r["output_snapshot_id"]
+            if snap is not None and snap >= 0:  # null or -1: not recorded
+                pins[r["tier"]].add(snap)
+        unmatched = {int(e) for e in pin_epochs} - {r["checkpoint_epoch"] for r in rows}
         if unmatched:
             raise ValueError(
                 f"--pin-epoch {sorted(unmatched)}: no lineage rows match in "

@@ -349,9 +349,7 @@ def _run_tiers(
     # snapshot id goes into lineage so epoch-E readers can time-travel to
     # exactly this commit after later epochs overwrite the partitions.
     t_write = time.monotonic()
-    fmt.overwrite_partitions(
-        df, {t: f"rollup_{t}" for t in pending}, rebalance=True, on_commit=commit
-    )
+    fmt.overwrite_partitions(df, {t: f"rollup_{t}" for t in pending}, on_commit=commit)
 
 
 def main() -> None:

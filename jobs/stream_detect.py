@@ -16,7 +16,10 @@ later arrivals are emitted immediately flagged ``is_late`` (never dropped).
 Restart-safe: the state store lives in the checkpoint, so re-running the
 same command resumes with window tails and hold-back buffers intact and
 the file source never re-reads consumed drops (exactly-once output with
-the parquet sink's transactional log).
+the parquet sink's transactional log). The detector's state holds the last
+emitted ``(ts, event_id)`` key; a checkpoint whose state holds the older
+``emitted_until`` second instead does not match that schema, so such a
+stream must be restarted with a new checkpoint.
 
 Default trigger is ``availableNow`` (drain pending drops, then exit) so
 the job is drivable/testable; ``--follow`` switches to a continuous

@@ -45,11 +45,13 @@ def test_compact_collapses_dirs_preserving_rows_and_history(spark, tmp_path):
     # time travel to the pre-compaction snapshot is untouched
     assert _rows(fmt.read_at("rollup_1m", pre_snap)) == pre_rows
     # lineage records the maintenance commit
-    from engine.lineage import read_lineage
+    import pyarrow.compute as pc
 
-    lin = read_lineage(spark, wh).where("tier = 'compact_1m'")
-    assert lin.count() > 0
-    assert {r["pipeline"] for r in lin.select("pipeline").distinct().collect()} == {"compact"}
+    from engine.lineage import lineage_rows
+
+    lin = lineage_rows(wh, ["pipeline"], pc.field("tier") == "compact_1m")
+    assert lin.num_rows > 0
+    assert set(lin["pipeline"].to_pylist()) == {"compact"}
 
     # idempotent: second run is a no-op
     m2 = compact_tier(spark, fmt, wh, "1m")

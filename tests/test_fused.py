@@ -163,15 +163,15 @@ def test_run_rollup_tiers_equal_oracle(spark, tokens_df, token_rows, ora, tmp_pa
     1m payloads that decode to the oracle's gap-filled points, and lineage
     that names the fused kernel for every tier."""
     from engine.io import ParquetManifestFormat
-    from engine.lineage import read_lineage
+    from engine.lineage import lineage_rows
     from engine.query import serve_raw_points
     from jobs.rollup import run_rollup
 
     wh = str(tmp_path / "wh")
     m = run_rollup(spark, tokens_df, wh, epoch=1)
     assert m["1m"]["pipeline"] == "fused"
-    lin = read_lineage(spark, wh)
-    assert {(r["tier"], r["pipeline"]) for r in lin.collect()} == {
+    lin = lineage_rows(wh, ["tier", "pipeline"])
+    assert {(r["tier"], r["pipeline"]) for r in lin.to_pylist()} == {
         ("1m", "fused"), ("1h", "fused"), ("1d", "fused")
     }
     fmt = ParquetManifestFormat(spark, wh)

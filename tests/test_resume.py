@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
 from engine.io import ParquetManifestFormat, synth_tokens
-from engine.lineage import committed_partitions, pending_partitions, read_lineage
+from engine.lineage import committed_partition_snapshots, lineage_rows, pending_partitions
 from engine.query import anomaly_filter, downsample, resolution_pick, tier_fallback
 from engine.schema import DEFAULT_N_BUCKETS
 from engine.skew import with_part_hash
@@ -67,7 +68,7 @@ def test_crash_between_data_and_lineage_is_recomputed(spark, small_tokens, tmp_p
         "cnt", F.lit(-999).cast("long")
     )
     fmt.overwrite_partitions(with_part_hash(garbage), "rollup_1m")
-    assert committed_partitions(wh, "1m", 1) == set()  # invisible to readers
+    assert set(committed_partition_snapshots(wh, "1m", 1)) == set()  # invisible to readers
 
     run_rollup(spark, small_tokens, wh, epoch=1)
     bad = fmt.read("rollup_1m").where("cnt = -999").count()
@@ -293,16 +294,16 @@ def test_int_literals_reject_non_ints_before_any_sql(spark, bad):
 def test_lineage_metrics_queryable(spark, small_tokens, tmp_path):
     wh = str(tmp_path / "lin")
     run_rollup(spark, small_tokens, wh, epoch=1)
-    lin = read_lineage(spark, wh)
+    lin = lineage_rows(wh, ["tier", "out_rows"])
     per_tier = {
-        r["tier"]: r for r in lin.groupBy("tier").agg(
-            F.count("*").alias("parts"), F.sum("out_rows").alias("rows")
-        ).collect()
+        r["tier"]: r for r in lin.group_by("tier").aggregate(
+            [([], "count_all"), ("out_rows", "sum")]
+        ).to_pylist()
     }
     assert set(per_tier) == {"1m", "1h", "1d"}
     fmt = ParquetManifestFormat(spark, wh)
     for tier in ("1m", "1h", "1d"):
-        assert per_tier[tier]["rows"] == fmt.read(f"rollup_{tier}").count()
+        assert per_tier[tier]["out_rows_sum"] == fmt.read(f"rollup_{tier}").count()
 
 
 def test_downsample_cli_end_to_end(spark, small_tokens, tmp_path):
@@ -462,7 +463,9 @@ def test_observed_lineage_stats_match_written_tier(spark, small_tokens, tmp_path
     wh = str(tmp_path / "wh_obs")
     run_rollup(spark, small_tokens, wh, epoch=1)
     fmt = ParquetManifestFormat(spark, wh)
-    lin = read_lineage(spark, wh).collect()
+    lin = lineage_rows(
+        wh, ["tier", "part_hash", "out_rows", "in_rows", "checkpoint_epoch"]
+    ).to_pylist()
     for tier in ["1m", "1h", "1d"]:
         reread = {
             s["part_hash"]: (s["out_rows"], s["in_rows"])
@@ -573,7 +576,10 @@ def _tiers_and_lineage(spark, wh):
             for t in ("1m", "1h", "1d")}
     lin = sorted(
         (r["tier"], r["part_hash"], r["in_rows"], r["out_rows"], r["pipeline"])
-        for r in read_lineage(spark, wh).where("checkpoint_epoch = 1").collect()
+        for r in lineage_rows(
+            wh, ["tier", "part_hash", "in_rows", "out_rows", "pipeline"],
+            pc.field("checkpoint_epoch") == 1,
+        ).to_pylist()
     )
     return rows, lin
 
@@ -613,7 +619,7 @@ def test_kill_after_shared_write_before_any_commit(spark, small_tokens, clean_ru
         os.listdir(os.path.join(wh, "_staging", staged[0])))
     fmt = ParquetManifestFormat(spark, wh)
     assert [fmt.current_snapshot(f"rollup_{t}") for t in ("1m", "1h", "1d")] == [0, 0, 0]
-    assert committed_partitions(wh, "1m", 1) == set()
+    assert set(committed_partition_snapshots(wh, "1m", 1)) == set()
 
     m2 = run_rollup(spark, small_tokens, wh, epoch=1)
     assert [x["skipped"] for x in m2.values()] == [False] * 3
@@ -642,8 +648,8 @@ def test_kill_between_coarse_swap_and_lineage(spark, small_tokens, clean_run,
             run_rollup(spark, small_tokens, wh, epoch=1)
     fmt = ParquetManifestFormat(spark, wh)
     assert [fmt.current_snapshot(f"rollup_{t}") for t in ("1m", "1h", "1d")] == [1, 1, 0]
-    assert committed_partitions(wh, "1m", 1) == set(range(DEFAULT_N_BUCKETS))
-    assert committed_partitions(wh, "1h", 1) == set()
+    assert set(committed_partition_snapshots(wh, "1m", 1)) == set(range(DEFAULT_N_BUCKETS))
+    assert set(committed_partition_snapshots(wh, "1h", 1)) == set()
 
     m2 = run_rollup(spark, small_tokens, wh, epoch=1)
     assert m2["1m"]["skipped"] and not m2["1h"]["skipped"] and not m2["1d"]["skipped"]

@@ -68,9 +68,9 @@ def test_retention_cli_resume_and_time_travel(spark, tmp_path):
     """jobs/retention.py end-to-end: drop + straddler rewrite through the
     CLI surface, expiry recorded in lineage, same-epoch re-run is a no-op,
     and time travel to the pre-expiry snapshot still serves expired rows."""
-    from pyspark.sql import functions as F
+    import pyarrow.compute as pc
 
-    from engine.lineage import read_lineage
+    from engine.lineage import lineage_rows
     from jobs.retention import parse_duration, run_retention
 
     assert parse_duration("7d") == 7 * 86400
@@ -99,9 +99,9 @@ def test_retention_cli_resume_and_time_travel(spark, tmp_path):
     assert kept == {(d, b) for d, b in pre_rows if b >= cutoff}
 
     # expiry commit is durable lineage
-    lin = read_lineage(spark, wh).where("tier = 'expire_1m'")
-    assert lin.where("checkpoint_epoch = 7").count() > 0
-    assert lin.agg(F.sum("in_rows")).collect()[0][0] == m["1m"]["rows_dropped"]
+    lin = lineage_rows(wh, ["checkpoint_epoch", "in_rows"], pc.field("tier") == "expire_1m")
+    assert sum(e == 7 for e in lin["checkpoint_epoch"].to_pylist()) > 0
+    assert pc.sum(lin["in_rows"]).as_py() == m["1m"]["rows_dropped"]
 
     # same-epoch re-run: resume short-circuit, no new snapshot
     snap_after = fmt.current_snapshot("rollup_1m")
@@ -115,3 +115,82 @@ def test_retention_cli_resume_and_time_travel(spark, tmp_path):
         for r in fmt.read_at("rollup_1m", snap_pre).select("doc_id", "bucket").collect()
     }
     assert old == pre_rows
+
+
+def _parquet_files_per_part_dir(snap_dir: str) -> dict[str, int]:
+    import os
+
+    return {
+        name: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(snap_dir, name)))
+        for name in os.listdir(snap_dir)
+        if name.startswith("part_hash=")
+    }
+
+
+def test_rewrites_write_one_file_per_partition_dir(spark, tmp_path):
+    """A compaction and a retention straddler rewrite each leave exactly
+    one parquet file in every part_hash dir of the snap dir they commit
+    (every write is rebalanced on part_hash, however few partitions it
+    rewrites)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from jobs.compact import compact_tier
+
+    wh = str(tmp_path / "wh")
+    run_rollup(spark, synth_tokens(spark, 6, seed=7, n_tok=4096), wh, epoch=1, tiers=["1m"])
+    run_rollup(
+        spark,
+        synth_tokens(spark, 6, seed=9, n_tok=4096).withColumn(
+            "doc_id", F.concat(F.lit("b_"), F.col("doc_id"))
+        ),
+        wh, epoch=2, tiers=["1m"],
+    )
+    fmt = ParquetManifestFormat(spark, wh)
+    tdir = os.path.join(wh, "rollup_1m")
+
+    c = compact_tier(spark, fmt, wh, "1m")
+    assert not c["skipped"]
+    files = _parquet_files_per_part_dir(os.path.join(tdir, f"snap-{c['snapshot']}"))
+    assert files and set(files.values()) == {1}, files
+
+    m = apply_retention(fmt, {"1m": 1800}, now_t=4096)["1m"]
+    assert m["rewritten_partitions"] > 0
+    snap = fmt.current_snapshot("rollup_1m")
+    files = _parquet_files_per_part_dir(os.path.join(tdir, f"snap-{snap}"))
+    assert len(files) == m["rewritten_partitions"] and set(files.values()) == {1}, files
+
+
+def test_lineage_lookups_in_retention_and_expiry_run_no_spark_job(spark, tmp_path):
+    """A same-epoch retention re-run (its expiry marker found in lineage)
+    and snapshot expiry with an epoch pin (the pin resolved from lineage)
+    read lineage on the driver: neither runs a Spark job."""
+    import uuid
+
+    from jobs.retention import run_retention, run_snapshot_expiry
+
+    wh = str(tmp_path / "wh")
+    tiers = ["1m", "1h", "1d"]
+    run_rollup(spark, synth_tokens(spark, 8, seed=3, n_tok=4096), wh, epoch=1)
+    run_retention(spark, wh, {"1m": 1800}, now_t=4096, epoch=7)
+    sc = spark.sparkContext
+
+    def spark_jobs(fn):
+        group = f"lineage-lookup-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "lineage lookup")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    m, jobs = spark_jobs(lambda: run_retention(spark, wh, {"1m": 1800}, now_t=4096, epoch=7))
+    assert m == {"1m": {"skipped": True}}
+    assert jobs == []
+    m, jobs = spark_jobs(
+        lambda: run_snapshot_expiry(spark, wh, tiers, keep_last=1, pin_epochs={1})
+    )
+    assert [m[t]["pinned_snapshots"] for t in tiers] == [[1], [1], [1]]
+    assert jobs == []

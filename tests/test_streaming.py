@@ -8,8 +8,12 @@ import os
 from pyspark.sql import functions as F
 
 from engine.io import ParquetManifestFormat, synth_tokens
-from engine.lineage import read_lineage
+from engine.lineage import lineage_rows
 from engine.streaming import start_rollup_stream
+
+
+def _lineage_epochs(wh: str) -> set[int]:
+    return set(lineage_rows(wh, ["checkpoint_epoch"])["checkpoint_epoch"].to_pylist())
 
 
 def test_stream_rollup_two_drops(spark, tmp_path):
@@ -28,8 +32,7 @@ def test_stream_rollup_two_drops(spark, tmp_path):
         spark, f"{inbox}/*", wh, ckpt, available_now=True, compress=False
     )
     q.awaitTermination(300)
-    lin1 = read_lineage(spark, wh)
-    epochs1 = {r["checkpoint_epoch"] for r in lin1.select("checkpoint_epoch").distinct().collect()}
+    epochs1 = _lineage_epochs(wh)
     assert len(epochs1) >= 1
     fmt = ParquetManifestFormat(spark, wh)
     rows1 = fmt.read("rollup_1m").count()
@@ -41,7 +44,7 @@ def test_stream_rollup_two_drops(spark, tmp_path):
         spark, f"{inbox}/*", wh, ckpt, available_now=True, compress=False
     )
     q.awaitTermination(300)
-    epochs2 = {r["checkpoint_epoch"] for r in read_lineage(spark, wh).select("checkpoint_epoch").distinct().collect()}
+    epochs2 = _lineage_epochs(wh)
     assert len(epochs2) == len(epochs1) + 1
 
     # accumulation (merge_docs): batch 2 reuses batch 1's doc_ids' partitions
@@ -57,7 +60,7 @@ def test_stream_rollup_two_drops(spark, tmp_path):
         spark, f"{inbox}/*", wh, ckpt, available_now=True, compress=False
     )
     q.awaitTermination(300)
-    epochs3 = {r["checkpoint_epoch"] for r in read_lineage(spark, wh).select("checkpoint_epoch").distinct().collect()}
+    epochs3 = _lineage_epochs(wh)
     assert epochs3 == epochs2
 
 
@@ -335,6 +338,72 @@ def test_stateful_detect_late_data(spark, tmp_path):
     assert (em["is_anom"].to_numpy() == want).all()
     # the late spike itself must have fired
     assert bool(em[em["event_id"] == 25]["is_anom"].iloc[0])
+
+
+def test_stateful_detect_in_order_event_in_the_last_emitted_second(spark, tmp_path):
+    """At reorder_seconds=0, an event of a later batch that falls in the
+    same second as the last emitted event, but after it in (ts, event_id)
+    order, is in order: scored, not late. Events order by full-precision
+    ts, then event_id, as the batch query's window does. Batch 1 is
+    t0..t0+39; batch 2 a new event_id at t0+39 (a spike) and, at t0+40,
+    two events whose sub-second order is the reverse of their event_id
+    order."""
+    import numpy as np
+    import pandas as pd
+
+    from engine.streaming import stateful_detect_stream_late
+
+    w, k = 12, 2.5
+    src = str(tmp_path / "events")
+    ckpt = str(tmp_path / "ckpt")
+    outdir = str(tmp_path / "out")
+    os.makedirs(src)
+    t0 = 1704067200
+
+    def mk(i):
+        return float(100 + ((i * 17) % 11))
+
+    b1 = [(i, t0 + i + 0.0, 0, mk(i)) for i in range(40)]
+    b2 = [(1000, t0 + 39.0, 0, 500.0), (60, t0 + 40.25, 0, mk(41)), (50, t0 + 40.75, 0, mk(42))]
+
+    def write(rows, name):
+        spark.createDataFrame(
+            rows, "event_id long, epoch double, user_id long, value double"
+        ).select(
+            "event_id", F.timestamp_seconds("epoch").alias("ts"), "user_id", "value"
+        ).coalesce(1).write.parquet(f"{src}/{name}")
+
+    def run():
+        stream = spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, value double"
+        ).parquet(f"{src}/*")
+        q = (
+            stateful_detect_stream_late(stream, w=w, k=k, reorder_seconds=0)
+            .writeStream.format("parquet")
+            .option("path", outdir)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+
+    write(b1, "d1")
+    run()
+    write(b2, "d2")
+    run()
+    got = spark.read.parquet(outdir).toPandas().set_index("event_id")
+    assert len(got) == len(b1) + len(b2)
+    assert not got["is_late"].any()
+
+    # pandas oracle over the whole series in (ts, event_id) order
+    order = sorted(b1 + b2, key=lambda r: (r[1], r[0]))
+    s = pd.Series([r[3] for r in order])
+    score = (s - s.rolling(w).mean()).abs() / s.rolling(w).std(ddof=1)
+    eids = [r[0] for r in order]
+    np.testing.assert_allclose(got.loc[eids, "score"].to_numpy(), score.to_numpy(), rtol=1e-9)
+    assert (got.loc[eids, "is_anom"].to_numpy() == (score.fillna(0) > k).to_numpy()).all()
+    assert bool(got.loc[1000, "is_anom"])
 
 
 def test_stream_detect_cli_end_to_end(spark, tmp_path):
